@@ -14,14 +14,19 @@ Mapping to the reference:
 - ``pre-process`` ≙ main.rs:170-258 — walk a contract tree (fiesta
   folder layout, or Etherscan JSON dumps with ``--etherscan``), parse,
   content-address, dedup, bulk-load into DuckDB. ``--chunk-size``
-  becomes a repartition hint (Spark streams partitions; the reference
-  chunked to bound RAM). ``--ignore-errors`` keeps the lenient parse
-  fallbacks; strict mode fails the job on malformed input.
+  becomes the scan's split budget for that command (Spark streams
+  partitions; the reference chunked to bound RAM). ``--ignore-errors``
+  keeps the lenient parse fallbacks. Strict mode (the default) fails
+  with exit code 1 on a malformed metadata.json or contract.json in an
+  ingested dir, or a malformed Etherscan dump. The checks run at the
+  staging load: per-dir flags are written with the rows in the one
+  write job, and the DuckDB loader checks them before inserting, so a
+  failed run inserts nothing.
 - ``index-functions`` ≙ main.rs:261-331 — read stored contracts back,
   run the extraction stage (solc when available, the built-in scanner
   otherwise), store function rows.
 - ``export-source`` ≙ main.rs:353-358 + plain_contract.rs:528-535 —
-  point lookup + sanitized file writes.
+  read-only point lookup + sanitized file writes.
 - ``download-solc`` ≙ utils.rs:29-48 — solc bootstrap, gated on
   py-solc-x.
 """
@@ -29,6 +34,7 @@ Mapping to the reference:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import sys
 
 from pyspark.sql import SparkSession
@@ -40,99 +46,109 @@ def _spark() -> SparkSession:
     return get_spark(app_name="scdb-cli")
 
 
-def _first_corrupt_json(df, content_col: str, key_col: str):
-    """Rows whose ``content_col`` is not valid JSON (the P8
-    corrupt-record probe): returns up to one offending key for the
-    strict-mode error message."""
-    from pyspark.sql import functions as F
-
-    probe = F.from_json(
-        content_col,
-        "struct<_corrupt_record:string>",
-        {"columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    return df.filter(probe["_corrupt_record"].isNotNull()).select(key_col).take(1)
+@contextlib.contextmanager
+def _split_budget(spark: SparkSession, chunk_size: int):
+    """``--chunk-size`` for one command: the reference bounds rows held
+    in RAM per chunk (main.rs:170-258); Spark's analogue is the scan
+    split budget, which bounds bytes per task up front instead of
+    paying a full extra pass over the corpus (df.count()) just to
+    derive a partition number. ~16 KiB approximates a verified-contract
+    bundle; the 1 MiB floor keeps splits sane for tiny chunk sizes. The
+    session's prior value is restored on exit, so later reads in the
+    same session keep their own split size."""
+    if not chunk_size:
+        yield
+        return
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(max(chunk_size * 16 * 1024, 1 << 20)))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
 
 
 def cmd_pre_process(args: argparse.Namespace) -> int:
+    from .sinks import duckdb_sink as sink
+
+    spark = _spark()
+    with _split_budget(spark, args.chunk_size):
+        try:
+            n = _pre_process(spark, args)
+        except sink.MalformedInput as exc:
+            # strict default ≙ the reference's panic on malformed input
+            # (main.rs:107); nothing was inserted
+            print(exc, file=sys.stderr)
+            return 1
+    print(f"stored {n} new contracts into {args.db_file}")
+    return 0
+
+
+def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
+    """Scan, parse and store one tree in a single write job. In strict
+    mode (no ``--ignore-errors``) the corrupt-JSON checks are flag
+    columns of that job, checked by the DuckDB loader before it inserts
+    (``sinks.duckdb_sink._staged_load``); no separate probe job runs."""
     from pyspark.sql import functions as F
 
     from .sinks import duckdb_sink as sink
     from .sources import contracts as C
 
-    spark = _spark()
-    if args.chunk_size:
-        # The reference's --chunk-size bounds rows held in RAM per chunk
-        # (main.rs:170-258). Spark's analogue is the scan split budget:
-        # bound bytes per task up front instead of paying a full extra
-        # pass over the corpus (df.count()) just to derive a partition
-        # number. ~16 KiB approximates a verified-contract bundle; the
-        # 1 MiB floor keeps splits sane for tiny chunk sizes.
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes",
-            str(max(args.chunk_size * 16 * 1024, 1 << 20)),
-        )
+    strict = not args.ignore_errors
     if args.etherscan:
         raw = C.read_etherscan_files(spark, args.contracts_root)
-        if not args.ignore_errors:
-            # strict default ≙ the reference's panic on malformed input
-            # (main.rs:107); --ignore-errors keeps the lenient fallbacks
-            bad = _first_corrupt_json(raw, "content", "address")
-            if bad:
-                print(
-                    f"malformed Etherscan dump for address {bad[0][0]!r} "
-                    "(use --ignore-errors to fall back to raw-source parse)",
-                    file=sys.stderr,
-                )
-                return 1
+        checks = []
+        if strict:
+            raw = raw.withColumn(
+                "bad_dump", F.when(C.corrupt_json("content"), F.col("address"))
+            )
+            checks = [(
+                "bad_dump",
+                "malformed Etherscan dump for address {!r} "
+                "(use --ignore-errors to fall back to raw-source parse)",
+            )]
         parsed = C.parse_etherscan_contracts(raw)
         # storage shape: etherscan rows carry no files array — rebuild the
         # processing shape via the explode path for multi-source entries
-        stored = _etherscan_storage_shape(raw, parsed)
-    else:
-        files = C.read_contract_files(spark, args.contracts_root)
-        if not args.ignore_errors:
-            meta = files.filter(F.col("filename") == "metadata.json")
-            bad = _first_corrupt_json(meta, "content", "dir")
-            if bad:
-                print(
-                    f"malformed metadata.json under {bad[0][0]!r} "
-                    "(use --ignore-errors to skip malformed dirs)",
-                    file=sys.stderr,
-                )
-                return 1
-            # A corrupt standard-json CONTAINER would otherwise pass
-            # strict pre-process and only surface at index-functions
-            # time as silently-zero function rows (the sources explode
-            # yields null); the reference errors at its serde parse
-            # (plain_contract.rs get_source_files), so strict mode
-            # probes contract.json too.
-            cj = files.filter(F.col("filename") == "contract.json")
-            bad = _first_corrupt_json(cj, "content", "dir")
-            if bad:
-                print(
-                    f"malformed contract.json under {bad[0][0]!r} "
-                    "(use --ignore-errors to treat it as raw source)",
-                    file=sys.stderr,
-                )
-                return 1
-        parsed = C.parse_folder_contracts(files)
-        stored = None
-    if stored is None:
-        n = sink.store_contracts(parsed, args.db_file)
-    else:
-        n = sink._staged_load(
-            stored, args.db_file, "contract",
-            ["id", "name", "metadata", "source", "source_type"],
+        stored = _etherscan_storage_shape(raw, parsed, [c for c, _ in checks])
+        return sink._staged_load(
+            stored, args.db_file, "contract", sink.CONTRACT_COLUMNS, checks
         )
-    print(f"stored {n} new contracts into {args.db_file}")
-    return 0
+    files = C.read_contract_files(spark, args.contracts_root)
+    parsed = C.parse_folder_contracts(files)
+    checks = []
+    if strict:
+        # Checked per ingested dir, so only dirs with metadata.json
+        # (the reference reads only those, main.rs:96-104). A corrupt
+        # standard-json CONTAINER would otherwise pass and only surface
+        # at index-functions time as silently-zero function rows (the
+        # sources explode yields null); the reference errors at its
+        # serde parse (plain_contract.rs get_source_files).
+        container = F.try_element_at("files", F.lit(1))["content"]
+        parsed = parsed.withColumns({
+            "bad_metadata": F.when(C.corrupt_json("metadata"), F.col("dir")),
+            "bad_contract_json": F.when(
+                (F.col("source_type") == "json") & C.corrupt_json(container),
+                F.col("dir"),
+            ),
+        })
+        # priority order: the metadata message wins when both are corrupt
+        checks = [
+            ("bad_metadata",
+             "malformed metadata.json under {!r} "
+             "(use --ignore-errors to skip malformed dirs)"),
+            ("bad_contract_json",
+             "malformed contract.json under {!r} "
+             "(use --ignore-errors to treat it as raw source)"),
+        ]
+    return sink.store_contracts(parsed, args.db_file, checks)
 
 
-def _etherscan_storage_shape(raw, parsed):
+def _etherscan_storage_shape(raw, parsed, flags=()):
     from pyspark.sql import functions as F
 
     from .schemas import ETHERSCAN_RAW_SCHEMA
+    from .sinks.duckdb_sink import dedup_by_id
     from .sources.contracts import unwrap_double_brace
 
     fields = F.from_json("content", ETHERSCAN_RAW_SCHEMA)
@@ -146,7 +162,7 @@ def _etherscan_storage_shape(raw, parsed):
         )
     )
     with_files = raw.select(
-        "address", meta.alias("metadata"), src.alias("source_code")
+        "address", meta.alias("metadata"), src.alias("source_code"), *flags
     )
     joined = with_files.join(
         parsed.select("address", "id", "contract_name", "source_type"), "address"
@@ -175,13 +191,15 @@ def _etherscan_storage_shape(raw, parsed):
             )
         )
     )
-    return joined.select(
+    shaped = joined.select(
         "id",
         F.col("contract_name").alias("name"),
         "metadata",
         tagged.alias("source"),
         "source_type",
-    ).dropDuplicates(["id"])
+        *flags,
+    )
+    return dedup_by_id(shaped, flags)
 
 
 def cmd_index_functions(args: argparse.Namespace) -> int:

@@ -86,7 +86,30 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _cap_listing_parallelism(spark)
     return spark
+
+
+_LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+
+def _cap_listing_parallelism(spark: SparkSession) -> None:
+    """Size the file-listing job to the task slots.
+
+    A path list (or, with ``recursiveFileLookup``, a directory level)
+    above ``parallelPartitionDiscovery.threshold`` (32) is listed by a
+    Spark job with one task per path, capped only at this conf's
+    default of 10000. A 200-dir contract tree thus lists in 200
+    one-directory tasks, whose scheduling costs far more than the
+    listing itself. One task per slot lists the same paths with no
+    idle cores; on a cluster ``defaultParallelism`` is every executor
+    core, so the listing stays parallel. A lower value set by the
+    caller is kept.
+    """
+    slots = spark.sparkContext.defaultParallelism
+    current = int(spark.conf.get(_LISTING_PARALLELISM, "10000"))
+    if slots < current:
+        spark.conf.set(_LISTING_PARALLELISM, str(slots))
 
 
 def default_sf_dir() -> str:

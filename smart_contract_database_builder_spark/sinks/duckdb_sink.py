@@ -13,6 +13,10 @@ exactly ONE writing process, so the scale-correct Spark pattern is:
 
 Never concurrent JDBC appends — the loader is the serialization point,
 and ``INSERT OR IGNORE`` reproduces the reference's id-dedup exactly.
+Strict-mode input checks ride along in the same write: the staged rows
+carry flag columns, and the loader reads them before it inserts
+anything (``_staged_load(checks=...)``), so a strict ingest costs no
+Spark job beyond the write.
 The storage schema is byte-compatible with the reference's DDL: nested
 shapes (metadata, the ContractSource tagged union) serialize to JSON
 strings at this boundary only (SURVEY.md §1.2).
@@ -22,6 +26,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Sequence
 
 import duckdb
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +58,11 @@ CREATE INDEX IF NOT EXISTS idx_function_composite
 """
 
 
+class MalformedInput(ValueError):
+    """A strict-mode flag was set in the staged rows; nothing was
+    inserted."""
+
+
 def connect(db_path: str) -> duckdb.DuckDBPyConnection:
     """S9: open + bootstrap the schema (create-if-not-exists semantics,
     matching the reference's ignored DDL errors, db.rs:89)."""
@@ -64,12 +74,26 @@ def connect(db_path: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def contracts_storage_shape(parsed: DataFrame) -> DataFrame:
+def dedup_by_id(df: DataFrame, flags: Sequence[str] = ()) -> DataFrame:
+    """One row per ``id``, like ``dropDuplicates(["id"])`` (which Spark
+    plans as the same first-value aggregate). Each flag column is
+    ``min()``-ed over its id group instead, so a row flagged by a strict
+    check is never dropped in favour of a healthy whitespace twin."""
+    return df.groupBy("id").agg(
+        *[F.first(c).alias(c) for c in df.columns if c != "id" and c not in flags],
+        *[F.min(c).alias(c) for c in flags],
+    )
+
+
+def contracts_storage_shape(
+    parsed: DataFrame, flags: Sequence[str] = ()
+) -> DataFrame:
     """Processing shape → the reference's storage row: the files array
     re-wrapped as the serialized ContractSource tagged union
     (plain_contract.rs:87-92), nested JSON only at this boundary. File
     entries are renamed to the reference's SourceFile field names
-    {name, content} (plain_contract.rs:80-83)."""
+    {name, content} (plain_contract.rs:80-83). ``flags`` are strict-mode
+    columns of ``parsed`` carried through the id dedup."""
     files = F.transform(
         "files",
         lambda e: F.struct(
@@ -86,24 +110,58 @@ def contracts_storage_shape(parsed: DataFrame) -> DataFrame:
         .when(F.col("source_type") == "json", js)
         .otherwise(single)
     )
-    return parsed.select(
+    shaped = parsed.select(
         "id",
         F.col("contract_name").alias("name"),
         "metadata",
         source.alias("source"),
         "source_type",
-    ).dropDuplicates(["id"])
+        *flags,
+    )
+    return dedup_by_id(shaped, flags)
+
+
+def _check_staged_flags(staged: str, checks: Sequence[tuple[str, str]]) -> None:
+    """Raise ``MalformedInput`` for the first check whose flag column
+    holds a key anywhere in the staged rows. A flag is the offending
+    key (dir or address) or null; ``message`` is formatted with the
+    smallest key. Runs before the target file is opened, so a failed
+    check leaves it untouched."""
+    con = duckdb.connect()
+    try:
+        keys = con.execute(
+            "SELECT " + ", ".join(f"min({col})" for col, _ in checks)
+            + f" FROM {staged}"
+        ).fetchone()
+    finally:
+        con.close()
+    for (_, message), key in zip(checks, keys):
+        if key is not None:
+            raise MalformedInput(message.format(key))
 
 
 def _staged_load(
-    df: DataFrame, db_path: str, table: str, columns: list[str]
+    df: DataFrame,
+    db_path: str,
+    table: str,
+    columns: list[str],
+    checks: Sequence[tuple[str, str]] = (),
 ) -> int:
     """S7/S8/S10: stage to parquet (distributed write), then one
     DuckDB writer loads with conflict-ignore inside the bulk-load
-    pragma window. Returns rows inserted (duplicates ignored)."""
+    pragma window. Returns rows inserted (duplicates ignored).
+
+    ``checks`` are strict-mode ``(flag column, message)`` pairs, in
+    priority order. The flags are staged with the rows and checked
+    before the insert; on a hit nothing is inserted and
+    ``MalformedInput`` is raised. Flag columns never reach ``table``.
+    """
     with tempfile.TemporaryDirectory(prefix=f"scdb_sink_{table}_") as staging:
         out = os.path.join(staging, "part")
         df.write.mode("overwrite").parquet(out)
+        staged = f"read_parquet('{out}/*.parquet')"
+        if checks:
+            _check_staged_flags(staged, checks)
         con = connect(db_path)
         try:
             con.execute("PRAGMA disable_checkpoint_on_shutdown")
@@ -111,7 +169,7 @@ def _staged_load(
             collist = ", ".join(columns)
             con.execute(
                 f"INSERT OR IGNORE INTO {table} ({collist}) "
-                f"SELECT {collist} FROM read_parquet('{out}/*.parquet')"
+                f"SELECT {collist} FROM {staged}"
             )
             after = con.execute(f"SELECT COUNT(*) FROM {table}").fetchone()[0]
             con.execute("PRAGMA enable_checkpoint_on_shutdown")
@@ -120,14 +178,22 @@ def _staged_load(
             con.close()
 
 
-def store_contracts(parsed: DataFrame, db_path: str) -> int:
+#: Columns of the ``contract`` table, in DDL order.
+CONTRACT_COLUMNS = ["id", "name", "metadata", "source", "source_type"]
+
+
+def store_contracts(
+    parsed: DataFrame, db_path: str, checks: Sequence[tuple[str, str]] = ()
+) -> int:
     """S7: append contract rows (id-deduped within the batch AND against
-    the sink via INSERT OR IGNORE — db.rs:174 semantics)."""
+    the sink via INSERT OR IGNORE — db.rs:174 semantics). ``checks``:
+    strict-mode flags of ``parsed``, see ``_staged_load``."""
     return _staged_load(
-        contracts_storage_shape(parsed),
+        contracts_storage_shape(parsed, [col for col, _ in checks]),
         db_path,
         "contract",
-        ["id", "name", "metadata", "source", "source_type"],
+        CONTRACT_COLUMNS,
+        checks,
     )
 
 
@@ -172,14 +238,20 @@ def sanitize_path(path: str) -> str:
 def export_source_code(db_path: str, contract_id: str, out_dir: str) -> list[str]:
     """S11+F16: write one contract's files to disk; paths sanitized,
     ``.sol`` appended when the name has no extension and no sibling
-    collides (plain_contract.rs:208-216). Returns written paths."""
+    collides (plain_contract.rs:208-216). Returns written paths; none
+    when the file, its table or the contract is missing. A read-only
+    lookup: it never creates or bootstraps ``db_path``."""
     import json
 
-    con = connect(db_path)
+    if not os.path.exists(db_path):
+        return []
+    con = duckdb.connect(db_path, read_only=True)
     try:
         row = con.execute(
             "SELECT source FROM contract WHERE id = ? LIMIT 1", [contract_id]
         ).fetchone()
+    except duckdb.CatalogException:
+        row = None  # a file that was never bootstrapped has no table
     finally:
         con.close()
     if row is None:

@@ -97,6 +97,18 @@ def unwrap_double_brace(c: Column) -> Column:
     ).otherwise(c)
 
 
+def corrupt_json(content: Column | str) -> Column:
+    """P8 corrupt-record probe: true when ``content`` is not one valid
+    JSON document (the strict-mode check for metadata.json,
+    contract.json and Etherscan dumps)."""
+    probe = F.from_json(
+        content,
+        "struct<_corrupt_record:string>",
+        {"columnNameOfCorruptRecord": "_corrupt_record"},
+    )
+    return probe["_corrupt_record"].isNotNull()
+
+
 def normalize_crlf(c: Column) -> Column:
     """F13: ``\\r\\n`` → ``\\n`` (plain_contract.rs:434)."""
     return F.regexp_replace(c, "\r\n", "\n")

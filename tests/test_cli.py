@@ -144,15 +144,191 @@ def test_cli_strict_mode_fails_on_corrupt_etherscan_dump(spark, tmp_path):
          "--db-file", db]
     )
     assert rc == 1
+    assert _contract_rows(db) == 0
 
 
 def test_cli_export_missing_contract(tmp_path):
+    """export-source is a read-only lookup: a missing file fails with
+    rc 1 and is NOT created (nor bootstrapped) as a side effect."""
+    import os
+
     db = str(tmp_path / "empty.duckdb")
     rc = cli.main(
         ["export-source", "--db-file", db, "--contract-id", "nope",
          "--output-folder", str(tmp_path / "x")]
     )
     assert rc == 1
+    assert not os.path.exists(db)
+    assert not os.path.exists(str(tmp_path / "x"))
+
+    # an existing file that was never bootstrapped: no table, still rc 1
+    duckdb.connect(db).close()
+    rc = cli.main(
+        ["export-source", "--db-file", db, "--contract-id", "nope",
+         "--output-folder", str(tmp_path / "x")]
+    )
+    assert rc == 1
+
+
+def _contract_rows(db: str) -> int:
+    """Rows in the contract table; 0 when the file was never created."""
+    import os
+
+    if not os.path.exists(db):
+        return 0
+    con = duckdb.connect(db, read_only=True)
+    try:
+        return con.execute("SELECT COUNT(*) FROM contract").fetchone()[0]
+    finally:
+        con.close()
+
+
+def _bootstrapped(db: str) -> str:
+    """An existing, empty sink file: a strict failure must leave it so."""
+    from smart_contract_database_builder_spark.sinks.duckdb_sink import connect
+
+    connect(db).close()
+    return db
+
+
+def test_cli_strict_mode_flag_survives_whitespace_twin_dedup(
+    spark, contract_tree, tmp_path, capsys
+):
+    """The corrupt-metadata flag is carried through the id dedup with
+    min(): a whitespace-variant twin of a healthy dir has the same
+    content id, and its corrupt metadata.json must still fail strict
+    mode instead of being deduped away in favour of the healthy row."""
+    import pathlib
+
+    from smart_contract_database_builder_spark import fixtures as fx
+
+    twin = pathlib.Path(contract_tree) / "demo_single_twin"
+    twin.mkdir()
+    (twin / "metadata.json").write_text('{"ContractName": "Vau')
+    (twin / "main.sol").write_text(fx._VAULT_SOL_WS_VARIANT)
+    db = _bootstrapped(str(tmp_path / "twin.duckdb"))
+
+    rc = cli.main(
+        ["pre-process", "--contracts-root", contract_tree, "--db-file", db]
+    )
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "malformed metadata.json under" in err
+    assert "demo_single_twin" in err
+    assert _contract_rows(db) == 0
+
+
+def test_cli_strict_mode_metadata_message_wins(spark, contract_tree, tmp_path, capsys):
+    """Both files of one dir corrupt: the metadata.json check has
+    priority, as when the checks ran one after the other."""
+    import pathlib
+
+    broken = pathlib.Path(contract_tree) / "both_broken"
+    broken.mkdir()
+    (broken / "metadata.json").write_text('{"ContractName": ')
+    (broken / "contract.json").write_text('{"sources": ')
+    db = _bootstrapped(str(tmp_path / "both.duckdb"))
+
+    rc = cli.main(
+        ["pre-process", "--contracts-root", contract_tree, "--db-file", db]
+    )
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "malformed metadata.json under" in err
+    assert "contract.json" not in err
+    assert _contract_rows(db) == 0
+
+
+def test_cli_strict_mode_skips_contract_json_of_unread_dirs(spark, contract_tree, tmp_path):
+    """A corrupt contract.json in a dir WITHOUT metadata.json passes
+    strict mode: that dir is never ingested (the reference reads only
+    metadata dirs, main.rs:96-104), so its files are not checked."""
+    import pathlib
+
+    orphan = pathlib.Path(contract_tree) / "orphan_json_dir"
+    orphan.mkdir()
+    (orphan / "contract.json").write_text('{"sources": {"a.sol": ')
+    db = str(tmp_path / "narrowed.duckdb")
+
+    rc = cli.main(
+        ["pre-process", "--contracts-root", contract_tree, "--db-file", db]
+    )
+    assert rc == 0
+    assert _contract_rows(db) == 5
+
+
+def test_cli_chunk_size_does_not_leak_into_the_session(spark, contract_tree, tmp_path):
+    """--chunk-size sets the scan split budget for its own command only:
+    the session's prior value is back when the command returns, on
+    success and on a strict-mode failure alike."""
+    import pathlib
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    db = str(tmp_path / "chunk.duckdb")
+    argv = ["pre-process", "--contracts-root", contract_tree, "--db-file", db,
+            "--chunk-size", "1"]
+    assert cli.main(argv) == 0
+    assert spark.conf.get(key) == prior
+
+    broken = pathlib.Path(contract_tree) / "broken_dir"
+    broken.mkdir()
+    (broken / "metadata.json").write_text('{"ContractName": "Trunc')
+    (broken / "main.sol").write_text("contract X {}")
+    assert cli.main(argv) == 1
+    assert spark.conf.get(key) == prior
+
+
+def _jobs_of(spark, group: str, argv: list[str]) -> list[list[tuple[str, int]]]:
+    """Run the CLI under a job group; per job started, in job-id order,
+    its stages as (name, tasks)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert cli.main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job_id).stageIds]
+        jobs.append([(s.name, s.numTasks) for s in stages if s is not None])
+    return jobs
+
+
+def test_strict_pre_process_job_budget(spark, tmp_path):
+    """A strict folder pre-process of a tree with more directories than
+    Spark's parallel-listing threshold (32) costs one listing job with
+    at most one task per slot, plus the write's jobs: the strict checks
+    add no probe job, so it runs exactly as many jobs as the lenient
+    run."""
+    root = tmp_path / "wide"
+    copies = 6  # 6 x 7 fixture dirs = 42 dirs
+    for k in range(copies):
+        for d, f, content in fixtures.CONTRACT_FILES:
+            p = root / f"{d}_{k}"
+            p.mkdir(parents=True, exist_ok=True)
+            (p / f).write_bytes(content.encode())
+    slots = spark.sparkContext.defaultParallelism
+
+    def run(tag: str, *flags: str):
+        db = str(tmp_path / f"{tag}.duckdb")
+        return _jobs_of(spark, f"budget-{tag}", [
+            "pre-process", "--contracts-root", str(root), "--db-file", db, *flags])
+
+    strict = run("strict")
+    lenient = run("lenient", "--ignore-errors")
+    # the listing runs inside DataFrameReader.load, so its stage is
+    # named after that call site
+    listing = [j for j in strict if any(n.startswith("load at") for n, _ in j)]
+    assert len(listing) == 1, strict
+    assert sum(t for _, t in listing[0]) <= slots
+    names = [n for j in strict for n, _ in j]
+    assert not [n for n in names if n.startswith(("take", "collect", "head"))], names
+    assert len(strict) == len(lenient), (strict, lenient)
 
 
 def test_cli_download_solc_gated():
