@@ -108,6 +108,10 @@ def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
                 "(use --ignore-errors to fall back to raw-source parse)",
             )]
         parsed = C.parse_etherscan_contracts(raw)
+        if not strict:
+            # a dump that does not parse has no SourceCode, hence no id:
+            # skip it, as the folder path skips malformed dirs
+            parsed = parsed.filter(F.col("id").isNotNull())
         # storage shape: etherscan rows carry no files array — rebuild the
         # processing shape via the explode path for multi-source entries
         stored = _etherscan_storage_shape(raw, parsed, [c for c, _ in checks])

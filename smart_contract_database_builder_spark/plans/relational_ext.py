@@ -259,8 +259,8 @@ def agg_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     at corpus scale the same query swaps to ``percentile_approx``
     (t-digest sketch, mergeable map-side, no full sort per group) — the
     approximate twin has no cross-engine oracle by nature, which is why
-    the exact one carries the correctness row. Registered in _OVERFLOW
-    (pytest-swept, past the full driver window).
+    the exact one carries the correctness row (pytest-swept; the driver
+    window takes it in its evidence-rotation turn).
     """
     orders = _t(spark, sf_dir, "orders")
     q = F.expr("percentile(o_totalprice, array(0.25D, 0.5D, 0.75D, 0.99D))")

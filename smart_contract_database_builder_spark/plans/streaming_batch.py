@@ -222,8 +222,8 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     ``jobs.click_purchase_attribution``; the true watermarked
     stream-stream join over the same transformation is
     ``jobs.attribution_stream``, equivalence-tested in
-    tests/test_streaming.py). Registered in the _OVERFLOW block:
-    oracle-carrying, pytest-swept, past the full driver window.
+    tests/test_streaming.py). Oracle-carrying and pytest-swept; the
+    driver window takes it in its evidence-rotation turn.
     """
     ev = load_table(spark, sf_dir, "events")
     out = jobs.click_purchase_attribution(

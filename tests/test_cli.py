@@ -147,6 +147,25 @@ def test_cli_strict_mode_fails_on_corrupt_etherscan_dump(spark, tmp_path):
     assert _contract_rows(db) == 0
 
 
+def test_cli_ignore_errors_skips_truncated_etherscan_dump(spark, tmp_path):
+    """Lenient mode skips a dump whose parse yields no id (the folder
+    path likewise skips malformed dirs) instead of failing the insert
+    on contract.id NOT NULL; the healthy dump is still stored."""
+    root = tmp_path / "escan"
+    addr, content = fixtures.ETHERSCAN_FILES[0]
+    bad = "0xdeadbeef00000000000000000000000000000001"
+    for a, text in ((addr, content), (bad, '{"ContractName": "nope"')):
+        (root / a).mkdir(parents=True)
+        (root / a / f"{a}.json").write_text(text)
+    db = str(tmp_path / "lenient_escan.duckdb")
+    rc = cli.main(
+        ["pre-process", "--etherscan", "--contracts-root", str(root),
+         "--db-file", db, "--ignore-errors"]
+    )
+    assert rc == 0
+    assert _contract_rows(db) == 1
+
+
 def test_cli_export_missing_contract(tmp_path):
     """export-source is a read-only lookup: a missing file fails with
     rc 1 and is NOT created (nor bootstrapped) as a side effect."""

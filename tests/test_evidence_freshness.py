@@ -14,10 +14,12 @@ this round — the artifact for the in-flight round does not exist yet
 while the round is being built). Rows-only queries are exempt: their
 evidence is the pytest suite, not driver rows.
 
-K = 8: with 202 oracle queries and 50 slots a full sweep takes ~4
-rounds of pure rotation, and real rounds also spend slots on new
-operators and changed-plan witnesses — 8 rounds is the tightest bound
-the window arithmetic sustains without starving new-operator slots.
+K = 8: the registry order (``plans.evidence_order``) fills the window
+with a few witnesses and then the stalest oracle queries, so with 321
+oracle queries and 45 rotating slots a full sweep takes ~7 rounds. The
+simulation below checks that this keeps every query inside K from the
+committed history on, and that a witness list long enough to starve the
+rotation fails it.
 """
 
 from __future__ import annotations
@@ -75,22 +77,48 @@ def find_stale(
 
 def test_no_oracle_query_evidence_is_stale():
     latest, current = _load_history(_ROOT)
-    oracle_qs = [
-        n
-        for n, s in plans.QUERIES.items()
-        if s.oracle and n not in plans._BORN_IN_OVERFLOW
-    ]
-    # overflow-born operators (window already full in their birth
-    # round) are exempt until a later rotation windows them — their
-    # oracles run in the pytest sweep from birth, and the registry
-    # test pins that the exemption list is real overflow residents.
+    oracle_qs = [n for n, s in plans.QUERIES.items() if s.oracle]
     window = list(plans.QUERIES)[:_WINDOW]
     stale = find_stale(latest, window, oracle_qs, current)
     assert stale == [], (
         f"driver evidence older than {_MAX_AGE_ROUNDS} rounds (round "
         f"{current} in flight) and not scheduled for refresh: {stale} — "
-        "rotate these into the window (plans/__init__.py _PRIORITY)"
+        "check the CORRECTNESS_r*.json artifacts and plans._WITNESSES"
     )
+
+
+#: Future rounds simulated by the rotation test (two full sweeps).
+_SIM_ROUNDS = 16
+
+
+def _first_stale_round(witnesses: list[str]) -> tuple[int, list] | None:
+    """Replay the driver from the committed history: each round the
+    registry is ordered from the evidence so far and the first
+    ``_WINDOW`` queries turn green. Returns the first round whose
+    freshness check fails, with its stale queries, or None."""
+    latest, current = _load_history(_ROOT)
+    registered = plans._registered
+    oracle_qs = [n for n, has_oracle in registered.items() if has_oracle]
+    for rnd in range(current, current + _SIM_ROUNDS):
+        window = plans.evidence_order(registered, latest, witnesses)[:_WINDOW]
+        stale = find_stale(latest, window, oracle_qs, rnd)
+        if stale:
+            return rnd, stale
+        latest.update((n, rnd) for n in window)
+    return None
+
+
+def test_rotation_keeps_evidence_fresh_by_construction():
+    assert _first_stale_round(plans._WITNESSES) is None
+
+
+def test_rotation_simulation_fails_when_witnesses_starve_it():
+    extra = [
+        n
+        for n, has_oracle in plans._registered.items()
+        if has_oracle and n not in plans._WITNESSES
+    ]
+    assert _first_stale_round(plans._WITNESSES + extra[:15]) is not None
 
 
 def test_guard_fails_on_synthetic_staleness():
