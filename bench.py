@@ -436,59 +436,30 @@ def _machine_calibration_ms() -> tuple[float, float]:
 
 
 def _build_session(cpus: str) -> SparkSession:
-    n_cpus = int(cpus) if str(cpus).isdigit() else 8
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("smart-contract-database-builder-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(n_cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        # r17 optimization round: run the bench under the ENGINE's own
-        # scale-oriented join settings (session.py _DEFAULTS) instead of
-        # stock local defaults — the 10 MB stock broadcast threshold
-        # sort-merge-joined dimension tables the engine broadcasts on a
-        # cluster, so the bench was timing a plan the engine never runs.
-        # Values are the guide-§9 baseline, not local[32] tuning: the
-        # dims stay broadcastable far past sf100, and shuffled-hash vs
-        # sort-merge is size-gated by the same threshold (AQE skew/
-        # coalesce guards stay on). Measured on a 27-query join-heavy
-        # subset: 27.1 s -> 24.0 s warm, biggest deltas on the
-        # dimension-join relational queries.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # ~200 queries in ONE JVM accumulate codegen caches, catalog
-        # state and block-manager entries; the 1g local-mode default
-        # heap OOM'd a sort-merge spill read ~190 queries in (r12).
-        # 32 executor threads also need room to sort concurrently.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_BENCH_MEM", "8g"),
-        )
-        # JVM unified logging writes to STDOUT by default; a
-        # gc,alloc warning mid-run corrupts this process's one-JSON-
-        # line stdout contract (observed: GCLocker retry warnings as
-        # the only stdout output of a dying run). Route all JVM log
-        # output to stderr.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Xlog:disable -Xlog:all=warning:stderr",
-        )
-    )
-    # Shuffle scratch in default /tmp is eviction-prone: the round-11
-    # driver bench died mid-run on `blockmgr-*/temp_shuffle_* (No such
-    # file or directory)` when a tmp cleaner swept /tmp. Root the
-    # scratch under the verified per-user store dir instead.
-    try:
-        from smart_contract_database_builder_spark.sources.store_root import scratch_dir
+    """The engine's session (``session.get_spark``) plus the settings
+    only a long bench run needs."""
+    from smart_contract_database_builder_spark.session import get_spark
 
-        builder = builder.config("spark.local.dir", scratch_dir())
-    except Exception:
-        pass
-    spark = builder.getOrCreate()
+    n_cpus = int(cpus) if str(cpus).isdigit() else 8
+    spark = get_spark(
+        app_name="smart-contract-database-builder-spark-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=n_cpus,
+        extra_conf={
+            "spark.ui.enabled": "false",
+            # ~200 queries in ONE JVM accumulate codegen caches, catalog
+            # state and block-manager entries; the 1g local-mode default
+            # heap OOM'd a sort-merge spill read ~190 queries in (r12).
+            # 32 executor threads also need room to sort concurrently.
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_BENCH_MEM", "8g"),
+            # JVM unified logging writes to STDOUT by default; a
+            # gc,alloc warning mid-run corrupts this process's one-JSON-
+            # line stdout contract (observed: GCLocker retry warnings as
+            # the only stdout output of a dying run). Route all JVM log
+            # output to stderr.
+            "spark.driver.extraJavaOptions": "-Xlog:disable -Xlog:all=warning:stderr",
+        },
+    )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

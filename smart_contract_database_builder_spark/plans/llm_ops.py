@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.store_root import ensure_store, source_fingerprint, store_path
 from ..sources.tables import load_table
 from .materialize import pin
 from .registry import QUERIES, register
@@ -6386,7 +6387,7 @@ def _bpe_state(spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES):
     app_id = spark.sparkContext.applicationId
     key = (
         app_id,
-        _source_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+        source_fingerprint(os.path.join(sf_dir, "documents.parquet")),
         merges,
     )
     hit = _BPE_STATE_CACHE.get(key)
@@ -7050,22 +7051,6 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _source_fingerprint(*paths: str) -> str:
-    """Cheap content fingerprint of source parquet files: (size, mtime)
-    per file, hashed. Keying a derived store by row count alone is not
-    enough — a REGENERATED corpus with the same cardinality but
-    different content would silently serve stale derived data; size+
-    mtime changes on any rewrite."""
-    import hashlib
-    import os
-
-    parts = []
-    for p in paths:
-        st = os.stat(p)
-        parts.append(f"{p}:{st.st_size}:{int(st.st_mtime_ns)}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-
-
 #: Encoder-arithmetic version for the persisted PQ store. The written
 #: codes bake in the WHOLE encode pipeline — the fixed-point scale,
 #: the centroid floor rule, the subspace geometry. BUMP THIS whenever
@@ -7077,25 +7062,13 @@ _PQ_CODEC_VERSION = 1
 
 
 def _pq_store_path(sf_dir: str, n_vectors: int) -> str:
-    """Deterministic store location for a corpus: keyed by the sf dir,
-    the vector count, the source file's size+mtime fingerprint AND the
-    encoder geometry/version, so neither a resized corpus, nor a
-    regenerated-in-place corpus, nor a changed encoder can ever
-    silently reuse stale codes. Rooted in the per-user 0700 store
-    root (``sources/store_root.py``) so no other local user can plant
-    a pre-built store at a predictable path."""
-    import os
-    import re
-
-    from ..sources.store_root import store_root
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    geom = f"v{_PQ_CODEC_VERSION}m{_PQ_M}s{_PQ_SUB}"
-    return os.path.join(
-        store_root(),
+    """IVF-PQ store key: the vector count and the encoder
+    geometry/version on top of the embeddings fingerprint."""
+    return store_path(
         "pq_store",
-        f"{tag}_{n_vectors}_{fp}_{geom}",
+        sf_dir,
+        ("embeddings",),
+        f"{n_vectors}_v{_PQ_CODEC_VERSION}m{_PQ_M}s{_PQ_SUB}",
     )
 
 
@@ -7126,20 +7099,13 @@ def llm_ivfpq_encoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is llm_ivfpq_topk's UNCHANGED — write-time encoding is
     a physical-layout change, not a semantic one.
     """
-    from ..sources.pq_store import (
-        pq_store_complete,
-        read_pq_cells,
-        read_pq_codes,
-        write_pq_encoded,
-    )
+    from ..sources.pq_store import read_pq_cells, read_pq_codes, write_pq_encoded
 
     emb = load_table(spark, sf_dir, "embeddings")
-    store = _pq_store_path(sf_dir, emb.count())
-    # gate on the store-level DONE marker (written after BOTH tables),
-    # not a per-table _SUCCESS: a build interrupted between the two
-    # writes must fail the gate and rebuild, never persist half-built
-    if not pq_store_complete(store):
-        write_pq_encoded(emb, store)
+    store = ensure_store(
+        _pq_store_path(sf_dir, emb.count()),
+        lambda tmp: write_pq_encoded(emb, tmp),
+    )
 
     packed = read_pq_cells(spark, store).agg(
         F.collect_list(F.struct("cell", "centroid")).alias("cells")
@@ -7206,28 +7172,19 @@ def llm_ivfpq_encoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: without the bump a code change would silently pair against bands
 #: written under the OLD pipeline. v2 (round 11): store layout adds
 #: the <base>/sigs signature table, moves bands to <base>/bands, and
-#: gates reuse on a store-level _STORE_COMPLETE marker — a layout
+#: gates reuse on the store-level completeness marker — a layout
 #: change, so v1 stores are never half-reused.
 _MINHASH_CODEC_VERSION = 2
 
 
-def _minhash_store(sf_dir: str) -> tuple[str, str]:
-    """Deterministic band-store location + catalog tag for a corpus:
-    keyed by the sf dir, the documents file's size+mtime fingerprint,
-    and the signature geometry/version — a regenerated corpus or a
-    changed pipeline can never silently reuse stale bands."""
-    import os
-    import re
-
-    from ..sources.store_root import store_root
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    geom = f"v{_MINHASH_CODEC_VERSION}h{_N_HASHES}r{_BAND_ROWS}"
-    full = f"{tag}_{fp}_{geom}"
-    return (
-        os.path.join(store_root(), "minhash_store", full),
-        full,
+def _minhash_store_path(sf_dir: str) -> str:
+    """S21 store key: the signature geometry/version on top of the
+    documents fingerprint."""
+    return store_path(
+        "minhash_store",
+        sf_dir,
+        ("documents",),
+        f"v{_MINHASH_CODEC_VERSION}h{_N_HASHES}r{_BAND_ROWS}",
     )
 
 
@@ -7243,57 +7200,32 @@ def _ensure_minhash_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     clustering, representatives, graph lenses, calibration,
     incremental admission, leakage split) reads the store instead.
     Later SESSIONS finding valid files re-ATTACH without rewriting.
-    The sigs table is written first, bands are derived from the
+    The sigs table is written first and bands are derived from the
     WRITTEN sigs files (one aggregate pass total, and the two tables
-    cannot disagree), and the store-level ``_STORE_COMPLETE`` marker
-    lands strictly after both (the pq_store discipline)."""
+    cannot disagree)."""
     import os
 
     from ..sources.minhash_store import (
         attach_minhash_bands,
-        mark_minhash_store_complete,
-        minhash_store_complete,
         read_minhash_sigs,
         write_minhash_bands,
         write_minhash_sigs,
     )
 
-    from ..sources.store_root import build_tmp, publish_build
+    def build(tmp: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+        sh = toked.select(
+            "doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s")
+        )
+        write_minhash_sigs(minhash_signatures(sh), os.path.join(tmp, "sigs"))
+        stored_sigs = read_minhash_sigs(spark, os.path.join(tmp, "sigs"))
+        write_minhash_bands(
+            bands_from_signatures(stored_sigs), os.path.join(tmp, "bands")
+        )
 
-    base, tag = _minhash_store(sf_dir)
-    table = f"mh_bands_{tag}"
-    if not spark.catalog.tableExists(table):
-        if not minhash_store_complete(base):
-            # Build into a unique sibling dir and publish with ONE
-            # atomic rename: a concurrent session building the same
-            # store can never interleave part-files with ours, and the
-            # final path either doesn't exist or is complete. The
-            # bands table is written under a throwaway catalog name
-            # (an EXTERNAL table — dropping it keeps the files) so the
-            # real name can attach at the PUBLISHED location.
-            tmp = build_tmp(base)
-            docs = load_table(spark, sf_dir, "documents")
-            toked = fan_out_if_narrow(
-                docs.select("doc_id", _tokens().alias("t"))
-            )
-            sh = toked.select(
-                "doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s")
-            )
-            write_minhash_sigs(
-                minhash_signatures(sh), os.path.join(tmp, "sigs")
-            )
-            stored_sigs = read_minhash_sigs(spark, os.path.join(tmp, "sigs"))
-            tmp_table = f"{table}__build_{os.path.basename(tmp).split('-')[-1]}"
-            write_minhash_bands(
-                bands_from_signatures(stored_sigs),
-                tmp_table,
-                os.path.join(tmp, "bands"),
-            )
-            spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
-            mark_minhash_store_complete(tmp)
-            publish_build(tmp, base)
-        attach_minhash_bands(spark, table, os.path.join(base, "bands"))
-    return table, base
+    base = ensure_store(_minhash_store_path(sf_dir), build)
+    return attach_minhash_bands(spark, os.path.join(base, "bands")), base
 
 
 def minhash_bands_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7311,24 +7243,18 @@ def minhash_bands_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JACCARD_CODEC_VERSION = 1
 
 
-def _jaccard_store(sf_dir: str) -> tuple[str, str]:
-    """Deterministic S24 store location: keyed like the S21 band store
-    (documents fingerprint + signature geometry) plus the bucket cap
-    and the verify codec version — a regenerated corpus, a re-banded
+def _jaccard_store_path(sf_dir: str) -> str:
+    """S24 store key: the S21 key components plus the bucket cap and
+    the verify codec version — a regenerated corpus, a re-banded
     geometry or a changed verify can never silently serve stale
     pairs."""
-    import os
-    import re
-
-    from ..sources.store_root import store_root
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    geom = (
+    return store_path(
+        "jaccard_store",
+        sf_dir,
+        ("documents",),
         f"v{_JACCARD_CODEC_VERSION}m{_MINHASH_CODEC_VERSION}"
-        f"h{_N_HASHES}r{_BAND_ROWS}c{_LSH_BUCKET_CAP}"
+        f"h{_N_HASHES}r{_BAND_ROWS}c{_LSH_BUCKET_CAP}",
     )
-    return os.path.join(store_root(), "jaccard_store", f"{tag}_{fp}_{geom}"), tag
 
 
 def _ensure_jaccard_store(spark: SparkSession, sf_dir: str) -> str:
@@ -7339,22 +7265,15 @@ def _ensure_jaccard_store(spark: SparkSession, sf_dir: str) -> str:
     other — returns the parquet path without touching the corpus."""
     import os
 
-    from ..sources.jaccard_store import (
-        jaccard_store_complete,
-        mark_jaccard_store_complete,
-        write_jaccard_pairs,
-    )
-    from ..sources.store_root import build_tmp, publish_build
+    from ..sources.jaccard_store import write_jaccard_pairs
 
-    base, _tag = _jaccard_store(sf_dir)
-    if not jaccard_store_complete(base):
-        tmp = build_tmp(base)
-        write_jaccard_pairs(
+    base = ensure_store(
+        _jaccard_store_path(sf_dir),
+        lambda tmp: write_jaccard_pairs(
             _ngram_jaccard_pairs_compute(spark, sf_dir),
             os.path.join(tmp, "pairs"),
-        )
-        mark_jaccard_store_complete(tmp)
-        publish_build(tmp, base)
+        ),
+    )
     return os.path.join(base, "pairs")
 
 
@@ -7440,26 +7359,24 @@ def neardup_components_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster membership, best representative, leakage-aware split).
     The iterative CC solve — driver-looped, localCheckpoint-ed — runs
     once per corpus per codec instead of once per query."""
-    import os
+    from ..sources.cluster_store import read_cluster_map, write_cluster_map
 
-    from ..sources.cluster_store import (
-        cluster_store_complete,
-        read_cluster_map,
-        write_cluster_map,
-    )
-    from ..sources.store_root import store_root
-
-    _mh_base, tag = _minhash_store(sf_dir)
-    base = os.path.join(
-        store_root(),
-        "cluster_store",
-        f"{tag}_cc{_CLUSTER_CODEC_VERSION}c{_LSH_BUCKET_CAP}",
-    )
-    if not cluster_store_complete(base):
+    def build(tmp: str) -> None:
         pairs = minhash_candidate_pairs_stored(spark, sf_dir).select(
             "doc_a", "doc_b"
         )
-        write_cluster_map(connected_components(pairs), base)
+        write_cluster_map(connected_components(pairs), tmp)
+
+    base = ensure_store(
+        store_path(
+            "cluster_store",
+            sf_dir,
+            ("documents",),
+            f"v{_MINHASH_CODEC_VERSION}h{_N_HASHES}r{_BAND_ROWS}"
+            f"_cc{_CLUSTER_CODEC_VERSION}c{_LSH_BUCKET_CAP}",
+        ),
+        build,
+    )
     return read_cluster_map(spark, base)
 
 
@@ -7474,29 +7391,14 @@ def emb_neardup_components_stored(
     later invocation is a single parquet scan. The plane count is part
     of the key because it SELF-SIZES from the corpus row count — a
     grown corpus changes the geometry and must rebuild."""
-    import os
-    import re
-
-    from ..sources.cluster_store import (
-        cluster_store_complete,
-        read_cluster_map,
-        write_cluster_map,
-    )
-    from ..sources.store_root import store_root
+    from ..sources.cluster_store import read_cluster_map, write_cluster_map
 
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _planes_at_oracle_floor(
         emb.count(), "llm_embedding_neardup_clusters"
     )
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    base = os.path.join(
-        store_root(),
-        "emb_cluster_store",
-        f"{tag}_{fp}_p{planes}"
-        f"_cc{_CLUSTER_CODEC_VERSION}c{_ANN_BUCKET_CAP}",
-    )
-    if not cluster_store_complete(base):
+
+    def build(tmp: str) -> None:
         # the candidate pairs come from the S23 bucket store (round
         # 12): the corpus encode is paid once at ingest and SHARED
         # between the admission lens and this CC build, instead of
@@ -7506,7 +7408,17 @@ def emb_neardup_components_stored(
         ).select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         )
-        write_cluster_map(connected_components(pairs), base)
+        write_cluster_map(connected_components(pairs), tmp)
+
+    base = ensure_store(
+        store_path(
+            "emb_cluster_store",
+            sf_dir,
+            ("embeddings",),
+            f"p{planes}_cc{_CLUSTER_CODEC_VERSION}c{_ANN_BUCKET_CAP}",
+        ),
+        build,
+    )
     return read_cluster_map(spark, base)
 
 
@@ -7809,21 +7721,15 @@ _SIMH_BLOCK_W = _SIMH_BITS // _SIMH_BLOCKS
 _SIMHASH_CODEC_VERSION = 1
 
 
-def _simhash_store(sf_dir: str) -> tuple[str, str]:
-    """Deterministic fingerprint-store location for a corpus — keyed
-    like the MinHash/PQ stores by (sf dir, documents fingerprint,
-    codec version + bit geometry) so a regenerated corpus or a
-    changed vote layout can never silently serve stale prints."""
-    import os
-    import re
-
-    from ..sources.store_root import store_root
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    geom = f"v{_SIMHASH_CODEC_VERSION}b{_SIMH_BITS}"
-    full = f"{tag}_{fp}_{geom}"
-    return os.path.join(store_root(), "simhash_store", full), full
+def _simhash_store_path(sf_dir: str) -> str:
+    """S22 store key: the codec version and bit geometry on top of the
+    documents fingerprint."""
+    return store_path(
+        "simhash_store",
+        sf_dir,
+        ("documents",),
+        f"v{_SIMHASH_CODEC_VERSION}b{_SIMH_BITS}",
+    )
 
 
 def simhash_fps_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7834,28 +7740,19 @@ def simhash_fps_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer evaluates ``llm_simhash_documents``'s own expressions, so
     stored prints are bit-identical to query-time ones and consumers
     keep their oracles unchanged."""
-    from ..sources.simhash_store import (
-        mark_simhash_store_complete,
-        read_simhash_fps,
-        simhash_store_complete,
-        write_simhash_fps,
-    )
-    from ..sources.store_root import build_tmp, publish_build
-    from .reference_ext import llm_simhash_documents
-
     import os
 
-    base, _tag = _simhash_store(sf_dir)
-    fps_dir = os.path.join(base, "fps")
-    if not simhash_store_complete(base):
-        tmp = build_tmp(base)
-        write_simhash_fps(
+    from ..sources.simhash_store import read_simhash_fps, write_simhash_fps
+    from .reference_ext import llm_simhash_documents
+
+    base = ensure_store(
+        _simhash_store_path(sf_dir),
+        lambda tmp: write_simhash_fps(
             llm_simhash_documents(spark, sf_dir).select("doc_id", "simhash"),
             os.path.join(tmp, "fps"),
-        )
-        mark_simhash_store_complete(tmp)
-        publish_build(tmp, base)
-    return read_simhash_fps(spark, fps_dir)
+        ),
+    )
+    return read_simhash_fps(spark, os.path.join(base, "fps"))
 
 
 @register(
@@ -13218,20 +13115,16 @@ def _emb_bucket_rows(emb: DataFrame, n_planes: int) -> DataFrame:
     )
 
 
-def _emb_bucket_store(sf_dir: str, n_planes: int) -> tuple[str, str]:
-    """Fingerprint-keyed store location — (sf dir, embeddings
-    fingerprint, plane count, codec version), the S20/S21/S22
-    discipline: a regenerated corpus, a grown geometry or a changed
-    encode can never silently serve stale rows."""
-    import os
-    import re
-
-    from ..sources.store_root import store_root
-
-    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    full = f"{tag}_{fp}_p{n_planes}_v{_ANNB_CODEC_VERSION}"
-    return os.path.join(store_root(), "annbucket_store", full), full
+def _emb_bucket_store_path(sf_dir: str, n_planes: int) -> str:
+    """S23 store key: the plane count and codec version on top of the
+    embeddings fingerprint — a regenerated corpus, a grown geometry
+    or a changed encode can never silently serve stale rows."""
+    return store_path(
+        "annbucket_store",
+        sf_dir,
+        ("embeddings",),
+        f"p{n_planes}_v{_ANNB_CODEC_VERSION}",
+    )
 
 
 def _ensure_emb_bucket_store(
@@ -13243,33 +13136,16 @@ def _ensure_emb_bucket_store(
     sessions finding valid files re-ATTACH without re-encoding."""
     import os
 
-    from ..sources.annbucket_store import (
-        attach_emb_buckets,
-        emb_bucket_store_complete,
-        mark_emb_bucket_store_complete,
-        write_emb_buckets,
-    )
-    from ..sources.store_root import build_tmp, publish_build
+    from ..sources.annbucket_store import attach_emb_buckets, write_emb_buckets
 
-    base, tag = _emb_bucket_store(sf_dir, n_planes)
-    table = f"emb_buckets_{tag}"
-    if not spark.catalog.tableExists(table):
-        if not emb_bucket_store_complete(base):
-            tmp = build_tmp(base)
-            emb = load_table(spark, sf_dir, "embeddings")
-            tmp_table = (
-                f"{table}__build_{os.path.basename(tmp).split('-')[-1]}"
-            )
-            write_emb_buckets(
-                _emb_bucket_rows(emb, n_planes),
-                tmp_table,
-                os.path.join(tmp, "buckets"),
-            )
-            spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
-            mark_emb_bucket_store_complete(tmp)
-            publish_build(tmp, base)
-        attach_emb_buckets(spark, table, os.path.join(base, "buckets"))
-    return table
+    base = ensure_store(
+        _emb_bucket_store_path(sf_dir, n_planes),
+        lambda tmp: write_emb_buckets(
+            _emb_bucket_rows(load_table(spark, sf_dir, "embeddings"), n_planes),
+            os.path.join(tmp, "buckets"),
+        ),
+    )
+    return attach_emb_buckets(spark, os.path.join(base, "buckets"))
 
 
 def emb_buckets_stored(

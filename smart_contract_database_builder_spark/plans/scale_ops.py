@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dec
 from ..functions.skew import hot_key_split_join, salted_agg
+from ..sources.store_root import ensure_store, store_path
 from .registry import register
 from .relational_ext import _t
 
@@ -137,31 +138,14 @@ def join_hot_key_split_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUCKET_CODEC_VERSION = 1
 
 
-def _bucket_store(sf_dir: str) -> tuple[str, str]:
-    """(path prefix, table-name tag) for the bucketed layout of one sf
-    dir — tables live in the per-user store root and carry the sf tag,
-    a size+mtime fingerprint of BOTH source tables, AND the layout
-    codec version, so two sf dirs never collide in the session
-    catalog, a regenerated-in-place corpus can never silently reuse
-    stale bucketed files, and a change to the derivation arithmetic
-    can never silently serve values computed under the old rules."""
-    import os
-    import re
-
-    from ..sources.store_root import store_root
-    from .llm_ops import _source_fingerprint
-
-    fp = _source_fingerprint(
-        os.path.join(sf_dir, "lineitem.parquet"),
-        os.path.join(sf_dir, "orders.parquet"),
-    )
-    tag = (
-        f"{re.sub(r'[^A-Za-z0-9_]+', '_', sf_dir.strip('/'))}"
-        f"_{fp}_v{_BUCKET_CODEC_VERSION}"
-    )
-    return (
-        os.path.join(store_root(), "bucketed", tag),
-        tag,
+def _bucket_store_path(sf_dir: str) -> str:
+    """Bucketed-layout store key: the layout codec version on top of a
+    fingerprint of BOTH source tables, so a regenerated-in-place corpus
+    can never silently reuse stale bucketed files, and a change to the
+    derivation arithmetic can never silently serve values computed
+    under the old rules."""
+    return store_path(
+        "bucketed", sf_dir, ("lineitem", "orders"), f"v{_BUCKET_CODEC_VERSION}"
     )
 
 
@@ -192,11 +176,12 @@ def join_bucketed_priority_revenue(
     between re-shuffling 100 TB per query and never re-shuffling it.
 
     The write runs on first use per (sf dir, source fingerprint) and
-    is reused after — ACROSS sessions: the files persist while the
-    in-memory catalog entry dies with the session, so a fresh session
-    finding valid files re-ATTACHES them via ``register_bucketed``
-    (the same bucket-spec DDL) instead of rewriting. Value neutrality
-    IS the oracle: the registered SQL is the plain join.
+    is reused after — ACROSS sessions: both tables are built into one
+    store by ``ensure_store`` (tmp build, completeness marker, atomic
+    publish), and a fresh session finding a complete store re-ATTACHES
+    the files via ``register_bucketed`` (the same bucket-spec DDL)
+    instead of rewriting. Value neutrality IS the oracle: the
+    registered SQL is the plain join.
     """
     import os
 
@@ -206,25 +191,29 @@ def join_bucketed_priority_revenue(
         write_bucketed,
     )
 
-    base, tag = _bucket_store(sf_dir)
-    lt, ot = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("orderkey"),
-        (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).alias(
-            "disc_price"
+    sides = {
+        "lineitem": _t(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("orderkey"),
+            (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).alias(
+                "disc_price"
+            ),
         ),
+        "orders": _t(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("orderkey"), "o_orderpriority"
+        ),
+    }
+
+    def build(tmp: str) -> None:
+        for sub, df in sides.items():
+            write_bucketed(df, os.path.join(tmp, sub), ("orderkey",), 8)
+
+    base = ensure_store(_bucket_store_path(sf_dir), build)
+    lt, ot = (
+        register_bucketed(
+            spark, f"bkt_{sub}", os.path.join(base, sub), ("orderkey",), 8
+        )
+        for sub in sides
     )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("orderkey"), "o_orderpriority"
-    )
-    for table, df, sub in ((lt, li, "lineitem"), (ot, orders, "orders")):
-        path = os.path.join(base, sub)
-        if spark.catalog.tableExists(table):
-            continue
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            register_bucketed(spark, table, "orderkey", 8, path)
-        else:
-            write_bucketed(df, table, "orderkey", 8, path)
     joined = co_located_join(spark, lt, ot, "orderkey")
     return joined.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.sum("disc_price").cast("double").alias("revenue"),

@@ -22,62 +22,31 @@ at ingest:
 Stored rows are BIT-IDENTICAL to the query-time pipeline's (the
 writer runs the same ``_iscale``/plane-dot expressions), so a
 store-read admission returns exactly the query-time answer and reuses
-its DuckDB oracle unchanged. Same crash-safety discipline as the
-siblings: tmp-sibling build, ``_STORE_COMPLETE`` after the write, one
-atomic publish rename; files survive the session, the catalog entry
-does not — a fresh session re-ATTACHES with the same bucket-spec DDL.
+its DuckDB oracle unchanged. Build, completeness gate and publish
+are ``store_root.ensure_store``'s; the catalog attach is
+``bucketing.register_bucketed``'s.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from .bucketing import register_bucketed, write_bucketed
 
 #: Fixed at write time — it IS the physical layout (the bucketing.py
 #: sizing rule: buckets ~ table_bytes / 128 MiB at target scale).
 _ANN_BUCKETS = 8
+_ANN_KEYS = ("bucket",)
 
 
-def write_emb_buckets(rows: DataFrame, table: str, path: str) -> None:
-    """Persist the (vec_id, bucket, sv, nrm) relation as a bucketed
-    catalog table (pre-write repartition aligns tasks with buckets —
-    the small-files discipline of ``write_bucketed``)."""
-    from pyspark.sql import functions as F
-
-    (
-        rows.repartition(_ANN_BUCKETS, F.col("bucket"))
-        .write.format("parquet")
-        .bucketBy(_ANN_BUCKETS, "bucket")
-        .sortBy("bucket")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+def write_emb_buckets(rows: DataFrame, path: str) -> None:
+    """Persist the (vec_id, bucket, sv, nrm) relation bucketed and
+    sorted on the bucket key at ``path``."""
+    write_bucketed(rows, path, _ANN_KEYS, _ANN_BUCKETS)
 
 
-def attach_emb_buckets(spark: SparkSession, table: str, path: str) -> None:
-    """Re-attach an existing bucket store to the session catalog with
-    the writer's bucket spec (the catalog metadata is what lets the
-    planner drop the probe join's corpus-side exchange). Schema is
-    read from the files so a writer-side change can never register a
-    mismatched table."""
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
-    spark.sql(
-        f"CREATE TABLE `{table}` ({cols}) USING parquet "
-        f"CLUSTERED BY (`bucket`) SORTED BY (`bucket`) "
-        f"INTO {_ANN_BUCKETS} BUCKETS LOCATION '{path}'"
-    )
-
-
-def mark_emb_bucket_store_complete(base: str) -> None:
-    """DONE marker — strictly AFTER the table write (pq_store
-    discipline: a crash mid-write never leaves a store that passes
-    the reuse gate)."""
-    with open(os.path.join(base, "_STORE_COMPLETE"), "w") as fh:
-        fh.write("buckets\n")
-
-
-def emb_bucket_store_complete(base: str) -> bool:
-    return os.path.exists(os.path.join(base, "_STORE_COMPLETE"))
+def attach_emb_buckets(spark: SparkSession, path: str) -> str:
+    """Catalog table over the bucket files at ``path``, with the bucket
+    spec that lets the planner drop the probe join's corpus-side
+    exchange."""
+    return register_bucketed(spark, "emb_buckets", path, _ANN_KEYS, _ANN_BUCKETS)

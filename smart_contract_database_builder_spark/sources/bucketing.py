@@ -19,62 +19,82 @@ for the exchange-free plan. Writing N output files per task × buckets
 is the known small-files hazard — repartition by the bucket key before
 writing so each task owns whole buckets.
 
-Demonstrated and plan-asserted (no Exchange in the joined plan) in
-tests/test_bucketing_layout.py.
+This module is the one bucketed writer and the one catalog attach for
+every bucketed store (the fact tables, the MinHash bands, the
+hyperplane buckets); the stores' build gate and publish are
+``store_root.ensure_store``'s. Demonstrated and plan-asserted (no
+Exchange in the joined plan) in tests/test_bucketing_layout.py.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+
+def bucketed_table(prefix: str, path: str) -> str:
+    """Session-catalog name of the bucketed table stored at ``path``.
+    Keyed by the location, not by the input: a store rebuilt under
+    another root or fingerprint gets a new name, so a live session
+    never reads a table that still points at the old files."""
+    return f"{prefix}_{hashlib.md5(path.encode()).hexdigest()[:12]}"
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    path: str,
+    df: DataFrame, path: str, keys: tuple[str, ...], n_buckets: int
 ) -> None:
-    """Persist ``df`` as a bucketed+sorted catalog table at ``path``.
+    """Persist ``df`` as bucketed+sorted parquet files at ``path``.
 
-    The pre-write ``repartition(n_buckets, key)`` aligns tasks with
+    The pre-write ``repartition(n_buckets, *keys)`` aligns tasks with
     buckets: without it every task writes a file into every bucket
-    (tasks × buckets small files)."""
+    (tasks × buckets small files). The writer needs a catalog entry;
+    it gets a throwaway EXTERNAL one, dropped right after (the files
+    stay), and the caller attaches the published location with
+    ``register_bucketed``."""
+    scratch = f"bucketed_build_{os.urandom(6).hex()}"
     (
-        df.repartition(n_buckets, F.col(key))
+        df.repartition(n_buckets, *keys)
         .write.format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
+        .bucketBy(n_buckets, *keys)
+        .sortBy(*keys)
         .option("path", path)
         .mode("overwrite")
-        .saveAsTable(table)
+        .saveAsTable(scratch)
     )
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS `{scratch}`")
 
 
 def register_bucketed(
     spark: SparkSession,
-    table: str,
-    key: str,
-    n_buckets: int,
+    prefix: str,
     path: str,
-) -> None:
-    """Re-attach an EXISTING bucketed layout to the (in-memory) session
-    catalog: the files survive across sessions, the catalog entry does
-    not — without re-registration every new session would pay the full
-    bucketed rewrite even though valid files sit on disk. The DDL
-    declares the same bucket spec the writer used (the catalog's
-    bucket metadata, not the files, is what lets the planner prove
-    co-partitioning), and the column schema is read from the files
-    themselves so a writer-side schema change can never silently
-    register a mismatched table."""
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
-    spark.sql(
-        f"CREATE TABLE `{table}` ({cols}) USING parquet "
-        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-    )
+    keys: tuple[str, ...],
+    n_buckets: int,
+) -> str:
+    """Attach the bucketed files at ``path`` to the session catalog
+    and return the table name (``bucketed_table``); an entry of that
+    name is reused as is. The files survive across sessions, the
+    in-memory catalog entry does not, so every new session attaches
+    instead of rewriting. The DDL declares the writer's bucket spec
+    (the catalog's bucket metadata, not the files, is what lets the
+    planner prove co-partitioning), and the column schema is read
+    from the files themselves so a writer-side schema change can
+    never register a mismatched table."""
+    table = bucketed_table(prefix, path)
+    if not spark.catalog.tableExists(table):
+        schema = spark.read.parquet(path).schema
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in schema
+        )
+        ks = ", ".join(f"`{k}`" for k in keys)
+        spark.sql(
+            f"CREATE TABLE `{table}` ({cols}) USING parquet "
+            f"CLUSTERED BY ({ks}) SORTED BY ({ks}) "
+            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+        )
+    return table
 
 
 def co_located_join(

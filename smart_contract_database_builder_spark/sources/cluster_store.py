@@ -17,10 +17,8 @@ a single parquet scan.
 Keying discipline: the store path embeds the SAME corpus fingerprint
 as the band store plus both codec versions, so a regenerated corpus, a
 changed signature pipeline, or a changed CC algorithm can never
-silently serve stale clusters. Completeness is gated on a marker
-written strictly after the label write (the ``pq_store.py``
-discipline). Rooted under ``store_root()`` (per-user 0700, symlink-
-rejecting) like every persisted store.
+silently serve stale clusters. Build, completeness gate and publish
+are ``store_root.ensure_store``'s.
 """
 
 from __future__ import annotations
@@ -36,26 +34,12 @@ _CLUSTER_FILES = 8
 
 
 def write_cluster_map(comp: DataFrame, path: str) -> None:
-    """Persist the (doc, cluster_id) component relation, then the
-    store-level DONE marker — strictly in that order, so a crash
-    mid-write can never leave a store that passes the reuse gate.
-    Built in a sibling tmp dir and published by one atomic rename
-    (``store_root.build_tmp``/``publish_build``), so a concurrent
-    builder of the same store can never interleave part-files."""
-    from .store_root import build_tmp, publish_build
-
-    tmp = build_tmp(path)
+    """Persist the (doc, cluster_id) component relation under
+    ``path``."""
     comp.repartition(_CLUSTER_FILES).write.parquet(
-        os.path.join(tmp, "components"), mode="overwrite"
+        os.path.join(path, "components"), mode="overwrite"
     )
-    with open(os.path.join(tmp, "_STORE_COMPLETE"), "w") as fh:
-        fh.write("components\n")
-    publish_build(tmp, path)
 
 
 def read_cluster_map(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(os.path.join(path, "components"))
-
-
-def cluster_store_complete(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_STORE_COMPLETE"))

@@ -22,15 +22,10 @@ verification is a physical-layout change, not a semantic one.
 as the family's always-verified twin (the ``llm_minhash_lsh_pairs``
 vs ``_stored`` precedent).
 
-Files survive the session; the reuse gate is the store-level
-``_STORE_COMPLETE`` marker written strictly after the parquet
-(``pq_store.py`` discipline), and builds publish by one atomic
-rename (``store_root.build_tmp``/``publish_build``).
+Build, completeness gate and publish are ``store_root.ensure_store``'s.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,12 +41,3 @@ def write_jaccard_pairs(pairs: DataFrame, path: str) -> None:
 
 def read_jaccard_pairs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def mark_jaccard_store_complete(path: str) -> None:
-    with open(os.path.join(path, "_STORE_COMPLETE"), "w") as fh:
-        fh.write("pairs\n")
-
-
-def jaccard_store_complete(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_STORE_COMPLETE"))

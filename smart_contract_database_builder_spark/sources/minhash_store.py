@@ -26,58 +26,34 @@ change, not a semantic one.
 Store layout v2 (round 11) adds the SIGNATURE table alongside the
 bands — ``<base>/sigs`` holds one ``(doc_id, m0..m7)`` row per
 document so the Jaccard-estimate verify stage (signature component
-agreement) also skips the corpus pass — and a store-level
-``_STORE_COMPLETE`` marker written strictly after BOTH tables (the
-``pq_store.py`` discipline): a crash between the sigs and bands
-writes can never persist a store that passes the reuse gate.
-
-Like ``bucketing.py``, the files survive the session while the
-catalog entry does not: a fresh session finding valid files
-re-ATTACHES them with the same bucket-spec DDL instead of rewriting.
+agreement) also skips the corpus pass. Build, completeness gate and
+publish are ``store_root.ensure_store``'s; the catalog attach is
+``bucketing.register_bucketed``'s.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .bucketing import register_bucketed, write_bucketed
 
 #: Fixed at write time — it IS the physical layout. Both the writer
 #: and the re-attach DDL must agree; pick for target scale as in
 #: bucketing.py (buckets ~ table_bytes / 128 MiB).
 _BAND_BUCKETS = 8
+_BAND_KEYS = ("band_idx", "key")
 
 
-def write_minhash_bands(bands: DataFrame, table: str, path: str) -> None:
-    """Persist the (doc_id, band_idx, key) banded relation as a
-    bucketed+sorted catalog table at ``path``. The pre-write
-    ``repartition`` aligns tasks with buckets (the small-files
-    discipline of ``write_bucketed``)."""
-    (
-        bands.repartition(_BAND_BUCKETS, F.col("band_idx"), F.col("key"))
-        .write.format("parquet")
-        .bucketBy(_BAND_BUCKETS, "band_idx", "key")
-        .sortBy("band_idx", "key")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+def write_minhash_bands(bands: DataFrame, path: str) -> None:
+    """Persist the (doc_id, band_idx, key) banded relation bucketed
+    and sorted on (band_idx, key) at ``path``."""
+    write_bucketed(bands, path, _BAND_KEYS, _BAND_BUCKETS)
 
 
-def attach_minhash_bands(spark: SparkSession, table: str, path: str) -> None:
-    """Re-attach an existing band store to the session catalog with
-    the same bucket spec the writer used (the catalog's bucket
-    metadata is what lets the planner drop the groupBy exchange).
-    Schema is read from the files so a writer-side change can never
-    register a mismatched table."""
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
-    spark.sql(
-        f"CREATE TABLE `{table}` ({cols}) USING parquet "
-        f"CLUSTERED BY (`band_idx`, `key`) SORTED BY (`band_idx`, `key`) "
-        f"INTO {_BAND_BUCKETS} BUCKETS LOCATION '{path}'"
-    )
+def attach_minhash_bands(spark: SparkSession, path: str) -> str:
+    """Catalog table over the band files at ``path``, with the bucket
+    spec that lets the planner drop the bucket-assembly exchange."""
+    return register_bucketed(spark, "mh_bands", path, _BAND_KEYS, _BAND_BUCKETS)
 
 
 def write_minhash_sigs(sigs: DataFrame, path: str) -> None:
@@ -89,17 +65,3 @@ def write_minhash_sigs(sigs: DataFrame, path: str) -> None:
 
 def read_minhash_sigs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def mark_minhash_store_complete(path: str) -> None:
-    """Store-level DONE marker — called strictly AFTER both the sigs
-    and bands writes (the ``pq_store.py`` discipline)."""
-    with open(os.path.join(path, "_STORE_COMPLETE"), "w") as fh:
-        fh.write("sigs+bands\n")
-
-
-def minhash_store_complete(path: str) -> bool:
-    """True iff a prior store build ran to completion: a crash between
-    the sigs and bands writes leaves per-table ``_SUCCESS`` markers
-    but never this gate."""
-    return os.path.exists(os.path.join(path, "_STORE_COMPLETE"))

@@ -21,6 +21,8 @@ read-path query over this store returns BIT-IDENTICAL results to
 ``llm_ivfpq_topk`` — which is why the registered read-path query can
 reuse that query's DuckDB oracle unchanged.
 
+Build, completeness gate and publish are ``store_root.ensure_store``'s.
+
 Imports of the PQ kernels are deferred to call time: ``plans.llm_ops``
 imports ``sources.tables`` at module import, so a module-level import
 here would cycle.
@@ -34,7 +36,7 @@ from pyspark.sql import functions as F
 
 def write_pq_encoded(emb: DataFrame, path: str) -> None:
     """Encode ``(vec_id, embedding, label)`` rows into the partitioned
-    IVF-PQ store at ``path``: compute the coarse-cell assignment and
+    IVF-PQ layout at ``path``: compute the coarse-cell assignment and
     the ``_PQ_M`` sub-codes once, write codes parquet partitioned by
     cell plus the K-row cell table.
 
@@ -77,38 +79,13 @@ def write_pq_encoded(emb: DataFrame, path: str) -> None:
         "cell",
         *[_pq_code_m(F.col("sv"), m).alias(f"c{m}") for m in range(_PQ_M)],
     )
-    # cells/ BEFORE codes/, and a store-level DONE marker after both:
-    # the reuse gate keys on the marker, so a build interrupted between
-    # any two writes leaves a store that fails the gate and is rebuilt
-    # instead of persisting forever with a missing table. Built in a
-    # sibling tmp dir and published by one atomic rename (round 11),
-    # so a concurrent builder of the same store can never interleave
-    # part-files at the shared final path.
-    import os
-
-    from .store_root import build_tmp, publish_build
-
-    tmp = build_tmp(path)
-    cells.write.mode("overwrite").parquet(f"{tmp}/cells")
+    cells.write.mode("overwrite").parquet(f"{path}/cells")
     (
         codes.repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(f"{tmp}/codes")
+        .parquet(f"{path}/codes")
     )
-    with open(os.path.join(tmp, "_STORE_COMPLETE"), "w") as fh:
-        fh.write("cells+codes\n")
-    publish_build(tmp, path)
-
-
-def pq_store_complete(path: str) -> bool:
-    """True iff a prior ``write_pq_encoded`` ran to completion — the
-    store-level DONE marker is written strictly after BOTH tables, so
-    a crash mid-build can never leave a store that passes this gate
-    with a missing or partial table."""
-    import os
-
-    return os.path.exists(os.path.join(path, "_STORE_COMPLETE"))
 
 
 def read_pq_codes(spark: SparkSession, path: str) -> DataFrame:

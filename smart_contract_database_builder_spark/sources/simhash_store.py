@@ -17,14 +17,10 @@ read-path query returns exactly the query-time answer and reuses its
 DuckDB oracle unchanged — write-time fingerprinting is a physical-
 layout change, not a semantic one.
 
-Same crash-safety discipline as the siblings: the build lands in a
-tmp sibling dir, ``_STORE_COMPLETE`` is written after the parquet
-write, and the whole directory publishes with one atomic rename.
+Build, completeness gate and publish are ``store_root.ensure_store``'s.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,15 +37,3 @@ def write_simhash_fps(fps: DataFrame, path: str) -> None:
 
 def read_simhash_fps(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def mark_simhash_store_complete(base: str) -> None:
-    """DONE marker — called strictly AFTER the fingerprint write."""
-    with open(os.path.join(base, "_STORE_COMPLETE"), "w") as fh:
-        fh.write("fps\n")
-
-
-def simhash_store_complete(base: str) -> bool:
-    """True iff a prior build ran to completion (the parquet
-    ``_SUCCESS`` alone never passes the reuse gate)."""
-    return os.path.exists(os.path.join(base, "_STORE_COMPLETE"))

@@ -1,17 +1,39 @@
-"""Per-user root directory for cross-session derived stores.
+"""Per-user store root and the one protocol every derived store uses.
 
-The engine persists derived layouts across sessions — the bucketed
-fact tables (``sources/bucketing.py``), the IVF-PQ encoded store
-(``sources/pq_store.py``), the MinHash band store
-(``sources/minhash_store.py``) and the near-dup cluster store
-(``sources/cluster_store.py``). A
-world-shared location under ``tempfile.gettempdir()`` would let any
-other local user PRE-CREATE a store path with planted parquet +
-``_SUCCESS`` markers: the fingerprint is embedded in the path, never
-re-verified against content, so the query would trust planted rows as
-answers. Rooting every store in a per-user 0700 directory (ownership
-and permissions VERIFIED, not assumed, on every resolve) closes that
-hole without changing any store's keying discipline.
+The engine persists derived layouts across sessions: the bucketed fact
+tables, the IVF-PQ codes (``pq_store.py``), the MinHash bands+sigs
+(``minhash_store.py``), the verified-Jaccard pairs
+(``jaccard_store.py``), the SimHash prints (``simhash_store.py``), the
+hyperplane buckets (``annbucket_store.py``) and the near-dup cluster
+maps (``cluster_store.py``). Each of them goes through three functions
+and nothing else:
+
+- ``store_path(kind, sf_dir, sources, geom)`` — the one location:
+  ``<root>/<kind>/<sf tag>_<source fingerprint>_<geom>``. The
+  fingerprint (size+mtime of every source table) and ``geom`` (the
+  writer's geometry and codec version) are in the path, so a
+  regenerated corpus or a changed encoder resolves to a new path whose
+  gate is closed instead of serving stale rows.
+- ``ensure_store(path, build)`` — the one gate: a complete store
+  returns at once; otherwise ``build(tmp)`` writes every table into a
+  sibling build dir, the ``_STORE_COMPLETE`` marker lands strictly
+  after them, and ``publish_build`` moves the dir into place with one
+  atomic rename. A crash mid-build never leaves a store that passes
+  the gate, and concurrent builders never interleave part-files.
+- ``bucketing.register_bucketed`` — the one catalog attach for the
+  bucketed stores, named after the store location, so a session never
+  reads a table that points at another root's files.
+
+The per-store modules keep only what differs: the encode, the file
+counts and the bucket keys.
+
+A world-shared location under ``tempfile.gettempdir()`` would let any
+other local user PRE-CREATE a store path with planted parquet and
+markers: the fingerprint is embedded in the path, never re-verified
+against content, so the query would trust planted rows as answers.
+Rooting every store in a per-user 0700 directory (ownership and
+permissions VERIFIED, not assumed, on every resolve) closes that hole
+without changing any store's keying.
 
 ``SPARK_GRAFT_STORE_ROOT`` overrides the location (e.g. to point at
 cluster-local scratch or a shared team cache on hosts where that is
@@ -22,10 +44,17 @@ decision.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import shutil
 import stat
 import tempfile
+from typing import Callable
+
+#: Store-level completeness marker, written strictly after every table
+#: of a build (per-table ``_SUCCESS`` files never pass the gate).
+_MARKER = "_STORE_COMPLETE"
 
 
 def _default_base() -> str:
@@ -194,7 +223,7 @@ def publish_build(tmp: str, final: str) -> None:
         return
     except OSError:
         pass
-    if os.path.exists(os.path.join(final, "_STORE_COMPLETE")):
+    if store_complete(final):
         shutil.rmtree(tmp, ignore_errors=True)
         return
     shutil.rmtree(final, ignore_errors=True)
@@ -208,9 +237,60 @@ def publish_build(tmp: str, final: str) -> None:
     # entirely). Returning silently would leave callers reading a path
     # with no complete store and failing later with an opaque parquet
     # error — verify the invariant this function exists to provide.
-    if not os.path.exists(os.path.join(final, "_STORE_COMPLETE")):
+    if not store_complete(final):
         raise RuntimeError(
             f"store publish failed: no complete store at {final} after "
             "rename fallback (concurrent incomplete build or rename "
             "error) — retry the build"
         )
+
+
+def source_fingerprint(*paths: str) -> str:
+    """Cheap content fingerprint of source parquet files: (size, mtime)
+    per file, hashed. Keying a derived store by row count alone is not
+    enough — a REGENERATED corpus with the same cardinality but
+    different content would silently serve stale derived data; size+
+    mtime changes on any rewrite."""
+    parts = []
+    for p in paths:
+        st = os.stat(p)
+        parts.append(f"{p}:{st.st_size}:{int(st.st_mtime_ns)}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+
+
+def store_path(kind: str, sf_dir: str, sources: tuple[str, ...], geom: str) -> str:
+    """Location of the ``kind`` store derived from the ``sources``
+    tables of ``sf_dir``: keyed by the sf dir, the fingerprint of every
+    source table, and ``geom`` (the writer's geometry and codec
+    version — bump it whenever the stored arithmetic changes)."""
+    tag = re.sub(r"\W+", "_", sf_dir.strip("/"))
+    fp = source_fingerprint(
+        *(os.path.join(sf_dir, f"{s}.parquet") for s in sources)
+    )
+    return os.path.join(store_root(), kind, f"{tag}_{fp}_{geom}")
+
+
+def store_complete(path: str) -> bool:
+    """True iff a build of the store at ``path`` ran to completion."""
+    return os.path.exists(os.path.join(path, _MARKER))
+
+
+def ensure_store(path: str, build: Callable[[str], None]) -> str:
+    """Build-once gate for the store at ``path``; returns ``path``.
+
+    A complete store returns at once. Otherwise ``build(tmp)`` writes
+    every table under a fresh sibling build dir, the marker (listing
+    what the build wrote) lands strictly after them, and the dir is
+    published with one atomic rename."""
+    if store_complete(path):
+        return path
+    tmp = build_tmp(path)
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    with open(os.path.join(tmp, _MARKER), "w") as fh:
+        fh.write("+".join(sorted(os.listdir(tmp))) + "\n")
+    publish_build(tmp, path)
+    return path

@@ -15,8 +15,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from smart_contract_database_builder_spark import plans
 from smart_contract_database_builder_spark.plans.llm_ops import (
     _N_PLANES,
-    _emb_bucket_store,
+    _emb_bucket_store_path,
 )
+from smart_contract_database_builder_spark.sources.bucketing import bucketed_table
+from smart_contract_database_builder_spark.sources.store_root import store_complete
 
 from conftest import SF_ORACLE
 
@@ -25,6 +27,10 @@ def _plan(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode
     )
+
+
+def _buckets_table(base: str) -> str:
+    return bucketed_table("emb_buckets", os.path.join(base, "buckets"))
 
 
 def _decisions(name, spark):
@@ -74,7 +80,8 @@ def test_store_built_once_and_reattaches_in_fresh_catalog(spark):
     """Second invocation reuses (marker mtime frozen); a fresh session
     (catalog table dropped) re-ATTACHES the files instead of
     re-encoding."""
-    base, tag = _emb_bucket_store(SF_ORACLE, _N_PLANES)
+    base = _emb_bucket_store_path(SF_ORACLE, _N_PLANES)
+    table = _buckets_table(base)
     plans.QUERIES["llm_incremental_embedding_admission_stored"].fn(
         spark, SF_ORACLE
     ).collect()
@@ -84,32 +91,29 @@ def test_store_built_once_and_reattaches_in_fresh_catalog(spark):
         spark, SF_ORACLE
     ).collect()
     assert os.stat(marker).st_mtime_ns == t0
-    spark.sql(f"DROP TABLE IF EXISTS `emb_buckets_{tag}`")
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     out = plans.QUERIES["llm_incremental_embedding_admission_stored"].fn(
         spark, SF_ORACLE
     )
     assert os.stat(marker).st_mtime_ns == t0, "re-attach rewrote the store"
     assert out.count() > 0
-    spark.sql(f"DROP TABLE IF EXISTS `emb_buckets_{tag}`")
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
 def test_half_built_store_is_rebuilt_not_served(spark, tmp_path, monkeypatch):
     """Parquet files without the _STORE_COMPLETE gate (a crashed
     build) must trigger a rebuild, never be served."""
-    from smart_contract_database_builder_spark.sources import (
-        annbucket_store as m,
-    )
-
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    base, tag = _emb_bucket_store(SF_ORACLE, _N_PLANES)
+    base = _emb_bucket_store_path(SF_ORACLE, _N_PLANES)
+    table = _buckets_table(base)
     os.makedirs(os.path.join(base, "buckets"), exist_ok=True)
     with open(os.path.join(base, "buckets", "part-junk.parquet"), "w") as fh:
         fh.write("not parquet")
-    assert not m.emb_bucket_store_complete(base)
-    spark.sql(f"DROP TABLE IF EXISTS `emb_buckets_{tag}`")
+    assert not store_complete(base)
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     out = plans.QUERIES["llm_incremental_embedding_admission_stored"].fn(
         spark, SF_ORACLE
     )
     assert out.count() > 0
-    assert m.emb_bucket_store_complete(base)
-    spark.sql(f"DROP TABLE IF EXISTS `emb_buckets_{tag}`")
+    assert store_complete(base)
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")

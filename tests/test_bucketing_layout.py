@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from smart_contract_database_builder_spark.sources.bucketing import (
     co_located_join,
+    register_bucketed,
     write_bucketed,
 )
 from smart_contract_database_builder_spark.sources.tables import load_table
@@ -26,19 +27,21 @@ def bucketed_tables(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("bucketed")
     orders = load_table(spark, SF_SMOKE, "orders")
     lineitem = load_table(spark, SF_SMOKE, "lineitem")
-    write_bucketed(
-        orders, "b_orders", "o_orderkey", 4, str(root / "orders")
-    )
+    keys = ("o_orderkey",)
+    write_bucketed(orders, str(root / "orders"), keys, 4)
     write_bucketed(
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem",
-        "o_orderkey",
-        4,
         str(root / "lineitem"),
+        keys,
+        4,
     )
-    yield "b_orders", "b_lineitem"
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
+    tables = (
+        register_bucketed(spark, "b_orders", str(root / "orders"), keys, 4),
+        register_bucketed(spark, "b_lineitem", str(root / "lineitem"), keys, 4),
+    )
+    yield tables
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables):

@@ -17,10 +17,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from smart_contract_database_builder_spark import plans
 from smart_contract_database_builder_spark.plans.llm_ops import (
     _ensure_jaccard_store,
-    _jaccard_store,
+    _jaccard_store_path,
     _ngram_jaccard_pairs_compute,
     _ngram_jaccard_pairs_stored,
 )
+from smart_contract_database_builder_spark.sources.store_root import store_complete
 
 from conftest import SF_ORACLE
 
@@ -66,7 +67,7 @@ def test_audit_read_paths_never_rerun_the_verify(spark):
 
 
 def test_store_builds_once_and_reuses_across_sessions(spark):
-    base, _tag = _jaccard_store(SF_ORACLE)
+    base = _jaccard_store_path(SF_ORACLE)
     _ensure_jaccard_store(spark, SF_ORACLE)
     marker = os.path.join(base, "_STORE_COMPLETE")
     t0 = os.stat(marker).st_mtime_ns
@@ -83,13 +84,13 @@ def test_half_built_store_is_rebuilt_not_served(spark, tmp_path, monkeypatch):
     """Parquet files without the _STORE_COMPLETE gate (a crashed
     build) must trigger a rebuild, never be served."""
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    base, _tag = _jaccard_store(SF_ORACLE)
+    base = _jaccard_store_path(SF_ORACLE)
     # simulate a crash: pair files exist, marker does not
     os.makedirs(os.path.join(base, "pairs"), exist_ok=True)
     with open(os.path.join(base, "pairs", "part-00000.parquet"), "w") as fh:
         fh.write("garbage")
     path = _ensure_jaccard_store(spark, SF_ORACLE)
-    assert os.path.exists(os.path.join(base, "_STORE_COMPLETE"))
+    assert store_complete(base)
     df = _ngram_jaccard_pairs_stored(spark, SF_ORACLE)
     assert df.count() > 0
     shutil.rmtree(base, ignore_errors=True)
@@ -105,20 +106,17 @@ def test_geometry_or_codec_mismatch_never_serves_stale_pairs(
     completeness gate is closed — the S21 band store's own guard,
     extended to S24 (VERDICT r13 #6)."""
     from smart_contract_database_builder_spark.plans import llm_ops
-    from smart_contract_database_builder_spark.sources.jaccard_store import (
-        jaccard_store_complete,
-    )
 
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    base, _tag = _jaccard_store(SF_ORACLE)
+    base = _jaccard_store_path(SF_ORACLE)
     _ensure_jaccard_store(spark, SF_ORACLE)
-    assert jaccard_store_complete(base)
+    assert store_complete(base)
 
     # bucket-cap flip: different key, closed gate
     monkeypatch.setattr(llm_ops, "_LSH_BUCKET_CAP", llm_ops._LSH_BUCKET_CAP + 1)
-    base_cap, _ = _jaccard_store(SF_ORACLE)
+    base_cap = _jaccard_store_path(SF_ORACLE)
     assert base_cap != base
-    assert not jaccard_store_complete(base_cap)
+    assert not store_complete(base_cap)
     monkeypatch.undo()
 
     # verify-codec bump: different key, closed gate
@@ -126,17 +124,17 @@ def test_geometry_or_codec_mismatch_never_serves_stale_pairs(
     monkeypatch.setattr(
         llm_ops, "_JACCARD_CODEC_VERSION", llm_ops._JACCARD_CODEC_VERSION + 1
     )
-    base_codec, _ = _jaccard_store(SF_ORACLE)
+    base_codec = _jaccard_store_path(SF_ORACLE)
     assert base_codec != base and base_codec != base_cap
-    assert not jaccard_store_complete(base_codec)
+    assert not store_complete(base_codec)
     monkeypatch.undo()
 
     # banding-geometry flip (rows per band): different key, closed gate
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
     monkeypatch.setattr(llm_ops, "_BAND_ROWS", llm_ops._BAND_ROWS + 1)
-    base_geom, _ = _jaccard_store(SF_ORACLE)
+    base_geom = _jaccard_store_path(SF_ORACLE)
     assert base_geom not in (base, base_cap, base_codec)
-    assert not jaccard_store_complete(base_geom)
+    assert not store_complete(base_geom)
     monkeypatch.undo()
 
     # and the matched key still reuses the one real build

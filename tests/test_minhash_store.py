@@ -13,7 +13,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from smart_contract_database_builder_spark import plans
-from smart_contract_database_builder_spark.plans.llm_ops import _minhash_store
+from smart_contract_database_builder_spark.plans.llm_ops import _minhash_store_path
+from smart_contract_database_builder_spark.sources.bucketing import bucketed_table
+from smart_contract_database_builder_spark.sources.store_root import store_complete
 
 from conftest import SF_ORACLE
 
@@ -24,6 +26,10 @@ def _plan(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode
     )
+
+
+def _bands_table(base: str) -> str:
+    return bucketed_table("mh_bands", os.path.join(base, "bands"))
 
 
 def _pairs(name):
@@ -72,7 +78,7 @@ def test_stored_plan_bucket_assembly_is_exchange_free(spark):
 def test_store_reused_across_invocations(spark):
     """Second invocation for the same corpus must reuse the store —
     the store-level DONE marker's mtime does not change."""
-    base, _tag = _minhash_store(SF_ORACLE)
+    base = _minhash_store_path(SF_ORACLE)
     plans.QUERIES["llm_minhash_lsh_pairs_stored"].fn(spark, SF_ORACLE)
     marker = os.path.join(base, "_STORE_COMPLETE")
     t0 = os.path.getmtime(marker)
@@ -86,8 +92,8 @@ def test_store_reattaches_in_fresh_catalog(spark):
     disk, the query must re-attach — with bucket metadata intact, so
     the exchange-free plan survives re-attachment — instead of
     rewriting."""
-    base, tag = _minhash_store(SF_ORACLE)
-    table = f"mh_bands_{tag}"
+    base = _minhash_store_path(SF_ORACLE)
+    table = _bands_table(base)
     plans.QUERIES["llm_minhash_lsh_pairs_stored"].fn(spark, SF_ORACLE)
     marker = os.path.join(base, "_STORE_COMPLETE")
     t0 = os.path.getmtime(marker)
@@ -101,21 +107,18 @@ def test_half_built_store_is_rebuilt_not_served(spark, tmp_path, monkeypatch):
     """A store missing the _STORE_COMPLETE marker — the state a crash
     between the sigs and bands writes leaves behind — must be rebuilt,
     never attached (the pq_store completeness discipline)."""
-    from smart_contract_database_builder_spark.sources.minhash_store import (
-        minhash_store_complete,
-    )
-
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    base, tag = _minhash_store(SF_ORACLE)
+    base = _minhash_store_path(SF_ORACLE)
+    table = _bands_table(base)
     # simulate the crash artifact: sigs written, bands+marker missing
     os.makedirs(os.path.join(base, "sigs"), exist_ok=True)
     open(os.path.join(base, "sigs", "_SUCCESS"), "w").close()
-    assert not minhash_store_complete(base)
-    spark.sql(f"DROP TABLE IF EXISTS `mh_bands_{tag}`")
+    assert not store_complete(base)
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     pairs = _pairs("llm_minhash_lsh_pairs_stored")(spark)
-    assert minhash_store_complete(base)
+    assert store_complete(base)
     assert pairs == _pairs("llm_minhash_lsh_pairs")(spark)
-    spark.sql(f"DROP TABLE IF EXISTS `mh_bands_{tag}`")
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
 def test_stored_sigs_match_query_time_signatures(spark):
@@ -147,14 +150,11 @@ def test_dedup_family_adopts_the_store(spark, tmp_path, monkeypatch):
     the S21 store: with a fresh store root, running ONE family member
     builds the store exactly once, and every other member reuses it
     (marker mtime frozen) — no per-query signature pass remains."""
-    from smart_contract_database_builder_spark.sources.minhash_store import (
-        minhash_store_complete,
-    )
-
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    base, tag = _minhash_store(SF_ORACLE)
-    spark.sql(f"DROP TABLE IF EXISTS `mh_bands_{tag}`")
-    assert not minhash_store_complete(base)
+    base = _minhash_store_path(SF_ORACLE)
+    table = _bands_table(base)
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
+    assert not store_complete(base)
     plans.QUERIES["llm_triangle_counts"].fn(spark, SF_ORACLE).collect()
     marker = os.path.join(base, "_STORE_COMPLETE")
     t0 = os.path.getmtime(marker)
@@ -169,7 +169,7 @@ def test_dedup_family_adopts_the_store(spark, tmp_path, monkeypatch):
     ):
         plans.QUERIES[name].fn(spark, SF_ORACLE).collect()
         assert os.path.getmtime(marker) == t0, f"{name} rebuilt the store"
-    spark.sql(f"DROP TABLE IF EXISTS `mh_bands_{tag}`")
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
 def test_cluster_store_built_once_and_reused(spark, tmp_path, monkeypatch):
@@ -184,8 +184,8 @@ def test_cluster_store_built_once_and_reused(spark, tmp_path, monkeypatch):
     )
 
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    _base, tag = _minhash_store(SF_ORACLE)
-    spark.sql(f"DROP TABLE IF EXISTS `mh_bands_{tag}`")
+    table = _bands_table(_minhash_store_path(SF_ORACLE))
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     plans.QUERIES["llm_neardup_clusters"].fn(spark, SF_ORACLE).collect()
     roots = os.listdir(os.path.join(store_root(), "cluster_store"))
     assert len(roots) == 1
@@ -199,7 +199,7 @@ def test_cluster_store_built_once_and_reused(spark, tmp_path, monkeypatch):
     comp = neardup_components_stored(spark, SF_ORACLE)
     assert os.path.getmtime(marker) == t0
     assert comp.count() > 0
-    spark.sql(f"DROP TABLE IF EXISTS `mh_bands_{tag}`")
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
 def test_emb_cluster_store_built_once_and_reused(spark, tmp_path, monkeypatch):

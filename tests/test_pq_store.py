@@ -98,18 +98,18 @@ def test_store_key_changes_when_the_source_is_regenerated(tmp_path):
     fingerprint exists to prevent."""
     import os
 
-    from smart_contract_database_builder_spark.plans.llm_ops import (
-        _source_fingerprint,
+    from smart_contract_database_builder_spark.sources.store_root import (
+        source_fingerprint,
     )
 
     src = tmp_path / "embeddings.parquet"
     src.write_bytes(b"v1-bytes")
-    fp1 = _source_fingerprint(str(src))
+    fp1 = source_fingerprint(str(src))
     src.write_bytes(b"v2-bytes-longer")
-    fp2 = _source_fingerprint(str(src))
+    fp2 = source_fingerprint(str(src))
     assert fp1 != fp2
     # same size, different mtime also flips the key (rewrite-in-place)
     src.write_bytes(b"v3-bytes-longer")
     os.utime(src, ns=(1, 1))
-    fp3 = _source_fingerprint(str(src))
+    fp3 = source_fingerprint(str(src))
     assert fp3 not in (fp1, fp2)

@@ -111,10 +111,30 @@ def test_bpe_state_cache_evicts_dead_sessions(spark, monkeypatch):
 
 
 def test_bench_session_sets_local_dir(monkeypatch):
-    """bench.py's builder must point spark.local.dir away from bare
-    /tmp (source-level pin: the config call must be present)."""
-    src = open(
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "bench.py")
-    ).read()
-    assert "spark.local.dir" in src
+    """bench.py's session must point spark.local.dir away from bare
+    /tmp. The bench builds through ``session.get_spark``, so it also
+    carries the engine defaults, plus its own heap and log settings;
+    the builder's options are captured before any session starts."""
+    import bench
+    from pyspark.sql import SparkSession
+
+    class Captured(Exception):
+        pass
+
+    seen = {}
+
+    def capture(builder):
+        seen.update(builder._options)
+        raise Captured
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_MEM", "3g")
+    with pytest.raises(Captured):
+        bench._build_session("2")
+    assert seen["spark.local.dir"] == scratch_dir()
+    assert seen["spark.master"] == "local[2]"
+    assert seen["spark.sql.shuffle.partitions"] == "2"
+    assert seen["spark.driver.memory"] == "3g"
+    assert seen["spark.ui.enabled"] == "false"
+    assert "stderr" in seen["spark.driver.extraJavaOptions"]
+    assert seen["spark.cleaner.referenceTracking.cleanCheckpoints"] == "true"

@@ -143,19 +143,55 @@ def test_bucketed_store_reattaches_across_sessions_without_rewrite(spark):
     import os
 
     from smart_contract_database_builder_spark.plans.scale_ops import (
-        _bucket_store,
+        _bucket_store_path,
+    )
+    from smart_contract_database_builder_spark.sources.bucketing import (
+        bucketed_table,
     )
 
     plans.QUERIES["join_bucketed_priority_revenue"].fn(spark, SF_ORACLE)
-    base, tag = _bucket_store(SF_ORACLE)
+    base = _bucket_store_path(SF_ORACLE)
     marker = os.path.join(base, "lineitem", "_SUCCESS")
     t0 = os.path.getmtime(marker)
-    spark.sql(f"DROP TABLE IF EXISTS bkt_lineitem_{tag}")
-    spark.sql(f"DROP TABLE IF EXISTS bkt_orders_{tag}")
+    for sub in ("lineitem", "orders"):
+        table = bucketed_table(f"bkt_{sub}", os.path.join(base, sub))
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     df = plans.QUERIES["join_bucketed_priority_revenue"].fn(spark, SF_ORACLE)
     assert os.path.getmtime(marker) == t0, "files rewritten instead of reused"
     assert "Bucketed: true" in _plan(df)
     assert df.count() == 5
+
+
+def test_half_built_bucketed_store_is_rebuilt_not_attached(
+    spark, tmp_path, monkeypatch
+):
+    """A crashed build of the bucketed fact tables — ``lineitem/`` with
+    a per-table ``_SUCCESS`` and junk part-files, but no store-level
+    completeness marker — must be rebuilt through the tmp-build +
+    atomic publish path, never attached as if it were valid."""
+    import os
+
+    from smart_contract_database_builder_spark.plans.scale_ops import (
+        _bucket_store_path,
+    )
+    from smart_contract_database_builder_spark.sources.store_root import (
+        store_complete,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    base = _bucket_store_path(SF_ORACLE)
+    lineitem = os.path.join(base, "lineitem")
+    os.makedirs(lineitem)
+    open(os.path.join(lineitem, "_SUCCESS"), "w").close()
+    junk = os.path.join(lineitem, "part-00000-junk_00000.c000.snappy.parquet")
+    with open(junk, "w") as fh:
+        fh.write("not parquet")
+    assert not store_complete(base)
+    df = plans.QUERIES["join_bucketed_priority_revenue"].fn(spark, SF_ORACLE)
+    assert df.count() == 5
+    assert store_complete(base)
+    assert not os.path.exists(junk), "crashed build was attached, not rebuilt"
+    assert os.path.isdir(os.path.join(base, "orders"))
 
 
 def test_reservoir_prefilter_fails_fast_when_margin_busts(spark, monkeypatch):

@@ -13,9 +13,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from smart_contract_database_builder_spark import plans
 from smart_contract_database_builder_spark.plans.llm_ops import (
-    _simhash_store,
+    _simhash_store_path,
     simhash_fps_stored,
 )
+from smart_contract_database_builder_spark.sources.store_root import store_complete
 
 from conftest import SF_ORACLE
 
@@ -59,7 +60,7 @@ def test_store_is_built_once_and_reused(spark):
     """A second call must serve the same files: the store directory's
     mtime may not change across invocations in one session."""
     simhash_fps_stored(spark, SF_ORACLE).count()
-    base, _tag = _simhash_store(SF_ORACLE)
+    base = _simhash_store_path(SF_ORACLE)
     marker = os.path.join(base, "_STORE_COMPLETE")
     m0 = os.stat(marker).st_mtime_ns
     simhash_fps_stored(spark, SF_ORACLE).count()
@@ -69,15 +70,13 @@ def test_store_is_built_once_and_reused(spark):
 def test_half_built_store_is_rebuilt_not_served(spark, tmp_path, monkeypatch):
     """Parquet files without the _STORE_COMPLETE gate (a crashed
     build) must trigger a rebuild, never be served."""
-    from smart_contract_database_builder_spark.sources import simhash_store as m
-
     monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
-    base, _tag = _simhash_store(SF_ORACLE)
+    base = _simhash_store_path(SF_ORACLE)
     # simulate a crash: fps files exist, no gate
     os.makedirs(os.path.join(base, "fps"), exist_ok=True)
     with open(os.path.join(base, "fps", "part-junk.parquet"), "w") as fh:
         fh.write("not parquet")
-    assert not m.simhash_store_complete(base)
+    assert not store_complete(base)
     fps = simhash_fps_stored(spark, SF_ORACLE)
     assert fps.count() > 0
-    assert m.simhash_store_complete(base)
+    assert store_complete(base)

@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from smart_contract_database_builder_spark import plans
 from smart_contract_database_builder_spark.plans.llm_ops import (
-    _simhash_store,
+    _simhash_store_path,
     emb_neardup_components_stored,
     neardup_components_stored,
     simhash_fps_stored,
@@ -49,7 +49,7 @@ def test_simhash_store_second_session_never_revotes(spark):
     it as-is: marker untouched, and the consumer plan free of the
     corpus vote pass (no documents scan, no tokenizer, no md5)."""
     simhash_fps_stored(spark, SF_ORACLE).count()  # ensure built
-    base, _tag = _simhash_store(SF_ORACLE)
+    base = _simhash_store_path(SF_ORACLE)
     marker = os.path.join(base, "_STORE_COMPLETE")
     t0 = os.stat(marker).st_mtime_ns
     fresh = spark.newSession()

@@ -2,15 +2,17 @@
 
 Covers sources/store_root.py (per-user 0700 root, ownership verified
 — a predictable world-shared path would let another local user plant
-a pre-built store the fingerprinted path would trust) and the PQ
-store's interrupted-build healing (the reuse gate keys on a DONE
-marker written strictly after both tables, so a crash between the
-cells/ and codes/ writes can never persist a half-built store).
+a pre-built store the fingerprinted path would trust) and the one
+store protocol: ``store_path`` keying, and ``ensure_store``'s
+interrupted-build healing (the reuse gate keys on a DONE marker
+written strictly after every table, so a crash between the cells/
+and codes/ writes can never persist a half-built store).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import stat
 import sys
 
@@ -18,9 +20,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from smart_contract_database_builder_spark.sources.store_root import store_root
-from smart_contract_database_builder_spark.sources.pq_store import (
-    pq_store_complete,
+from smart_contract_database_builder_spark.sources.store_root import (
+    store_complete,
+    store_root,
 )
 
 
@@ -144,9 +146,9 @@ def test_pq_store_gate_requires_done_marker(tmp_path):
     store = str(tmp_path / "store")
     os.makedirs(os.path.join(store, "codes"))
     open(os.path.join(store, "codes", "_SUCCESS"), "w").close()
-    assert not pq_store_complete(store)
+    assert not store_complete(store)
     open(os.path.join(store, "_STORE_COMPLETE"), "w").close()
-    assert pq_store_complete(store)
+    assert store_complete(store)
 
 
 def test_publish_build_loser_discards_and_winner_stands(tmp_path):
@@ -189,3 +191,66 @@ def test_publish_build_replaces_incomplete_final(tmp_path):
     assert open(os.path.join(final, "data")).read() == "fresh"
     assert os.path.exists(os.path.join(final, "_STORE_COMPLETE"))
     assert not os.path.exists(os.path.join(final, "partial"))
+
+
+def test_ensure_store_builds_once_and_marks_after_the_build(tmp_path):
+    """``ensure_store`` runs the build in a sibling dir, writes the
+    marker only after the build returned, publishes, and skips the
+    build entirely once the store is complete."""
+    from smart_contract_database_builder_spark.sources.store_root import (
+        ensure_store,
+    )
+
+    final = str(tmp_path / "store")
+    calls = []
+
+    def build(tmp):
+        assert tmp != final and not store_complete(tmp)
+        calls.append(tmp)
+        os.makedirs(os.path.join(tmp, "rows"))
+
+    assert ensure_store(final, build) == final
+    assert store_complete(final) and os.path.isdir(os.path.join(final, "rows"))
+    assert not os.path.exists(calls[0]), "build dir was not published"
+    assert ensure_store(final, build) == final
+    assert len(calls) == 1, "complete store was rebuilt"
+
+
+def test_ensure_store_failed_build_publishes_nothing(tmp_path):
+    """A build that raises leaves no store at the final path and no
+    build dir behind."""
+    from smart_contract_database_builder_spark.sources.store_root import (
+        ensure_store,
+    )
+
+    final = str(tmp_path / "store")
+
+    def build(tmp):
+        os.makedirs(os.path.join(tmp, "rows"))
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        ensure_store(final, build)
+    assert os.listdir(tmp_path) == []
+
+
+def test_store_path_keys_on_kind_sources_and_geometry(tmp_path, monkeypatch):
+    """``<root>/<kind>/<sf tag>_<fingerprint>_<geom>``: a different
+    kind, geometry or source set is a different store."""
+    from smart_contract_database_builder_spark.sources.store_root import (
+        source_fingerprint,
+        store_path,
+    )
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "a.parquet").write_bytes(b"a")
+    (sf / "b.parquet").write_bytes(b"b")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path / "root"))
+    p = store_path("k", str(sf), ("a",), "v1")
+    fp = source_fingerprint(str(sf / "a.parquet"))
+    tag = re.sub(r"\W+", "_", str(sf).strip("/"))
+    assert p == os.path.join(str(tmp_path / "root"), "k", f"{tag}_{fp}_v1")
+    assert store_path("k", str(sf), ("a",), "v2") != p
+    assert store_path("j", str(sf), ("a",), "v1") != p
+    assert store_path("k", str(sf), ("a", "b"), "v1") != p
