@@ -28,17 +28,25 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from ..functions.keccak import selector as keccak_selector
+from ..functions.keccak import selectors
 
 _CONTRACT_RE = re.compile(
     rb"\b(contract|interface|library)\s+([A-Za-z_$][\w$]*)"
 )
 _BASE_NAME_RE = re.compile(rb"[A-Za-z_$][\w$]*")
 _FUNCTION_RE = re.compile(rb"\bfunction\s+([A-Za-z_$][\w$]*)\s*\(")
+#: State-variable modifiers that may sit on either side of ``public``
+#: (``uint256 public override totalSupply``, ``override(A, B)``).
+_VAR_MODIFIER = rb"(?:constant|immutable|override(?:\s*\([^()]*\))?)"
 _PUBLIC_VAR_RE = re.compile(
-    rb"\b((?:mapping\s*\([^;{]*?\)|[A-Za-z_$][\w$]*)(?:\s*\[[^\]]*\])*)\s+public\s+"
-    rb"(?:constant\s+|immutable\s+)?([A-Za-z_$][\w$]*)\s*(?:=[^;]*)?;"
+    rb"\b((?:mapping\s*\([^;{]*?\)|[A-Za-z_$][\w$]*)(?:\s*\[[^\]]*\])*)"
+    rb"(?:\s+" + _VAR_MODIFIER + rb")*\s+public(?:\s+" + _VAR_MODIFIER + rb")*\s+"
+    rb"([A-Za-z_$][\w$]*)\s*(?:=[^;]*)?;"
 )
+#: ABI-visible function visibility as a whole word: ``publicOnly`` or
+#: ``whenexternalReady`` modifiers are not visibility keywords.
+_VISIBLE_RE = re.compile(rb"(?<![\w$])(?:public|external)(?![\w$])")
+_BRACE_RE = re.compile(rb"[{}]")
 
 #: Solidity type aliases canonicalized for ABI signatures (F6: the
 #: canonical form alloy renders, reference src/functions.rs:30).
@@ -51,7 +59,7 @@ class ExtractedFunction:
     contract_name: str
     function_name: str
     signature: str
-    selector: str
+    selector: str  # "" from the scanner; set by fill_selectors
     src_start: int  # byte offset
     src_length: int
     source_code: str
@@ -120,23 +128,18 @@ def _mask_noncode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _match_brace(data: bytes, open_idx: int, end: int) -> int:
-    """Index just past the ``}`` matching the ``{`` at ``open_idx``
-    (comment/string aware); ``-1`` if unbalanced."""
+def _match_brace(masked: bytes, open_idx: int, end: int) -> int:
+    """Index just past the ``}`` matching the ``{`` at ``open_idx`` in a
+    ``_mask_noncode`` buffer (no comments or strings left, so every
+    brace is code); ``-1`` if unbalanced."""
     depth = 0
-    i = open_idx
-    while i < end:
-        c = data[i : i + 1]
-        if c in (b'"', b"'") or data.startswith(b"//", i) or data.startswith(b"/*", i):
-            i = _skip_to(data, i, end)
-            continue
-        if c == b"{":
+    for m in _BRACE_RE.finditer(masked, open_idx, end):
+        if masked[m.start()] == 0x7B:  # {
             depth += 1
-        elif c == b"}":
+        else:
             depth -= 1
             if depth == 0:
-                return i + 1
-        i += 1
+                return m.end()
     return -1
 
 
@@ -171,14 +174,27 @@ def extract_file_functions(source: str) -> list[ExtractedFunction]:
     byte-offset body slices, plus public-variable getters (which the
     AST slicing pass cannot locate — emitted with ``source_code = ""``
     to mirror the reference's documented miss semantics)."""
-    return [f for c in scan_file_contracts(source) for f in c.functions]
+    fns = [f for c in scan_file_contracts(source) for f in c.functions]
+    fill_selectors(fns)
+    return fns
+
+
+def fill_selectors(fns: list[ExtractedFunction]) -> None:
+    """Hash the distinct signatures of ``fns`` in one ``selectors()``
+    call and write each function's selector. The map lives only for
+    this call, so no hash outlives its caller's batch."""
+    distinct = list(dict.fromkeys(f.signature for f in fns))
+    by_sig = dict(zip(distinct, selectors(distinct)))
+    for f in fns:
+        f.selector = by_sig[f.signature]
 
 
 def scan_file_contracts(source: str) -> list[ScannedContract]:
     """Scan one Solidity source file → per-contract ABI members and
     inheritance lists. All pattern matching runs over a comment/string
     **masked** copy of the bytes (same length, so offsets carry over);
-    body slices come from the original bytes."""
+    body slices come from the original bytes. Selectors are left ``""``:
+    callers hash all their signatures at once with ``fill_selectors``."""
     data = source.encode("utf-8")
     masked = _mask_noncode(data)
     contracts: list[ScannedContract] = []
@@ -248,12 +264,7 @@ def scan_file_contracts(source: str) -> list[ScannedContract]:
                 has_body = True
             else:
                 continue
-            visibility_public = (
-                b"public" in header
-                or b"external" in header
-                or kind == "interface"
-            )
-            if not visibility_public:
+            if kind != "interface" and not _VISIBLE_RE.search(header):
                 continue
             sig = f"{fname}({_canonical_params(params_raw)})"
             start = base + fm.start()
@@ -264,7 +275,7 @@ def scan_file_contracts(source: str) -> list[ScannedContract]:
                     contract_name=cname,
                     function_name=fname,
                     signature=sig,
-                    selector=keccak_selector(sig),
+                    selector="",
                     src_start=start,
                     src_length=length,
                     source_code=(
@@ -287,7 +298,7 @@ def scan_file_contracts(source: str) -> list[ScannedContract]:
                         contract_name=cname,
                         function_name=vname,
                         signature=sig,
-                        selector=keccak_selector(sig),
+                        selector="",
                         src_start=base + vm.start(),
                         src_length=0,
                         source_code="",  # getter: no function body exists

@@ -14,6 +14,14 @@ runs independently on its executor, and stragglers (huge contracts) are
 handled by Spark's normal task machinery — mirroring the reference's
 task-per-contract parallelism without a driver-side loop.
 
+Each Arrow batch is extracted in three steps (``_batch_rows``):
+scan every bundle in the batch, hash the batch's distinct signatures
+with ONE vectorized Keccak-256 call (``functions.keccak.selectors``),
+then build the rows — inheritance walk, selector-keyed dedup, md5 ids.
+The signature→selector map is local to the batch: Python workers are
+reused across tasks, and a longer-lived memo would make a re-run time
+cache hits. ``_function_rows`` runs them over a batch of one bundle.
+
 Real solc compilation (via py-solc-x) is gated behind an import: when
 available, ``compile_standard_json`` invokes solc with AST output and
 the U2 AST slicer takes over; in this environment it is NOT installed,
@@ -26,7 +34,7 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,7 +42,12 @@ from pyspark.sql import functions as F
 
 from ..schemas import FUNCTION_SCHEMA
 from ..sources.contracts import PY_WS_PATTERN
-from .solidity import scan_file_contracts
+from .solidity import (
+    ExtractedFunction,
+    ScannedContract,
+    fill_selectors,
+    scan_file_contracts,
+)
 
 #: Rust-``\s``-compatible (Unicode White_Space) class — the same one the
 #: id expressions use, so function ids match simple_hash (utils.rs:12-17).
@@ -59,9 +72,17 @@ def compile_standard_json(standard_json: str, version: str) -> dict:
     return solcx.compile_standard(json.loads(standard_json), solc_version=version)
 
 
-def _function_rows(contract_id: str, files: list[dict]) -> Iterator[tuple]:
-    # Pass 1 — scan every file in the bundle: (filename, ScannedContract)
-    scanned: list[tuple[str, object]] = []
+#: One bundle scope: (filename, scanned contract) pairs whose bases
+#: resolve against each other.
+Scope = list[tuple[str, ScannedContract]]
+
+
+def _scan_bundle(files: list[dict]) -> list[Scope]:
+    """Step 1 — scan every file of one contract's bundle. Each embedded
+    standard-json container is its own scope and comes before the
+    bundle's own scope, which is last."""
+    scopes: list[Scope] = []
+    scanned: Scope = []
     for f in files:
         name, content = f.get("filename") or f.get("name"), f.get("content")
         if not name or content is None:
@@ -77,25 +98,29 @@ def _function_rows(contract_id: str, files: list[dict]) -> Iterator[tuple]:
                 ]
             except (ValueError, AttributeError):
                 continue
-            yield from _function_rows(contract_id, inner)
+            scopes.extend(_scan_bundle(inner))
             continue
         if not name.endswith(".sol"):
             continue
         for c in scan_file_contracts(content):
             scanned.append((name, c))
+    scopes.append(scanned)
+    return scopes
 
-    # Pass 2 — resolve inheritance within the bundle: the ABI view of a
-    # compiled contract includes inherited public members
-    # (reference src/functions.rs:24-27 iterates alloy's functions()
-    # over the artifact), attributed to the DERIVED contract's file.
-    # Their bodies live in the base contract, which the reference's AST
-    # slicer does not search — source_code = "" (plain_contract.rs:
-    # 454-456, asserted at :565-573).
+
+def _scope_rows(contract_id: str, scanned: Scope) -> Iterator[tuple]:
+    """Step 3 — resolve inheritance within the scope: the ABI view of a
+    compiled contract includes inherited public members
+    (reference src/functions.rs:24-27 iterates alloy's functions()
+    over the artifact), attributed to the DERIVED contract's file.
+    Their bodies live in the base contract, which the reference's AST
+    slicer does not search — source_code = "" (plain_contract.rs:
+    454-456, asserted at :565-573)."""
     by_name = {}
     for _, c in scanned:
         by_name.setdefault(c.name, c)
 
-    def inherited_members(c) -> Iterator[object]:
+    def inherited_members(c) -> Iterator[ExtractedFunction]:
         seen_bases: set[str] = set()
         stack = list(c.bases)
         while stack:
@@ -107,22 +132,21 @@ def _function_rows(contract_id: str, files: list[dict]) -> Iterator[tuple]:
             yield from basec.functions
             stack.extend(basec.bases)
 
+    def row(fn, filename: str, source_code: str, cname: str) -> tuple:
+        # F4: simple_hash(contract_id ‖ filename ‖ selector) —
+        # functions.rs:31 via utils.rs:12-17, which strips the
+        # White_Space class before md5 (filenames can contain
+        # spaces in Etherscan standard-json paths).
+        fid = hashlib.md5(
+            _WS_RE.sub("", contract_id + filename + fn.selector).encode()
+        ).hexdigest()
+        return (
+            fid, contract_id, cname, fn.function_name,
+            filename, fn.signature, fn.selector, source_code,
+        )
+
     for name, c in scanned:
         emitted: set[str] = set()
-
-        def row(fn, filename: str, source_code: str, cname: str) -> tuple:
-            # F4: simple_hash(contract_id ‖ filename ‖ selector) —
-            # functions.rs:31 via utils.rs:12-17, which strips the
-            # White_Space class before md5 (filenames can contain
-            # spaces in Etherscan standard-json paths).
-            fid = hashlib.md5(
-                _WS_RE.sub("", contract_id + filename + fn.selector).encode()
-            ).hexdigest()
-            return (
-                fid, contract_id, cname, fn.function_name,
-                filename, fn.signature, fn.selector, source_code,
-            )
-
         for fn in c.functions:
             emitted.add(fn.selector)
             yield row(fn, name, fn.source_code, c.name)
@@ -135,15 +159,39 @@ def _function_rows(contract_id: str, files: list[dict]) -> Iterator[tuple]:
             yield row(fn, name, "", c.name)
 
 
+def _batch_rows(bundles: Iterable[tuple[str, list[dict]]]) -> list[tuple]:
+    """Function rows of a batch of ``(contract_id, files)`` bundles, in
+    three steps: scan every bundle (``_scan_bundle``), hash the batch's
+    distinct signatures in one ``fill_selectors`` call, then build each
+    bundle's rows (``_scope_rows``)."""
+    scanned = [(cid, _scan_bundle(files)) for cid, files in bundles]
+    fill_selectors(
+        [
+            fn
+            for _, scopes in scanned
+            for scope in scopes
+            for _, c in scope
+            for fn in c.functions
+        ]
+    )
+    return [
+        row
+        for cid, scopes in scanned
+        for scope in scopes
+        for row in _scope_rows(cid, scope)
+    ]
+
+
+def _function_rows(contract_id: str, files: list[dict]) -> list[tuple]:
+    """Function rows of one contract bundle: a batch of one."""
+    return _batch_rows([(contract_id, files)])
+
+
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = [f.name for f in FUNCTION_SCHEMA.fields]
     for pdf in batches:
-        rows = [
-            row
-            for contract_id, files_json in zip(pdf["id"], pdf["files_json"])
-            for row in _function_rows(contract_id, json.loads(files_json))
-        ]
-        yield pd.DataFrame(rows, columns=cols)
+        bundles = zip(pdf["id"], map(json.loads, pdf["files_json"]))
+        yield pd.DataFrame(_batch_rows(bundles), columns=cols)
 
 
 def extract_functions(contracts: DataFrame) -> DataFrame:

@@ -207,9 +207,10 @@ def store_functions(functions: DataFrame, db_path: str) -> int:
 
 
 def read_contracts(spark: SparkSession, db_path: str) -> DataFrame:
-    """Read the sink back as a DataFrame. Small results come straight
-    through Arrow; at scale, COPY TO parquet + spark.read.parquet keeps
-    the transfer distributed."""
+    """Read the sink's ``contract`` table back as a DataFrame: DuckDB
+    materializes the whole table as one pandas frame on the driver,
+    which ``createDataFrame`` hands to Spark through Arrow. The table
+    must therefore fit in driver memory; nothing distributes the read."""
     con = connect(db_path)
     try:
         pdf = con.execute(

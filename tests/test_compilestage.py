@@ -18,6 +18,7 @@ from smart_contract_database_builder_spark.compilestage.solidity import (
 from smart_contract_database_builder_spark.functions.keccak import (
     keccak256,
     selector,
+    selectors,
 )
 from smart_contract_database_builder_spark.sources import contracts as C
 
@@ -33,19 +34,24 @@ def test_keccak256_empty_string_vector():
     )
 
 
-@pytest.mark.parametrize(
-    "sig,expected",
-    [
-        ("transfer(address,uint256)", "0xa9059cbb"),
-        ("balanceOf(address)", "0x70a08231"),
-        ("approve(address,uint256)", "0x095ea7b3"),
-        ("transferFrom(address,address,uint256)", "0x23b872dd"),
-        ("totalSupply()", "0x18160ddd"),
-        ("allowance(address,address)", "0xdd62ed3e"),
-    ],
-)
+_ERC20_SELECTORS = [
+    ("transfer(address,uint256)", "0xa9059cbb"),
+    ("balanceOf(address)", "0x70a08231"),
+    ("approve(address,uint256)", "0x095ea7b3"),
+    ("transferFrom(address,address,uint256)", "0x23b872dd"),
+    ("totalSupply()", "0x18160ddd"),
+    ("allowance(address,address)", "0xdd62ed3e"),
+]
+
+
+@pytest.mark.parametrize("sig,expected", _ERC20_SELECTORS)
 def test_erc20_selectors(sig, expected):
     assert selector(sig) == expected
+
+
+def test_erc20_selectors_through_batch_kernel():
+    sigs = [sig for sig, _ in _ERC20_SELECTORS]
+    assert selectors(sigs) == [expected for _, expected in _ERC20_SELECTORS]
 
 
 def test_canonical_type_aliases():
@@ -444,3 +450,215 @@ def test_ast_and_scanner_paths_agree_on_miss_semantics():
     shop = {c.name: c for c in scan_file_contracts(_PARITY_SOL)}["CafeShop"]
     own = {f.function_name for f in shop.functions}
     assert "restock" not in own  # inherited: body lives in Base
+
+
+# ---------------------------------------------------------------------------
+# Visibility and getter modifiers
+# ---------------------------------------------------------------------------
+
+
+def test_visibility_is_a_whole_word():
+    """`publicOnly` / `whenexternalReady` are modifier names, not
+    visibility: those functions are internal/private and absent from
+    solc's ABI."""
+    src = (
+        "contract V {\n"
+        "    function hidden(uint256 x) internal publicOnly {}\n"
+        "    function alsoHidden() private whenexternalReady {}\n"
+        "    function shown() external onlyOwner {}\n"
+        "    function shownToo() public{}\n"
+        "}\n"
+    )
+    sigs = {f.signature for f in extract_file_functions(src)}
+    assert sigs == {"shown()", "shownToo()"}
+
+
+def test_public_override_getters_are_emitted():
+    """`override` and `override(A, B)` may sit among a public state
+    variable's modifiers; the getter is still part of the ABI."""
+    src = (
+        "contract G is A, B {\n"
+        "    uint256 public override totalSupply;\n"
+        "    address public immutable override owner = msg.sender;\n"
+        "    mapping(address => uint256) public override balanceOf;\n"
+        "    mapping(address => mapping(address => uint256))"
+        " public override(A, B) allowance;\n"
+        "    uint256 public constant CAP = 10;\n"
+        "}\n"
+    )
+    got = {f.signature: f.selector for f in extract_file_functions(src)}
+    assert got == {
+        "totalSupply()": "0x18160ddd",
+        "owner()": "0x8da5cb5b",
+        "balanceOf(address)": "0x70a08231",
+        "allowance(address,address)": "0xdd62ed3e",
+        "CAP()": selector("CAP()"),
+    }
+
+
+# ---------------------------------------------------------------------------
+# Brace matching: the masked-buffer depth walk equals the original
+# comment/string-aware walk
+# ---------------------------------------------------------------------------
+
+
+def _reference_match_brace(data: bytes, open_idx: int, end: int) -> int:
+    """The comment/string-aware brace walk the scanner used before it
+    matched braces on the masked buffer alone (verbatim)."""
+    from smart_contract_database_builder_spark.compilestage.solidity import (
+        _skip_to,
+    )
+
+    depth = 0
+    i = open_idx
+    while i < end:
+        c = data[i : i + 1]
+        if c in (b'"', b"'") or data.startswith(b"//", i) or data.startswith(b"/*", i):
+            i = _skip_to(data, i, end)
+            continue
+        if c == b"{":
+            depth += 1
+        elif c == b"}":
+            depth -= 1
+            if depth == 0:
+                return i + 1
+        i += 1
+    return -1
+
+
+_NOISE = st.sampled_from(
+    [
+        "// a } { comment\n",
+        "/* block { */ ",
+        "/* } unclosed */\n",
+        '"esc \\" } {" ',
+        "'single \\' {' ",
+        '"slash // not a comment" ',
+        "'/*' ",
+        "uint256 x = a / b; ",
+        "x = y * 2; ",
+        "\n",
+    ]
+)
+_STATEMENTS = st.recursive(
+    _NOISE,
+    lambda inner: st.lists(inner, max_size=4).map(lambda xs: "{ " + "".join(xs) + "}"),
+    max_leaves=12,
+)
+_MEMBER = st.tuples(
+    st.sampled_from(["function f", "function g", "function h"]),
+    st.sampled_from(["public", "external", "internal", "public view"]),
+    st.lists(_STATEMENTS, max_size=4),
+).map(lambda t: f"{t[0]}(uint256 a) {t[1]} {{ {''.join(t[2])} }}\n")
+_CONTRACT = st.tuples(
+    st.sampled_from(["contract A", "contract B is A", "library L", "interface I"]),
+    st.lists(st.one_of(_MEMBER, _NOISE), max_size=5),
+).map(lambda t: f"{t[0]} {{\n{''.join(t[1])}}}\n")
+
+
+@given(
+    parts=st.lists(st.one_of(_CONTRACT, _NOISE), min_size=1, max_size=4),
+    tail=st.sampled_from(
+        ["", "contract Open {\n function o() public {", "/* open", '"open']
+    ),
+)
+@settings(max_examples=150, deadline=None)
+def test_masked_brace_walk_matches_reference_walk(parts, tail):
+    from unittest import mock
+
+    from smart_contract_database_builder_spark.compilestage import solidity
+
+    src = "".join(parts) + tail
+    got = solidity.scan_file_contracts(src)
+    with mock.patch.object(solidity, "_match_brace", _reference_match_brace):
+        want = solidity.scan_file_contracts(src)
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# Per-batch hashing: one Arrow batch equals its bundles one by one
+# ---------------------------------------------------------------------------
+
+_TOKEN_SOL = """pragma solidity ^0.8.0;
+contract Ownable {
+    address public owner;
+    function transferOwnership(address to) public { owner = to; }
+}
+contract Token is Ownable {
+    mapping(address => uint256) public balanceOf;
+    uint256 public totalSupply;
+    function transfer(address to, uint256 amount) public returns (bool) { return true; }
+    function approve(address s, uint256 amount) external returns (bool) { return true; }
+}
+contract Capped is Token {
+    function transfer(address to, uint256 amount) public returns (bool) { return false; }
+    function cap() public view returns (uint256) { return 1; }
+}
+"""
+_OTHER_TOKEN_SOL = """contract Plain {
+    function transfer(address to, uint256 amount) public returns (bool) { return true; }
+    function totalSupply() external view returns (uint256) { return 0; }
+    function allowance(address a, address b) public view returns (uint256) { return 0; }
+}
+"""
+
+
+def _batch_bundles() -> list[tuple[str, list[dict]]]:
+    import json
+
+    std = json.dumps({"sources": {"src/Plain.sol": {"content": _OTHER_TOKEN_SOL}}})
+    return [
+        ("c1", [{"filename": "Token.sol", "content": _TOKEN_SOL}]),
+        ("c2", [{"filename": "Plain.sol", "content": _OTHER_TOKEN_SOL}]),
+        ("c3", [
+            {"filename": "main.sol", "content": _OTHER_TOKEN_SOL},
+            {"filename": "input.json", "content": std},
+            {"filename": "Token.sol", "content": _TOKEN_SOL},
+        ]),
+        ("c4", [{"filename": "README.md", "content": "no solidity"}]),
+    ]
+
+
+def test_batch_extraction_equals_per_contract_rows():
+    import json
+    from unittest import mock
+
+    import pandas as pd
+
+    bundles = _batch_bundles()
+    pdf = pd.DataFrame(
+        {
+            "id": [cid for cid, _ in bundles],
+            "files_json": [json.dumps(files) for _, files in bundles],
+        }
+    )
+    calls: list[list[str]] = []
+
+    def counting_selectors(sigs):
+        calls.append(list(sigs))
+        return selectors(sigs)
+
+    from smart_contract_database_builder_spark.compilestage import solidity
+
+    with mock.patch.object(solidity, "selectors", counting_selectors):
+        out = pd.concat(list(stage._extract_batches(iter([pdf, pdf]))))
+    # one kernel call per batch, over that batch's distinct signatures
+    assert len(calls) == 2 and calls[0] == calls[1]
+    assert len(calls[0]) == len(set(calls[0]))
+
+    want = [
+        row
+        for cid, files in bundles
+        for row in stage._function_rows(cid, files)
+    ]
+    got = [tuple(r) for r in out.itertuples(index=False)]
+    assert got == want + want
+    # shared ERC-20 signatures carry the public selector in every
+    # contract, and Capped inherits Ownable's members via Token
+    capped = {r[5]: r for r in want if r[1] == "c1" and r[2] == "Capped"}
+    assert capped["transfer(address,uint256)"][6] == "0xa9059cbb"
+    assert capped["transfer(address,uint256)"][7].startswith("function transfer")
+    assert capped["transferOwnership(address)"][7] == ""
+    assert capped["owner()"][6] == "0x8da5cb5b"
+    assert {r[6] for r in want if r[5] == "totalSupply()"} == {"0x18160ddd"}
+    assert not any(r[1] == "c4" for r in want)
