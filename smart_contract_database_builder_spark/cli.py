@@ -13,17 +13,22 @@ CLI (reference src/main.rs:77-87, dispatch :353-358).
 Mapping to the reference:
 - ``pre-process`` ≙ main.rs:170-258 — walk a contract tree (fiesta
   folder layout, or Etherscan JSON dumps with ``--etherscan``), parse,
-  content-address, dedup, bulk-load into DuckDB. ``--chunk-size``
-  becomes the scan's split budget for that command (Spark streams
-  partitions; the reference chunked to bound RAM). ``--ignore-errors``
-  keeps the lenient parse fallbacks. Strict mode (the default) fails
-  with exit code 1 on a malformed metadata.json or contract.json in an
-  ingested dir, or a malformed Etherscan dump. The checks run at the
-  staging load: per-dir flags are written with the rows in the one
-  write job, and the DuckDB loader checks them before inserting, so a
-  failed run inserts nothing.
+  content-address, dedup, bulk-load into DuckDB. Both layouts parse to
+  one processing shape (id, contract_name, metadata, source_type,
+  files) and store through ``sinks.duckdb_sink.store_contracts``, which
+  encodes the reference's tagged union; every dump of an address keeps
+  its own row. ``--chunk-size`` becomes the scan's split budget for
+  that command (Spark streams partitions; the reference chunked to
+  bound RAM). ``--ignore-errors`` keeps the lenient parse fallbacks.
+  Strict mode (the default) fails with exit code 1 on a malformed
+  metadata.json or contract.json in an ingested dir, or a malformed
+  Etherscan dump. The checks run at the staging load: per-dir flags
+  are written with the rows in the one write job, and the sink's
+  loader checks them before it opens the DuckDB file, so a failed run
+  inserts nothing.
 - ``index-functions`` ≙ main.rs:261-331 — read stored contracts back,
-  run the extraction stage (solc when available, the built-in scanner
+  decode them to files (``sinks.duckdb_sink.contract_files``), run the
+  extraction stage (solc when available, the built-in scanner
   otherwise), store function rows.
 - ``export-source`` ≙ main.rs:353-358 + plain_contract.rs:528-535 —
   read-only point lookup + sanitized file writes.
@@ -85,19 +90,21 @@ def cmd_pre_process(args: argparse.Namespace) -> int:
 
 
 def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
-    """Scan, parse and store one tree in a single write job. In strict
-    mode (no ``--ignore-errors``) the corrupt-JSON checks are flag
-    columns of that job, checked by the DuckDB loader before it inserts
-    (``sinks.duckdb_sink._staged_load``); no separate probe job runs."""
+    """Scan, parse and store one tree in a single write job. Both
+    layouts parse to the same processing shape and store through
+    ``sinks.duckdb_sink.store_contracts``. In strict mode (no
+    ``--ignore-errors``) the corrupt-JSON checks are flag columns of
+    that job, checked by the sink's loader before it opens the target;
+    no separate probe job runs."""
     from pyspark.sql import functions as F
 
     from .sinks import duckdb_sink as sink
     from .sources import contracts as C
 
     strict = not args.ignore_errors
+    checks = []
     if args.etherscan:
         raw = C.read_etherscan_files(spark, args.contracts_root)
-        checks = []
         if strict:
             raw = raw.withColumn(
                 "bad_dump", F.when(C.corrupt_json("content"), F.col("address"))
@@ -112,15 +119,9 @@ def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
             # a dump that does not parse has no SourceCode, hence no id:
             # skip it, as the folder path skips malformed dirs
             parsed = parsed.filter(F.col("id").isNotNull())
-        # storage shape: etherscan rows carry no files array — rebuild the
-        # processing shape via the explode path for multi-source entries
-        stored = _etherscan_storage_shape(raw, parsed, [c for c, _ in checks])
-        return sink._staged_load(
-            stored, args.db_file, "contract", sink.CONTRACT_COLUMNS, checks
-        )
+        return sink.store_contracts(parsed, args.db_file, checks)
     files = C.read_contract_files(spark, args.contracts_root)
     parsed = C.parse_folder_contracts(files)
-    checks = []
     if strict:
         # Checked per ingested dir, so only dirs with metadata.json
         # (the reference reads only those, main.rs:96-104). A corrupt
@@ -148,108 +149,12 @@ def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
     return sink.store_contracts(parsed, args.db_file, checks)
 
 
-def _etherscan_storage_shape(raw, parsed, flags=()):
-    from pyspark.sql import functions as F
-
-    from .schemas import ETHERSCAN_RAW_SCHEMA
-    from .sinks.duckdb_sink import dedup_by_id
-    from .sources.contracts import unwrap_double_brace
-
-    fields = F.from_json("content", ETHERSCAN_RAW_SCHEMA)
-    src = unwrap_double_brace(fields["SourceCode"])
-    meta = F.to_json(
-        F.struct(
-            fields["ContractName"].alias("ContractName"),
-            fields["CompilerVersion"].alias("CompilerVersion"),
-            F.coalesce(fields["Runs"].try_cast("int"), F.lit(0)).alias("Runs"),
-            (fields["OptimizationUsed"] == "1").alias("OptimizationUsed"),
-        )
-    )
-    with_files = raw.select(
-        "address", meta.alias("metadata"), src.alias("source_code"), *flags
-    )
-    joined = with_files.join(
-        parsed.select("address", "id", "contract_name", "source_type"), "address"
-    )
-    # Storage parity with the reference's tagged union: standard-json is
-    # ONE Json source file named contract.json holding the whole
-    # unwrapped container (plain_contract.rs:265-271); the fallback is a
-    # SingleSolidity file named main.sol (:272-280).
-    tagged = F.when(
-        F.col("source_type") == "json",
-        F.to_json(
-            F.struct(
-                F.struct(
-                    F.lit("contract.json").alias("name"),
-                    F.col("source_code").alias("content"),
-                ).alias("Json")
-            )
-        ),
-    ).otherwise(
-        F.to_json(
-            F.struct(
-                F.struct(
-                    F.lit("main.sol").alias("name"),
-                    F.col("source_code").alias("content"),
-                ).alias("SingleSolidity")
-            )
-        )
-    )
-    shaped = joined.select(
-        "id",
-        F.col("contract_name").alias("name"),
-        "metadata",
-        tagged.alias("source"),
-        "source_type",
-        *flags,
-    )
-    return dedup_by_id(shaped, flags)
-
-
 def cmd_index_functions(args: argparse.Namespace) -> int:
-    from pyspark.sql import functions as F
-
     from .sinks import duckdb_sink as sink
     from .compilestage import stage
 
     spark = _spark()
-    contracts = sink.read_contracts(spark, args.db_file)
-    # storage → processing shape: tagged-union JSON back to a files array
-    variant = F.from_json(
-        "source",
-        "struct<SingleSolidity:struct<name:string,content:string>,"
-        "MultiSolidity:array<struct<name:string,content:string>>,"
-        "Vyper:struct<name:string,content:string>,"
-        "Json:struct<name:string,content:string>>",
-    )
-    # The Json variant holds the whole standard-json container as one
-    # file; explode its sources map into real source files at read time,
-    # like the reference's get_source_files (plain_contract.rs:188-200).
-    json_sources = F.from_json(
-        variant["Json"]["content"],
-        "struct<sources: map<string, struct<content: string>>>",
-    )["sources"]
-    json_files = F.transform(
-        F.map_entries(json_sources),
-        lambda e: F.struct(
-            e["key"].alias("name"), e["value"]["content"].alias("content")
-        ),
-    )
-    files = F.coalesce(
-        variant["MultiSolidity"],
-        F.when(variant["Json"].isNotNull(), json_files),
-        F.array(F.coalesce(variant["SingleSolidity"], variant["Vyper"])),
-    )
-    processing = contracts.select(
-        "id",
-        "source_type",
-        F.transform(
-            files,
-            lambda e: F.struct(
-                e["name"].alias("filename"), e["content"].alias("content")
-            ),
-        ).alias("files"),
-    )
+    processing = sink.contract_files(sink.read_contracts(spark, args.db_file))
     if args.chunk_size:
         # partition count from the sink's own (local, instant) row count
         # — never a Spark job over the parse pipeline

@@ -3,23 +3,39 @@
 The reference stores into an embedded DuckDB with conflict-ignoring
 inserts (reference src/db.rs:149-234), DDL bootstrap (db.rs:52-91), and
 checkpoint pragmas around bulk loads (db.rs:94-105). DuckDB allows
-exactly ONE writing process, so the scale-correct Spark pattern is:
+exactly ONE writing process, so every Spark → DuckDB hand-off in the
+engine is the one loader of this module, ``staged_load``:
 
     df.write.parquet(staging)          # distributed, all executors
-    → one driver-side DuckDB connection:
+    → staged = read_parquet(staging/*) # a relation, never SQL text
+    → strict checks over ``staged``    # before the target is opened
+    → one driver-side DuckDB connection to the target:
         PRAGMA disable_checkpoint_on_shutdown
-        INSERT OR IGNORE INTO t SELECT … FROM read_parquet(staging/*)
+        setup DDL
+        BEGIN; [epoch ledger check]; INSERT … FROM staged;
+               [ledger row]; COMMIT
         PRAGMA enable_checkpoint_on_shutdown
 
-Never concurrent JDBC appends — the loader is the serialization point,
-and ``INSERT OR IGNORE`` reproduces the reference's id-dedup exactly.
-Strict-mode input checks ride along in the same write: the staged rows
-carry flag columns, and the loader reads them before it inserts
-anything (``_staged_load(checks=...)``), so a strict ingest costs no
-Spark job beyond the write.
+Never concurrent JDBC appends — the loader is the serialization point.
+Its callers only bring their DDL and insert SQL:
+
+- ``store_contracts`` / ``store_functions``: ``INSERT OR IGNORE``,
+  which reproduces the reference's id-dedup exactly. Strict-mode input
+  checks ride along in the same write: the staged rows carry flag
+  columns, and the loader reads them before it opens the target, so a
+  strict ingest costs no Spark job beyond the write and a failed one
+  creates no file.
+- ``streaming_duckdb.exactly_once_upsert`` and ``rollup.refresh_rollup``
+  pass an epoch id: the loader keeps the ``_stream_ledger`` table of
+  committed (table, epoch) pairs, skips an epoch it has seen, and writes
+  the ledger row in the insert's transaction, so a replayed micro-batch
+  is a no-op and a crash mid-write leaves neither.
+
 The storage schema is byte-compatible with the reference's DDL: nested
 shapes (metadata, the ContractSource tagged union) serialize to JSON
-strings at this boundary only (SURVEY.md §1.2).
+strings at this boundary only (SURVEY.md §1.2). The union is encoded by
+``contracts_storage_shape`` and decoded by ``contract_files``, both
+below; no other module knows its variant names.
 """
 
 from __future__ import annotations
@@ -55,6 +71,17 @@ CREATE TABLE IF NOT EXISTS function (
 );
 CREATE INDEX IF NOT EXISTS idx_function_composite
     ON function (contract_id, selector, signature);
+"""
+
+#: Epoch ledger of the loader: (sink_table, batch_id) is the commit
+#: token, ``n_rows`` the rows that epoch inserted.
+_LEDGER_DDL = """
+CREATE TABLE IF NOT EXISTS _stream_ledger (
+    sink_table VARCHAR,
+    batch_id BIGINT,
+    n_rows BIGINT,
+    PRIMARY KEY (sink_table, batch_id)
+);
 """
 
 
@@ -121,17 +148,59 @@ def contracts_storage_shape(
     return dedup_by_id(shaped, flags)
 
 
-def _check_staged_flags(staged: str, checks: Sequence[tuple[str, str]]) -> None:
+#: The tagged union as Spark reads it back (plain_contract.rs:87-92).
+_SOURCE_SCHEMA = (
+    "struct<SingleSolidity:struct<name:string,content:string>,"
+    "MultiSolidity:array<struct<name:string,content:string>>,"
+    "Vyper:struct<name:string,content:string>,"
+    "Json:struct<name:string,content:string>>"
+)
+
+
+def contract_files(contracts: DataFrame) -> DataFrame:
+    """Storage row → processing shape ``(id, source_type, files)``: the
+    inverse of ``contracts_storage_shape``. The Json variant holds the
+    whole standard-json container as one file; its sources map is
+    exploded into real source files here, like the reference's
+    get_source_files (plain_contract.rs:188-200)."""
+    variant = F.from_json("source", _SOURCE_SCHEMA)
+    json_sources = F.from_json(
+        variant["Json"]["content"],
+        "struct<sources: map<string, struct<content: string>>>",
+    )["sources"]
+    json_files = F.transform(
+        F.map_entries(json_sources),
+        lambda e: F.struct(
+            e["key"].alias("name"), e["value"]["content"].alias("content")
+        ),
+    )
+    files = F.coalesce(
+        variant["MultiSolidity"],
+        F.when(variant["Json"].isNotNull(), json_files),
+        F.array(F.coalesce(variant["SingleSolidity"], variant["Vyper"])),
+    )
+    return contracts.select(
+        "id",
+        "source_type",
+        F.transform(
+            files,
+            lambda e: F.struct(
+                e["name"].alias("filename"), e["content"].alias("content")
+            ),
+        ).alias("files"),
+    )
+
+
+def _check_staged_flags(glob: str, checks: Sequence[tuple[str, str]]) -> None:
     """Raise ``MalformedInput`` for the first check whose flag column
     holds a key anywhere in the staged rows. A flag is the offending
     key (dir or address) or null; ``message`` is formatted with the
-    smallest key. Runs before the target file is opened, so a failed
-    check leaves it untouched."""
+    smallest key. Reads the staged files on an in-memory connection,
+    so a failed check leaves the target file untouched."""
     con = duckdb.connect()
     try:
-        keys = con.execute(
-            "SELECT " + ", ".join(f"min({col})" for col, _ in checks)
-            + f" FROM {staged}"
+        keys = con.read_parquet(glob).aggregate(
+            ", ".join(f"min({col})" for col, _ in checks)
         ).fetchone()
     finally:
         con.close()
@@ -140,42 +209,79 @@ def _check_staged_flags(staged: str, checks: Sequence[tuple[str, str]]) -> None:
             raise MalformedInput(message.format(key))
 
 
-def _staged_load(
+def staged_load(
     df: DataFrame,
     db_path: str,
     table: str,
-    columns: list[str],
+    insert: str,
+    setup: str = "",
     checks: Sequence[tuple[str, str]] = (),
+    batch_id: int | None = None,
 ) -> int:
-    """S7/S8/S10: stage to parquet (distributed write), then one
-    DuckDB writer loads with conflict-ignore inside the bulk-load
-    pragma window. Returns rows inserted (duplicates ignored).
+    """The one Spark → DuckDB hand-off (S7/S8/S10). Stages ``df`` to
+    parquet (the distributed write), runs the strict ``checks``, then
+    on one connection to ``db_path``, inside the bulk-load pragma
+    window: ``setup`` DDL, then one transaction holding the ``insert``
+    statement, which reads the staged rows as ``staged``. Returns the
+    rows it added to ``table``.
 
     ``checks`` are strict-mode ``(flag column, message)`` pairs, in
-    priority order. The flags are staged with the rows and checked
-    before the insert; on a hit nothing is inserted and
-    ``MalformedInput`` is raised. Flag columns never reach ``table``.
+    priority order. On a hit ``MalformedInput`` is raised before the
+    target is opened; nothing is inserted.
+
+    ``batch_id`` makes the load an epoch of ``table``: an epoch already
+    in the ledger inserts nothing, and a new one writes its ledger row
+    in the insert's transaction.
     """
     with tempfile.TemporaryDirectory(prefix=f"scdb_sink_{table}_") as staging:
         out = os.path.join(staging, "part")
         df.write.mode("overwrite").parquet(out)
-        staged = f"read_parquet('{out}/*.parquet')"
+        glob = os.path.join(out, "*.parquet")
         if checks:
-            _check_staged_flags(staged, checks)
+            _check_staged_flags(glob, checks)
         con = connect(db_path)
         try:
             con.execute("PRAGMA disable_checkpoint_on_shutdown")
-            before = con.execute(f"SELECT COUNT(*) FROM {table}").fetchone()[0]
-            collist = ", ".join(columns)
-            con.execute(
-                f"INSERT OR IGNORE INTO {table} ({collist}) "
-                f"SELECT {collist} FROM {staged}"
-            )
-            after = con.execute(f"SELECT COUNT(*) FROM {table}").fetchone()[0]
-            con.execute("PRAGMA enable_checkpoint_on_shutdown")
-            return after - before
+            # ``staged`` in ``setup`` and ``insert`` resolves to this
+            # relation by its Python name (DuckDB's replacement scan):
+            # the path never enters SQL text, and unlike a view nothing
+            # is written to the target's catalog.
+            staged = con.read_parquet(glob)  # noqa: F841
+            if batch_id is not None:
+                con.execute(_LEDGER_DDL)
+            if setup:
+                con.execute(setup)
+            con.begin()
+            try:
+                seen = batch_id is not None and con.execute(
+                    "SELECT 1 FROM _stream_ledger "
+                    "WHERE sink_table = ? AND batch_id = ?",
+                    [table, batch_id],
+                ).fetchone()
+                n = 0
+                if not seen:
+                    count = f"SELECT COUNT(*) FROM {table}"
+                    before = con.execute(count).fetchone()[0]
+                    con.execute(insert)
+                    n = con.execute(count).fetchone()[0] - before
+                    if batch_id is not None:
+                        con.execute(
+                            "INSERT INTO _stream_ledger VALUES (?, ?, ?)",
+                            [table, batch_id, n],
+                        )
+                con.commit()
+            except BaseException:
+                con.rollback()
+                raise
+            return n
         finally:
+            con.execute("PRAGMA enable_checkpoint_on_shutdown")
             con.close()
+
+
+def _insert_or_ignore(table: str, columns: Sequence[str]) -> str:
+    collist = ", ".join(columns)
+    return f"INSERT OR IGNORE INTO {table} ({collist}) SELECT {collist} FROM staged"
 
 
 #: Columns of the ``contract`` table, in DDL order.
@@ -187,13 +293,13 @@ def store_contracts(
 ) -> int:
     """S7: append contract rows (id-deduped within the batch AND against
     the sink via INSERT OR IGNORE — db.rs:174 semantics). ``checks``:
-    strict-mode flags of ``parsed``, see ``_staged_load``."""
-    return _staged_load(
+    strict-mode flags of ``parsed``, see ``staged_load``."""
+    return staged_load(
         contracts_storage_shape(parsed, [col for col, _ in checks]),
         db_path,
         "contract",
-        CONTRACT_COLUMNS,
-        checks,
+        _insert_or_ignore("contract", CONTRACT_COLUMNS),
+        checks=checks,
     )
 
 
@@ -203,7 +309,10 @@ def store_functions(functions: DataFrame, db_path: str) -> int:
         "id", "contract_id", "contract_name", "function_name",
         "filename", "signature", "selector", "source_code",
     ]
-    return _staged_load(functions.select(*cols), db_path, "function", cols)
+    return staged_load(
+        functions.select(*cols), db_path, "function",
+        _insert_or_ignore("function", cols),
+    )
 
 
 def read_contracts(spark: SparkSession, db_path: str) -> DataFrame:

@@ -11,10 +11,10 @@ over just that slice plus one conflict-merge upsert into the rollup:
     DO UPDATE SET n += excluded.n, total += excluded.total
 
 No bucket is ever recomputed from raw history; late data merges into
-its (old) bucket exactly like fresh data. Replayed refreshes are
-no-oped by the same epoch-ledger protocol as the exactly-once stream
-sink (``streaming_duckdb``) — additive merges are NOT idempotent per
-row, so the ledger is what makes redelivery safe.
+its (old) bucket exactly like fresh data. Each refresh is an epoch of
+the sink's one loader (``duckdb_sink.staged_load``): additive merges
+are NOT idempotent per row, so its epoch ledger is what makes
+redelivery safe.
 
 At 100 TB: the slice aggregate shuffles ~|distinct (bucket, type)| of
 the slice (map-side combine), the upsert is rollup-sized, and the raw
@@ -24,15 +24,11 @@ order-independent and exact — double sums would drift by merge order.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec
-from .duckdb_sink import connect
-from .streaming_duckdb import _LEDGER_DDL
+from .duckdb_sink import connect, staged_load
 
 _ROLLUP_DDL = """
 CREATE TABLE IF NOT EXISTS events_rollup_hourly (
@@ -69,45 +65,24 @@ def refresh_rollup(batch: DataFrame, db_path: str, batch_id: int) -> None:
     """Merge one changelog slice into the standing rollup: distributed
     partial aggregate → staged parquet → one additive conflict-merge
     upsert, atomic with its epoch-ledger row (replays no-op)."""
-    partials = hourly_partials(batch)
-    with tempfile.TemporaryDirectory(prefix="scdb_rollup_") as staging:
-        out = os.path.join(staging, "part")
-        partials.write.mode("overwrite").parquet(out)
-        glob = f"{out}/*.parquet"
-        con = connect(db_path)
-        try:
-            con.execute(_LEDGER_DDL)
-            con.execute(_ROLLUP_DDL)
-            seen = con.execute(
-                "SELECT 1 FROM _stream_ledger "
-                "WHERE sink_table = 'events_rollup_hourly' AND batch_id = ?",
-                [batch_id],
-            ).fetchone()
-            if seen:
-                return
-            con.execute("BEGIN TRANSACTION")
-            con.execute(
-                f"""
-                INSERT INTO events_rollup_hourly
-                SELECT bucket_start, event_type,
-                       n_events,
-                       CAST(total_value AS DECIMAL(18,2))
-                FROM read_parquet('{glob}')
-                ON CONFLICT (bucket_start, event_type) DO UPDATE SET
-                    n_events = events_rollup_hourly.n_events
-                               + excluded.n_events,
-                    total_value = events_rollup_hourly.total_value
-                                  + excluded.total_value
-                """
-            )
-            con.execute(
-                "INSERT INTO _stream_ledger VALUES "
-                "('events_rollup_hourly', ?, NULL)",
-                [batch_id],
-            )
-            con.execute("COMMIT")
-        finally:
-            con.close()
+    staged_load(
+        hourly_partials(batch),
+        db_path,
+        "events_rollup_hourly",
+        """
+        INSERT INTO events_rollup_hourly
+        SELECT bucket_start, event_type,
+               n_events,
+               CAST(total_value AS DECIMAL(18,2))
+        FROM staged
+        ON CONFLICT (bucket_start, event_type) DO UPDATE SET
+            n_events = events_rollup_hourly.n_events + excluded.n_events,
+            total_value = events_rollup_hourly.total_value
+                          + excluded.total_value
+        """,
+        _ROLLUP_DDL,
+        batch_id=batch_id,
+    )
 
 
 def read_rollup(db_path: str):

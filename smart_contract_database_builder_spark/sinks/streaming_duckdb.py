@@ -1,101 +1,44 @@
 """Exactly-once streaming sink: foreachBatch → idempotent DuckDB upsert.
 
-Marries the batch sink protocol (S7's staged-parquet single-writer
-load, ``duckdb_sink._staged_load``) to the streaming family (T1-T6):
 Structured Streaming's ``foreachBatch`` delivers each micro-batch
 AT-LEAST-ONCE (a batch is replayed wholesale after a failure between
 sink write and checkpoint commit), so end-to-end exactly-once is
-at-least-once delivery + an idempotent writer. Two independent layers
-make the write idempotent, both inside ONE DuckDB transaction:
+at-least-once delivery + an idempotent writer. The writer is the batch
+sink's one loader (``duckdb_sink.staged_load``, whose docstring holds
+the protocol), and two layers make it idempotent:
 
-1. **Batch ledger** — ``_stream_ledger(sink_table, batch_id)`` records
-   every committed (table, epoch). A replayed ``batch_id`` is skipped
-   before any data is touched. Data insert + ledger insert commit
-   atomically, so a crash mid-write leaves neither.
+1. **Epoch** — called with the ``batch_id``, the loader's ledger skips
+   a replayed epoch and commits a new one atomically with its rows.
 2. **Key uniqueness** — the sink table carries a UNIQUE index on the
    caller's key columns and loads with ``INSERT OR IGNORE``, so even a
    NEW batch id carrying previously-seen keys (e.g. a source replayed
    from an older offset after checkpoint loss) cannot duplicate rows —
    the same conflict-ignoring contract as the reference's id-dedup
    (reference src/db.rs:149-234).
-
-Scale shape: the micro-batch is staged to parquet by the executors
-(distributed write, same as the batch sink); the single driver-side
-DuckDB connection is the serialization point, loading one staged
-directory per epoch. State on the Spark side stays in the streaming
-checkpoint; the ledger adds one row per epoch.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 
-from .duckdb_sink import connect
-
-#: Epoch ledger DDL — (sink_table, batch_id) is the commit token.
-_LEDGER_DDL = """
-CREATE TABLE IF NOT EXISTS _stream_ledger (
-    sink_table VARCHAR,
-    batch_id BIGINT,
-    n_rows BIGINT,
-    PRIMARY KEY (sink_table, batch_id)
-);
-"""
+from .duckdb_sink import connect, staged_load
 
 
 def exactly_once_upsert(db_path: str, table: str, key_cols: list[str]):
     """Build the ``foreachBatch`` callable: each (micro-batch, epoch id)
-    is staged to parquet and committed to ``table`` atomically with its
-    ledger row; replays of the same epoch no-op, and key collisions
-    from cross-epoch replays are ignored by the UNIQUE index."""
+    is committed to ``table`` atomically with its ledger row; replays of
+    the same epoch no-op, and key collisions from cross-epoch replays
+    are ignored by the UNIQUE index. The table takes the schema of the
+    first batch."""
+    setup = (
+        f"CREATE TABLE IF NOT EXISTS {table} AS SELECT * FROM staged LIMIT 0;"
+        f"CREATE UNIQUE INDEX IF NOT EXISTS idx_{table}_key "
+        f"ON {table} ({', '.join(key_cols)})"
+    )
+    insert = f"INSERT OR IGNORE INTO {table} SELECT * FROM staged"
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        with tempfile.TemporaryDirectory(
-            prefix=f"scdb_stream_{table}_"
-        ) as staging:
-            out = os.path.join(staging, "part")
-            batch.write.mode("overwrite").parquet(out)
-            glob = f"{out}/*.parquet"
-            con = connect(db_path)
-            try:
-                con.execute(_LEDGER_DDL)
-                seen = con.execute(
-                    "SELECT 1 FROM _stream_ledger "
-                    "WHERE sink_table = ? AND batch_id = ?",
-                    [table, batch_id],
-                ).fetchone()
-                if seen:
-                    return  # replayed epoch: already committed
-                con.execute(
-                    f"CREATE TABLE IF NOT EXISTS {table} AS "
-                    f"SELECT * FROM read_parquet('{glob}') LIMIT 0"
-                )
-                keylist = ", ".join(key_cols)
-                con.execute(
-                    f"CREATE UNIQUE INDEX IF NOT EXISTS idx_{table}_key "
-                    f"ON {table} ({keylist})"
-                )
-                con.execute("BEGIN TRANSACTION")
-                before = con.execute(
-                    f"SELECT COUNT(*) FROM {table}"
-                ).fetchone()[0]
-                con.execute(
-                    f"INSERT OR IGNORE INTO {table} "
-                    f"SELECT * FROM read_parquet('{glob}')"
-                )
-                after = con.execute(
-                    f"SELECT COUNT(*) FROM {table}"
-                ).fetchone()[0]
-                con.execute(
-                    "INSERT INTO _stream_ledger VALUES (?, ?, ?)",
-                    [table, batch_id, after - before],
-                )
-                con.execute("COMMIT")
-            finally:
-                con.close()
+        staged_load(batch, db_path, table, insert, setup, batch_id=batch_id)
 
     return write_batch
 

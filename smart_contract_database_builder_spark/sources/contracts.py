@@ -274,25 +274,32 @@ def parse_etherscan_contracts(raw_df: DataFrame) -> DataFrame:
     (plain_contract.rs:265-271), so the id is
     ``simple_hash(container)`` (the ``Json`` arm of ``hash()``,
     plain_contract.rs:179), NOT the multi-file sorted-digest re-hash.
-    (c) falls back to single_sol — the same parse-failure fallback as
-    the reference (plain_contract.rs:272-280). This keeps
-    Etherscan-ingested ids dedup-compatible with folder-ingested
-    ``contract.json`` layouts. Lenient scalar semantics: ``Runs``
-    parses null→0, ``OptimizationUsed`` is the string ``"1"``
+    (c) falls back to single_sol, one file named ``main.sol`` — the same
+    parse-failure fallback as the reference (plain_contract.rs:272-280).
+    This keeps Etherscan-ingested ids dedup-compatible with
+    folder-ingested ``contract.json`` layouts. Lenient scalar semantics:
+    ``Runs`` parses null→0, ``OptimizationUsed`` is the string ``"1"``
     (plain_contract.rs:57-58).
 
-    Input: (address, content). Output: (address, contract_name,
-    source_type, id, n_sources, runs, optimization_used).
+    Input: (address, content, *carried), where the carried columns
+    (e.g. strict-mode flags) pass through unchanged. Output: (address,
+    contract_name, source_type, id, n_sources, runs, optimization_used,
+    metadata, files, *carried) — ``metadata`` and ``files`` are the
+    folder parse's processing shape, so the row stores like a folder
+    contract (``sinks.duckdb_sink.store_contracts``).
     """
     fields = F.from_json("content", ETHERSCAN_RAW_SCHEMA)
+    carried = [c for c in raw_df.columns if c not in ("address", "content")]
     df = raw_df.select(
         "address",
         fields["ContractName"].alias("contract_name"),
+        fields["CompilerVersion"].alias("compiler_version"),
         unwrap_double_brace(fields["SourceCode"]).alias("source_code"),
         # try_cast: lenient parse, null-on-malformed → 0 (ANSI-safe),
         # matching the reference's unwrap_or_default (plain_contract.rs:57)
         F.coalesce(fields["Runs"].try_cast("int"), F.lit(0)).alias("runs"),
         (fields["OptimizationUsed"] == "1").alias("optimization_used"),
+        *carried,
     )
     std_sources = F.from_json(
         "source_code",
@@ -316,6 +323,23 @@ def parse_etherscan_contracts(raw_df: DataFrame) -> DataFrame:
         ),
         "runs",
         "optimization_used",
+        F.to_json(
+            F.struct(
+                F.col("contract_name").alias("ContractName"),
+                F.col("compiler_version").alias("CompilerVersion"),
+                F.col("runs").alias("Runs"),
+                F.col("optimization_used").alias("OptimizationUsed"),
+            )
+        ).alias("metadata"),
+        F.array(
+            F.struct(
+                F.when(is_std, F.lit("contract.json"))
+                .otherwise(F.lit("main.sol"))
+                .alias("filename"),
+                F.col("source_code").alias("content"),
+            )
+        ).alias("files"),
+        *carried,
     )
 
 

@@ -4,10 +4,15 @@ over a tmp contract tree, mirroring the reference's documented workflow
 
 from __future__ import annotations
 
+import hashlib
+import json
+import re
+
 import duckdb
 import pytest
 
 from smart_contract_database_builder_spark import cli, fixtures
+from smart_contract_database_builder_spark.sources import contracts as C
 
 
 @pytest.fixture()
@@ -74,8 +79,66 @@ def test_cli_etherscan_path(spark, tmp_path):
             "SELECT source_type::VARCHAR, COUNT(*) FROM contract GROUP BY 1"
         ).fetchall()
     )
+    rows = con.execute(
+        "SELECT id, name, metadata, source, source_type::VARCHAR FROM contract"
+    ).fetchall()
     con.close()
     assert types == {"json": 2, "single_sol": 1}
+    # the stored bytes, pinned: sources by their sha256
+    assert sorted(
+        (i, n, m, hashlib.sha256(s.encode()).hexdigest(), t)
+        for i, n, m, s, t in rows
+    ) == _ETHERSCAN_ROWS
+
+
+_ETHERSCAN_ROWS = [
+    ("0965735808809b8b72369f339f646ed9", "Wrapped",
+     '{"ContractName":"Wrapped","CompilerVersion":"v0.8.18+commit.87f61d96",'
+     '"Runs":200,"OptimizationUsed":true}',
+     "98bbe6cfb64eae743c7298d005d9847eadc849faaa5c471ca7ec45584d4ce67d", "json"),
+    ("5a082c078fdf5056802741fa72f5b403", "BridgeGate",
+     '{"ContractName":"BridgeGate","CompilerVersion":"v0.8.21+commit.d9974bed",'
+     '"Runs":0,"OptimizationUsed":false}',
+     "e7ac0a135efb124f4b2086fd7d78a7423be0a538ee1800b8b67579d947c6a729",
+     "single_sol"),
+    ("a6a0805fdb20f633d8c272c9a57eba17", "Tally",
+     '{"ContractName":"Tally","CompilerVersion":"v0.8.19+commit.7dd6d404",'
+     '"Runs":500,"OptimizationUsed":true}',
+     "253cdfe8e7d8e101fc7c56c6d02dbbca0ee4bc79cd4978a427f51134cea98323", "json"),
+]
+
+
+def _dump(name: str, source: str) -> str:
+    return json.dumps({
+        "SourceCode": source, "ContractName": name, "Runs": "200",
+        "OptimizationUsed": "1", "CompilerVersion": "v0.8.20+commit.a1b79de6",
+    })
+
+
+def test_cli_etherscan_each_dump_keeps_its_row(spark, tmp_path):
+    """One address directory may hold several dumps (the reference keeps
+    every ``<address>*.json``, main.rs:124-142). Each must store its own
+    metadata and source under its own content id."""
+    addr = "0xdddd00000000000000000000000000000000dd04"
+    d = tmp_path / "escan" / addr
+    d.mkdir(parents=True)
+    for k, suffix in enumerate(("", "_v1", "_v2")):
+        source = f"contract C{k} {{ function f{k}() public {{}} }}"
+        (d / f"{addr}{suffix}.json").write_text(_dump(f"C{k}", source))
+    db = str(tmp_path / "multi.duckdb")
+    rc = cli.main(["pre-process", "--etherscan", "--contracts-root",
+                   str(tmp_path / "escan"), "--db-file", db])
+    assert rc == 0
+    con = duckdb.connect(db)
+    rows = con.execute("SELECT id, name, metadata, source FROM contract").fetchall()
+    con.close()
+    assert sorted(name for _, name, _, _ in rows) == ["C0", "C1", "C2"]
+    for cid, name, metadata, source in rows:
+        (file,) = json.loads(source).values()
+        assert cid == hashlib.md5(
+            re.sub(C.PY_WS_PATTERN, "", file["content"]).encode()
+        ).hexdigest()
+        assert json.loads(metadata)["ContractName"] == name
 
 
 def test_cli_strict_mode_fails_on_corrupt_metadata(spark, contract_tree, tmp_path):
@@ -342,6 +405,49 @@ def test_strict_pre_process_job_budget(spark, tmp_path):
     lenient = run("lenient", "--ignore-errors")
     # the listing runs inside DataFrameReader.load, so its stage is
     # named after that call site
+    listing = [j for j in strict if any(n.startswith("load at") for n, _ in j)]
+    assert len(listing) == 1, strict
+    assert sum(t for _, t in listing[0]) <= slots
+    names = [n for j in strict for n, _ in j]
+    assert not [n for n in names if n.startswith(("take", "collect", "head"))], names
+    assert len(strict) == len(lenient), (strict, lenient)
+
+
+def test_etherscan_pre_process_plan_and_job_budget(spark, tmp_path, monkeypatch):
+    """The frame an Etherscan pre-process hands to the sink's loader
+    parses each dump once: its executed plan has no join. Over more
+    address dirs than the parallel-listing threshold, strict and
+    lenient runs fire the same jobs, like the folder path above."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    root = tmp_path / "wide"
+    for k in range(14):  # 14 x 3 dumps = 42 address dirs
+        for addr, content in fixtures.ETHERSCAN_FILES:
+            a = f"{addr[:-4]}{k:04d}"
+            (root / a).mkdir(parents=True)
+            (root / a / f"{a}.json").write_text(content)
+    staged = []
+    write = DataFrameWriter.parquet
+
+    def spy(writer, *a, **k):
+        staged.append(writer._df)
+        return write(writer, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    slots = spark.sparkContext.defaultParallelism
+
+    def run(tag: str, *flags: str):
+        db = str(tmp_path / f"{tag}.duckdb")
+        return _jobs_of(spark, f"escan-budget-{tag}", [
+            "pre-process", "--etherscan", "--contracts-root", str(root),
+            "--db-file", db, *flags])
+
+    strict = run("strict")
+    lenient = run("lenient", "--ignore-errors")
+    assert len(staged) == 2
+    for df in staged:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan, plan
     listing = [j for j in strict if any(n.startswith("load at") for n, _ in j)]
     assert len(listing) == 1, strict
     assert sum(t for _, t in listing[0]) <= slots

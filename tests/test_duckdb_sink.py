@@ -1,15 +1,31 @@
 """DuckDB sink round-trip: DDL bootstrap, staged-parquet single-writer
-load, conflict-ignore idempotence, and source export (S7-S11)."""
+load, conflict-ignore idempotence, the tagged-union codec, and source
+export (S7-S11)."""
 
 from __future__ import annotations
 
+import ast
+import json
+import os
+import tempfile
+
 import duckdb
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from smart_contract_database_builder_spark import fixtures
 from smart_contract_database_builder_spark.compilestage import stage
 from smart_contract_database_builder_spark.sinks import duckdb_sink as sink
+from smart_contract_database_builder_spark.sinks.streaming_duckdb import (
+    exactly_once_upsert,
+)
 from smart_contract_database_builder_spark.sources import contracts as C
+
+from conftest import SF_SMOKE
+
+_PKG = os.path.dirname(os.path.dirname(os.path.abspath(sink.__file__)))
 
 
 @pytest.fixture()
@@ -111,3 +127,108 @@ def test_sanitize_path():
     assert sink.sanitize_path("../../a/b.sol") == "a/b.sol"
     assert sink.sanitize_path("/abs/path.sol") == "abs/path.sol"
     assert sink.sanitize_path("./x/./y.sol") == "x/y.sol"
+
+
+def test_staging_path_with_a_quote(spark, parsed, tmp_path, monkeypatch):
+    """The staged files are read through a relation, never through a
+    path spliced into SQL text: a quote in the temp dir is harmless."""
+    quoted = tmp_path / "it's tmp"
+    quoted.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(quoted))
+    db = str(tmp_path / "quoted.duckdb")
+    assert sink.store_contracts(parsed, db) == 5
+
+    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(20)
+    writer = exactly_once_upsert(db, "events_sink", ["event_id"])
+    writer(events, 0)
+    writer(events, 0)  # a replayed epoch inserts nothing
+    con = duckdb.connect(db)
+    try:
+        n = con.execute("SELECT COUNT(*) FROM events_sink").fetchone()[0]
+    finally:
+        con.close()
+    assert n == events.select("event_id").distinct().count()
+
+
+_SEGMENT = st.one_of(
+    st.text(min_size=1, max_size=6),
+    st.sampled_from(["..", ".", "it's", 'say "hi"', "back\\slash", "ünï", "漢字"]),
+)
+_FILES = st.lists(
+    st.tuples(
+        st.lists(_SEGMENT, min_size=1, max_size=3).map("/".join),
+        st.text(max_size=40),
+    ),
+    min_size=1,
+    max_size=4,
+    unique_by=lambda f: f[0],
+)
+_PROCESSING_SCHEMA = T.StructType([
+    T.StructField("id", T.StringType()),
+    T.StructField("contract_name", T.StringType()),
+    T.StructField("metadata", T.StringType()),
+    T.StructField("source_type", T.StringType()),
+    T.StructField("files", T.ArrayType(T.StructType([
+        T.StructField("filename", T.StringType()),
+        T.StructField("content", T.StringType()),
+    ]))),
+])
+
+
+@given(single=_FILES, multi=_FILES, vyper=_FILES, sources=_FILES)
+@settings(max_examples=8, deadline=None)
+def test_codec_round_trip(spark, single, multi, vyper, sources):
+    """store_contracts → read_contracts → contract_files gives back the
+    files the encoder was handed, for every variant of the union; the
+    Json variant's one container file comes back as its sources."""
+    container = json.dumps({"sources": {n: {"content": c} for n, c in sources}})
+    given_files = {
+        "single_sol": single[:1],
+        "multi_sol": multi,
+        "vyper": vyper[:1],
+        "json": [("contract.json", container)],
+    }
+    parsed = spark.createDataFrame(
+        [(t, "C", "{}", t, files) for t, files in given_files.items()],
+        _PROCESSING_SCHEMA,
+    )
+    with tempfile.TemporaryDirectory() as d:
+        db = os.path.join(d, "codec.duckdb")
+        assert sink.store_contracts(parsed, db) == 4
+        back = sink.contract_files(sink.read_contracts(spark, db)).collect()
+    got = {r["id"]: [(f["filename"], f["content"]) for f in r["files"]] for r in back}
+    assert got == {**given_files, "json": sources}
+
+
+def _engine_sources() -> dict[str, str]:
+    out = {}
+    for d, _dirs, files in os.walk(_PKG):
+        for f in files:
+            if f.endswith(".py"):
+                p = os.path.join(d, f)
+                with open(p) as fh:
+                    out[os.path.relpath(p, _PKG)] = fh.read()
+    return out
+
+
+def test_sink_protocol_lives_in_one_place():
+    """The tagged union's variant names, the staged read, the epoch
+    ledger and the sinks' staging dirs appear only in
+    sinks/duckdb_sink.py, and no sinks module imports a private name
+    from another."""
+    home = os.path.join("sinks", "duckdb_sink.py")
+    sources = _engine_sources()
+    for needle in ("SingleSolidity", "MultiSolidity", "read_parquet(",
+                   "_stream_ledger"):
+        assert {rel for rel, src in sources.items() if needle in src} == {home}, needle
+    sinks = {rel: src for rel, src in sources.items() if rel.startswith("sinks")}
+    assert {rel for rel, src in sinks.items() if "TemporaryDirectory(" in src} == {home}
+    private = [
+        (rel, alias.name)
+        for rel, src in sinks.items()
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom) and node.level == 1
+        for alias in node.names
+        if alias.name.startswith("_")
+    ]
+    assert private == []
