@@ -316,21 +316,32 @@ def store_functions(functions: DataFrame, db_path: str) -> int:
 
 
 def read_contracts(spark: SparkSession, db_path: str) -> DataFrame:
-    """Read the sink's ``contract`` table back as a DataFrame: DuckDB
-    materializes the whole table as one pandas frame on the driver,
-    which ``createDataFrame`` hands to Spark through Arrow. The table
-    must therefore fit in driver memory; nothing distributes the read."""
+    """Read the sink's ``contract`` table back as a DataFrame with one
+    partition per Arrow record batch, none of them empty.
+
+    DuckDB fetches the table as Arrow and ``createDataFrame`` takes it
+    as is. Spark spreads a small table's rows over every slot, but each
+    Python task downstream costs a fixed ~0.25 s of CPU whatever its row
+    count, so the frame is coalesced to the batch count:
+    ceil(rows / ``spark.sql.execution.arrow.maxRecordsPerBatch``), one
+    batch when that is 0 or less, never more partitions than Spark made.
+    An empty table has no partition at all. The whole table is still
+    held on the driver; nothing distributes the read."""
     con = connect(db_path)
     try:
-        pdf = con.execute(
+        table = con.execute(
             "SELECT id, name, metadata, source, "
             "source_type::VARCHAR AS source_type FROM contract"
-        ).df()
+        ).arrow()
     finally:
         con.close()
     from ..schemas import CONTRACT_SCHEMA
 
-    return spark.createDataFrame(pdf, schema=CONTRACT_SCHEMA)
+    df = spark.createDataFrame(table, schema=CONTRACT_SCHEMA)
+    if not table.num_rows:
+        return df
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return df.coalesce(-(-table.num_rows // step) if step > 0 else 1)
 
 
 # ---------------------------------------------------------------------------

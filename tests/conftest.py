@@ -1,4 +1,5 @@
-"""Shared fixtures: one SparkSession per test run, DuckDB oracle helper."""
+"""Shared fixtures: one SparkSession per test run, DuckDB oracle helper,
+and the job/stage/task capture of the CLI budget tests."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from smart_contract_database_builder_spark import cli
 from smart_contract_database_builder_spark.schemas import TABLE_NAMES
 from smart_contract_database_builder_spark.session import get_spark
 
@@ -35,3 +37,43 @@ def oracle():
         )
     yield con
     con.close()
+
+
+def jobs_of(spark, group: str, argv: list[str]) -> list[list[tuple[str, int]]]:
+    """Run the CLI under a job group; per job started, in job-id order,
+    its stages as (name, tasks)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert cli.main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job_id).stageIds]
+        jobs.append([(s.name, s.numTasks) for s in stages if s is not None])
+    return jobs
+
+
+def shuffle_rows_of(spark, group: str) -> list[list[int]]:
+    """After ``jobs_of`` ran ``group``: per stage that ran tasks, in
+    job-id then stage order, the shuffle rows each of its tasks read
+    (a stage fed by a scan reads none)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stages = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            tasks = store.taskList(stage_id, 0, 1 << 16)
+            if tasks.size():
+                stages.append([
+                    tasks.apply(i).taskMetrics().get()
+                    .shuffleReadMetrics().recordsRead()
+                    for i in range(tasks.size())
+                ])
+    return stages

@@ -6,13 +6,18 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
+import shutil
 
 import duckdb
 import pytest
 
 from smart_contract_database_builder_spark import cli, fixtures
+from smart_contract_database_builder_spark.sinks import duckdb_sink as sink
 from smart_contract_database_builder_spark.sources import contracts as C
+
+from conftest import jobs_of, shuffle_rows_of
 
 
 @pytest.fixture()
@@ -361,26 +366,6 @@ def test_cli_chunk_size_does_not_leak_into_the_session(spark, contract_tree, tmp
     assert spark.conf.get(key) == prior
 
 
-def _jobs_of(spark, group: str, argv: list[str]) -> list[list[tuple[str, int]]]:
-    """Run the CLI under a job group; per job started, in job-id order,
-    its stages as (name, tasks)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        assert cli.main(argv) == 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = []
-    for job_id in sorted(tracker.getJobIdsForGroup(group)):
-        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job_id).stageIds]
-        jobs.append([(s.name, s.numTasks) for s in stages if s is not None])
-    return jobs
-
-
 def test_strict_pre_process_job_budget(spark, tmp_path):
     """A strict folder pre-process of a tree with more directories than
     Spark's parallel-listing threshold (32) costs one listing job with
@@ -398,7 +383,7 @@ def test_strict_pre_process_job_budget(spark, tmp_path):
 
     def run(tag: str, *flags: str):
         db = str(tmp_path / f"{tag}.duckdb")
-        return _jobs_of(spark, f"budget-{tag}", [
+        return jobs_of(spark, f"budget-{tag}", [
             "pre-process", "--contracts-root", str(root), "--db-file", db, *flags])
 
     strict = run("strict")
@@ -438,7 +423,7 @@ def test_etherscan_pre_process_plan_and_job_budget(spark, tmp_path, monkeypatch)
 
     def run(tag: str, *flags: str):
         db = str(tmp_path / f"{tag}.duckdb")
-        return _jobs_of(spark, f"escan-budget-{tag}", [
+        return jobs_of(spark, f"escan-budget-{tag}", [
             "pre-process", "--etherscan", "--contracts-root", str(root),
             "--db-file", db, *flags])
 
@@ -454,6 +439,87 @@ def test_etherscan_pre_process_plan_and_job_budget(spark, tmp_path, monkeypatch)
     names = [n for j in strict for n, _ in j]
     assert not [n for n in names if n.startswith(("take", "collect", "head"))], names
     assert len(strict) == len(lenient), (strict, lenient)
+
+
+@pytest.fixture()
+def stored_db(spark, contract_tree, tmp_path) -> str:
+    """The fixture tree pre-processed into a sink file."""
+    db = str(tmp_path / "base.duckdb")
+    assert cli.main(
+        ["pre-process", "--contracts-root", contract_tree, "--db-file", db]
+    ) == 0
+    return db
+
+
+def _copy(db: str, tag: str) -> str:
+    """A copy of ``db`` next to it: every index-functions run of a test
+    reads the same contract rows."""
+    out = os.path.join(os.path.dirname(db), f"{tag}.duckdb")
+    shutil.copy(db, out)
+    return out
+
+
+def _function_rows(db: str) -> list[tuple]:
+    con = duckdb.connect(db, read_only=True)
+    try:
+        return con.execute("SELECT * FROM function ORDER BY id").fetchall()
+    finally:
+        con.close()
+
+
+def test_index_functions_task_budget(spark, stored_db):
+    """index-functions starts one Python task per Arrow batch of stored
+    contracts, and none without rows. The fixtures' contracts fit one
+    batch: one job, no stage with more than one task (the id dedup
+    needs no exchange). At two rows per batch every read partition
+    holds a row, the extraction stage has one task per batch, and the
+    stored function rows are the same."""
+    one = _copy(stored_db, "one")
+    jobs = jobs_of(spark, "ix-budget-one", ["index-functions", "--db-file", one])
+    assert len(jobs) == 1, jobs
+    assert max(t for j in jobs for _, t in j) == 1, jobs
+
+    many = _copy(stored_db, "many")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        parts = sink.read_contracts(spark, many).rdd.glom().map(len).collect()
+        jobs = jobs_of(spark, "ix-budget-many", ["index-functions", "--db-file", many])
+    finally:
+        spark.conf.set(key, prior)
+    batches = -(-_contract_rows(stored_db) // 2)
+    assert batches >= 2
+    assert len(parts) == batches and min(parts) >= 1, parts
+    # the extraction is the first job's one stage, ahead of the dedup
+    # exchange
+    assert [t for _, t in jobs[0]] == [batches], jobs
+    assert max(t for j in jobs for _, t in j) == batches, jobs
+    assert _function_rows(many) == _function_rows(one)
+
+
+def test_index_functions_on_an_empty_contract_table(spark, tmp_path, capsys):
+    """No stored contract: nothing to extract, and no Spark task."""
+    db = _bootstrapped(str(tmp_path / "empty.duckdb"))
+    assert jobs_of(spark, "ix-empty", ["index-functions", "--db-file", db]) == []
+    assert "stored 0 new functions" in capsys.readouterr().out
+    assert _function_rows(db) == []
+
+
+def test_index_functions_chunk_size(spark, stored_db):
+    """--chunk-size k stores the same rows as a run without it; the
+    extraction stage reads the ceil(n/k) partitions of the repartition,
+    none of them empty."""
+    plain = _copy(stored_db, "plain")
+    assert cli.main(["index-functions", "--db-file", plain]) == 0
+    chunked = _copy(stored_db, "chunked")
+    jobs = jobs_of(spark, "ix-chunk",
+                   ["index-functions", "--db-file", chunked, "--chunk-size", "2"])
+    parts = -(-_contract_rows(stored_db) // 2)
+    assert max(t for j in jobs for _, t in j) == parts, jobs
+    extraction = [s for s in shuffle_rows_of(spark, "ix-chunk") if len(s) == parts]
+    assert len(extraction) == 1 and min(extraction[0]) >= 1, extraction
+    assert _function_rows(chunked) == _function_rows(plain)
 
 
 def test_cli_download_solc_gated():

@@ -95,6 +95,23 @@ def test_read_contracts_roundtrip(spark, parsed, tmp_path):
     assert ids_back == ids_stored
 
 
+def test_staged_load_of_an_empty_read(spark, tmp_path):
+    """An empty contract table reads back with no partition; extracting
+    and storing it still loads, zero rows: Spark stages one empty file
+    that carries the schema."""
+    db = str(tmp_path / "empty.duckdb")
+    sink.connect(db).close()
+    back = sink.read_contracts(spark, db)
+    assert back.rdd.getNumPartitions() == 0
+    fns = stage.extract_functions(sink.contract_files(back))
+    assert sink.store_functions(fns, db) == 0
+    con = duckdb.connect(db, read_only=True)
+    try:
+        assert con.execute("SELECT COUNT(*) FROM function").fetchone()[0] == 0
+    finally:
+        con.close()
+
+
 def test_export_source_code_sanitizes_paths(spark, tmp_path):
     import json
 
