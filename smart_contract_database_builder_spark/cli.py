@@ -150,25 +150,26 @@ def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
 
 
 def cmd_index_functions(args: argparse.Namespace) -> int:
-    import duckdb
-
     from .sinks import duckdb_sink as sink
     from .compilestage import stage
 
     spark = _spark()
     contracts = sink.read_contracts(spark, args.db_file)
-    # the sink's own (local, instant) row count — never a Spark job
-    con = duckdb.connect(args.db_file)
-    try:
-        n_rows = con.execute("SELECT COUNT(*) FROM contract").fetchone()[0]
-    finally:
-        con.close()
-    if not n_rows:
-        # nothing to extract; staging no rows would still start a task
+    if contracts.rdd.getNumPartitions() == 0:
+        # an empty table; staging no rows would still start a task
         print(f"stored 0 new functions into {args.db_file}")
         return 0
     processing = sink.contract_files(contracts)
     if args.chunk_size:
+        # partition count from the sink's own (local, instant) row count
+        # — never a Spark job over the parse pipeline
+        import duckdb
+
+        con = duckdb.connect(args.db_file, read_only=True)
+        try:
+            n_rows = con.execute("SELECT COUNT(*) FROM contract").fetchone()[0]
+        finally:
+            con.close()
         processing = processing.repartition(
             max(1, -(-n_rows // args.chunk_size))
         )

@@ -11,15 +11,15 @@ function rows (reference src/main.rs:273-331). The Spark shape is:
 ``mapInPandas`` is the right tool for the one irreducibly-external step:
 Arrow moves columns to Python in batches (not per row), each partition
 runs independently on its executor, and stragglers (huge contracts) are
-handled by Spark's normal task machinery — mirroring the reference's
-task-per-contract parallelism without a driver-side loop.
+handled by Spark's normal task machinery, without a driver-side loop.
 
 The stage runs one Python task per partition, and each task costs a
-fixed ~0.25 s of worker CPU whatever its row count (the worker's
-per-task setup re-reads its zip archives). ``index-functions`` feeds it
-``sinks.duckdb_sink.read_contracts``, which has one partition per Arrow
-batch and no empty one, so it costs one Python task per batch; with a
-single batch the id dedup below also needs no exchange.
+fixed ~0.27 s of worker CPU whatever its row count (the worker's
+per-task setup re-reads its zip archives). So fewer, larger tasks are
+cheaper: ``index-functions`` feeds the stage
+``sinks.duckdb_sink.read_contracts``, which sizes its partitions by
+bytes (``READ_BYTES_PER_TASK``), so a small table costs one Python
+task, and with one partition the id dedup below needs no exchange.
 
 Each Arrow batch is extracted in three steps (``_batch_rows``):
 scan every bundle in the batch, hash the batch's distinct signatures

@@ -467,34 +467,30 @@ def _function_rows(db: str) -> list[tuple]:
         con.close()
 
 
-def test_index_functions_task_budget(spark, stored_db):
-    """index-functions starts one Python task per Arrow batch of stored
-    contracts, and none without rows. The fixtures' contracts fit one
-    batch: one job, no stage with more than one task (the id dedup
-    needs no exchange). At two rows per batch every read partition
-    holds a row, the extraction stage has one task per batch, and the
-    stored function rows are the same."""
+def test_index_functions_task_budget(spark, stored_db, monkeypatch):
+    """index-functions starts one Python task per READ_BYTES_PER_TASK of
+    stored contracts, never more than Spark's read made, and none
+    without rows. The fixtures' contracts are far below that size: one
+    job, no stage with more than one task (the id dedup needs no
+    exchange). At one byte per task the read keeps every partition
+    Spark made, each holds a row, the extraction stage has one task per
+    partition, and the stored function rows are the same."""
     one = _copy(stored_db, "one")
     jobs = jobs_of(spark, "ix-budget-one", ["index-functions", "--db-file", one])
     assert len(jobs) == 1, jobs
     assert max(t for j in jobs for _, t in j) == 1, jobs
 
     many = _copy(stored_db, "many")
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, "2")
-    try:
-        parts = sink.read_contracts(spark, many).rdd.glom().map(len).collect()
-        jobs = jobs_of(spark, "ix-budget-many", ["index-functions", "--db-file", many])
-    finally:
-        spark.conf.set(key, prior)
-    batches = -(-_contract_rows(stored_db) // 2)
-    assert batches >= 2
-    assert len(parts) == batches and min(parts) >= 1, parts
+    monkeypatch.setattr(sink, "READ_BYTES_PER_TASK", 1)
+    parts = sink.read_contracts(spark, many).rdd.glom().map(len).collect()
+    jobs = jobs_of(spark, "ix-budget-many", ["index-functions", "--db-file", many])
+    slots = min(_contract_rows(stored_db), spark.sparkContext.defaultParallelism)
+    assert slots >= 2
+    assert len(parts) == slots and min(parts) >= 1, parts
     # the extraction is the first job's one stage, ahead of the dedup
     # exchange
-    assert [t for _, t in jobs[0]] == [batches], jobs
-    assert max(t for j in jobs for _, t in j) == batches, jobs
+    assert [t for _, t in jobs[0]] == [slots], jobs
+    assert max(t for j in jobs for _, t in j) == slots, jobs
     assert _function_rows(many) == _function_rows(one)
 
 

@@ -95,6 +95,39 @@ def test_read_contracts_roundtrip(spark, parsed, tmp_path):
     assert ids_back == ids_stored
 
 
+def _sized_contract_table(db: str, rows: int, table_bytes: int) -> None:
+    """A sink file of ``rows`` contracts whose sources add up to about
+    ``table_bytes``."""
+    con = sink.connect(db)
+    try:
+        con.execute(
+            "INSERT INTO contract SELECT 'id' || i, 'C' || i, '{}', "
+            "repeat('x', ?), 'single_sol' FROM range(?) t(i)",
+            [table_bytes // rows, rows],
+        )
+    finally:
+        con.close()
+
+
+def test_read_contracts_partitions_by_size(spark, tmp_path):
+    """read_contracts gives each partition about READ_BYTES_PER_TASK of
+    the table, never more partitions than Spark made, none of them
+    empty: a small table reads back as one partition, one of 2.5 times
+    that size as three, and one of many times it keeps every slot."""
+    budget, slots = sink.READ_BYTES_PER_TASK, spark.sparkContext.defaultParallelism
+    assert slots >= 3
+    for name, size, want in [
+        ("small", budget // 4, 1),
+        ("mid", budget * 5 // 2, 3),
+        ("big", budget * (slots + 2), slots),
+    ]:
+        db = str(tmp_path / f"{name}.duckdb")
+        _sized_contract_table(db, 40, size)
+        parts = sink.read_contracts(spark, db).rdd.glom().map(len).collect()
+        assert len(parts) == want and min(parts) >= 1, (name, parts)
+        assert sum(parts) == 40
+
+
 def test_staged_load_of_an_empty_read(spark, tmp_path):
     """An empty contract table reads back with no partition; extracting
     and storing it still loads, zero rows: Spark stages one empty file
