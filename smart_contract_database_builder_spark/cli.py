@@ -161,13 +161,16 @@ def cmd_index_functions(args: argparse.Namespace) -> int:
         return 0
     processing = sink.contract_files(contracts)
     if args.chunk_size:
-        # partition count from the sink's own (local, instant) row count
-        # — never a Spark job over the parse pipeline
+        # partition count from the sink's own (local, instant) count of
+        # the rows the stage extracts (vyper ones are filtered out) —
+        # never a Spark job over the parse pipeline
         import duckdb
 
         con = duckdb.connect(args.db_file, read_only=True)
         try:
-            n_rows = con.execute("SELECT COUNT(*) FROM contract").fetchone()[0]
+            n_rows = con.execute(
+                "SELECT COUNT(*) FROM contract WHERE source_type <> 'vyper'"
+            ).fetchone()[0]
         finally:
             con.close()
         processing = processing.repartition(

@@ -6,7 +6,7 @@ function rows (reference src/main.rs:273-331). The Spark shape is:
 
     contracts DF → filter(≠vyper)           # P6, BEFORE the costly stage
                 → mapInPandas(extract)       # Arrow-batched Python stage
-                → dropDuplicates("id")       # INSERT OR IGNORE (db.rs:208)
+                → dedup_by_id                # INSERT OR IGNORE (db.rs:208)
 
 ``mapInPandas`` is the right tool for the one irreducibly-external step:
 Arrow moves columns to Python in batches (not per row), each partition
@@ -208,19 +208,17 @@ def extract_functions(contracts: DataFrame) -> DataFrame:
     The vyper filter sits BEFORE the Python stage so Catalyst never
     ships skipped rows across the Arrow boundary (main.rs:298-300).
     """
+    # imported here, not at the top: every Python worker imports this
+    # module to run ``_extract_batches`` and needs no DuckDB
+    from ..sinks.duckdb_sink import dedup_by_id
+
     packed = contracts.filter(F.col("source_type") != "vyper").select(
         "id", F.to_json("files").alias("files_json")
     )
     extracted = packed.mapInPandas(_extract_batches, schema=FUNCTION_SCHEMA)
     # conflict-ignore dedup (db.rs:208): e.g. a whitespace-variant
     # duplicate dir yields the same function id with a DIFFERENT body
-    # slice. The reference keeps whichever insert arrives first;
-    # ``dropDuplicates`` would mirror that nondeterminism across
-    # partitionings, so pick the lexicographic minimum row instead —
-    # deterministic under any partitioning/arrival order.
-    cols = [f.name for f in FUNCTION_SCHEMA.fields]
-    return (
-        extracted.groupBy("id")
-        .agg(F.min(F.struct(*[c for c in cols if c != "id"])).alias("r"))
-        .select("id", *[F.col(f"r.{c}") for c in cols if c != "id"])
-    )
+    # slice. The reference keeps whichever insert arrives first; the
+    # sink's id dedup keeps the least row, the same under any
+    # partitioning or arrival order.
+    return dedup_by_id(extracted)

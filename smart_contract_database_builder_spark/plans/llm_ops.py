@@ -27,12 +27,8 @@ from pyspark.sql.window import Window
 
 from ..sources.store_root import ensure_store, source_fingerprint, store_path
 from ..sources.tables import load_table
-from .materialize import pin
+from .materialize import fan_out_if_narrow, pin
 from .registry import QUERIES, register
-
-# Shared with relational_ext (the bootstrap digest fan-out): lives in
-# materialize.py; re-exported here because ~40 call sites predate the move.
-from .materialize import fan_out_if_narrow  # noqa: E402,F401
 
 
 # ---------------------------------------------------------------------------
@@ -508,19 +504,23 @@ _DECON_N = 4
 #: The "benchmark" held-out set: every doc with id ≡ 7 (mod 50) — a
 #: deterministic ~2% slice standing in for an eval suite.
 _DECON_MOD, _DECON_REM = 50, 7
+#: ``grams(doc_id, g)``: every document's decontamination n-grams.
+_SQL_DECON_GRAMS = rf"""grams AS (
+      SELECT doc_id, unnest({_sql_word_ngrams("t", _DECON_N)}) AS g
+      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+    )"""
+#: ``bench(g)``: the distinct n-grams of the held-out slice.
+_SQL_DECON_BENCH = f"""bench AS (
+      SELECT DISTINCT g FROM grams
+      WHERE doc_id % {_DECON_MOD} = {_DECON_REM}
+    )"""
 
 
 @register(
     "llm_decontaminate_overlap",
     oracle=rf"""
-    WITH grams AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t", _DECON_N)}) AS g
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-    ),
-    bench AS (
-      SELECT DISTINCT g FROM grams
-      WHERE doc_id % {_DECON_MOD} = {_DECON_REM}
-    ),
+    WITH {_SQL_DECON_GRAMS},
+    {_SQL_DECON_BENCH},
     corpus AS (
       SELECT doc_id, g FROM grams
       WHERE doc_id % {_DECON_MOD} <> {_DECON_REM}
@@ -698,6 +698,82 @@ _BAND_ROWS = 2  # 4 bands × 2 rows
 #: O(cap²) pairs regardless of corpus skew.
 _LSH_BUCKET_CAP = 64
 
+# The DuckDB twin of the near-dup chain, one CTE block per stage. Each
+# oracle composes the stages it needs (``WITH {_SQL_SHINGLES}, ...``),
+# so the hashing, banding and capping rules are written once here.
+
+#: Word 3-gram shingle rows over ``documents``, repeats kept.
+_SQL_SHINGLE_ROWS = rf"""SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
+      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)"""
+#: ``sh(doc_id, s)``: each document's distinct shingle set.
+_SQL_SHINGLES = f"""sh AS (
+      SELECT DISTINCT doc_id, s
+      FROM (
+        {_SQL_SHINGLE_ROWS}
+      )
+    )"""
+#: ``sizes(doc_id, n)``: shingle-set sizes, the Jaccard denominators.
+_SQL_SIZES = "sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)"
+#: ``sig`` (the MinHash signature of ``sh``) and ``bands(doc_id,
+#: band_idx, key)``: ``_BAND_ROWS`` signature slots per band key.
+_SQL_BANDS = rf"""sig AS (
+      SELECT doc_id,
+             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
+      FROM sh GROUP BY doc_id
+    ),
+    bands AS (
+      {" UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
+        for b in range(_N_HASHES // _BAND_ROWS)
+      )}
+    )"""
+#: ``bsz(band_idx, key)``: the multi-doc buckets within the cap.
+_SQL_BUCKETS = f"""bsz AS (
+      SELECT band_idx, key FROM bands
+      GROUP BY band_idx, key
+      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
+    )"""
+#: ``cand(doc_a, doc_b)``: candidate pairs sharing a capped bucket.
+_SQL_CANDIDATES = """cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a
+      JOIN bsz USING (band_idx, key)
+      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
+                  AND a.doc_id < b.doc_id
+    )"""
+#: ``jac(doc_a, doc_b, jaccard)``: exact shingle Jaccard per candidate.
+_SQL_JACCARD = """jac AS (
+      SELECT c.doc_a, c.doc_b,
+             CAST(COUNT(*) AS DOUBLE)
+               / (sa.n + sb.n - COUNT(*)) AS jaccard
+      FROM cand c
+      JOIN sh x ON x.doc_id = c.doc_a
+      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
+      JOIN sizes sa ON sa.doc_id = c.doc_a
+      JOIN sizes sb ON sb.doc_id = c.doc_b
+      GROUP BY c.doc_a, c.doc_b, sa.n, sb.n
+    )"""
+#: ``edges(u, v)`` over ``cand`` both ways and its closure ``reach(a,
+#: b)``; needs ``WITH RECURSIVE``.
+_SQL_COMPONENTS = """edges AS (
+      SELECT doc_a AS u, doc_b AS v FROM cand
+      UNION ALL
+      SELECT doc_b, doc_a FROM cand
+    ),
+    reach(a, b) AS (
+      SELECT u, v FROM edges
+      UNION
+      SELECT r.a, e.v FROM reach r JOIN edges e ON e.u = r.b
+    )"""
+#: The verified-pair chain, shingles to ``jac``: the DuckDB twin of the
+#: S21+S24 store build.
+_SQL_NEARDUP_PAIRS = f"""{_SQL_SHINGLES},
+    {_SQL_SIZES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_JACCARD}"""
+
 
 def minhash_candidate_pairs(
     toked: DataFrame, bucket_cap: int = _LSH_BUCKET_CAP
@@ -811,25 +887,10 @@ def candidate_pairs_from_bands(
     "llm_minhash_lsh_pairs",
     oracle=rf"""
     WITH sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    )
+    {_SQL_BANDS},
+    {_SQL_BUCKETS}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared_bands
     FROM bands a
     JOIN bsz USING (band_idx, key)
@@ -854,37 +915,11 @@ def llm_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_ngram_jaccard_topk",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_SHINGLES},
+    {_SQL_SIZES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
     shared AS (
       SELECT c.doc_a, c.doc_b, COUNT(*) AS n_shared
       FROM cand c
@@ -1004,42 +1039,12 @@ def _ngram_jaccard_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_cluster_best_representative",
     oracle=rf"""
     WITH RECURSIVE sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM cand
-      UNION ALL
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(a, b) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.a, e.v FROM reach r JOIN edges e ON e.u = r.b
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_COMPONENTS},
     clusters AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
       FROM reach GROUP BY a
@@ -1121,37 +1126,11 @@ _CONTAIN_THR = 0.9
 @register(
     "llm_containment_pairs",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_SHINGLES},
+    {_SQL_SIZES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
     shared AS (
       SELECT c.doc_a, c.doc_b, COUNT(*) AS n_shared
       FROM cand c
@@ -1482,42 +1461,12 @@ def connected_components_star(
     "llm_neardup_clusters",
     oracle=rf"""
     WITH RECURSIVE sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM cand
-      UNION ALL
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(a, b) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.a, e.v FROM reach r JOIN edges e ON e.u = r.b
-    )
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_COMPONENTS}
     SELECT a AS doc_id,
            LEAST(a, MIN(b)) AS cluster_id,
            a = LEAST(a, MIN(b)) AS is_canonical
@@ -2067,20 +2016,18 @@ def _sql_bucket_expr(n_planes: int = _N_PLANES, prefix: str = "") -> str:
         for p in range(n_planes)
     )
 
+# The DuckDB twin of the hyperplane ANN chain, one CTE block per stage.
 
-_NEAR_DUP_COSINE = 0.3
-
-
-@register(
-    "llm_ann_bucketed_cosine_pairs",
-    oracle=rf"""
-    WITH s AS (
+#: ``s(vec_id, sv)``: every embedding as scaled integers.
+_SQL_SCALED = rf"""s AS (
       SELECT vec_id,
              list_transform(embedding,
                x -> {_SQL_ISCALE.format(v="x")}) AS sv
       FROM embeddings
-    ),
-    b AS (
+    )"""
+#: Over ``s``: ``b`` (bucket per vector), ``n`` (with its norm) and
+#: ``ok(bucket)``, the multi-vector buckets within ``_ANN_BUCKET_CAP``.
+_SQL_ANN_BUCKETS = f"""b AS (
       SELECT vec_id, sv,
              {_sql_bucket_expr()} AS bucket
       FROM s
@@ -2095,7 +2042,17 @@ _NEAR_DUP_COSINE = 0.3
     ok AS (
       SELECT bucket FROM b GROUP BY bucket
       HAVING COUNT(*) BETWEEN 2 AND {_ANN_BUCKET_CAP}
-    ),
+    )"""
+
+
+_NEAR_DUP_COSINE = 0.3
+
+
+@register(
+    "llm_ann_bucketed_cosine_pairs",
+    oracle=rf"""
+    WITH {_SQL_SCALED},
+    {_SQL_ANN_BUCKETS},
     pairs AS (
       SELECT x.vec_id AS vec_a, y.vec_id AS vec_b,
              CAST(CAST(list_aggregate(
@@ -2218,28 +2175,8 @@ def ann_cosine_pairs_from_rows(
 @register(
     "llm_embedding_neardup_clusters",
     oracle=rf"""
-    WITH RECURSIVE s AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
-    b AS (
-      SELECT vec_id, sv,
-             {_sql_bucket_expr()} AS bucket
-      FROM s
-    ),
-    n AS (
-      SELECT vec_id, sv, bucket,
-             sqrt(CAST(CAST(list_aggregate(
-               list_transform(list_zip(sv, sv), x -> x[1] * x[2]),
-               'sum') AS BIGINT) AS DOUBLE)) AS nrm
-      FROM b
-    ),
-    ok AS (
-      SELECT bucket FROM b GROUP BY bucket
-      HAVING COUNT(*) BETWEEN 2 AND {_ANN_BUCKET_CAP}
-    ),
+    WITH RECURSIVE {_SQL_SCALED},
+    {_SQL_ANN_BUCKETS},
     pairs AS (
       SELECT x.vec_id AS vec_a, y.vec_id AS vec_b
       FROM n x
@@ -2292,8 +2229,11 @@ def llm_embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_IVF_ORACLE = f"""
-    WITH s AS (
+# The DuckDB twin of the label-cell (IVF/PQ) assignment, in two blocks.
+
+#: ``s(vec_id, label, sv)`` scaled vectors, ``comp`` per-cell sums and
+#: ``cq(cell, d, c)``: each label cell's integer centroid.
+_SQL_CELL_CENTROIDS = rf"""s AS (
       SELECT vec_id, label,
              list_transform(embedding, x -> {_SQL_ISCALE.format(v="x")}) AS sv
       FROM embeddings
@@ -2307,8 +2247,10 @@ _IVF_ORACLE = f"""
       SELECT cell, d,
              CAST(FLOOR(CAST(sm AS DOUBLE) / cnt) AS BIGINT) AS c
       FROM comp
-    ),
-    dist AS (
+    )"""
+#: ``dist`` (squared distance to each centroid) and ``best(vec_id,
+#: cell)``: the nearest cell, ties to the lower cell.
+_SQL_NEAREST_CELL = """dist AS (
       SELECT s.vec_id, cq.cell,
              SUM((s.sv[cq.d] - cq.c) * (s.sv[cq.d] - cq.c)) AS d2
       FROM s, cq
@@ -2324,7 +2266,11 @@ _IVF_ORACLE = f"""
         FROM dist
       )
       WHERE rn = 1
-    ),
+    )"""
+
+_IVF_ORACLE = f"""
+    WITH {_SQL_CELL_CENTROIDS},
+    {_SQL_NEAREST_CELL},
     q AS (
       SELECT s.vec_id, s.sv AS qv, best.cell,
              CAST(list_aggregate(
@@ -2481,21 +2427,7 @@ _PQ_M = 8
 _PQ_SUB = 8
 
 _PQ_ORACLE = f"""
-    WITH s AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
-    comp AS (
-      SELECT label AS cell, d, SUM(sv[d]) AS sm, COUNT(*) AS cnt
-      FROM s, range(1, 65) r(d)
-      GROUP BY label, d
-    ),
-    cq AS (
-      SELECT cell, d,
-             CAST(FLOOR(CAST(sm AS DOUBLE) / cnt) AS BIGINT) AS c
-      FROM comp
-    ),
+    WITH {_SQL_CELL_CENTROIDS},
     dist AS (
       SELECT s.vec_id, cq.cell, (cq.d - 1) // {_PQ_SUB} AS m,
              SUM((s.sv[cq.d] - cq.c) * (s.sv[cq.d] - cq.c)) AS d2
@@ -3080,26 +3012,43 @@ _G_MIN_MWL = 2.0
 _G_MAX_MWL = 10.0
 _G_MAX_TOP_FRAC = 0.2
 
-
-@register(
-    "llm_gopher_quality_filter",
-    oracle=rf"""
-    WITH tc AS (
+#: ``tc(doc_id, term, c, l)``: per-document term counts and lengths.
+_SQL_TERM_COUNTS = rf"""tc AS (
       SELECT doc_id, term, COUNT(*) AS c, LEN(term) AS l
       FROM (
         SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
       )
       GROUP BY doc_id, term
-    ),
-    agg AS (
-      SELECT doc_id,
+    )"""
+#: The Gopher statistics per document, over ``tc``.
+_SQL_GOPHER_STATS = f"""SELECT doc_id,
              SUM(c) AS n_tok,
              SUM(l * c) AS n_chars_tok,
              MAX(c) AS top_c,
              MAX(CASE WHEN term IN ({_SQL_STOPWORDS}) THEN 1 ELSE 0 END)
                AS has_stop
       FROM tc
-      GROUP BY doc_id
+      GROUP BY doc_id"""
+#: ``qual(doc_id)``: the documents that pass every Gopher rule.
+_SQL_GOPHER_KEEP = f"""qual AS (
+      SELECT doc_id
+      FROM (
+        {_SQL_GOPHER_STATS}
+      )
+      WHERE n_tok BETWEEN {_G_MIN_TOK} AND {_G_MAX_TOK}
+        AND CAST(n_chars_tok AS DOUBLE) / n_tok
+            BETWEEN {_G_MIN_MWL} AND {_G_MAX_MWL}
+        AND CAST(top_c AS DOUBLE) / n_tok <= {_G_MAX_TOP_FRAC}
+        AND has_stop = 1
+    )"""
+
+
+@register(
+    "llm_gopher_quality_filter",
+    oracle=rf"""
+    WITH {_SQL_TERM_COUNTS},
+    agg AS (
+      {_SQL_GOPHER_STATS}
     )
     SELECT doc_id,
            CAST(n_tok AS BIGINT) AS n_tok,
@@ -3252,12 +3201,7 @@ def _sql_table_bucket(prefix: str) -> str:
 @register(
     "llm_ann_multitable_pairs",
     oracle=rf"""
-    WITH s AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
+    WITH {_SQL_SCALED},
     n AS (
       SELECT vec_id, sv,
              sqrt(CAST(CAST(list_aggregate(
@@ -3514,52 +3458,18 @@ def span_dedup_trim(docs: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "llm_curation_pipeline",
-    oracle=rf"""
-    WITH tc AS (
-      SELECT doc_id, term, COUNT(*) AS c, LEN(term) AS l
-      FROM (
-        SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
-      )
-      GROUP BY doc_id, term
-    ),
-    qual AS (
-      SELECT doc_id
-      FROM (
-        SELECT doc_id,
-               SUM(c) AS n_tok,
-               SUM(l * c) AS n_chars_tok,
-               MAX(c) AS top_c,
-               MAX(CASE WHEN term IN ({_SQL_STOPWORDS}) THEN 1 ELSE 0 END)
-                 AS has_stop
-        FROM tc GROUP BY doc_id
-      )
-      WHERE n_tok BETWEEN {_G_MIN_TOK} AND {_G_MAX_TOK}
-        AND CAST(n_chars_tok AS DOUBLE) / n_tok
-            BETWEEN {_G_MIN_MWL} AND {_G_MAX_MWL}
-        AND CAST(top_c AS DOUBLE) / n_tok <= {_G_MAX_TOP_FRAC}
-        AND has_stop = 1
-    ),
-    keyed AS (
-      SELECT d.doc_id, lang, source,
-             md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS ck,
-             len({_SQL_TOKENS}) AS n_tok
-      FROM documents d JOIN qual USING (doc_id)
-    ),
-    canon AS (SELECT ck, MIN(doc_id) AS cid FROM keyed GROUP BY ck),
+#: The curation stages after the quality filter, over ``keyed(doc_id,
+#: lang, ck, ...)``: exact dedup (``canon``/``dedup``), benchmark
+#: decontamination (``clean``) and the per-language mix sample
+#: (``final``).
+_SQL_CURATION_TAIL = f"""canon AS (SELECT ck, MIN(doc_id) AS cid
+      FROM keyed GROUP BY ck),
     dedup AS (
       SELECT keyed.* FROM keyed
       JOIN canon ON keyed.ck = canon.ck AND keyed.doc_id = canon.cid
     ),
-    grams AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t", _DECON_N)}) AS g
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-    ),
-    bench AS (
-      SELECT DISTINCT g FROM grams
-      WHERE doc_id % {_DECON_MOD} = {_DECON_REM}
-    ),
+    {_SQL_DECON_GRAMS},
+    {_SQL_DECON_BENCH},
     contaminated AS (
       SELECT DISTINCT c.doc_id
       FROM grams c JOIN bench b ON c.g = b.g
@@ -3575,7 +3485,21 @@ def span_dedup_trim(docs: DataFrame) -> DataFrame:
       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
             < CASE WHEN lang = 'en' THEN '{_MIX_THR_EN}'
                    ELSE '{_MIX_THR_OTHER}' END
-    )
+    )"""
+
+
+@register(
+    "llm_curation_pipeline",
+    oracle=rf"""
+    WITH {_SQL_TERM_COUNTS},
+    {_SQL_GOPHER_KEEP},
+    keyed AS (
+      SELECT d.doc_id, lang, source,
+             md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS ck,
+             len({_SQL_TOKENS}) AS n_tok
+      FROM documents d JOIN qual USING (doc_id)
+    ),
+    {_SQL_CURATION_TAIL}
     SELECT lang, source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tok) AS BIGINT) AS n_tokens
@@ -4109,10 +4033,7 @@ def _decon_multi_oracle() -> str:
         for bid, m, r in _DECON_BENCHMARKS
     )
     return f"""
-    WITH grams AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t", _DECON_N)}) AS g
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-    ),
+    WITH {_SQL_DECON_GRAMS},
     bench AS (
 {bench_union}
     ),
@@ -5011,37 +4932,11 @@ def llm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_minhash_estimate_calibration",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    WITH {_SQL_SHINGLES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_SIZES},
     inter AS (
       SELECT c.doc_a, c.doc_b, COUNT(*) AS i
       FROM cand c
@@ -5158,29 +5053,9 @@ def llm_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFr
 #: llm_minhash_lsh_pairs' pipeline) — reused by the graph-analytics
 #: oracles so the edge set is bit-identical across queries.
 _SQL_LSH_EDGES = rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
+    WITH {_SQL_SHINGLES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
     edges AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -5519,15 +5394,20 @@ def _km_state(spark: SparkSession, sf_dir: str, iters: int = _KM_ITERS):
     return x6, cent, dist, assign
 
 
-@register(
-    "llm_kmeans_lloyd",
-    oracle=rf"""
-    WITH x6 AS ({_sql_km_x6()}),
+#: The k-means family's Lloyd run: ``x6`` vectors, the first ``_KM_K``
+#: as ``cent0``, then every unrolled iteration.
+_SQL_KMEANS = f"""x6 AS ({_sql_km_x6()}),
     cent0 AS (
       SELECT CAST(vec_id AS INTEGER) AS cluster, d, x6 AS cq
       FROM x6 WHERE vec_id < {_KM_K}
     ),
-    {_sql_km_iterations()}
+    {_sql_km_iterations()}"""
+
+
+@register(
+    "llm_kmeans_lloyd",
+    oracle=rf"""
+    WITH {_SQL_KMEANS}
     SELECT vec_id,
            CAST(cluster AS INTEGER) AS cluster,
            CAST(dist AS BIGINT) AS dist_fp2
@@ -5569,12 +5449,7 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_kmeans_silhouette",
     oracle=rf"""
-    WITH x6 AS ({_sql_km_x6()}),
-    cent0 AS (
-      SELECT CAST(vec_id AS INTEGER) AS cluster, d, x6 AS cq
-      FROM x6 WHERE vec_id < {_KM_K}
-    ),
-    {_sql_km_iterations()},
+    WITH {_SQL_KMEANS},
     d2 AS (
       SELECT vec_id, cluster, dist FROM dist{_KM_ITERS}
     ),
@@ -5641,25 +5516,7 @@ def llm_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_chunk_documents_udtf",
-    oracle=rf"""
-    WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS t, len({_SQL_TOKENS}) AS n_tok
-      FROM documents
-    ),
-    s AS (
-      SELECT doc_id, t, n_tok,
-             unnest(range(0, n_tok, {_CHUNK_STRIDE})) AS start
-      FROM t
-    )
-    SELECT doc_id,
-           CAST(start // {_CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
-           CAST(start AS BIGINT) AS start_tok,
-           CAST(LEAST({_CHUNK_TOKENS}, n_tok - start) AS BIGINT)
-             AS chunk_len,
-           md5(array_to_string(
-             t[start + 1 : start + {_CHUNK_TOKENS}], ' ')) AS chunk_hash
-    FROM s
-    """,
+    oracle=QUERIES["llm_chunk_documents"].oracle,
 )
 def llm_chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-EXT: the chunker as a Spark 4 PYTHON UDTF (lateral table
@@ -5705,28 +5562,8 @@ _RECALL_K = 500
 @register(
     "llm_ann_recall_report",
     oracle=rf"""
-    WITH s AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
-    b AS (
-      SELECT vec_id, sv,
-             {_sql_bucket_expr()} AS bucket
-      FROM s
-    ),
-    n AS (
-      SELECT vec_id, sv, bucket,
-             sqrt(CAST(CAST(list_aggregate(
-               list_transform(list_zip(sv, sv), x -> x[1] * x[2]),
-               'sum') AS BIGINT) AS DOUBLE)) AS nrm
-      FROM b
-    ),
-    ok AS (
-      SELECT bucket FROM b GROUP BY bucket
-      HAVING COUNT(*) BETWEEN 2 AND {_ANN_BUCKET_CAP}
-    ),
+    WITH {_SQL_SCALED},
+    {_SQL_ANN_BUCKETS},
     cand AS (
       SELECT x.vec_id AS vec_a, y.vec_id AS vec_b
       FROM n x
@@ -5887,32 +5724,11 @@ _ED_MAX = 60
     "llm_edit_distance_pairs",
     oracle=rf"""
     WITH sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    )
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES}
     SELECT c.doc_a, c.doc_b,
            CAST(levenshtein(substring(da.text, 1, {_ED_PREFIX}),
                             substring(db.text, 1, {_ED_PREFIX}))
@@ -6050,12 +5866,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_semdedup_representatives",
     oracle=rf"""
-    WITH x6 AS ({_sql_km_x6()}),
-    cent0 AS (
-      SELECT CAST(vec_id AS INTEGER) AS cluster, d, x6 AS cq
-      FROM x6 WHERE vec_id < {_KM_K}
-    ),
-    {_sql_km_iterations()}
+    WITH {_SQL_KMEANS}
     SELECT vec_id,
            CAST(cluster AS INTEGER) AS cluster,
            CAST(dist AS BIGINT) AS dist_fp2,
@@ -6517,15 +6328,20 @@ def _bpe_state(spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES):
     return merge_rows, v
 
 
-@register(
-    "llm_bpe_train_merges",
-    oracle=rf"""
-    WITH v0 AS (
+#: ``v0(word, cnt, syms)``, the word vocabulary split into characters,
+#: then every unrolled merge iteration.
+_SQL_BPE_MERGES = rf"""v0 AS (
       SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS cnt,
              regexp_extract_all(term, '.') AS syms
       FROM (SELECT unnest({_SQL_TOKENS}) AS term FROM documents)
       GROUP BY term
-    ),{",".join(_sql_bpe_iteration(i) for i in range(1, _BPE_MERGES + 1))}
+    ),{",".join(_sql_bpe_iteration(i) for i in range(1, _BPE_MERGES + 1))}"""
+
+
+@register(
+    "llm_bpe_train_merges",
+    oracle=rf"""
+    WITH {_SQL_BPE_MERGES}
     {" UNION ALL ".join(
         f"SELECT {i} AS iteration, p1 AS left_sym, p2 AS right_sym, "
         f"p1 || p2 AS merged, CAST(pc AS BIGINT) AS pair_count "
@@ -6571,12 +6387,7 @@ _BPE_SEG_TOPN = 50
 @register(
     "llm_bpe_segment_vocab",
     oracle=rf"""
-    WITH v0 AS (
-      SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS cnt,
-             regexp_extract_all(term, '.') AS syms
-      FROM (SELECT unnest({_SQL_TOKENS}) AS term FROM documents)
-      GROUP BY term
-    ),{",".join(_sql_bpe_iteration(i) for i in range(1, _BPE_MERGES + 1))}
+    WITH {_SQL_BPE_MERGES}
     SELECT word, cnt,
            CAST(len(syms) AS BIGINT) AS n_syms,
            array_to_string(syms, ' ') AS segmentation
@@ -6697,32 +6508,11 @@ def _sql_pr_iteration(i: int) -> str:
     "llm_pagerank_candidates",
     oracle=rf"""
     WITH sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM cand
       UNION ALL
@@ -6820,12 +6610,7 @@ def llm_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_bpe_encode_stats",
     oracle=rf"""
-    WITH v0 AS (
-      SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS cnt,
-             regexp_extract_all(term, '.') AS syms
-      FROM (SELECT unnest({_SQL_TOKENS}) AS term FROM documents)
-      GROUP BY term
-    ),{",".join(_sql_bpe_iteration(i) for i in range(1, _BPE_MERGES + 1))},
+    WITH {_SQL_BPE_MERGES},
     seg AS (
       SELECT word, CAST(len(syms) AS BIGINT) AS n_syms
       FROM v{_BPE_MERGES}
@@ -6880,38 +6665,8 @@ _IVFPQ_NPROBE = 2
 @register(
     "llm_ivfpq_topk",
     oracle=f"""
-    WITH s AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
-    comp AS (
-      SELECT label AS cell, d, SUM(sv[d]) AS sm, COUNT(*) AS cnt
-      FROM s, range(1, 65) r(d)
-      GROUP BY label, d
-    ),
-    cq AS (
-      SELECT cell, d,
-             CAST(FLOOR(CAST(sm AS DOUBLE) / cnt) AS BIGINT) AS c
-      FROM comp
-    ),
-    dist AS (
-      SELECT s.vec_id, cq.cell,
-             SUM((s.sv[cq.d] - cq.c) * (s.sv[cq.d] - cq.c)) AS d2
-      FROM s, cq
-      GROUP BY s.vec_id, cq.cell
-    ),
-    best AS (
-      SELECT vec_id, cell
-      FROM (
-        SELECT vec_id, cell,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id ORDER BY d2, cell
-               ) AS rn
-        FROM dist
-      )
-      WHERE rn = 1
-    ),
+    WITH {_SQL_CELL_CENTROIDS},
+    {_SQL_NEAREST_CELL},
     probe AS (
       SELECT cell FROM dist
       WHERE vec_id = {_QUERY_VEC_ID}
@@ -7431,30 +7186,8 @@ _CURATE_FLESCH_HI = 80.0
 @register(
     "llm_curation_pipeline_v2",
     oracle=rf"""
-    WITH tc AS (
-      SELECT doc_id, term, COUNT(*) AS c, LEN(term) AS l
-      FROM (
-        SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
-      )
-      GROUP BY doc_id, term
-    ),
-    qual AS (
-      SELECT doc_id
-      FROM (
-        SELECT doc_id,
-               SUM(c) AS n_tok,
-               SUM(l * c) AS n_chars_tok,
-               MAX(c) AS top_c,
-               MAX(CASE WHEN term IN ({_SQL_STOPWORDS}) THEN 1 ELSE 0 END)
-                 AS has_stop
-        FROM tc GROUP BY doc_id
-      )
-      WHERE n_tok BETWEEN {_G_MIN_TOK} AND {_G_MAX_TOK}
-        AND CAST(n_chars_tok AS DOUBLE) / n_tok
-            BETWEEN {_G_MIN_MWL} AND {_G_MAX_MWL}
-        AND CAST(top_c AS DOUBLE) / n_tok <= {_G_MAX_TOP_FRAC}
-        AND has_stop = 1
-    ),
+    WITH {_SQL_TERM_COUNTS},
+    {_SQL_GOPHER_KEEP},
     readable AS (
       SELECT doc_id FROM (
         SELECT doc_id,
@@ -7481,35 +7214,7 @@ _CURATE_FLESCH_HI = 80.0
       JOIN qual USING (doc_id)
       JOIN readable USING (doc_id)
     ),
-    canon AS (SELECT ck, MIN(doc_id) AS cid FROM keyed GROUP BY ck),
-    dedup AS (
-      SELECT keyed.* FROM keyed
-      JOIN canon ON keyed.ck = canon.ck AND keyed.doc_id = canon.cid
-    ),
-    grams AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t", _DECON_N)}) AS g
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-    ),
-    bench AS (
-      SELECT DISTINCT g FROM grams
-      WHERE doc_id % {_DECON_MOD} = {_DECON_REM}
-    ),
-    contaminated AS (
-      SELECT DISTINCT c.doc_id
-      FROM grams c JOIN bench b ON c.g = b.g
-      WHERE c.doc_id % {_DECON_MOD} <> {_DECON_REM}
-    ),
-    clean AS (
-      SELECT * FROM dedup
-      WHERE doc_id % {_DECON_MOD} <> {_DECON_REM}
-        AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-    ),
-    final AS (
-      SELECT * FROM clean
-      WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-            < CASE WHEN lang = 'en' THEN '{_MIX_THR_EN}'
-                   ELSE '{_MIX_THR_OTHER}' END
-    )
+    {_SQL_CURATION_TAIL}
     SELECT lang, source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tok) AS BIGINT) AS n_tokens
@@ -7602,20 +7307,9 @@ _INC_ND_MOD, _INC_ND_REM = 10, 3
     "llm_incremental_neardup",
     oracle=rf"""
     WITH sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
+    {_SQL_BANDS},
     corpus AS (
       SELECT * FROM bands WHERE doc_id % {_INC_ND_MOD} <> {_INC_ND_REM}
     ),
@@ -7720,6 +7414,23 @@ _SIMH_BLOCK_W = _SIMH_BITS // _SIMH_BLOCKS
 #: when any of them changes.
 _SIMHASH_CODEC_VERSION = 1
 
+#: One SimHash fingerprint row per non-empty document: (doc_id, simhash).
+_SQL_SIMHASH_ROWS = f"""SELECT doc_id,
+             array_to_string(
+               list_transform(range(1, {_SIMH_BITS + 1}), j ->
+                 CASE WHEN list_aggregate(
+                   list_transform(hs, h ->
+                     {_sql_sim_vote("h", "j")}), 'sum') >= 0
+                 THEN '1' ELSE '0' END),
+               '') AS simhash
+      FROM (
+        SELECT doc_id,
+               list_transform(list_distinct({_SQL_TOKENS}),
+                              x -> md5(x)) AS hs
+        FROM documents
+      )
+      WHERE len(hs) > 0"""
+
 
 def _simhash_store_path(sf_dir: str) -> str:
     """S22 store key: the codec version and bit geometry on top of the
@@ -7759,21 +7470,7 @@ def simhash_fps_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_simhash_hamming_pairs",
     oracle=rf"""
     WITH fps AS (
-      SELECT doc_id,
-             array_to_string(
-               list_transform(range(1, {_SIMH_BITS + 1}), j ->
-                 CASE WHEN list_aggregate(
-                   list_transform(hs, h ->
-                     {_sql_sim_vote("h", "j")}), 'sum') >= 0
-                 THEN '1' ELSE '0' END),
-               '') AS simhash
-      FROM (
-        SELECT doc_id,
-               list_transform(list_distinct({_SQL_TOKENS}),
-                              x -> md5(x)) AS hs
-        FROM documents
-      )
-      WHERE len(hs) > 0
+      {_SQL_SIMHASH_ROWS}
     ),
     blocks AS (
       SELECT doc_id, b AS block_idx,
@@ -7896,12 +7593,7 @@ def llm_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_kmeans_purity",
     oracle=rf"""
-    WITH x6 AS ({_sql_km_x6()}),
-    cent0 AS (
-      SELECT CAST(vec_id AS INTEGER) AS cluster, d, x6 AS cq
-      FROM x6 WHERE vec_id < {_KM_K}
-    ),
-    {_sql_km_iterations()},
+    WITH {_SQL_KMEANS},
     lab AS (
       SELECT a.vec_id, a.cluster, e.label
       FROM assign{_KM_ITERS} a JOIN embeddings e USING (vec_id)
@@ -8492,25 +8184,10 @@ def _sql_kcore_round(i: int) -> str:
     "llm_kcore_candidates",
     oracle=rf"""
     WITH sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
     cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -8687,42 +8364,12 @@ def leakage_aware_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_train_split_leakage_aware",
     oracle=rf"""
     WITH RECURSIVE sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM cand
-      UNION ALL
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(a, b) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.a, e.v FROM reach r JOIN edges e ON e.u = r.b
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_COMPONENTS},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
       FROM reach GROUP BY a
@@ -9352,42 +8999,12 @@ def llm_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_cluster_size_histogram",
     oracle=rf"""
     WITH RECURSIVE sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM cand
-      UNION ALL
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(a, b) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.a, e.v FROM reach r JOIN edges e ON e.u = r.b
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_COMPONENTS},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
       FROM reach GROUP BY a
@@ -9527,12 +9144,7 @@ def llm_ctfidf_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_tokenizer_fertility_by_lang",
     oracle=rf"""
-    WITH v0 AS (
-      SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS cnt,
-             regexp_extract_all(term, '.') AS syms
-      FROM (SELECT unnest({_SQL_TOKENS}) AS term FROM documents)
-      GROUP BY term
-    ),{",".join(_sql_bpe_iteration(i) for i in range(1, _BPE_MERGES + 1))},
+    WITH {_SQL_BPE_MERGES},
     seg AS (
       SELECT word, CAST(len(syms) AS BIGINT) AS n_syms
       FROM v{_BPE_MERGES}
@@ -10934,25 +10546,10 @@ def llm_blocklist_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _band_coverage_oracle() -> str:
     return rf"""
     WITH sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
     pairfb AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              MIN(a.band_idx) AS first_band
@@ -11054,42 +10651,12 @@ def _survivorship_oracle() -> str:
       FROM documents
     ),
     sh AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      {_SQL_SHINGLE_ROWS}
     ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM cand
-      UNION ALL
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(a, b) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.a, e.v FROM reach r JOIN edges e ON e.u = r.b
-    ),
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
+    {_SQL_COMPONENTS},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
       FROM reach GROUP BY a
@@ -11243,29 +10810,14 @@ def llm_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _inc_simhash_oracle() -> str:
-    fps_cte = rf"""
-      SELECT doc_id,
-             array_to_string(
-               list_transform(range(1, {_SIMH_BITS + 1}), j ->
-                 CASE WHEN list_aggregate(
-                   list_transform(hs, h ->
-                     {_sql_sim_vote("h", "j")}), 'sum') >= 0
-                 THEN '1' ELSE '0' END),
-               '') AS simhash
-      FROM (
-        SELECT doc_id,
-               list_transform(list_distinct({_SQL_TOKENS}),
-                              x -> md5(x)) AS hs
-        FROM documents
-      )
-      WHERE len(hs) > 0
-    """
     ham = (
         f"len(list_filter(range(1, {_SIMH_BITS + 1}), "
         f"i -> substr(fa.simhash, i, 1) <> substr(fb.simhash, i, 1)))"
     )
     return rf"""
-    WITH fps AS ({fps_cte}),
+    WITH fps AS (
+      {_SQL_SIMHASH_ROWS}
+    ),
     corpus AS (
       SELECT * FROM fps WHERE doc_id % {_INC_ND_MOD} <> {_INC_ND_REM}
     ),
@@ -11616,14 +11168,8 @@ _SSJ_T_DEN = 5
 def _ssj_oracle() -> str:
     n, d = _SSJ_T_NUM, _SSJ_T_DEN
     return rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    WITH {_SQL_SHINGLES},
+    {_SQL_SIZES},
     rk AS (
       SELECT s, ROW_NUMBER() OVER (ORDER BY COUNT(*), s) AS rank
       FROM sh GROUP BY s
@@ -12334,12 +11880,7 @@ def llm_unique_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_incremental_embedding_admission",
     oracle=rf"""
-    WITH s AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
+    WITH {_SQL_SCALED},
     n AS (
       SELECT vec_id, sv,
              {_sql_bucket_expr()} AS bucket,
@@ -12459,36 +12000,10 @@ _BBIT_C = 1.0 / 16.0
 @register(
     "llm_minhash_bbit_audit",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    )
+    WITH {_SQL_SHINGLES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES}
     SELECT c.doc_a, c.doc_b,
            CAST({" + ".join(
              f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END"
@@ -13246,21 +12761,7 @@ def llm_incremental_embedding_admission_stored(
     "llm_simhash_bit_balance",
     oracle=rf"""
     WITH fps AS (
-      SELECT doc_id,
-             array_to_string(
-               list_transform(range(1, {_SIMH_BITS + 1}), j ->
-                 CASE WHEN list_aggregate(
-                   list_transform(hs, h ->
-                     {_sql_sim_vote("h", "j")}), 'sum') >= 0
-                 THEN '1' ELSE '0' END),
-               '') AS simhash
-      FROM (
-        SELECT doc_id,
-               list_transform(list_distinct({_SQL_TOKENS}),
-                              x -> md5(x)) AS hs
-        FROM documents
-      )
-      WHERE len(hs) > 0
+      {_SQL_SIMHASH_ROWS}
     ),
     bits AS (
       SELECT j AS bit_idx,
@@ -13414,48 +12915,7 @@ _SWEEP_THRESHOLDS = ["0.5", "0.6", "0.7", "0.8", "0.9"]
 @register(
     "llm_dedup_threshold_sweep",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    jac AS (
-      SELECT c.doc_a, c.doc_b,
-             CAST(COUNT(*) AS DOUBLE)
-               / (sa.n + sb.n - COUNT(*)) AS jaccard
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      JOIN sizes sa ON sa.doc_id = c.doc_a
-      JOIN sizes sb ON sb.doc_id = c.doc_b
-      GROUP BY c.doc_a, c.doc_b, sa.n, sb.n
-    )
+    WITH {_SQL_NEARDUP_PAIRS}
     SELECT t.threshold,
            CAST(COUNT(j.doc_a) AS BIGINT) AS n_pairs,
            CAST(COUNT(DISTINCT j.doc_b) AS BIGINT) AS n_docs_removed,
@@ -13804,48 +13264,7 @@ def llm_sign_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_cross_source_neardup_matrix",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    jac AS (
-      SELECT c.doc_a, c.doc_b,
-             CAST(COUNT(*) AS DOUBLE)
-               / (sa.n + sb.n - COUNT(*)) AS jaccard
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      JOIN sizes sa ON sa.doc_id = c.doc_a
-      JOIN sizes sb ON sb.doc_id = c.doc_b
-      GROUP BY c.doc_a, c.doc_b, sa.n, sb.n
-    ),
+    WITH {_SQL_NEARDUP_PAIRS},
     near AS (SELECT * FROM jac WHERE jaccard >= {_XSRC_J}),
     tot AS (SELECT COUNT(*) AS n FROM near)
     SELECT LEAST(da.source, db.source) AS source_a,
@@ -13917,38 +13336,8 @@ def llm_cross_source_neardup_matrix(spark: SparkSession, sf_dir: str) -> DataFra
 @register(
     "llm_ivf_cell_balance",
     oracle=f"""
-    WITH s AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> {_SQL_ISCALE.format(v="x")}) AS sv
-      FROM embeddings
-    ),
-    comp AS (
-      SELECT label AS cell, d, SUM(sv[d]) AS sm, COUNT(*) AS cnt
-      FROM s, range(1, 65) r(d)
-      GROUP BY label, d
-    ),
-    cq AS (
-      SELECT cell, d,
-             CAST(FLOOR(CAST(sm AS DOUBLE) / cnt) AS BIGINT) AS c
-      FROM comp
-    ),
-    dist AS (
-      SELECT s.vec_id, cq.cell,
-             SUM((s.sv[cq.d] - cq.c) * (s.sv[cq.d] - cq.c)) AS d2
-      FROM s, cq
-      GROUP BY s.vec_id, cq.cell
-    ),
-    best AS (
-      SELECT vec_id, cell
-      FROM (
-        SELECT vec_id, cell,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id ORDER BY d2, cell
-               ) AS rn
-        FROM dist
-      )
-      WHERE rn = 1
-    ),
+    WITH {_SQL_CELL_CENTROIDS},
+    {_SQL_NEAREST_CELL},
     sizes AS (
       SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_vecs
       FROM best GROUP BY cell
@@ -14109,24 +13498,8 @@ def llm_embedding_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_lsh_cap_loss_audit",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
+    WITH {_SQL_SHINGLES},
+    {_SQL_BANDS},
     bsz AS (
       SELECT band_idx, key, COUNT(*) AS sz
       FROM bands GROUP BY band_idx, key
@@ -14199,48 +13572,7 @@ def llm_lsh_cap_loss_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_dedup_length_bias",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    jac AS (
-      SELECT c.doc_a, c.doc_b,
-             CAST(COUNT(*) AS DOUBLE)
-               / (sa.n + sb.n - COUNT(*)) AS jaccard
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      JOIN sizes sa ON sa.doc_id = c.doc_a
-      JOIN sizes sb ON sb.doc_id = c.doc_b
-      GROUP BY c.doc_a, c.doc_b, sa.n, sb.n
-    ),
+    WITH {_SQL_NEARDUP_PAIRS},
     removed AS (
       SELECT DISTINCT doc_b AS doc_id FROM jac WHERE jaccard >= {_XSRC_J}
     ),
@@ -14507,36 +13839,10 @@ def llm_media_payload_dedup_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_weak_link_edges",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_SHINGLES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
     adj AS (
       SELECT doc_a AS u, doc_b AS v FROM cand
       UNION ALL
@@ -14619,48 +13925,7 @@ def llm_weak_link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_dedup_quality_interaction",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    jac AS (
-      SELECT c.doc_a, c.doc_b,
-             CAST(COUNT(*) AS DOUBLE)
-               / (sa.n + sb.n - COUNT(*)) AS jaccard
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      JOIN sizes sa ON sa.doc_id = c.doc_a
-      JOIN sizes sb ON sb.doc_id = c.doc_b
-      GROUP BY c.doc_a, c.doc_b, sa.n, sb.n
-    ),
+    WITH {_SQL_NEARDUP_PAIRS},
     removed AS (
       SELECT DISTINCT doc_b AS doc_id FROM jac WHERE jaccard >= {_XSRC_J}
     ),
@@ -15063,22 +14328,9 @@ def _sql_ablation_flags() -> str:
 @register(
     "llm_filter_ablation_matrix",
     oracle=f"""
-    WITH tc AS (
-      SELECT doc_id, term, COUNT(*) AS c, LEN(term) AS l
-      FROM (
-        SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
-      )
-      GROUP BY doc_id, term
-    ),
+    WITH {_SQL_TERM_COUNTS},
     agg AS (
-      SELECT doc_id,
-             SUM(c) AS n_tok,
-             SUM(l * c) AS n_chars_tok,
-             MAX(c) AS top_c,
-             MAX(CASE WHEN term IN ({_SQL_STOPWORDS}) THEN 1 ELSE 0 END)
-               AS has_stop
-      FROM tc
-      GROUP BY doc_id
+      {_SQL_GOPHER_STATS}
     ),
     flags AS ({{flags}}),
     pairs AS (
@@ -16065,37 +15317,11 @@ def llm_media_sampling_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_fingerprint_method_agreement",
     oracle=rf"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
+    WITH {_SQL_SHINGLES},
+    {_SQL_SIZES},
+    {_SQL_BANDS},
+    {_SQL_BUCKETS},
+    {_SQL_CANDIDATES},
     jac AS (
       SELECT c.doc_a, c.doc_b,
              CAST(COUNT(*) AS BIGINT) AS n_shared,
@@ -16112,21 +15338,7 @@ def llm_media_sampling_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_a, doc_b, n_shared FROM jac WHERE jaccard >= {_XSRC_J}
     ),
     sfps AS (
-      SELECT doc_id,
-             array_to_string(
-               list_transform(range(1, {_SIMH_BITS + 1}), j ->
-                 CASE WHEN list_aggregate(
-                   list_transform(hs, h ->
-                     {_sql_sim_vote("h", "j")}), 'sum') >= 0
-                 THEN '1' ELSE '0' END),
-               '') AS simhash
-      FROM (
-        SELECT doc_id,
-               list_transform(list_distinct({_SQL_TOKENS}),
-                              x -> md5(x)) AS hs
-        FROM documents
-      )
-      WHERE len(hs) > 0
+      {_SQL_SIMHASH_ROWS}
     ),
     sblocks AS (
       SELECT doc_id, b AS block_idx,
@@ -16419,14 +15631,8 @@ def llm_padding_waste_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_decontaminate_token_mass",
     oracle=rf"""
-    WITH grams AS (
-      SELECT doc_id, unnest({_sql_word_ngrams("t", _DECON_N)}) AS g
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-    ),
-    bench AS (
-      SELECT DISTINCT g FROM grams
-      WHERE doc_id % {_DECON_MOD} = {_DECON_REM}
-    ),
+    WITH {_SQL_DECON_GRAMS},
+    {_SQL_DECON_BENCH},
     flagged AS (
       SELECT DISTINCT c.doc_id
       FROM grams c JOIN bench b USING (g)
@@ -17596,60 +16802,10 @@ _SPILL_J = "0.8"
 _TRANS_THRESHOLDS = ["0.7", "0.8", "0.9"]
 
 
-def _sql_neardup_pairs_ctes() -> str:
-    """The shared verified-pair CTE chain (tokenize → shingle → MinHash
-    → band → cap → candidate → exact Jaccard) — the DuckDB twin of the
-    S21+S24 store build, spelled once for the round-15 placement
-    audits. Ends with ``jac(doc_a, doc_b, jaccard)``."""
-    return rf"""
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (
-        SELECT doc_id, unnest({_sql_word_ngrams("t")}) AS s
-        FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
-      )
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(md5('{i}|' || s)) AS m{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(m{2*b} || m{2*b+1}) AS key FROM sig"
-        for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    ),
-    bsz AS (
-      SELECT band_idx, key FROM bands
-      GROUP BY band_idx, key
-      HAVING COUNT(*) BETWEEN 2 AND {_LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bsz USING (band_idx, key)
-      JOIN bands b ON a.band_idx = b.band_idx AND a.key = b.key
-                  AND a.doc_id < b.doc_id
-    ),
-    jac AS (
-      SELECT c.doc_a, c.doc_b,
-             CAST(COUNT(*) AS DOUBLE)
-               / (sa.n + sb.n - COUNT(*)) AS jaccard
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      JOIN sizes sa ON sa.doc_id = c.doc_a
-      JOIN sizes sb ON sb.doc_id = c.doc_b
-      GROUP BY c.doc_a, c.doc_b, sa.n, sb.n
-    )"""
-
-
 @register(
     "llm_cross_shard_dup_spillover",
     oracle=rf"""
-    WITH {_sql_neardup_pairs_ctes()},
+    WITH {_SQL_NEARDUP_PAIRS},
     near AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= {_SPILL_J}),
     sharded AS (
       SELECT t.s,
@@ -17755,7 +16911,7 @@ def llm_cross_shard_dup_spillover(
 @register(
     "llm_dedup_transitivity_audit",
     oracle=rf"""
-    WITH {_sql_neardup_pairs_ctes()},
+    WITH {_SQL_NEARDUP_PAIRS},
     th AS (SELECT unnest([{", ".join(_TRANS_THRESHOLDS)}]) AS threshold),
     edges AS (
       SELECT t.threshold, j.doc_a, j.doc_b
@@ -18423,7 +17579,7 @@ def _sql_cal_lab_ctes() -> str:
     F132 (isotonic fit of it): verified near-dup membership from the
     S24 pair store x stopword-permille quality bin. ONE definition so
     the two operators' bin axes can never silently diverge. Expects
-    the ``jac`` CTE from ``_sql_neardup_pairs_ctes`` in scope."""
+    the ``jac`` CTE from ``_SQL_NEARDUP_PAIRS`` in scope."""
     return rf"""dup AS (
       SELECT DISTINCT doc_id FROM (
         SELECT doc_a AS doc_id FROM jac WHERE jaccard >= {_SPILL_J}
@@ -18485,7 +17641,7 @@ def _quality_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_quality_dup_calibration",
     oracle=rf"""
-    WITH {_sql_neardup_pairs_ctes()},
+    WITH {_SQL_NEARDUP_PAIRS},
     {_sql_cal_lab_ctes()},
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_all,
@@ -18702,7 +17858,7 @@ def llm_epoch_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_neardup_source_modularity",
     oracle=rf"""
-    WITH {_sql_neardup_pairs_ctes()},
+    WITH {_SQL_NEARDUP_PAIRS},
     e AS (
       SELECT da.source AS sa, db.source AS sb
       FROM jac j
@@ -19225,7 +18381,7 @@ _ISO_SCALE = "1000000000000.0"
 @register(
     "llm_isotonic_quality_calibration",
     oracle=rf"""
-    WITH {_sql_neardup_pairs_ctes()},
+    WITH {_SQL_NEARDUP_PAIRS},
     {_sql_cal_lab_ctes()},
     b AS (
       SELECT CAST(bin AS BIGINT) AS bin, CAST(COUNT(*) AS BIGINT) AS n,

@@ -1546,9 +1546,23 @@ def _gapfilled_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: ``span(d0, d1)``: the first and last order dates.
+_SQL_ORDER_SPAN = """span AS (
+      SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
+             MAX(CAST(o_orderdate AS DATE)) AS d1
+      FROM orders
+    )"""
+#: ``days(day)``: every calendar day of ``span``, as 'yyyy-MM-dd'.
+_SQL_ORDER_DAYS = """days AS (
+      SELECT strftime(CAST(unnest(generate_series(d0, d1,
+                       INTERVAL 1 DAY)) AS DATE), '%Y-%m-%d') AS day
+      FROM span
+    )"""
+
+
 @register(
     "scalar_gapfill_daily_revenue",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS day,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -1556,16 +1570,8 @@ def _gapfilled_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
              COUNT(*) AS n
       FROM orders GROUP BY 1
     ),
-    span AS (
-      SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-             MAX(CAST(o_orderdate AS DATE)) AS d1
-      FROM orders
-    ),
-    days AS (
-      SELECT strftime(CAST(unnest(generate_series(d0, d1,
-                       INTERVAL 1 DAY)) AS DATE), '%Y-%m-%d') AS day
-      FROM span
-    )
+    {_SQL_ORDER_SPAN},
+    {_SQL_ORDER_DAYS}
     SELECT days.day,
            COALESCE(daily.revenue, 0.0) AS revenue,
            CAST(COALESCE(daily.n, 0) AS BIGINT) AS n_orders,
@@ -1664,23 +1670,15 @@ def agg_ohlc_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_rolling_7day_revenue",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS day,
              SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS revenue_dec,
              COUNT(*) AS n
       FROM orders GROUP BY 1
     ),
-    span AS (
-      SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-             MAX(CAST(o_orderdate AS DATE)) AS d1
-      FROM orders
-    ),
-    days AS (
-      SELECT strftime(CAST(unnest(generate_series(d0, d1,
-                       INTERVAL 1 DAY)) AS DATE), '%Y-%m-%d') AS day
-      FROM span
-    ),
+    {_SQL_ORDER_SPAN},
+    {_SQL_ORDER_DAYS},
     dense AS (
       SELECT days.day,
              COALESCE(daily.revenue_dec,
@@ -2024,17 +2022,13 @@ def window_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_seasonal_naive_mape",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS day,
              SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS revenue_dec
       FROM orders GROUP BY 1
     ),
-    span AS (
-      SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-             MAX(CAST(o_orderdate AS DATE)) AS d1
-      FROM orders
-    ),
+    {_SQL_ORDER_SPAN},
     dense AS (
       SELECT days.day,
              COALESCE(daily.revenue_dec,
@@ -3499,17 +3493,21 @@ def agg_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "agg_revenue_gini_by_nation",
-    oracle="""
-    WITH spend AS (
-      SELECT c.c_nationkey,
-             o.o_custkey,
+#: ``spend(c_nationkey, o_custkey, cents)``: each customer's total
+#: order value in integer cents.
+_SQL_CUSTOMER_SPEND = """spend AS (
+      SELECT c.c_nationkey, o.o_custkey,
              CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100
                   AS BIGINT) AS cents
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       GROUP BY 1, 2
-    ),
+    )"""
+
+
+@register(
+    "agg_revenue_gini_by_nation",
+    oracle=f"""
+    WITH {_SQL_CUSTOMER_SPEND},
     ranked AS (
       SELECT c_nationkey, cents,
              ROW_NUMBER() OVER (PARTITION BY c_nationkey
@@ -5058,14 +5056,8 @@ def _ln_libm_ext():
 
 @register(
     "agg_theil_inequality_decomposition",
-    oracle="""
-    WITH spend AS (
-      SELECT c.c_nationkey, o.o_custkey,
-             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100
-                  AS BIGINT) AS cents
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-      GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_SQL_CUSTOMER_SPEND},
     terms AS (
       SELECT c_nationkey, cents,
              CAST(floor(ln(CAST(cents AS DOUBLE)) * 1000000) AS BIGINT)
@@ -5924,15 +5916,39 @@ def _prefix_sums(
     return out.drop("_bkt")
 
 
-@register(
-    "agg_mann_whitney_u",
-    oracle="""
-    WITH v AS (
+#: ``v(cents, g)``: every order's value in cents, ``g`` = 1 for URGENT.
+_SQL_URGENT_CENTS = """v AS (
       SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
                AS cents,
              CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g
       FROM orders
+    )"""
+#: Over ``v(cents, g)``: the two groups' counts per distinct value
+#: (``dv``), their running totals (``cum(cents, f1, f2)``) and sizes
+#: (``n(n1, n2)``), shared by the two-sample tests.
+_SQL_TWO_SAMPLE_CDF = """dv AS (
+      SELECT cents, CAST(SUM(g) AS BIGINT) AS c1,
+             CAST(COUNT(*) - SUM(g) AS BIGINT) AS c2
+      FROM v GROUP BY cents
     ),
+    cum AS (
+      SELECT cents,
+             SUM(c1) OVER (ORDER BY cents
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f1,
+             SUM(c2) OVER (ORDER BY cents
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f2
+      FROM dv
+    ),
+    n AS (
+      SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
+      FROM dv
+    )"""
+
+
+@register(
+    "agg_mann_whitney_u",
+    oracle=f"""
+    WITH {_SQL_URGENT_CENTS},
     dv AS (
       SELECT cents, CAST(SUM(g) AS BIGINT) AS c1,
              CAST(COUNT(*) AS BIGINT) AS c
@@ -6046,7 +6062,7 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_ks_two_sample",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
                AS cents,
@@ -6054,23 +6070,7 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
     ),
-    dv AS (
-      SELECT cents, CAST(SUM(g) AS BIGINT) AS c1,
-             CAST(COUNT(*) - SUM(g) AS BIGINT) AS c2
-      FROM v GROUP BY cents
-    ),
-    cum AS (
-      SELECT cents,
-             SUM(c1) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f1,
-             SUM(c2) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f2
-      FROM dv
-    ),
-    n AS (
-      SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
-      FROM dv
-    ),
+    {_SQL_TWO_SAMPLE_CDF},
     gap AS (
       SELECT cents, abs(f1 * n.n2 - f2 * n.n1) AS num
       FROM cum CROSS JOIN n
@@ -8091,29 +8091,8 @@ _QTE_DECILES = (10, 20, 30, 40, 50, 60, 70, 80, 90)
 @register(
     "agg_quantile_treatment_effect",
     oracle=f"""
-    WITH v AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-               AS cents,
-             CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g
-      FROM orders
-    ),
-    dv AS (
-      SELECT cents, CAST(SUM(g) AS BIGINT) AS c1,
-             CAST(COUNT(*) - SUM(g) AS BIGINT) AS c2
-      FROM v GROUP BY cents
-    ),
-    cum AS (
-      SELECT cents,
-             SUM(c1) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f1,
-             SUM(c2) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f2
-      FROM dv
-    ),
-    n AS (
-      SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
-      FROM dv
-    ),
+    WITH {_SQL_URGENT_CENTS},
+    {_SQL_TWO_SAMPLE_CDF},
     qs AS (SELECT unnest([{", ".join(str(q) for q in _QTE_DECILES)}]) AS q),
     v1 AS (
       SELECT qs.q, MIN(cum.cents) AS c

@@ -82,12 +82,10 @@ ETHERSCAN_RAW_SCHEMA = T.StructType(
     ]
 )
 
-#: solc standard-json input (reference src/plain_contract.rs:71-76).
-#: ``sources`` is a map path -> {content}; settings kept as raw JSON text.
-STANDARD_JSON_SOURCES_SCHEMA = T.MapType(
-    T.StringType(),
-    T.StructType([T.StructField("content", T.StringType(), True)]),
-)
+#: solc standard-json input (reference src/plain_contract.rs:71-76),
+#: read for its ``sources`` map path -> {content} only. The struct
+#: wrapper makes a JSON object without "sources" parse to a null map.
+STANDARD_JSON_SOURCES_SCHEMA = "struct<sources: map<string, struct<content: string>>>"
 
 # --------------------------------------------------------------------------
 # Testdata tables (FIXTURES.md Group A; verified against sf0.001 parquet)

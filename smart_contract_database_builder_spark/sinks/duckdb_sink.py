@@ -48,6 +48,8 @@ import duckdb
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import STANDARD_JSON_SOURCES_SCHEMA
+
 #: Reference DDL (src/db.rs:59-88), IF NOT EXISTS like the reference's
 #: ignored-error bootstrap.
 DDL = """
@@ -102,13 +104,19 @@ def connect(db_path: str) -> duckdb.DuckDBPyConnection:
 
 
 def dedup_by_id(df: DataFrame, flags: Sequence[str] = ()) -> DataFrame:
-    """One row per ``id``, like ``dropDuplicates(["id"])`` (which Spark
-    plans as the same first-value aggregate). Each flag column is
-    ``min()``-ed over its id group instead, so a row flagged by a strict
-    check is never dropped in favour of a healthy whitespace twin."""
-    return df.groupBy("id").agg(
-        *[F.first(c).alias(c) for c in df.columns if c != "id" and c not in flags],
-        *[F.min(c).alias(c) for c in flags],
+    """One row per ``id``: the least row of its id group, compared on
+    the non-flag columns in order. Twins share an id but differ in
+    content (a whitespace-variant dir), and the least row is the same
+    under any partitioning or arrival order, where a first-value pick
+    is not. Each flag column is ``min()``-ed over the group on its own,
+    so a row flagged by a strict check is never dropped in favour of a
+    healthy twin."""
+    rest = [c for c in df.columns if c != "id" and c not in flags]
+    least = F.min(F.struct(*rest)).alias("_least")
+    return (
+        df.groupBy("id")
+        .agg(least, *[F.min(c).alias(c) for c in flags])
+        .select("id", *[F.col(f"_least.{c}").alias(c) for c in rest], *flags)
     )
 
 
@@ -165,8 +173,7 @@ def contract_files(contracts: DataFrame) -> DataFrame:
     get_source_files (plain_contract.rs:188-200)."""
     variant = F.from_json("source", _SOURCE_SCHEMA)
     json_sources = F.from_json(
-        variant["Json"]["content"],
-        "struct<sources: map<string, struct<content: string>>>",
+        variant["Json"]["content"], STANDARD_JSON_SOURCES_SCHEMA
     )["sources"]
     json_files = F.transform(
         F.map_entries(json_sources),

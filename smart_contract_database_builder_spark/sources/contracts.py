@@ -301,12 +301,8 @@ def parse_etherscan_contracts(raw_df: DataFrame) -> DataFrame:
         (fields["OptimizationUsed"] == "1").alias("optimization_used"),
         *carried,
     )
-    std_sources = F.from_json(
-        "source_code",
-        # struct wrapper so a JSON object without "sources" yields null
-        "struct<sources: map<string, struct<content: string>>>",
-    )["sources"]
-    parsed = df.withColumn("sources", std_sources)
+    std = F.from_json("source_code", STANDARD_JSON_SOURCES_SCHEMA)
+    parsed = df.withColumn("sources", std["sources"])
     is_std = F.col("sources").isNotNull()
     return parsed.select(
         "address",
@@ -353,9 +349,7 @@ def explode_standard_json_sources(raw_df: DataFrame) -> DataFrame:
     """
     fields = F.from_json("content", ETHERSCAN_RAW_SCHEMA)
     src = unwrap_double_brace(fields["SourceCode"])
-    sources = F.from_json(
-        src, "struct<sources: map<string, struct<content: string>>>"
-    )["sources"]
+    sources = F.from_json(src, STANDARD_JSON_SOURCES_SCHEMA)["sources"]
     return (
         raw_df.select("address", F.explode(sources).alias("path", "file"))
         .select(

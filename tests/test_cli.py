@@ -270,6 +270,17 @@ def _contract_rows(db: str) -> int:
         con.close()
 
 
+def _extracted_rows(db: str) -> int:
+    """Stored contracts that index-functions extracts: all but vyper."""
+    con = duckdb.connect(db, read_only=True)
+    try:
+        return con.execute(
+            "SELECT COUNT(*) FROM contract WHERE source_type <> 'vyper'"
+        ).fetchone()[0]
+    finally:
+        con.close()
+
+
 def _bootstrapped(db: str) -> str:
     """An existing, empty sink file: a strict failure must leave it so."""
     from smart_contract_database_builder_spark.sinks.duckdb_sink import connect
@@ -505,17 +516,41 @@ def test_index_functions_on_an_empty_contract_table(spark, tmp_path, capsys):
 def test_index_functions_chunk_size(spark, stored_db):
     """--chunk-size k stores the same rows as a run without it; the
     extraction stage reads the ceil(n/k) partitions of the repartition,
-    none of them empty."""
+    n the rows it extracts, none of them empty."""
     plain = _copy(stored_db, "plain")
     assert cli.main(["index-functions", "--db-file", plain]) == 0
     chunked = _copy(stored_db, "chunked")
     jobs = jobs_of(spark, "ix-chunk",
                    ["index-functions", "--db-file", chunked, "--chunk-size", "2"])
-    parts = -(-_contract_rows(stored_db) // 2)
+    parts = -(-_extracted_rows(stored_db) // 2)
     assert max(t for j in jobs for _, t in j) == parts, jobs
     extraction = [s for s in shuffle_rows_of(spark, "ix-chunk") if len(s) == parts]
     assert len(extraction) == 1 and min(extraction[0]) >= 1, extraction
     assert _function_rows(chunked) == _function_rows(plain)
+
+
+def test_index_functions_chunk_size_counts_only_extracted_rows(
+    spark, contract_tree, tmp_path
+):
+    """On a tree that is mostly vyper, --chunk-size 1 sizes the
+    extraction by the non-vyper rows alone: one task per extracted
+    contract, and no task that reads zero rows."""
+    vy = os.path.join(contract_tree, "demo_vyper")
+    for i in range(6):
+        twin = os.path.join(contract_tree, f"vyper_{i}")
+        shutil.copytree(vy, twin)
+        with open(os.path.join(twin, "main.vy"), "a") as f:
+            f.write(f"# pool {i}\n")
+    db = str(tmp_path / "vyper.duckdb")
+    assert cli.main(
+        ["pre-process", "--contracts-root", contract_tree, "--db-file", db]
+    ) == 0
+    n = _extracted_rows(db)
+    assert 0 < n < _contract_rows(db) - n
+    jobs_of(spark, "ix-vyper",
+            ["index-functions", "--db-file", db, "--chunk-size", "1"])
+    extraction = next(s for s in shuffle_rows_of(spark, "ix-vyper") if sum(s))
+    assert len(extraction) == n and min(extraction) >= 1, extraction
 
 
 def test_cli_download_solc_gated():

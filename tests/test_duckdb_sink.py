@@ -85,6 +85,27 @@ def test_store_functions_and_read_back(spark, parsed, tmp_path):
     assert joined == n
 
 
+def test_dedup_by_id_keeps_the_same_twin_in_any_order(spark):
+    """Whitespace twins share an id: the dedup keeps the least of them
+    whatever order they arrive in, and a flag set on either twin
+    survives."""
+    rows = [
+        ("a", "Vault", "src 1", None),
+        ("a", "Vault", "src  1", "dir_b"),
+        ("b", "Pool", "src 2", None),
+    ]
+
+    def dedup(rs):
+        schema = "id string, name string, source string, bad string"
+        df = spark.createDataFrame(rs, schema)
+        return sorted(sink.dedup_by_id(df.coalesce(1), ["bad"]).collect())
+
+    assert dedup(rows) == dedup(rows[::-1]) == [
+        ("a", "Vault", "src  1", "dir_b"),
+        ("b", "Pool", "src 2", None),
+    ]
+
+
 def test_read_contracts_roundtrip(spark, parsed, tmp_path):
     db = str(tmp_path / "sink.duckdb")
     sink.store_contracts(parsed, db)

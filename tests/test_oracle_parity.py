@@ -8,6 +8,7 @@ before the per-round verify.
 from __future__ import annotations
 
 import datetime as dt
+import pathlib
 
 import numpy as np
 import pandas as pd
@@ -75,3 +76,15 @@ def test_seeded_sample_is_deterministic(spark):
     a = sorted(r["o_orderkey"] for r in fn(spark, SF_ORACLE).collect())
     b = sorted(r["o_orderkey"] for r in fn(spark, SF_ORACLE).collect())
     assert a == b and len(a) > 0
+
+
+def test_minhash_signature_sql_lives_in_one_place():
+    """The oracles' MinHash signature SQL is written once, in the shared
+    near-dup CTE blocks of plans/llm_ops.py; every other oracle composes
+    those blocks, so a change to the hashing rule reaches all of them."""
+    plans_dir = pathlib.Path(plans.__file__).parent
+    needle = "MIN(md5('"
+    hits = {
+        p.name: p.read_text().count(needle) for p in sorted(plans_dir.glob("*.py"))
+    }
+    assert {name: n for name, n in hits.items() if n} == {"llm_ops.py": 1}
