@@ -6928,8 +6928,11 @@ def llm_ivfpq_encoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: written under the OLD pipeline. v2 (round 11): store layout adds
 #: the <base>/sigs signature table, moves bands to <base>/bands, and
 #: gates reuse on the store-level completeness marker — a layout
-#: change, so v1 stores are never half-reused.
-_MINHASH_CODEC_VERSION = 2
+#: change, so v1 stores are never half-reused. v3: the sigs files and
+#: the band bucket count are sized by bytes, and the count is read
+#: back from the bands' ``_BUCKET_SPEC`` — a v2 store (8 buckets, no
+#: spec) is rebuilt, never attached under another count.
+_MINHASH_CODEC_VERSION = 3
 
 
 def _minhash_store_path(sf_dir: str) -> str:
@@ -6957,9 +6960,11 @@ def _ensure_minhash_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Later SESSIONS finding valid files re-ATTACH without rewriting.
     The sigs table is written first and bands are derived from the
     WRITTEN sigs files (one aggregate pass total, and the two tables
-    cannot disagree)."""
+    cannot disagree), read back with the writer's schema and bucketed
+    by the bytes they take."""
     import os
 
+    from ..sources.bucketing import bucket_count, data_bytes
     from ..sources.minhash_store import (
         attach_minhash_bands,
         read_minhash_sigs,
@@ -6973,10 +6978,13 @@ def _ensure_minhash_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         sh = toked.select(
             "doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s")
         )
-        write_minhash_sigs(minhash_signatures(sh), os.path.join(tmp, "sigs"))
-        stored_sigs = read_minhash_sigs(spark, os.path.join(tmp, "sigs"))
+        sigs, sigs_path = minhash_signatures(sh), os.path.join(tmp, "sigs")
+        write_minhash_sigs(sigs, sigs_path)
+        stored_sigs = read_minhash_sigs(spark, sigs_path, sigs.schema)
         write_minhash_bands(
-            bands_from_signatures(stored_sigs), os.path.join(tmp, "bands")
+            bands_from_signatures(stored_sigs),
+            os.path.join(tmp, "bands"),
+            bucket_count(data_bytes(sigs_path)),
         )
 
     base = ensure_store(_minhash_store_path(sf_dir), build)
@@ -12604,8 +12612,9 @@ def llm_shared_prefix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Bucket-store codec version — bakes the _iscale fixed-point scale,
 #: the plane-weight derivation and the bucket-bit construction; bump
-#: when any of them changes.
-_ANNB_CODEC_VERSION = 1
+#: when any of them changes. v2: the bucket count is sized by the
+#: embeddings bytes and read back from the table's ``_BUCKET_SPEC``.
+_ANNB_CODEC_VERSION = 2
 
 
 def _emb_bucket_rows(emb: DataFrame, n_planes: int) -> DataFrame:
@@ -12652,12 +12661,16 @@ def _ensure_emb_bucket_store(
     import os
 
     from ..sources.annbucket_store import attach_emb_buckets, write_emb_buckets
+    from ..sources.bucketing import bucket_count, data_bytes
 
     base = ensure_store(
         _emb_bucket_store_path(sf_dir, n_planes),
         lambda tmp: write_emb_buckets(
             _emb_bucket_rows(load_table(spark, sf_dir, "embeddings"), n_planes),
             os.path.join(tmp, "buckets"),
+            bucket_count(
+                data_bytes(os.path.join(sf_dir, "embeddings.parquet"))
+            ),
         ),
     )
     return attach_emb_buckets(spark, os.path.join(base, "buckets"))

@@ -5248,6 +5248,45 @@ _ZM_PROBES = (
 _ZM_EPOCH = "1992-01-01"
 
 
+def _pruning_report(
+    rows_b: DataFrame, probes: DataFrame, match: DataFrame, overlap
+) -> DataFrame:
+    """Replay every probe against every (layout, bucket) zone of
+    ``rows_b``: buckets and rows a pruning scan touches (the zones
+    where ``overlap`` holds), the rows that really match (``match``'s
+    ``n_match``) and their ratio, per (layout, probe). The zone-map
+    audits differ only in their zones and ``overlap`` test."""
+    return (
+        rows_b.crossJoin(F.broadcast(probes))
+        .join(F.broadcast(match), "probe", "left")
+        .groupBy("layout", "probe")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("buckets_total"),
+            F.sum(F.when(overlap, 1).otherwise(0))
+            .cast("long")
+            .alias("buckets_scanned"),
+            F.sum(F.when(overlap, F.col("n_rows")).otherwise(0))
+            .cast("long")
+            .alias("rows_scanned"),
+            F.coalesce(F.max("n_match"), F.lit(0))
+            .cast("long")
+            .alias("rows_matching"),
+            F.when(
+                F.coalesce(F.max("n_match"), F.lit(0)) == 0,
+                F.lit(None).cast("double"),
+            )
+            .otherwise(
+                F.sum(F.when(overlap, F.col("n_rows")).otherwise(0)).cast(
+                    "double"
+                )
+                / F.max("n_match").cast("double")
+            )
+            .alias("scan_amplification"),
+        )
+        .orderBy("layout", "probe")
+    )
+
+
 @register(
     "layout_zonemap_pruning_audit",
     oracle=f"""
@@ -5383,35 +5422,7 @@ def layout_zonemap_pruning_audit(
         .agg(F.count(F.lit(1)).cast("long").alias("n_match"))
     )
     overlap = (F.col("zmin") <= F.col("p_hi")) & (F.col("zmax") >= F.col("p_lo"))
-    return (
-        rows_b.crossJoin(F.broadcast(probes))
-        .join(F.broadcast(match), "probe", "left")
-        .groupBy("layout", "probe")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("buckets_total"),
-            F.sum(F.when(overlap, 1).otherwise(0))
-            .cast("long")
-            .alias("buckets_scanned"),
-            F.sum(F.when(overlap, F.col("n_rows")).otherwise(0))
-            .cast("long")
-            .alias("rows_scanned"),
-            F.coalesce(F.max("n_match"), F.lit(0))
-            .cast("long")
-            .alias("rows_matching"),
-            F.when(
-                F.coalesce(F.max("n_match"), F.lit(0)) == 0,
-                F.lit(None).cast("double"),
-            )
-            .otherwise(
-                F.sum(F.when(overlap, F.col("n_rows")).otherwise(0)).cast(
-                    "double"
-                )
-                / F.max("n_match").cast("double")
-            )
-            .alias("scan_amplification"),
-        )
-        .orderBy("layout", "probe")
-    )
+    return _pruning_report(rows_b, probes, match, overlap)
 
 
 @register(
@@ -7364,35 +7375,7 @@ def layout_zorder_benefit_audit(
         & (F.col("qmin") <= F.col("q_hi"))
         & (F.col("qmax") >= F.col("q_lo"))
     )
-    return (
-        rows_b.crossJoin(F.broadcast(probes))
-        .join(F.broadcast(match), "probe", "left")
-        .groupBy("layout", "probe")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("buckets_total"),
-            F.sum(F.when(overlap, 1).otherwise(0))
-            .cast("long")
-            .alias("buckets_scanned"),
-            F.sum(F.when(overlap, F.col("n_rows")).otherwise(0))
-            .cast("long")
-            .alias("rows_scanned"),
-            F.coalesce(F.max("n_match"), F.lit(0))
-            .cast("long")
-            .alias("rows_matching"),
-            F.when(
-                F.coalesce(F.max("n_match"), F.lit(0)) == 0,
-                F.lit(None).cast("double"),
-            )
-            .otherwise(
-                F.sum(F.when(overlap, F.col("n_rows")).otherwise(0)).cast(
-                    "double"
-                )
-                / F.max("n_match").cast("double")
-            )
-            .alias("scan_amplification"),
-        )
-        .orderBy("layout", "probe")
-    )
+    return _pruning_report(rows_b, probes, match, overlap)
 
 
 # ---------------------------------------------------------------------------

@@ -134,8 +134,9 @@ def join_hot_key_split_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: across sessions, so without the bump a code change would silently
 #: serve values derived under the OLD arithmetic (the same failure
 #: mode ``_PQ_CODEC_VERSION`` / ``_MINHASH_CODEC_VERSION`` close for
-#: their stores).
-_BUCKET_CODEC_VERSION = 1
+#: their stores). v2: the bucket spec is read back from each table's
+#: ``_BUCKET_SPEC`` file.
+_BUCKET_CODEC_VERSION = 2
 
 
 def _bucket_store_path(sf_dir: str) -> str:
@@ -179,7 +180,7 @@ def join_bucketed_priority_revenue(
     is reused after — ACROSS sessions: both tables are built into one
     store by ``ensure_store`` (tmp build, completeness marker, atomic
     publish), and a fresh session finding a complete store re-ATTACHES
-    the files via ``register_bucketed`` (the same bucket-spec DDL)
+    the files via ``register_bucketed`` (the spec written with them)
     instead of rewriting. Value neutrality IS the oracle: the
     registered SQL is the plain join.
     """
@@ -204,14 +205,13 @@ def join_bucketed_priority_revenue(
     }
 
     def build(tmp: str) -> None:
+        # both sides need ONE count to join co-located
         for sub, df in sides.items():
             write_bucketed(df, os.path.join(tmp, sub), ("orderkey",), 8)
 
     base = ensure_store(_bucket_store_path(sf_dir), build)
     lt, ot = (
-        register_bucketed(
-            spark, f"bkt_{sub}", os.path.join(base, sub), ("orderkey",), 8
-        )
+        register_bucketed(spark, f"bkt_{sub}", os.path.join(base, sub))
         for sub in sides
     )
     joined = co_located_join(spark, lt, ot, "orderkey")

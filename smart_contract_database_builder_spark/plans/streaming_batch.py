@@ -858,6 +858,61 @@ def stream_watermark_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
+
+def _shard_merge_lateness(
+    spark: SparkSession, sf_dir: str, percentile
+) -> DataFrame:
+    """Lateness report of the md5-ordered shard merge of ``events``:
+    the two-level prefix scan scores every event's lateness against
+    the running max of the events before it in arrival order, and
+    ``percentile(x, qs)`` reduces the positive lateness ``x`` (double)
+    to its p50/p90/p99 array. The exact and the t-digest twins differ
+    only in that reduction."""
+    ev = load_table(spark, sf_dir, "events").select(
+        F.md5(F.col("event_id").cast("string")).alias("ak"),
+        F.unix_micros("ts").alias("us"),
+    )
+    ev = ev.withColumn("bkt", F.substring("ak", 1, 3))
+    w_in = (
+        Window.partitionBy("bkt")
+        .orderBy("ak")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    scanned = ev.select(
+        "ak", "us", "bkt", F.max("us").over(w_in).alias("in_max")
+    )
+    bsum = ev.groupBy("bkt").agg(F.max("us").alias("bmax"))
+    w_b = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    bpre = bsum.select("bkt", F.max("bmax").over(w_b).alias("pre_max"))
+    hwm = F.greatest(
+        F.coalesce("in_max", F.lit(None).cast("long")),
+        F.coalesce("pre_max", F.lit(None).cast("long")),
+    )
+    scored = scanned.join(F.broadcast(bpre), "bkt").select(
+        (hwm - F.col("us")).alias("lateness")
+    )
+    late = scored.filter(F.col("lateness") > 0).agg(
+        percentile(
+            F.col("lateness").cast("double"),
+            F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)),
+        ).alias("q"),
+        F.max("lateness").alias("mx"),
+        F.count(F.lit(1)).alias("n_late"),
+    )
+    tot = scored.agg(F.count(F.lit(1)).alias("n_events"))
+    return late.crossJoin(F.broadcast(tot)).select(
+        F.col("n_events").cast("long").alias("n_events"),
+        F.col("n_late").cast("long").alias("n_late"),
+        (
+            F.col("n_late").cast("double") / F.col("n_events").cast("double")
+        ).alias("late_share"),
+        F.element_at("q", 1).alias("p50_late_us"),
+        F.element_at("q", 2).alias("p90_late_us"),
+        F.element_at("q", 3).alias("p99_late_us"),
+        F.col("mx").cast("long").alias("max_late_us"),
+    )
+
+
 @register(
     "stream_shard_merge_lateness",
     oracle=f"""
@@ -917,47 +972,7 @@ def stream_shard_merge_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition global sort. Integer microsecond lateness cast
     to double once before interpolation on both engines.
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        F.md5(F.col("event_id").cast("string")).alias("ak"),
-        F.unix_micros("ts").alias("us"),
-    )
-    ev = ev.withColumn("bkt", F.substring("ak", 1, 3))
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("ak")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    scanned = ev.select(
-        "ak", "us", "bkt", F.max("us").over(w_in).alias("in_max")
-    )
-    bsum = ev.groupBy("bkt").agg(F.max("us").alias("bmax"))
-    w_b = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bpre = bsum.select("bkt", F.max("bmax").over(w_b).alias("pre_max"))
-    hwm = F.greatest(
-        F.coalesce("in_max", F.lit(None).cast("long")),
-        F.coalesce("pre_max", F.lit(None).cast("long")),
-    )
-    scored = scanned.join(F.broadcast(bpre), "bkt").select(
-        (hwm - F.col("us")).alias("lateness")
-    )
-    late = scored.filter(F.col("lateness") > 0).agg(
-        F.percentile(F.col("lateness").cast("double"),
-                     F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))).alias("q"),
-        F.max("lateness").alias("mx"),
-        F.count(F.lit(1)).alias("n_late"),
-    )
-    tot = scored.agg(F.count(F.lit(1)).alias("n_events"))
-    return late.crossJoin(F.broadcast(tot)).select(
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("n_late").cast("long").alias("n_late"),
-        (
-            F.col("n_late").cast("double") / F.col("n_events").cast("double")
-        ).alias("late_share"),
-        F.element_at("q", 1).alias("p50_late_us"),
-        F.element_at("q", 2).alias("p90_late_us"),
-        F.element_at("q", 3).alias("p99_late_us"),
-        F.col("mx").cast("long").alias("max_late_us"),
-    )
+    return _shard_merge_lateness(spark, sf_dir, F.percentile)
 
 
 @register("stream_shard_merge_lateness_approx")
@@ -978,49 +993,8 @@ def stream_shard_merge_lateness_approx(
     Same two-level prefix scan upstream; identical output schema, so
     a pipeline swaps the two by name.
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        F.md5(F.col("event_id").cast("string")).alias("ak"),
-        F.unix_micros("ts").alias("us"),
-    )
-    ev = ev.withColumn("bkt", F.substring("ak", 1, 3))
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("ak")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    scanned = ev.select(
-        "ak", "us", "bkt", F.max("us").over(w_in).alias("in_max")
-    )
-    bsum = ev.groupBy("bkt").agg(F.max("us").alias("bmax"))
-    w_b = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bpre = bsum.select("bkt", F.max("bmax").over(w_b).alias("pre_max"))
-    hwm = F.greatest(
-        F.coalesce("in_max", F.lit(None).cast("long")),
-        F.coalesce("pre_max", F.lit(None).cast("long")),
-    )
-    scored = scanned.join(F.broadcast(bpre), "bkt").select(
-        (hwm - F.col("us")).alias("lateness")
-    )
-    late = scored.filter(F.col("lateness") > 0).agg(
-        F.percentile_approx(
-            F.col("lateness").cast("double"),
-            F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)),
-            F.lit(10_000),
-        ).alias("q"),
-        F.max("lateness").alias("mx"),
-        F.count(F.lit(1)).alias("n_late"),
-    )
-    tot = scored.agg(F.count(F.lit(1)).alias("n_events"))
-    return late.crossJoin(F.broadcast(tot)).select(
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("n_late").cast("long").alias("n_late"),
-        (
-            F.col("n_late").cast("double") / F.col("n_events").cast("double")
-        ).alias("late_share"),
-        F.element_at("q", 1).alias("p50_late_us"),
-        F.element_at("q", 2).alias("p90_late_us"),
-        F.element_at("q", 3).alias("p99_late_us"),
-        F.col("mx").cast("long").alias("max_late_us"),
+    return _shard_merge_lateness(
+        spark, sf_dir, lambda x, qs: F.percentile_approx(x, qs, F.lit(10_000))
     )
 
 

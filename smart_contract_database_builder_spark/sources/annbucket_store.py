@@ -22,7 +22,9 @@ at ingest:
 Stored rows are BIT-IDENTICAL to the query-time pipeline's (the
 writer runs the same ``_iscale``/plane-dot expressions), so a
 store-read admission returns exactly the query-time answer and reuses
-its DuckDB oracle unchanged. Build, completeness gate and publish
+its DuckDB oracle unchanged. The bucket count is
+``bucketing.bucket_count`` of the ``embeddings`` bytes, recorded in
+the table's ``_BUCKET_SPEC``. Build, completeness gate and publish
 are ``store_root.ensure_store``'s; the catalog attach is
 ``bucketing.register_bucketed``'s.
 """
@@ -33,20 +35,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .bucketing import register_bucketed, write_bucketed
 
-#: Fixed at write time — it IS the physical layout (the bucketing.py
-#: sizing rule: buckets ~ table_bytes / 128 MiB at target scale).
-_ANN_BUCKETS = 8
 _ANN_KEYS = ("bucket",)
 
 
-def write_emb_buckets(rows: DataFrame, path: str) -> None:
+def write_emb_buckets(rows: DataFrame, path: str, n_buckets: int) -> None:
     """Persist the (vec_id, bucket, sv, nrm) relation bucketed and
-    sorted on the bucket key at ``path``."""
-    write_bucketed(rows, path, _ANN_KEYS, _ANN_BUCKETS)
+    sorted on the bucket key into ``n_buckets`` buckets at ``path``."""
+    write_bucketed(rows, path, _ANN_KEYS, n_buckets)
 
 
 def attach_emb_buckets(spark: SparkSession, path: str) -> str:
     """Catalog table over the bucket files at ``path``, with the bucket
     spec that lets the planner drop the probe join's corpus-side
     exchange."""
-    return register_bucketed(spark, "emb_buckets", path, _ANN_KEYS, _ANN_BUCKETS)
+    return register_bucketed(spark, "emb_buckets", path)

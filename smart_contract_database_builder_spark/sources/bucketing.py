@@ -11,13 +11,21 @@ co-partitioning from the catalog and plans a local sort-merge join per
 bucket pair. ``sortBy`` additionally pre-orders within buckets so even
 the sort may be elided.
 
-Bucket-count rule: fixed at write time (it IS the physical layout), so
-pick for the target scale — buckets ≈ table_bytes / 128 MiB, rounded to
-a multiple of the cluster's parallelism; both join sides must use the
-SAME count (or a divisor, with ``spark.sql.bucketing.coalesceBucketsInJoin``)
-for the exchange-free plan. Writing N output files per task × buckets
-is the known small-files hazard — repartition by the bucket key before
+Bucket-count rule, in code: ``bucket_count(bytes)`` =
+max(1, ceil(bytes / 128 MiB)) of the table's input. A bucketed store
+sizes its count from its own input when it is built; both join sides
+of a co-located join must use the SAME count (or a divisor, with
+``spark.sql.bucketing.coalesceBucketsInJoin``), so the fact tables
+pass one explicit count. Writing N output files per task × buckets is
+the known small-files hazard — repartition by the bucket key before
 writing so each task owns whole buckets.
+
+The bucket spec travels with the files: ``write_bucketed`` leaves a
+``_BUCKET_SPEC`` file (count, keys, schema) in the table dir after the
+data files (Spark skips ``_``-prefixed files), and
+``register_bucketed`` attaches the table from that file alone. The
+writer and the attach can never disagree on the count, and the attach
+runs no schema-inference job.
 
 This module is the one bucketed writer and the one catalog attach for
 every bucketed store (the fact tables, the MinHash bands, the
@@ -29,9 +37,36 @@ Exchange in the joined plan) in tests/test_bucketing_layout.py.
 from __future__ import annotations
 
 import hashlib
+import json
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: Target input bytes per bucket.
+_BUCKET_BYTES = 128 * 1024 * 1024
+#: The spec file ``write_bucketed`` leaves next to the data files.
+_SPEC = "_BUCKET_SPEC"
+
+
+def bucket_count(n_bytes: int) -> int:
+    """Buckets for a table whose input is ``n_bytes`` long."""
+    return max(1, math.ceil(n_bytes / _BUCKET_BYTES))
+
+
+def data_bytes(path: str) -> int:
+    """Bytes of the parquet data at ``path``: the file itself, or
+    every data file under the dir (``_``/``.``-prefixed markers, specs
+    and checksums are not data)."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
 
 
 def bucketed_table(prefix: str, path: str) -> str:
@@ -45,7 +80,8 @@ def bucketed_table(prefix: str, path: str) -> str:
 def write_bucketed(
     df: DataFrame, path: str, keys: tuple[str, ...], n_buckets: int
 ) -> None:
-    """Persist ``df`` as bucketed+sorted parquet files at ``path``.
+    """Persist ``df`` as bucketed+sorted parquet files at ``path``,
+    then its bucket spec as ``_BUCKET_SPEC``.
 
     The pre-write ``repartition(n_buckets, *keys)`` aligns tasks with
     buckets: without it every task writes a file into every bucket
@@ -64,35 +100,40 @@ def write_bucketed(
         .saveAsTable(scratch)
     )
     df.sparkSession.sql(f"DROP TABLE IF EXISTS `{scratch}`")
+    spec = {"buckets": n_buckets, "keys": list(keys),
+            "schema": df.schema.jsonValue()}
+    with open(os.path.join(path, _SPEC), "w") as fh:
+        json.dump(spec, fh)
 
 
-def register_bucketed(
-    spark: SparkSession,
-    prefix: str,
-    path: str,
-    keys: tuple[str, ...],
-    n_buckets: int,
-) -> str:
+def bucket_spec(path: str) -> dict:
+    """The ``{"buckets", "keys", "schema"}`` spec written with the
+    bucketed table at ``path``."""
+    with open(os.path.join(path, _SPEC)) as fh:
+        return json.load(fh)
+
+
+def register_bucketed(spark: SparkSession, prefix: str, path: str) -> str:
     """Attach the bucketed files at ``path`` to the session catalog
     and return the table name (``bucketed_table``); an entry of that
     name is reused as is. The files survive across sessions, the
     in-memory catalog entry does not, so every new session attaches
-    instead of rewriting. The DDL declares the writer's bucket spec
-    (the catalog's bucket metadata, not the files, is what lets the
-    planner prove co-partitioning), and the column schema is read
-    from the files themselves so a writer-side schema change can
-    never register a mismatched table."""
+    instead of rewriting. The DDL declares the bucket spec the writer
+    recorded next to the files (the catalog's bucket metadata, not
+    the files, is what lets the planner prove co-partitioning), so
+    the attach cannot disagree with the writer and infers nothing."""
     table = bucketed_table(prefix, path)
     if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(path).schema
+        spec = bucket_spec(path)
         cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in StructType.fromJson(spec["schema"])
         )
-        ks = ", ".join(f"`{k}`" for k in keys)
+        ks = ", ".join(f"`{k}`" for k in spec["keys"])
         spark.sql(
             f"CREATE TABLE `{table}` ({cols}) USING parquet "
             f"CLUSTERED BY ({ks}) SORTED BY ({ks}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            f"INTO {spec['buckets']} BUCKETS LOCATION '{path}'"
         )
     return table
 

@@ -27,16 +27,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Label-relation file count: the relation is two short columns and
-#: ~|duplicated docs| rows, so a handful of evenly-sized files is
-#: right anywhere the band store itself fits.
-_CLUSTER_FILES = 8
-
 
 def write_cluster_map(comp: DataFrame, path: str) -> None:
     """Persist the (doc, cluster_id) component relation under
-    ``path``."""
-    comp.repartition(_CLUSTER_FILES).write.parquet(
+    ``path`` in as many files as its bytes need (AQE's rebalance cuts
+    advisory-size partitions)."""
+    comp.hint("rebalance").write.parquet(
         os.path.join(path, "components"), mode="overwrite"
     )
 

@@ -29,14 +29,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Pair relation is small; a handful of evenly-sized files suffices
-#: at any corpus size where the pair relation itself is tractable.
-_PAIR_FILES = 8
-
 
 def write_jaccard_pairs(pairs: DataFrame, path: str) -> None:
-    """Persist the verified (doc_a, doc_b, n_shared, jaccard) relation."""
-    pairs.repartition(_PAIR_FILES).write.parquet(path, mode="overwrite")
+    """Persist the verified (doc_a, doc_b, n_shared, jaccard) relation
+    in as many files as its bytes need (AQE's rebalance cuts
+    advisory-size partitions)."""
+    pairs.hint("rebalance").write.parquet(path, mode="overwrite")
 
 
 def read_jaccard_pairs(spark: SparkSession, path: str) -> DataFrame:

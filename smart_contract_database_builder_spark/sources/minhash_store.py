@@ -26,42 +26,48 @@ change, not a semantic one.
 Store layout v2 (round 11) adds the SIGNATURE table alongside the
 bands — ``<base>/sigs`` holds one ``(doc_id, m0..m7)`` row per
 document so the Jaccard-estimate verify stage (signature component
-agreement) also skips the corpus pass. Build, completeness gate and
-publish are ``store_root.ensure_store``'s; the catalog attach is
-``bucketing.register_bucketed``'s.
+agreement) also skips the corpus pass. Layout v3 sizes both tables by
+bytes: the sigs are cut into advisory-size files by AQE's rebalance,
+and the band bucket count is ``bucketing.bucket_count`` of the sigs
+bytes, recorded in the bands' ``_BUCKET_SPEC``. Build, completeness
+gate and publish are ``store_root.ensure_store``'s; the catalog
+attach is ``bucketing.register_bucketed``'s.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .bucketing import register_bucketed, write_bucketed
 
-#: Fixed at write time — it IS the physical layout. Both the writer
-#: and the re-attach DDL must agree; pick for target scale as in
-#: bucketing.py (buckets ~ table_bytes / 128 MiB).
-_BAND_BUCKETS = 8
 _BAND_KEYS = ("band_idx", "key")
 
 
-def write_minhash_bands(bands: DataFrame, path: str) -> None:
+def write_minhash_bands(bands: DataFrame, path: str, n_buckets: int) -> None:
     """Persist the (doc_id, band_idx, key) banded relation bucketed
-    and sorted on (band_idx, key) at ``path``."""
-    write_bucketed(bands, path, _BAND_KEYS, _BAND_BUCKETS)
+    and sorted on (band_idx, key) into ``n_buckets`` buckets at
+    ``path``."""
+    write_bucketed(bands, path, _BAND_KEYS, n_buckets)
 
 
 def attach_minhash_bands(spark: SparkSession, path: str) -> str:
     """Catalog table over the band files at ``path``, with the bucket
     spec that lets the planner drop the bucket-assembly exchange."""
-    return register_bucketed(spark, "mh_bands", path, _BAND_KEYS, _BAND_BUCKETS)
+    return register_bucketed(spark, "mh_bands", path)
 
 
 def write_minhash_sigs(sigs: DataFrame, path: str) -> None:
-    """Persist the per-document signature table ``(doc_id, m0..mN)``.
-    One short row per document, so a handful of evenly-sized files
-    suffices at any corpus size where the band store itself fits."""
-    sigs.repartition(_BAND_BUCKETS).write.parquet(path, mode="overwrite")
+    """Persist the per-document signature table ``(doc_id, m0..mN)``
+    in as many files as its bytes need (AQE's rebalance cuts
+    advisory-size partitions)."""
+    sigs.hint("rebalance").write.parquet(path, mode="overwrite")
 
 
-def read_minhash_sigs(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_minhash_sigs(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """The signature table at ``path``; a caller holding the writer's
+    ``schema`` passes it and skips the schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)

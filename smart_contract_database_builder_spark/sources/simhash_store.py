@@ -24,15 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Files per store — fingerprints are two short columns per document,
-#: so a handful of evenly-sized files suffices at any corpus size
-#: where the dedup family itself is runnable.
-_FP_FILES = 8
-
 
 def write_simhash_fps(fps: DataFrame, path: str) -> None:
-    """Persist the (doc_id, simhash) fingerprint relation."""
-    fps.repartition(_FP_FILES).write.parquet(path, mode="overwrite")
+    """Persist the (doc_id, simhash) fingerprint relation in as many
+    files as its bytes need (AQE's rebalance cuts advisory-size
+    partitions)."""
+    fps.hint("rebalance").write.parquet(path, mode="overwrite")
 
 
 def read_simhash_fps(spark: SparkSession, path: str) -> DataFrame:

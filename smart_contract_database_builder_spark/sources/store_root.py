@@ -24,8 +24,8 @@ and nothing else:
   bucketed stores, named after the store location, so a session never
   reads a table that points at another root's files.
 
-The per-store modules keep only what differs: the encode, the file
-counts and the bucket keys.
+The per-store modules keep only what differs: the encode and the
+bucket keys.
 
 A world-shared location under ``tempfile.gettempdir()`` would let any
 other local user PRE-CREATE a store path with planted parquet and

@@ -13,18 +13,24 @@ import pytest
 from pyspark.sql import functions as F
 
 from smart_contract_database_builder_spark.sources.bucketing import (
+    bucket_spec,
     co_located_join,
     register_bucketed,
     write_bucketed,
 )
 from smart_contract_database_builder_spark.sources.tables import load_table
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_during, num_buckets
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("bucketed")
+def bucketed_root(tmp_path_factory):
+    return tmp_path_factory.mktemp("bucketed")
+
+
+@pytest.fixture(scope="module")
+def bucketed_tables(spark, bucketed_root):
+    root = bucketed_root
     orders = load_table(spark, SF_SMOKE, "orders")
     lineitem = load_table(spark, SF_SMOKE, "lineitem")
     keys = ("o_orderkey",)
@@ -36,8 +42,8 @@ def bucketed_tables(spark, tmp_path_factory):
         4,
     )
     tables = (
-        register_bucketed(spark, "b_orders", str(root / "orders"), keys, 4),
-        register_bucketed(spark, "b_lineitem", str(root / "lineitem"), keys, 4),
+        register_bucketed(spark, "b_orders", str(root / "orders")),
+        register_bucketed(spark, "b_lineitem", str(root / "lineitem")),
     )
     yield tables
     for t in tables:
@@ -103,3 +109,18 @@ def test_bucketed_scan_prunes_columns(spark, bucketed_tables):
     df = spark.table(left).select("o_orderkey")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "o_comment" not in plan
+
+
+def test_attach_takes_the_written_spec(spark, bucketed_tables, bucketed_root):
+    """The catalog entry is rebuilt from the ``_BUCKET_SPEC`` file the
+    writer left with the data: a fresh attach keeps the written count
+    and keys and fires no Spark job (no schema inference)."""
+    left, _ = bucketed_tables
+    path = str(bucketed_root / "orders")
+    spec = bucket_spec(path)
+    assert (spec["buckets"], spec["keys"]) == (4, ["o_orderkey"])
+    spark.sql(f"DROP TABLE `{left}`")
+    assert jobs_during(
+        spark, lambda: register_bucketed(spark, "b_orders", path)
+    ) == []
+    assert num_buckets(spark, left) == 4

@@ -13,11 +13,18 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from smart_contract_database_builder_spark import plans
-from smart_contract_database_builder_spark.plans.llm_ops import _minhash_store_path
-from smart_contract_database_builder_spark.sources.bucketing import bucketed_table
+from smart_contract_database_builder_spark.plans.llm_ops import (
+    _ensure_minhash_store,
+    _minhash_store_path,
+)
+from smart_contract_database_builder_spark.sources import bucketing
+from smart_contract_database_builder_spark.sources.bucketing import (
+    bucket_spec,
+    bucketed_table,
+)
 from smart_contract_database_builder_spark.sources.store_root import store_complete
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, jobs_during, num_buckets
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -30,6 +37,10 @@ def _plan(df, mode: str = "formatted") -> str:
 
 def _bands_table(base: str) -> str:
     return bucketed_table("mh_bands", os.path.join(base, "bands"))
+
+
+def _data_files(path: str) -> list[str]:
+    return [f for f in os.listdir(path) if f.startswith("part-")]
 
 
 def _pairs(name):
@@ -224,3 +235,77 @@ def test_emb_cluster_store_built_once_and_reused(spark, tmp_path, monkeypatch):
     ).collect()
     assert os.path.getmtime(marker) == t0
     assert len(out) > 0
+
+
+def test_store_build_budget(spark, tmp_path, monkeypatch):
+    """Files and buckets follow the bytes: at sf0.01 the build writes
+    one sigs file and one bucket file in at most 6 jobs, and attaching
+    the written store in a fresh catalog fires no job at all."""
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    base = _minhash_store_path(SF_ORACLE)
+    table = _bands_table(base)
+    build = jobs_during(spark, lambda: _ensure_minhash_store(spark, SF_ORACLE))
+    assert len(_data_files(os.path.join(base, "sigs"))) == 1
+    assert len(_data_files(os.path.join(base, "bands"))) == 1
+    assert len(build) <= 6, build
+    spark.sql(f"DROP TABLE `{table}`")
+    attach = jobs_during(spark, lambda: _ensure_minhash_store(spark, SF_ORACLE))
+    assert attach == []
+    assert num_buckets(spark, table) == 1
+    spark.sql(f"DROP TABLE `{table}`")
+
+
+def test_unbucketed_stores_write_one_file_at_test_scale(
+    spark, tmp_path, monkeypatch
+):
+    """The verified pairs, the SimHash prints and the cluster map are
+    cut by bytes too: one data file each at sf0.01."""
+    from smart_contract_database_builder_spark.plans.llm_ops import (
+        _ensure_jaccard_store,
+        _simhash_store_path,
+        neardup_components_stored,
+        simhash_fps_stored,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    pairs = _ensure_jaccard_store(spark, SF_ORACLE)
+    simhash_fps_stored(spark, SF_ORACLE)
+    neardup_components_stored(spark, SF_ORACLE)
+    (cluster,) = os.listdir(os.path.join(tmp_path, "cluster_store"))
+    for d in (
+        pairs,
+        os.path.join(_simhash_store_path(SF_ORACLE), "fps"),
+        os.path.join(tmp_path, "cluster_store", cluster, "components"),
+    ):
+        assert len(_data_files(d)) == 1, d
+    spark.sql(
+        f"DROP TABLE IF EXISTS `{_bands_table(_minhash_store_path(SF_ORACLE))}`"
+    )
+
+
+def test_bucket_spec_is_the_one_source_of_the_count(
+    spark, tmp_path, monkeypatch
+):
+    """A store built under a small byte target has several buckets and
+    the query-time twin's pairs; with the target restored, a fresh
+    attach still takes the count written with the files (not one
+    recomputed from today's rule) and returns the same pairs."""
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    base = _minhash_store_path(SF_ORACLE)
+    table = _bands_table(base)
+    target = bucketing._BUCKET_BYTES
+    monkeypatch.setattr(bucketing, "_BUCKET_BYTES", 16 * 1024)
+    small = _pairs("llm_minhash_lsh_pairs_stored")(spark)
+    written = bucket_spec(os.path.join(base, "bands"))["buckets"]
+    assert written > 1
+    assert num_buckets(spark, table) == written
+    assert small == _pairs("llm_minhash_lsh_pairs")(spark)
+
+    monkeypatch.setattr(bucketing, "_BUCKET_BYTES", target)
+    marker = os.path.join(base, "_STORE_COMPLETE")
+    t0 = os.path.getmtime(marker)
+    spark.sql(f"DROP TABLE `{table}`")
+    assert _pairs("llm_minhash_lsh_pairs_stored")(spark) == small
+    assert os.path.getmtime(marker) == t0, "re-attach rewrote the store"
+    assert num_buckets(spark, table) == written
+    spark.sql(f"DROP TABLE `{table}`")
