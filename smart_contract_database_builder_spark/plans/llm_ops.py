@@ -41,6 +41,24 @@ def _tokens(c: Column | str = "text") -> Column:
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
+def tokenized(docs: DataFrame, *keep: str) -> DataFrame:
+    """(``keep`` columns — ``doc_id`` when none is given — , t): the
+    documents with their token array ``t``, fanned out to cluster
+    width when the scan is narrow.
+
+    Tokenize in its OWN projection, before any n-gram lambda reads
+    ``t``: inlining ``_tokens()`` into the n-gram transform would re-run
+    the regex split inside every ``element_at`` lambda (~4·n_tok splits
+    of the full text per row, measured 30× slower); as a
+    multiply-referenced non-cheap alias, CollapseProject leaves it
+    computed once per row. The tokenized rows are then fanned out
+    (``fan_out_if_narrow``), so the n-gram lambdas and explodes
+    downstream run full-width."""
+    return fan_out_if_narrow(
+        docs.select(*(keep or ("doc_id",)), _tokens().alias("t"))
+    )
+
+
 #: DuckDB twin of ``_tokens`` over the ``text`` column.
 _SQL_TOKENS = r"string_split_regex(trim(lower(text)), '\s+')"
 
@@ -212,9 +230,7 @@ def llm_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = F.col("t")
     stop = F.filter(t, lambda x: x.isin(*_STOPWORDS))
-    tok_len_sum = F.aggregate(
-        F.transform(t, F.length), F.lit(0).cast("long"), lambda a, v: a + v
-    )
+    tok_len_sum = _long_sum(F.transform(t, F.length))
     bpe = F.size(
         F.regexp_extract_all(
             F.lower("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0
@@ -559,12 +575,7 @@ def llm_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decontaminate_overlap(docs: DataFrame) -> DataFrame:
     """The reusable decontamination operator behind
     ``llm_decontaminate_overlap`` over any (doc_id, text) relation."""
-    # Tokenize in its OWN projection: inlining _tokens() into the
-    # n-gram transform would re-run the regex split inside every
-    # element_at lambda (~4·n_tok splits of the full text per row —
-    # measured 30× slower); as a multiply-referenced non-cheap alias,
-    # CollapseProject leaves it materialized once per row.
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     return decontaminate_overlap_from_tokens(toked)
 
 
@@ -648,9 +659,7 @@ def llm_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    # tokens in their own projection — see llm_decontaminate_overlap:
-    # inlining the split into the bigram lambdas re-splits per element
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     grams = toked.select(
         "doc_id", F.explode(_word_ngrams(F.col("t"), 2)).alias("gram")
     )
@@ -861,6 +870,17 @@ def candidate_pairs_from_bands(
     (``llm_minhash_lsh_pairs_stored``). When ``bands`` is a catalog
     table bucketed on (band_idx, key), the groupBy here is
     exchange-free (the catalog proves the partitioning)."""
+    return (
+        _bucket_pair_rows(bands, bucket_cap)
+        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
+def _bucket_pair_rows(bands: DataFrame, bucket_cap: int) -> DataFrame:
+    """(band_idx, p): one row per doc pair ``p`` = (doc_a < doc_b) per
+    (band_idx, key) bucket of 2..``bucket_cap`` docs — the pair
+    expansion of a banded relation, mega-buckets dropped whole."""
     buckets = (
         bands.groupBy("band_idx", "key")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
@@ -876,10 +896,40 @@ def candidate_pairs_from_bands(
             ),
         )
     )
+    return buckets.select("band_idx", F.explode(pairs).alias("p"))
+
+
+def _capped_buckets(
+    rows: DataFrame, keys: list[str], cap: int, min_rows: int = 1
+) -> DataFrame:
+    """The bucket keys of ``rows`` whose bucket holds at most ``cap``
+    rows (and at least ``min_rows``; 2 keeps only buckets that can form
+    a pair) — the mega-bucket guard of every LSH/ANN probe. A
+    degenerate key (a stop-word band, many identical vectors) would
+    otherwise fan its rows out bucket-quadratically; an overflowing
+    bucket drops whole, on both engines. The result is one row per
+    bucket, small enough to broadcast against the probe side."""
+    n = F.col("n")
+    keep = n <= cap if min_rows <= 1 else (n >= min_rows) & (n <= cap)
     return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(keep)
+        .select(*keys)
+    )
+
+
+def _admission_verdict(ids: DataFrame, hits: DataFrame, key: str) -> DataFrame:
+    """(key, n_corpus_neighbors, admitted) for every batch id in
+    ``ids``: an id with no row in ``hits`` (key, n_corpus_neighbors)
+    has no corpus neighbor and is admitted — the tail of every
+    incremental admission query, batch or streaming."""
+    return ids.join(hits, key, "left").select(
+        key,
+        F.coalesce("n_corpus_neighbors", F.lit(0))
+        .cast("long")
+        .alias("n_corpus_neighbors"),
+        F.col("n_corpus_neighbors").isNull().alias("admitted"),
     )
 
 
@@ -905,10 +955,7 @@ def llm_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_LSH_BUCKET_CAP`` before pair expansion (see
     ``minhash_candidate_pairs`` for the full scale rationale)."""
     docs = load_table(spark, sf_dir, "documents")
-    # materialize the token array BEFORE shingling: the n-gram lambda
-    # indexes it per element, and an inline split() expression would be
-    # re-evaluated per index — O(tokens^2) per document
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     return minhash_candidate_pairs(toked)
 
 
@@ -972,7 +1019,7 @@ def _ngram_jaccard_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit consumers read the stored result
     (``_ngram_jaccard_pairs_stored``)."""
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     sh = (
         toked.select("doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s"))
         .distinct()
@@ -1088,7 +1135,7 @@ def llm_cluster_best_representative(spark: SparkSession, sf_dir: str) -> DataFra
     argmax ordering is bitwise-safe.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     # cluster relation from the CLUSTER store (one CC solve per corpus,
     # candidates from the S21 band store); only the quality signal
     # still reads the corpus — a per-row projection, no signature pass
@@ -1165,7 +1212,7 @@ def llm_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest sweep).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     sh = (
         toked.select("doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s"))
         .distinct()
@@ -1517,6 +1564,10 @@ _QUERY_VEC_ID = 7
 #: cosine/sqrt math is bitwise-reproducible IEEE-754.
 _FP = 1_000_000
 
+#: Embedding dimensionality of the test corpus (shared with the
+#: hyperplane weights and the centroid oracle's range(1, 65)).
+_EMB_DIM = 64
+
 _SQL_ISCALE = (
     f"CAST(CAST(CAST({{v}} AS DOUBLE) AS DECIMAL(18,6)) * {_FP} AS BIGINT)"
 )
@@ -1526,12 +1577,57 @@ def _iscale(c: Column) -> Column:
     return (c.cast("double").cast("decimal(18,6)") * _FP).cast("long")
 
 
+def _long_sum(arr: Column) -> Column:
+    """Exact int64 sum of an integer array: THE fold every fixed-point
+    kernel ends in. The int64 seed keeps the fold type-stable (the
+    merge must return the seed's type, so int elements widen to
+    long), and integer addition is order-free, so the sum is bitwise
+    DuckDB's ``list_aggregate(.., 'sum')`` cast to BIGINT."""
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, v: acc + v)
+
+
 def _int_dot(a: Column | str, b: Column | str) -> Column:
-    """Exact fixed-point dot product as int64 (type-stable fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _iscale(x) * _iscale(y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    """Exact fixed-point dot product of two RAW double arrays as int64."""
+    return _long_sum(F.zip_with(a, b, lambda x, y: _iscale(x) * _iscale(y)))
+
+
+def _sv_dot(a: Column | str, b: Column | str) -> Column:
+    """Exact int64 dot of two PRE-SCALED (``_iscale``d) arrays."""
+    return _long_sum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def _sign_hamming(a: Column | str, b: Column | str) -> Column:
+    """Hamming distance between the sign sketches of two scaled arrays."""
+    return _long_sum(
+        F.zip_with(a, b, lambda x, y: ((x >= 0) != (y >= 0)).cast("long"))
+    )
+
+
+def _pair_cosine(l: str, r: str) -> Column:
+    """Exact fixed-point cosine between the ``sv``/``nrm`` rows of the
+    join sides aliased ``l`` and ``r``: int64 dot → one IEEE division."""
+    return _sv_dot(f"{l}.sv", f"{r}.sv").cast("double") / (
+        F.col(f"{l}.nrm") * F.col(f"{r}.nrm")
+    )
+
+
+def _scaled(emb: DataFrame) -> DataFrame:
+    """(vec_id, sv): every embedding as fixed-point int64 components."""
+    return emb.select("vec_id", F.transform("embedding", _iscale).alias("sv"))
+
+
+def _emb_encode(emb: DataFrame, n_planes: int | None = None) -> DataFrame:
+    """(vec_id, sv[, bucket], nrm) — the per-vector encode of the ANN
+    family: the scaled vector, its ``n_planes``-plane sign bucket when
+    a plane count is given, and its exact norm. Bucket bits and norm
+    read the ONE shared ``sv`` column (see ``_bucket_expr``)."""
+    enc = _scaled(emb)
+    if n_planes is not None:
+        enc = enc.select(
+            "vec_id", "sv", _bucket_expr(n_planes=n_planes).alias("bucket")
+        )
+    return enc.select(
+        *enc.columns, F.sqrt(_sv_dot("sv", "sv").cast("double")).alias("nrm")
     )
 
 
@@ -1943,7 +2039,7 @@ def _planes_at_oracle_floor(n_vectors: int, query: str) -> int:
 _ANN_BUCKET_CAP = 1024
 
 
-def _plane_weights(plane: int, dims: int = 64, prefix: str = "") -> list[int]:
+def _plane_weights(plane: int, prefix: str = "") -> list[int]:
     """Deterministic pseudo-random ±1 hyperplane weights: parity of the
     first hex digit of md5('<prefix><plane>-<dim>'). Computed ONCE in
     driver Python and embedded as array literals — the weights are
@@ -1960,7 +2056,7 @@ def _plane_weights(plane: int, dims: int = 64, prefix: str = "") -> list[int]:
         if hashlib.md5(f"{prefix}{plane}-{d}".encode()).hexdigest()[0]
         in "02468ace"
         else -1
-        for d in range(1, dims + 1)
+        for d in range(1, _EMB_DIM + 1)
     ]
 
 
@@ -1983,8 +2079,7 @@ def _plane_dot(p: int, sv: Column | str = "sv", prefix: str = "") -> Column:
     dot costs ``_N_PLANES``× the double→decimal→long conversion work for
     identical output (the r3 bench regression)."""
     warr = F.array(*[F.lit(w) for w in _plane_weights(p, prefix=prefix)])
-    terms = F.zip_with(sv, warr, lambda x, w: x * w)
-    return F.aggregate(terms, F.lit(0).cast("long"), lambda a, v: a + v)
+    return _long_sum(F.zip_with(sv, warr, lambda x, w: x * w))
 
 
 def _bucket_expr(
@@ -2106,17 +2201,6 @@ def ann_cosine_pairs(
         # metadata-cheap count (parquet row-group stats); the plane
         # count self-sizes with the corpus instead of being hand-set
         n_planes = adaptive_planes(emb.count())
-    scaled = fan_out_if_narrow(emb).select(
-        "vec_id", F.transform("embedding", _iscale).alias("sv")
-    )
-    b = scaled.select(
-        "vec_id", "sv", _bucket_expr(n_planes=n_planes).alias("bucket")
-    )
-    dot_self = F.aggregate(
-        F.zip_with("sv", "sv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
     # Materialize the encode ONCE: ann_cosine_pairs_from_rows reads the
     # encoded relation three times (bucket sizes + both join sides), and
     # without the checkpoint each read re-ran the 64 fixed-point casts,
@@ -2125,14 +2209,7 @@ def ann_cosine_pairs(
     # get this for free by reading the encode from disk). r18 (VERDICT
     # #1): the encode is CORPUS-PROPORTIONAL (one row per vector) ⇒
     # reliable pin(), not executor-local blocks.
-    n = pin(
-        b.select(
-            "vec_id",
-            "sv",
-            "bucket",
-            F.sqrt(dot_self.cast("double")).alias("nrm"),
-        )
-    )
+    n = pin(_emb_encode(fan_out_if_narrow(emb), n_planes))
     return ann_cosine_pairs_from_rows(n, bucket_cap)
 
 
@@ -2143,20 +2220,9 @@ def ann_cosine_pairs_from_rows(
     (vec_id, bucket, sv, nrm) relation — split out so the S23 bucket
     store's read paths (which load the encode from disk) share the
     exact bucket-cap + verify expressions with the query-time form."""
-    ok = (
-        n.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= bucket_cap))
-        .select("bucket")
-    )
+    ok = _capped_buckets(n, ["bucket"], bucket_cap, min_rows=2)
     x = n.join(F.broadcast(ok), "bucket").alias("x")
     y = n.alias("y")
-    pair_dot = F.aggregate(
-        F.zip_with("x.sv", "y.sv", lambda a_, b_: a_ * b_),
-        F.lit(0).cast("long"),
-        lambda a_, v: a_ + v,
-    )
-    cosine = pair_dot.cast("double") / (F.col("x.nrm") * F.col("y.nrm"))
     return (
         x.join(
             y,
@@ -2166,7 +2232,7 @@ def ann_cosine_pairs_from_rows(
         .select(
             F.col("x.vec_id").alias("vec_a"),
             F.col("y.vec_id").alias("vec_b"),
-            cosine.alias("cosine"),
+            _pair_cosine("x", "y").alias("cosine"),
         )
         .filter(F.col("cosine") >= _NEAR_DUP_COSINE)
     )
@@ -2321,49 +2387,24 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector out k ways and then shuffle on vec_id to pick the argmin —
     k× the rows and an extra exchange for identical output.)"""
     emb = load_table(spark, sf_dir, "embeddings")
-    sv = emb.select(
-        "vec_id", F.transform("embedding", lambda x: _iscale(x)).alias("sv")
-    )
-    # one row: the packed quantized cell table [(cell, centroid), ...]
+    sv = _scaled(emb)
     # 1 packed row, but its build is a full corpus posexplode+agg and
     # it is embedded in two DIFFERENT broadcast subtrees (the query row
     # and the corpus assignment) — materialize once.
-    cells = ivf_quantized_cells(emb).agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cells")
-    ).localCheckpoint()
-
-    def best_cell(vec: Column) -> Column:
-        # lexicographic struct min == ORDER BY d2, cell LIMIT 1
-        return F.array_min(
-            F.transform(
-                "cells",
-                lambda c: F.struct(
-                    _cell_dist2(vec, c["centroid"]).alias("d2"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )["cell"]
-
-    def _dot(a, b) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
+    cells = _packed_cells(ivf_quantized_cells(emb)).localCheckpoint()
     q_cell = (
         sv.filter(F.col("vec_id") == _QUERY_VEC_ID)
         .crossJoin(F.broadcast(cells))
         .select(
             F.col("sv").alias("qv"),
-            _dot("sv", "sv").alias("nq"),
-            best_cell(F.col("sv")).alias("cell"),
+            _sv_dot("sv", "sv").alias("nq"),
+            _nearest_cell(F.col("sv")).alias("cell"),
         )
     )
     assigned = (
         sv.filter(F.col("vec_id") != _QUERY_VEC_ID)
         .crossJoin(F.broadcast(cells))
-        .select("vec_id", "sv", best_cell(F.col("sv")).alias("cell"))
+        .select("vec_id", "sv", _nearest_cell(F.col("sv")).alias("cell"))
     )
     in_cell = assigned.join(F.broadcast(q_cell), "cell")
     cosine = F.col("dot").cast("double") / (
@@ -2373,8 +2414,8 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         in_cell.select(
             "vec_id",
             "cell",
-            _dot("sv", "qv").alias("dot"),
-            _dot("sv", "sv").alias("na"),
+            _sv_dot("sv", "qv").alias("dot"),
+            _sv_dot("sv", "sv").alias("na"),
             "nq",
         )
         .select("vec_id", "cell", cosine.alias("cosine"))
@@ -2412,13 +2453,44 @@ def ivf_quantized_cells(emb: DataFrame) -> DataFrame:
     )
 
 
-def _cell_dist2(vec: Column, centroid: Column) -> Column:
+def _sq_dist(vec: Column, centroid: Column) -> Column:
     """Exact int64 squared L2 distance between two fixed-point int64
     arrays (components ≤ ~2e6, 64 dims → ≤ ~2.6e14 ≪ 2^63)."""
-    return F.aggregate(
-        F.zip_with(vec, centroid, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
+    return _long_sum(F.zip_with(vec, centroid, lambda x, c: (x - c) * (x - c)))
+
+
+def _packed_cells(cells: DataFrame) -> DataFrame:
+    """The (cell, centroid) table packed into ONE row, ``cells`` =
+    [(cell, centroid), ...]: the cell table is SF-constant, so it is
+    broadcast and each vector picks its cell per row."""
+    return cells.agg(
+        F.collect_list(F.struct("cell", "centroid")).alias("cells")
+    )
+
+
+def _cell_dists(vec: Column) -> Column:
+    """Per entry of the packed ``cells`` column, the (d2, cell) struct
+    of ``vec``'s exact distance to that centroid."""
+    return F.transform(
+        "cells",
+        lambda c: F.struct(
+            _sq_dist(vec, c["centroid"]).alias("d2"),
+            c["cell"].alias("cell"),
+        ),
+    )
+
+
+def _nearest_cell(vec: Column) -> Column:
+    """``vec``'s IVF cell: the lexicographic (d2, cell) struct min ==
+    ORDER BY d2, cell LIMIT 1, an integer argmin on both engines."""
+    return F.array_min(_cell_dists(vec))["cell"]
+
+
+def _probe_cells(vec: Column) -> Column:
+    """The ``_IVFPQ_NPROBE`` cells nearest ``vec``, nearest first."""
+    return F.transform(
+        F.slice(F.array_sort(_cell_dists(vec)), 1, _IVFPQ_NPROBE),
+        lambda s: s["cell"],
     )
 
 
@@ -2468,15 +2540,6 @@ def _pq_sub(col: Column, m: int) -> Column:
     return F.slice(col, m * _PQ_SUB + 1, _PQ_SUB)
 
 
-def _pq_subd2(a: Column, b: Column) -> Column:
-    """Exact int64 squared L2 distance between two subspace slices."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _pq_code_m(vec: Column, m: int) -> Column:
     """Sub-code for subspace m: integer (d2, cell) struct min over the
     broadcast ``cells`` column == ORDER BY d2, cell LIMIT 1."""
@@ -2484,7 +2547,7 @@ def _pq_code_m(vec: Column, m: int) -> Column:
         F.transform(
             "cells",
             lambda c: F.struct(
-                _pq_subd2(
+                _sq_dist(
                     _pq_sub(vec, m), _pq_sub(c["centroid"], m)
                 ).alias("d2"),
                 c["cell"].alias("cell"),
@@ -2499,7 +2562,7 @@ def _pq_qdist(code_col: str, m: int) -> Column:
     centroid = F.filter(
         "cells", lambda c: c["cell"] == F.col(code_col)
     )[0]["centroid"]
-    return _pq_subd2(_pq_sub(F.col("qv"), m), _pq_sub(centroid, m))
+    return _sq_dist(_pq_sub(F.col("qv"), m), _pq_sub(centroid, m))
 
 
 @register("llm_pq_topk", oracle=_PQ_ORACLE)
@@ -2526,15 +2589,11 @@ def llm_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    sv = emb.select(
-        "vec_id", F.transform("embedding", lambda x: _iscale(x)).alias("sv")
-    )
+    sv = _scaled(emb)
     # 1 packed row, but its build is a full corpus posexplode+agg and
     # it is embedded in two DIFFERENT broadcast subtrees (the query row
     # and the corpus assignment) — materialize once.
-    cells = ivf_quantized_cells(emb).agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cells")
-    ).localCheckpoint()
+    cells = _packed_cells(ivf_quantized_cells(emb)).localCheckpoint()
 
     q = (
         sv.filter(F.col("vec_id") == _QUERY_VEC_ID)
@@ -2607,7 +2666,7 @@ def llm_ann_hyperplane_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.count(), "llm_ann_hyperplane_buckets"
     )
     return (
-        emb.select("vec_id", F.transform("embedding", _iscale).alias("sv"))
+        _scaled(emb)
         .select("vec_id", _bucket_expr(n_planes=n_planes).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.min("vec_id").alias("min_vec_id"))
@@ -2667,7 +2726,7 @@ def llm_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines clamp the trailing slice.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # token array in its OWN projection (see llm_decontaminate_overlap)
+    # token array in its OWN projection (see ``tokenized``)
     toked = fan_out_if_narrow(
         docs.select(
             "doc_id", _tokens().alias("t"), F.size(_tokens()).alias("n_tok")
@@ -2912,9 +2971,7 @@ def llm_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     blowup — cost is linear in corpus tokens at every step.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(
-        docs.select("doc_id", _tokens().alias("t"))
-    )
+    toked = tokenized(docs)
     grams = toked.select(
         "doc_id",
         F.explode(_word_ngrams(F.col("t"), _SPAN_N)).alias("g"),
@@ -3084,7 +3141,7 @@ def llm_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gopher_quality_filter(docs: DataFrame) -> DataFrame:
     """The reusable rule-chain filter behind
     ``llm_gopher_quality_filter`` over any (doc_id, text) relation."""
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     return gopher_quality_filter_from_tokens(toked)
 
 
@@ -3253,18 +3310,7 @@ def llm_ann_multitable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (MIN(cosine) is a no-op merge: every table computes the same
     exact fixed-point cosine).
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    scaled = fan_out_if_narrow(emb).select(
-        "vec_id", F.transform("embedding", _iscale).alias("sv")
-    )
-    dot_self = F.aggregate(
-        F.zip_with("sv", "sv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
-    n = scaled.select(
-        "vec_id", "sv", F.sqrt(dot_self.cast("double")).alias("nrm")
-    )
+    n = _emb_encode(fan_out_if_narrow(load_table(spark, sf_dir, "embeddings")))
     b = n.select(
         "vec_id",
         "sv",
@@ -3289,20 +3335,9 @@ def llm_ann_multitable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (VERDICT #1): corpus-proportional (_ANN_TABLES rows per vector) ⇒
     # reliable pin(), not executor-local blocks.
     b = pin(b)
-    ok = (
-        b.groupBy("tbl", "bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= _ANN_BUCKET_CAP))
-        .select("tbl", "bucket")
-    )
+    ok = _capped_buckets(b, ["tbl", "bucket"], _ANN_BUCKET_CAP, min_rows=2)
     x = b.join(F.broadcast(ok), ["tbl", "bucket"]).alias("x")
     y = b.alias("y")
-    pair_dot = F.aggregate(
-        F.zip_with("x.sv", "y.sv", lambda a_, b_: a_ * b_),
-        F.lit(0).cast("long"),
-        lambda a_, v: a_ + v,
-    )
-    cosine = pair_dot.cast("double") / (F.col("x.nrm") * F.col("y.nrm"))
     return (
         x.join(
             y,
@@ -3313,7 +3348,7 @@ def llm_ann_multitable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("x.vec_id").alias("vec_a"),
             F.col("y.vec_id").alias("vec_b"),
-            cosine.alias("cosine"),
+            _pair_cosine("x", "y").alias("cosine"),
         )
         .filter(F.col("cosine") >= _NEAR_DUP_COSINE)
         .groupBy("vec_a", "vec_b")
@@ -3395,7 +3430,7 @@ def span_dedup_trim(docs: DataFrame) -> DataFrame:
     (doc_id, text) relation — property-tested against a pure-Python
     reference on synthetic corpora (tests/test_span_trim_property.py)
     in addition to the registered query's DuckDB oracle."""
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     g = toked.select(
         "doc_id",
         "t",
@@ -3720,7 +3755,7 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which broke bitwise parity for certain df values).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     def _tf(term: str) -> Column:
         # NB: the lambda must take exactly ONE argument — PySpark treats
         # a second parameter as the element-index request, so the usual
@@ -4075,7 +4110,7 @@ def llm_decontaminate_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     others. Counts exact, fraction one IEEE divide — bitwise.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     # NOT checkpointed: the per-benchmark readers carry doc_id-slice
     # filters that Catalyst pushes BELOW the explode, so each
     # "recompute" explodes only its slice — materializing the full
@@ -4206,7 +4241,7 @@ def llm_bm25_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vi = {t: j for j, t in enumerate(_BM25_VOCAB)}
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
 
     def _tf(term: str) -> Column:
         # one-arg lambda only: a second parameter would be interpreted
@@ -4867,7 +4902,7 @@ def llm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap second pass for exactness.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t"))).select(
+    toked = tokenized(docs).select(
         F.explode("t").alias("term")
     )
 
@@ -4991,7 +5026,7 @@ def llm_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFr
     both engines.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     # The distinct shingle relation feeds THREE subtrees (per-doc sizes
     # and both sides of the intersection join); each recompute was a
     # full tokenize + shingle explode + distinct pass over the corpus.
@@ -5621,29 +5656,13 @@ def llm_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         n_planes=_planes_at_oracle_floor(emb.count(), "llm_ann_recall_report"),
     ).select("vec_a", "vec_b")
-    scaled = emb.filter(F.col("vec_id") < _RECALL_K).select(
-        "vec_id", F.transform("embedding", _iscale).alias("sv")
-    )
-    dot_self = F.aggregate(
-        F.zip_with("sv", "sv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
     # r18 (VERDICT #3): no materialization — the relation is _RECALL_K
     # rows behind a pushed-down `vec_id < K` parquet filter, so each of
     # its 3 consumers re-reads a metadata-pruned scan for less than a
     # checkpoint's job-submission cost (the r17 eager checkpoint here
     # was one of the two overheads behind the 0.90× driver regression).
-    samp = scaled.select(
-        "vec_id", "sv", F.sqrt(dot_self.cast("double")).alias("nrm")
-    )
+    samp = _emb_encode(emb.filter(F.col("vec_id") < _RECALL_K))
     x, y = samp.alias("x"), samp.alias("y")
-    pair_dot = F.aggregate(
-        F.zip_with("x.sv", "y.sv", lambda a_, b_: a_ * b_),
-        F.lit(0).cast("long"),
-        lambda a_, v: a_ + v,
-    )
-    cosine = pair_dot.cast("double") / (F.col("x.nrm") * F.col("y.nrm"))
     # The truth sample feeds exactly ONE consumer since the r17
     # single-pass hit-marking rewrite (a left join against the
     # unique-per-pair candidate relation marks hits, so n_true/n_caught
@@ -5652,7 +5671,7 @@ def llm_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the other half of the 0.90× regression). Leave it lazy.
     truth = (
         x.join(F.broadcast(y), F.col("x.vec_id") < F.col("y.vec_id"))
-        .filter(cosine >= _NEAR_DUP_COSINE)
+        .filter(_pair_cosine("x", "y") >= _NEAR_DUP_COSINE)
         .select(
             F.col("x.vec_id").alias("vec_a"),
             F.col("y.vec_id").alias("vec_b"),
@@ -5836,7 +5855,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline. Counts are integers; the ratio is one double division.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     grams = toked.select(
         "doc_id", F.explode_outer(_word_ngrams(F.col("t"))).alias("s")
     ).filter(F.col("s").isNotNull()).distinct()
@@ -6729,37 +6748,18 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TakeOrderedAndProject cut.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    sv = emb.select(
-        "vec_id", F.transform("embedding", lambda x: _iscale(x)).alias("sv")
-    )
+    sv = _scaled(emb)
     # 1 packed row, but its build is a full corpus posexplode+agg and
     # it is embedded in two DIFFERENT broadcast subtrees (the query row
     # and the corpus assignment) — materialize once.
-    cells = ivf_quantized_cells(emb).agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cells")
-    ).localCheckpoint()
-
-    def cell_dists(vec: Column) -> Column:
-        return F.array_sort(
-            F.transform(
-                "cells",
-                lambda c: F.struct(
-                    _cell_dist2(vec, c["centroid"]).alias("d2"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )
-
+    cells = _packed_cells(ivf_quantized_cells(emb)).localCheckpoint()
     q = (
         sv.filter(F.col("vec_id") == _QUERY_VEC_ID)
         .crossJoin(F.broadcast(cells))
         .select(
             F.col("sv").alias("qv"),
             "cells",
-            F.transform(
-                F.slice(cell_dists(F.col("sv")), 1, _IVFPQ_NPROBE),
-                lambda s: s["cell"],
-            ).alias("probe_cells"),
+            _probe_cells(F.col("sv")).alias("probe_cells"),
         )
     )
     assigned = (
@@ -6771,15 +6771,7 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qv",
             "cells",
             "probe_cells",
-            F.array_min(
-                F.transform(
-                    "cells",
-                    lambda c: F.struct(
-                        _cell_dist2(F.col("sv"), c["centroid"]).alias("d2"),
-                        c["cell"].alias("cell"),
-                    ),
-                )
-            )["cell"].alias("cell"),
+            _nearest_cell(F.col("sv")).alias("cell"),
         )
     )
     cand = assigned.filter(
@@ -6862,37 +6854,14 @@ def llm_ivfpq_encoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda tmp: write_pq_encoded(emb, tmp),
     )
 
-    packed = read_pq_cells(spark, store).agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cells")
-    )
+    packed = _packed_cells(read_pq_cells(spark, store))
     q = (
         emb.filter(F.col("vec_id") == _QUERY_VEC_ID)
         .select(
             F.transform("embedding", lambda x: _iscale(x)).alias("qv")
         )
         .crossJoin(F.broadcast(packed))
-        .select(
-            "qv",
-            "cells",
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            "cells",
-                            lambda c: F.struct(
-                                _cell_dist2(
-                                    F.col("qv"), c["centroid"]
-                                ).alias("d2"),
-                                c["cell"].alias("cell"),
-                            ),
-                        )
-                    ),
-                    1,
-                    _IVFPQ_NPROBE,
-                ),
-                lambda s: s["cell"],
-            ).alias("probe_cells"),
-        )
+        .select("qv", "cells", _probe_cells(F.col("qv")).alias("probe_cells"))
         .localCheckpoint(eager=True)
     )
     probe_cells = [
@@ -6931,8 +6900,9 @@ def llm_ivfpq_encoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: change, so v1 stores are never half-reused. v3: the sigs files and
 #: the band bucket count are sized by bytes, and the count is read
 #: back from the bands' ``_BUCKET_SPEC`` — a v2 store (8 buckets, no
-#: spec) is rebuilt, never attached under another count.
-_MINHASH_CODEC_VERSION = 3
+#: spec) is rebuilt, never attached under another count. v4: the sigs
+#: schema is recorded next to the files and read back with it.
+_MINHASH_CODEC_VERSION = 4
 
 
 def _minhash_store_path(sf_dir: str) -> str:
@@ -6974,13 +6944,13 @@ def _ensure_minhash_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     def build(tmp: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+        toked = tokenized(docs)
         sh = toked.select(
             "doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s")
         )
         sigs, sigs_path = minhash_signatures(sh), os.path.join(tmp, "sigs")
         write_minhash_sigs(sigs, sigs_path)
-        stored_sigs = read_minhash_sigs(spark, sigs_path, sigs.schema)
+        stored_sigs = read_minhash_sigs(spark, sigs_path)
         write_minhash_bands(
             bands_from_signatures(stored_sigs),
             os.path.join(tmp, "bands"),
@@ -7002,8 +6972,9 @@ def minhash_bands_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: S24 verified-pair store codec: bakes the shingle geometry, the
 #: signature/banding geometry (via the S21 key components), the
 #: bucket cap, and the exact-Jaccard verify expressions. Bump when
-#: any of them changes.
-_JACCARD_CODEC_VERSION = 1
+#: any of them changes. v2: the table schema is recorded next to the
+#: files and read back with it.
+_JACCARD_CODEC_VERSION = 2
 
 
 def _jaccard_store_path(sf_dir: str) -> str:
@@ -7065,17 +7036,13 @@ def minhash_sigs_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_minhash_sigs(spark, os.path.join(base, "sigs"))
 
 
-def minhash_candidate_pairs_stored(
-    spark: SparkSession, sf_dir: str, bucket_cap: int = _LSH_BUCKET_CAP
-) -> DataFrame:
+def minhash_candidate_pairs_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_candidate_pairs`` over the S21 store — bit-identical
     pairs (the writer ran the same signature expressions), but the
     candidate stage never touches ``documents.parquet`` and the
     bucket-assembly groupBy is exchange-free. The shared candidate
     generator for the whole dedup graph/verify family."""
-    return candidate_pairs_from_bands(
-        minhash_bands_stored(spark, sf_dir), bucket_cap
-    )
+    return candidate_pairs_from_bands(minhash_bands_stored(spark, sf_dir))
 
 
 @register(
@@ -7111,7 +7078,9 @@ def llm_minhash_lsh_pairs_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Cluster-store codec version: the stored labels bake in the
 #: connected-components algorithm (min-label + star escalation) and
 #: the candidate generator's bucket cap — bump when either changes.
-_CLUSTER_CODEC_VERSION = 1
+#: v2: the table schema is recorded next to the files and read back
+#: with it.
+_CLUSTER_CODEC_VERSION = 2
 
 
 def neardup_components_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7367,12 +7336,7 @@ def llm_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch = (F.col("doc_id") % _INC_ND_MOD) == _INC_ND_REM
     corpus = bands.filter(~is_batch)
     batch = bands.filter(is_batch)
-    ok_buckets = (
-        corpus.groupBy("band_idx", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= _LSH_BUCKET_CAP)
-        .select("band_idx", "key")
-    )
+    ok_buckets = _capped_buckets(corpus, ["band_idx", "key"], _LSH_BUCKET_CAP)
     hits = (
         batch.join(ok_buckets, ["band_idx", "key"])
         .join(
@@ -7386,18 +7350,7 @@ def llm_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("corpus_doc").alias("n_corpus_neighbors")
         )
     )
-    return (
-        batch.select("doc_id")
-        .distinct()
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_corpus_neighbors", F.lit(0))
-            .cast("long")
-            .alias("n_corpus_neighbors"),
-            F.col("n_corpus_neighbors").isNull().alias("admitted"),
-        )
-    )
+    return _admission_verdict(batch.select("doc_id").distinct(), hits, "doc_id")
 
 
 #: SimHash near-dup: Hamming radius and block count. With _SIM_BITS
@@ -7419,8 +7372,9 @@ _SIMH_BLOCK_W = _SIMH_BITS // _SIMH_BLOCKS
 
 #: SimHash store codec version: the stored fingerprints bake in the
 #: bit width, the per-bit vote expression and the tokenizer — bump
-#: when any of them changes.
-_SIMHASH_CODEC_VERSION = 1
+#: when any of them changes. v2: the table schema is recorded next to
+#: the files and read back with it.
+_SIMHASH_CODEC_VERSION = 2
 
 #: One SimHash fingerprint row per non-empty document: (doc_id, simhash).
 _SQL_SIMHASH_ROWS = f"""SELECT doc_id,
@@ -7549,11 +7503,8 @@ def llm_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("blk"),
     ).select("doc_id", "blk.block_idx", "blk.key")
-    bsz = (
-        blocks.groupBy("block_idx", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= _LSH_BUCKET_CAP))
-        .select("block_idx", "key")
+    bsz = _capped_buckets(
+        blocks, ["block_idx", "key"], _LSH_BUCKET_CAP, min_rows=2
     )
     a = blocks.join(bsz, ["block_idx", "key"]).select(
         "block_idx", "key", F.col("doc_id").alias("doc_a")
@@ -8815,7 +8766,7 @@ def llm_repetition_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fractions are double ratios of exact ints — bitwise cross-engine.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
 
     # single-arg lambda via a factory closure: a two-parameter lambda
     # would make F.transform bind the second param to the ELEMENT
@@ -8924,7 +8875,7 @@ def llm_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise on both engines.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     # r18 (VERDICT #1, guide §2.3/§5): every consumer (bucket census,
     # per-doc pass) works from (doc, bucket) COUNTS, so aggregate the
     # hashed-bigram stream ONCE at that grain — the map-side partial
@@ -9996,14 +9947,12 @@ def llm_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.transform(F.col("embedding"), _iscale).alias("q")
     )
     proj_cols = [
-        F.aggregate(
+        _long_sum(
             F.zip_with(
                 F.col("q"),
                 F.array(*[F.lit(s) for s in signs[k]]),
                 lambda x, s: x * s,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
+            )
         ).alias(f"p{k}")
         for k in range(_JL_K)
     ]
@@ -10037,15 +9986,7 @@ def llm_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
-    orig_d2 = F.aggregate(
-        F.zip_with(
-            F.col("a.q"),
-            F.col("b.q"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v_: acc + v_,
-    )
+    orig_d2 = _sq_dist(F.col("a.q"), F.col("b.q"))
     proj_d2 = None
     for k in range(_JL_K):
         term = (F.col(f"a.p{k}") - F.col(f"b.p{k}")) * (
@@ -10291,16 +10232,8 @@ def llm_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = q.alias("a")
     b = q.alias("b")
-
-    def d2(ca, cb):
-        return F.aggregate(
-            F.zip_with(ca, cb, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
     trunc = [
-        d2(
+        _sq_dist(
             F.slice(F.col("a.q"), 1, k), F.slice(F.col("b.q"), 1, k)
         ).alias(f"d2_k{k}")
         for k in _MATRYOSHKA_KS
@@ -10310,7 +10243,7 @@ def llm_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("vec_id_a"),
             F.col("b.vec_id").alias("vec_id_b"),
-            d2(F.col("a.q"), F.col("b.q")).alias("orig_d2"),
+            _sq_dist(F.col("a.q"), F.col("b.q")).alias("orig_d2"),
             *trunc,
         )
         .filter(F.col("orig_d2") > 0)
@@ -10605,24 +10538,8 @@ def llm_lsh_band_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap bounds expansion; the per-pair MIN aggregate shuffles once on
     the pair key) plus two O(bands)-row windows.
     """
-    bands = minhash_bands_stored(spark, sf_dir)
-    buckets = (
-        bands.groupBy("band_idx", "key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= _LSH_BUCKET_CAP))
-    )
-    ds = F.col("ds")
-    pairs = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + 2, F.size(ds)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     pairfb = (
-        buckets.select("band_idx", F.explode(pairs).alias("p"))
+        _bucket_pair_rows(minhash_bands_stored(spark, sf_dir), _LSH_BUCKET_CAP)
         .groupBy("p.doc_a", "p.doc_b")
         .agg(F.min("band_idx").alias("first_band"))
     )
@@ -10914,12 +10831,7 @@ def llm_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("doc_id", "blk.block_idx", "blk.key")
 
     cblocks = blocks(corpus)
-    ok = (
-        cblocks.groupBy("block_idx", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= _LSH_BUCKET_CAP)
-        .select("block_idx", "key")
-    )
+    ok = _capped_buckets(cblocks, ["block_idx", "key"], _LSH_BUCKET_CAP)
     cand = (
         blocks(batch)
         .withColumnRenamed("doc_id", "batch_doc")
@@ -11253,7 +11165,7 @@ def llm_setsim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_, d_ = _SSJ_T_NUM, _SSJ_T_DEN
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     # Materialized once: this relation feeds FIVE consumers (sizes, df
     # ranks, prefix ordering, both verify sides) — left lazy, the
     # tokenize → 3-gram transform → distinct pass re-executes per
@@ -11365,9 +11277,10 @@ def llm_setsim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the row count and drops both verify sorts. The overlap count o
     # (array_intersect of two duplicate-free arrays) is the same
     # integer, so the gate and the one double divide are unchanged.
-    # `ordered` is already hash-partitioned by doc_id (see above), so
-    # this aggregate plans with NO Exchange — r17's form paid a second
-    # full-stream shuffle of `sh` here.
+    # The aggregate still shuffles: the checkpoint scan of `ordered`
+    # does not carry its doc_id partitioning into this plan, so the
+    # executed plan runs a partial collect_list, an Exchange on doc_id
+    # and the final collect_list (read off the executed plan at sf0.01).
     docsets = ordered.groupBy("doc_id").agg(F.collect_list("s").alias("ss"))
     da = docsets.select(F.col("doc_id").alias("da"), F.col("ss").alias("ssa"))
     db = docsets.select(F.col("doc_id").alias("db"), F.col("ss").alias("ssb"))
@@ -11961,40 +11874,7 @@ def llm_incremental_embedding_admission(
     is_batch = (F.col("vec_id") % _INC_ND_MOD) == _INC_ND_REM
     corpus = n.filter(~is_batch)
     batch = n.filter(is_batch)
-    ok = (
-        corpus.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") <= _ANN_BUCKET_CAP)
-        .select("bucket")
-    )
-    b = batch.alias("b")
-    c = corpus.alias("c")
-    pair_dot = F.aggregate(
-        F.zip_with("b.sv", "c.sv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
-    hits = (
-        b.join(F.broadcast(ok), "bucket")
-        .join(c, "bucket")
-        .filter(
-            pair_dot.cast("double") / (F.col("b.nrm") * F.col("c.nrm"))
-            >= _NEAR_DUP_COSINE
-        )
-        .groupBy(F.col("b.vec_id").alias("vec_id"))
-        .agg(F.countDistinct("c.vec_id").alias("n_corpus_neighbors"))
-    )
-    return (
-        batch.select("vec_id")
-        .join(hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("n_corpus_neighbors", F.lit(0))
-            .cast("long")
-            .alias("n_corpus_neighbors"),
-            F.col("n_corpus_neighbors").isNull().alias("admitted"),
-        )
-    )
+    return _ann_admission(batch, corpus)
 
 
 #: b-bit MinHash resolution: keep only the LAST hex nibble (b=4 bits)
@@ -12618,25 +12498,31 @@ _ANNB_CODEC_VERSION = 2
 
 
 def _emb_bucket_rows(emb: DataFrame, n_planes: int) -> DataFrame:
-    """(vec_id, bucket, sv, nrm) encode pass — THE shared expressions:
-    the query-time admission and the S23 store writer both call this,
-    so stored rows are bit-identical to query-time ones by
-    construction."""
-    scaled = fan_out_if_narrow(emb).select(
-        "vec_id", F.transform("embedding", _iscale).alias("sv")
+    """(vec_id, bucket, sv, nrm) encode pass — ``_emb_encode`` in the
+    S23 store's column order: the query-time admission and the store
+    writer both call this, so stored rows are bit-identical to
+    query-time ones by construction."""
+    return _emb_encode(fan_out_if_narrow(emb), n_planes).select(
+        "vec_id", "bucket", "sv", "nrm"
     )
-    dot_self = F.aggregate(
-        F.zip_with("sv", "sv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
+
+
+def _ann_admission(batch: DataFrame, corpus: DataFrame) -> DataFrame:
+    """The embedding admission verdict of each ``batch`` vector against
+    the ``corpus`` vectors (both ``_emb_bucket_rows`` relations): the
+    corpus mega-buckets drop at ``_ANN_BUCKET_CAP``, each batch vector
+    probes its own bucket, and the exact cosine verifies the
+    collisions. Shared by the query-time and the stored admission."""
+    ok = _capped_buckets(corpus, ["bucket"], _ANN_BUCKET_CAP)
+    hits = (
+        batch.alias("b")
+        .join(F.broadcast(ok), "bucket")
+        .join(corpus.alias("c"), "bucket")
+        .filter(_pair_cosine("b", "c") >= _NEAR_DUP_COSINE)
+        .groupBy(F.col("b.vec_id").alias("vec_id"))
+        .agg(F.countDistinct("c.vec_id").alias("n_corpus_neighbors"))
     )
-    return scaled.select(
-        "vec_id",
-        _bucket_expr(n_planes=n_planes).alias("bucket"),
-        "sv",
-    ).select(
-        "vec_id", "bucket", "sv", F.sqrt(dot_self.cast("double")).alias("nrm")
-    )
+    return _admission_verdict(batch.select("vec_id"), hits, "vec_id")
 
 
 def _emb_bucket_store_path(sf_dir: str, n_planes: int) -> str:
@@ -12728,40 +12614,7 @@ def llm_incremental_embedding_admission_stored(
     # invariant counts this plan's parquet scans against the twin's
     # (tests/test_annbucket_store.py).
     batch = _emb_bucket_rows(emb.filter(is_batch), n_planes)
-    ok = (
-        corpus.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") <= _ANN_BUCKET_CAP)
-        .select("bucket")
-    )
-    b = batch.alias("b")
-    c = corpus.alias("c")
-    pair_dot = F.aggregate(
-        F.zip_with("b.sv", "c.sv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
-    hits = (
-        b.join(F.broadcast(ok), "bucket")
-        .join(c, "bucket")
-        .filter(
-            pair_dot.cast("double") / (F.col("b.nrm") * F.col("c.nrm"))
-            >= _NEAR_DUP_COSINE
-        )
-        .groupBy(F.col("b.vec_id").alias("vec_id"))
-        .agg(F.countDistinct("c.vec_id").alias("n_corpus_neighbors"))
-    )
-    return (
-        batch.select("vec_id")
-        .join(hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("n_corpus_neighbors", F.lit(0))
-            .cast("long")
-            .alias("n_corpus_neighbors"),
-            F.col("n_corpus_neighbors").isNull().alias("admitted"),
-        )
-    )
+    return _ann_admission(batch, corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -13248,13 +13101,7 @@ def llm_sign_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", _iscale).alias("x"),
         F.col("embedding").alias("de"),
     )
-    ham = F.aggregate(
-        F.zip_with(
-            "x", "qx", lambda a, b: ((a >= 0) != (b >= 0)).cast("long")
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    ham = _sign_hamming("x", "qx")
     return (
         d.join(F.broadcast(q))
         .select(
@@ -13389,32 +13236,15 @@ def llm_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit reads the store's partition sizes for free.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    sv = emb.select(
-        "vec_id", F.transform("embedding", lambda x: _iscale(x)).alias("sv")
-    )
+    sv = _scaled(emb)
     # O(cells) rows, but each recompute was a full 64-way posexplode +
     # two-level agg over the corpus — and this relation feeds THREE
     # subtrees (the broadcast centroid list, the cell count, the axis
     # join). Materialize once.
     cell_rows = ivf_quantized_cells(emb).localCheckpoint()
-    cells = cell_rows.agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cells")
-    )
-
-    def best_cell(vec: Column) -> Column:
-        return F.array_min(
-            F.transform(
-                "cells",
-                lambda c: F.struct(
-                    _cell_dist2(vec, c["centroid"]).alias("d2"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )["cell"]
-
     sizes = (
-        sv.crossJoin(F.broadcast(cells))
-        .select(best_cell(F.col("sv")).alias("cell"))
+        sv.crossJoin(F.broadcast(_packed_cells(cell_rows)))
+        .select(_nearest_cell(F.col("sv")).alias("cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
     )
@@ -14534,7 +14364,7 @@ def llm_kmv_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sources) arithmetic.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("source", _tokens().alias("t")))
+    toked = tokenized(docs, "source")
     sh = toked.select(
         "source", F.explode(_word_ngrams(F.col("t"))).alias("s")
     ).distinct()
@@ -14695,9 +14525,9 @@ def llm_ann_bucket_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_planes = _planes_at_oracle_floor(
         emb.count(), "llm_ann_bucket_width_sweep"
     )
-    buckets = emb.select(
-        "vec_id", F.transform("embedding", _iscale).alias("sv")
-    ).select("vec_id", _bucket_expr(n_planes=n_planes).alias("bucket"))
+    buckets = _scaled(emb).select(
+        "vec_id", _bucket_expr(n_planes=n_planes).alias("bucket")
+    )
     axis = F.array(*[F.lit(n) for n in _ANN_SWEEP_BITS])
     sizes = (
         buckets.select("bucket", F.explode(axis).alias("nbits"))
@@ -14922,7 +14752,7 @@ def llm_rare_token_tail_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares are single IEEE divides.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("lang", _tokens().alias("t")))
+    toked = tokenized(docs, "lang")
     tf = (
         toked.select("lang", F.explode("t").alias("term"))
         .groupBy("lang", "term")
@@ -15141,11 +14971,7 @@ def llm_norm_length_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        F.aggregate(
-            F.transform("embedding", lambda v: _iscale(v) * _iscale(v)),
-            F.lit(0).cast("long"),
-            lambda a, b: a + b,
-        )
+        _long_sum(F.transform("embedding", lambda v: _iscale(v) * _iscale(v)))
         .cast("decimal(38,0)")
         .alias("y"),
     )
@@ -15688,7 +15514,7 @@ def llm_decontaminate_token_mass(
     is doc-id-scale. Exact integer token sums; one IEEE divide.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     grams = toked.select(
         "doc_id", F.explode(_word_ngrams(F.col("t"), _DECON_N)).alias("g")
     )
@@ -15812,9 +15638,7 @@ def _substr_gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-based token position and md5 gram key. The gram stream is
     O(corpus tokens) rows — the family's only corpus-scale relation."""
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(
-        docs.select("doc_id", "source", _tokens().alias("t"))
-    )
+    toked = tokenized(docs, "doc_id", "source")
     return toked.select(
         "doc_id",
         "source",
@@ -16299,7 +16123,7 @@ def substring_dedup_trim(docs: DataFrame) -> DataFrame:
     # anchor stream (grams): the fan-out exchange subtree is shared, so
     # the physical planner reuses it (ReusedExchange) instead of
     # scanning and tokenizing the documents table twice.
-    toked = fan_out_if_narrow(docs.select("doc_id", _tokens().alias("t")))
+    toked = tokenized(docs)
     grams = toked.select(
         "doc_id",
         F.posexplode(_word_ngrams(F.col("t"), _SUBSTR_K)).alias("p0", "gram"),
@@ -16455,9 +16279,7 @@ def llm_dedup_grain_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is O(sources).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toked = fan_out_if_narrow(
-        docs.select("doc_id", "source", _tokens().alias("t"))
-    )
+    toked = tokenized(docs, "doc_id", "source")
     # r17 OPT: with _SPAN_N == _SUBSTR_K == 8 the two grains hash the
     # SAME 8-token windows — the span grain at 0-based p covers tokens
     # p+1..p+8 and hashes slice(t, p+1, 8); the substring grain at
@@ -17171,11 +16993,6 @@ def llm_kanonymity_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("k")
     )
-
-
-#: Embedding dimensionality of the test corpus (shared with the
-#: centroid oracle's range(1, 65)).
-_EMB_DIM = 64
 
 
 @register(
@@ -18892,11 +18709,7 @@ def llm_retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (not O(Q*N*D) inside the pair rows) is a measured ~4x at the 10x
     # probe; the pair stage is then pure int64 multiply-adds.
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.transform("x", lambda v: v * v),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    norm2 = _long_sum(F.transform("x", lambda v: v * v))
     d2 = (
         emb.select(
             F.col("vec_id").alias("vid"),
@@ -18911,18 +18724,8 @@ def llm_retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").alias("qx"),
         F.col("dd").alias("qq"),
     )
-    idot = F.aggregate(
-        F.zip_with("x", "qx", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            "x", "qx", lambda a, b: ((a >= 0) != (b >= 0)).cast("long")
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    idot = _sv_dot("x", "qx")
+    ham = _sign_hamming("x", "qx")
     cand = (
         d2.join(F.broadcast(q), F.col("vid") != F.col("qid"))
         .select(

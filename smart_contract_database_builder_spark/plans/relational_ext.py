@@ -5873,15 +5873,15 @@ def _prefix_sums(
     df: DataFrame,
     key: str,
     vals: list[tuple[str, str, bool]],
-    width: int = _RANK_BUCKET,
 ) -> DataFrame:
     """Distributed prefix sums over ``key`` order — the two-level
     bucketed scan (stream_watermark_late_audit pattern): within-bucket
-    running sums parallelize per bucket, the O(n/width) bucket-summary
-    relation takes the only global window, and the two recombine with
-    one broadcast join — no stage ever sorts the full relation on one
-    core. ``vals`` is a list of (value_col, out_col, inclusive);
-    ``key`` must be distinct per row (a grouped-by-value relation).
+    running sums parallelize per bucket, the O(n/_RANK_BUCKET)
+    bucket-summary relation takes the only global window, and the two
+    recombine with one broadcast join — no stage ever sorts the full
+    relation on one core. ``vals`` is a list of (value_col, out_col,
+    inclusive); ``key`` must be distinct per row (a grouped-by-value
+    relation).
 
     Callers should ``localCheckpoint()`` the input first: it is
     consumed by multiple downstream branches (in-bucket scan, bucket
@@ -5890,7 +5890,7 @@ def _prefix_sums(
     one statistic. Checkpointing materializes the tiny domain-bounded
     relation once, so the 100 TB scan happens exactly once (the
     iterative-CC discipline applied to a reduction)."""
-    b = df.withColumn("_bkt", F.floor(F.col(key) / width))
+    b = df.withColumn("_bkt", F.floor(F.col(key) / _RANK_BUCKET))
     out = b
     w_excl = (
         Window.partitionBy("_bkt")

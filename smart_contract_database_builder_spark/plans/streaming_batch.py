@@ -1501,6 +1501,8 @@ def stream_true_neardup_admission(
         _INC_ND_MOD,
         _INC_ND_REM,
         _LSH_BUCKET_CAP,
+        _admission_verdict,
+        _capped_buckets,
         _tokens,
         _word_ngrams,
         minhash_bands,
@@ -1510,12 +1512,7 @@ def stream_true_neardup_admission(
     bands = minhash_bands_stored(spark, sf_dir)
     is_batch = (F.col("doc_id") % _INC_ND_MOD) == _INC_ND_REM
     corpus = bands.filter(~is_batch)
-    ok_buckets = (
-        corpus.groupBy("band_idx", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= _LSH_BUCKET_CAP)
-        .select("band_idx", "key")
-    )
+    ok_buckets = _capped_buckets(corpus, ["band_idx", "key"], _LSH_BUCKET_CAP)
     corpus_side = corpus.select(
         "band_idx", "key", F.col("doc_id").alias("corpus_doc")
     )
@@ -1533,17 +1530,8 @@ def stream_true_neardup_admission(
             .groupBy("doc_id")
             .agg(F.countDistinct("corpus_doc").alias("n_corpus_neighbors"))
         )
-        out = (
-            batch_df.select("doc_id")
-            .distinct()
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("n_corpus_neighbors", F.lit(0))
-                .cast("long")
-                .alias("n_corpus_neighbors"),
-                F.col("n_corpus_neighbors").isNull().alias("admitted"),
-            )
+        out = _admission_verdict(
+            batch_df.select("doc_id").distinct(), hits, "doc_id"
         )
         for r in out.collect():
             collected.append(

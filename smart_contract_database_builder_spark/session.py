@@ -111,7 +111,3 @@ def _cap_listing_parallelism(spark: SparkSession) -> None:
     if slots < current:
         spark.conf.set(_LISTING_PARALLELISM, str(slots))
 
-
-def default_sf_dir() -> str:
-    """The scale-factor directory the harness points at."""
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

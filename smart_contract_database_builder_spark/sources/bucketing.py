@@ -25,13 +25,18 @@ The bucket spec travels with the files: ``write_bucketed`` leaves a
 data files (Spark skips ``_``-prefixed files), and
 ``register_bucketed`` attaches the table from that file alone. The
 writer and the attach can never disagree on the count, and the attach
-runs no schema-inference job.
+runs no schema-inference job. An unbucketed store table
+(``write_table``) leaves the same file with no buckets and no keys,
+and ``read_table`` reads it with the recorded schema: a warm store
+read fires no job either.
 
-This module is the one bucketed writer and the one catalog attach for
-every bucketed store (the fact tables, the MinHash bands, the
-hyperplane buckets); the stores' build gate and publish are
-``store_root.ensure_store``'s. Demonstrated and plan-asserted (no
-Exchange in the joined plan) in tests/test_bucketing_layout.py.
+This module is the one writer and reader of every store table: the
+bucketed ones (the fact tables, the MinHash bands, the hyperplane
+buckets) and the plain ones (the MinHash signatures, the verified
+pairs, the SimHash prints, the cluster map); the stores' build gate
+and publish are ``store_root.ensure_store``'s. Demonstrated and
+plan-asserted (no Exchange in the joined plan) in
+tests/test_bucketing_layout.py.
 """
 
 from __future__ import annotations
@@ -100,6 +105,20 @@ def write_bucketed(
         .saveAsTable(scratch)
     )
     df.sparkSession.sql(f"DROP TABLE IF EXISTS `{scratch}`")
+    _write_spec(df, path, n_buckets, keys)
+
+
+def write_table(df: DataFrame, path: str) -> None:
+    """Persist ``df`` as plain parquet at ``path`` in as many files as
+    its bytes need (AQE's rebalance cuts advisory-size partitions),
+    then its spec (no buckets) as ``_BUCKET_SPEC``."""
+    df.hint("rebalance").write.parquet(path, mode="overwrite")
+    _write_spec(df, path, 0, ())
+
+
+def _write_spec(
+    df: DataFrame, path: str, n_buckets: int, keys: tuple[str, ...]
+) -> None:
     spec = {"buckets": n_buckets, "keys": list(keys),
             "schema": df.schema.jsonValue()}
     with open(os.path.join(path, _SPEC), "w") as fh:
@@ -108,9 +127,16 @@ def write_bucketed(
 
 def bucket_spec(path: str) -> dict:
     """The ``{"buckets", "keys", "schema"}`` spec written with the
-    bucketed table at ``path``."""
+    store table at ``path``."""
     with open(os.path.join(path, _SPEC)) as fh:
         return json.load(fh)
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """The ``write_table`` table at ``path``, read with the schema its
+    writer recorded, so building the frame runs no job."""
+    schema = StructType.fromJson(bucket_spec(path)["schema"])
+    return spark.read.schema(schema).parquet(path)
 
 
 def register_bucketed(spark: SparkSession, prefix: str, path: str) -> str:

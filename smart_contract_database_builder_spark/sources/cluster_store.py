@@ -18,7 +18,9 @@ Keying discipline: the store path embeds the SAME corpus fingerprint
 as the band store plus both codec versions, so a regenerated corpus, a
 changed signature pipeline, or a changed CC algorithm can never
 silently serve stale clusters. Build, completeness gate and publish
-are ``store_root.ensure_store``'s.
+are ``store_root.ensure_store``'s; the table is written and read by
+``bucketing.write_table`` / ``read_table`` (its schema travels with
+the files).
 """
 
 from __future__ import annotations
@@ -27,15 +29,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .bucketing import read_table, write_table
+
 
 def write_cluster_map(comp: DataFrame, path: str) -> None:
-    """Persist the (doc, cluster_id) component relation under
-    ``path`` in as many files as its bytes need (AQE's rebalance cuts
-    advisory-size partitions)."""
-    comp.hint("rebalance").write.parquet(
-        os.path.join(path, "components"), mode="overwrite"
-    )
+    """Persist the (doc, cluster_id) component relation under ``path``."""
+    write_table(comp, os.path.join(path, "components"))
 
 
 def read_cluster_map(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "components"))
+    return read_table(spark, os.path.join(path, "components"))

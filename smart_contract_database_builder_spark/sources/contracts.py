@@ -109,11 +109,6 @@ def corrupt_json(content: Column | str) -> Column:
     return probe["_corrupt_record"].isNotNull()
 
 
-def normalize_crlf(c: Column) -> Column:
-    """F13: ``\\r\\n`` → ``\\n`` (plain_contract.rs:434)."""
-    return F.regexp_replace(c, "\r\n", "\n")
-
-
 def normalize_version(c: Column) -> Column:
     """F11: strip the leading ``v``/tool prefix and pre-release/build
     suffix, keeping bare ``major.minor.patch`` (plain_contract.rs:334-337)."""

@@ -22,20 +22,22 @@ verification is a physical-layout change, not a semantic one.
 as the family's always-verified twin (the ``llm_minhash_lsh_pairs``
 vs ``_stored`` precedent).
 
-Build, completeness gate and publish are ``store_root.ensure_store``'s.
+Build, completeness gate and publish are ``store_root.ensure_store``'s;
+the table is written and read by ``bucketing.write_table`` /
+``read_table`` (its schema travels with the files).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .bucketing import read_table, write_table
+
 
 def write_jaccard_pairs(pairs: DataFrame, path: str) -> None:
-    """Persist the verified (doc_a, doc_b, n_shared, jaccard) relation
-    in as many files as its bytes need (AQE's rebalance cuts
-    advisory-size partitions)."""
-    pairs.hint("rebalance").write.parquet(path, mode="overwrite")
+    """Persist the verified (doc_a, doc_b, n_shared, jaccard) relation."""
+    write_table(pairs, path)
 
 
 def read_jaccard_pairs(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_table(spark, path)

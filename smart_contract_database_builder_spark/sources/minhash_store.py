@@ -29,17 +29,23 @@ document so the Jaccard-estimate verify stage (signature component
 agreement) also skips the corpus pass. Layout v3 sizes both tables by
 bytes: the sigs are cut into advisory-size files by AQE's rebalance,
 and the band bucket count is ``bucketing.bucket_count`` of the sigs
-bytes, recorded in the bands' ``_BUCKET_SPEC``. Build, completeness
-gate and publish are ``store_root.ensure_store``'s; the catalog
-attach is ``bucketing.register_bucketed``'s.
+bytes, recorded in the bands' ``_BUCKET_SPEC``. Layout v4 records the
+sigs schema in their own ``_BUCKET_SPEC`` and reads them back with it
+(no schema-inference job). Build, completeness gate and publish are
+``store_root.ensure_store``'s; the catalog attach is
+``bucketing.register_bucketed``'s.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
-from .bucketing import register_bucketed, write_bucketed
+from .bucketing import (
+    read_table,
+    register_bucketed,
+    write_bucketed,
+    write_table,
+)
 
 _BAND_KEYS = ("band_idx", "key")
 
@@ -59,15 +65,10 @@ def attach_minhash_bands(spark: SparkSession, path: str) -> str:
 
 def write_minhash_sigs(sigs: DataFrame, path: str) -> None:
     """Persist the per-document signature table ``(doc_id, m0..mN)``
-    in as many files as its bytes need (AQE's rebalance cuts
-    advisory-size partitions)."""
-    sigs.hint("rebalance").write.parquet(path, mode="overwrite")
+    (``bucketing.write_table``)."""
+    write_table(sigs, path)
 
 
-def read_minhash_sigs(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    """The signature table at ``path``; a caller holding the writer's
-    ``schema`` passes it and skips the schema-inference job."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+def read_minhash_sigs(spark: SparkSession, path: str) -> DataFrame:
+    """The signature table at ``path``, read with its recorded schema."""
+    return read_table(spark, path)

@@ -47,32 +47,17 @@ def write_pq_encoded(emb: DataFrame, path: str) -> None:
     ``write_bucketed``)."""
     from ..plans.llm_ops import (
         _PQ_M,
-        _cell_dist2,
-        _iscale,
+        _nearest_cell,
+        _packed_cells,
         _pq_code_m,
+        _scaled,
         ivf_quantized_cells,
     )
 
     cells = ivf_quantized_cells(emb)
-    packed = cells.agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cells")
-    )
-    sv = emb.select(
-        "vec_id", F.transform("embedding", lambda x: _iscale(x)).alias("sv")
-    )
-    assigned = sv.crossJoin(F.broadcast(packed)).select(
-        "vec_id",
-        "sv",
-        "cells",
-        F.array_min(
-            F.transform(
-                "cells",
-                lambda c: F.struct(
-                    _cell_dist2(F.col("sv"), c["centroid"]).alias("d2"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )["cell"].alias("cell"),
+    packed = F.broadcast(_packed_cells(cells))
+    assigned = _scaled(emb).crossJoin(packed).select(
+        "vec_id", "sv", "cells", _nearest_cell(F.col("sv")).alias("cell")
     )
     codes = assigned.select(
         "vec_id",

@@ -17,20 +17,22 @@ read-path query returns exactly the query-time answer and reuses its
 DuckDB oracle unchanged — write-time fingerprinting is a physical-
 layout change, not a semantic one.
 
-Build, completeness gate and publish are ``store_root.ensure_store``'s.
+Build, completeness gate and publish are ``store_root.ensure_store``'s;
+the table is written and read by ``bucketing.write_table`` /
+``read_table`` (its schema travels with the files).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .bucketing import read_table, write_table
+
 
 def write_simhash_fps(fps: DataFrame, path: str) -> None:
-    """Persist the (doc_id, simhash) fingerprint relation in as many
-    files as its bytes need (AQE's rebalance cuts advisory-size
-    partitions)."""
-    fps.hint("rebalance").write.parquet(path, mode="overwrite")
+    """Persist the (doc_id, simhash) fingerprint relation."""
+    write_table(fps, path)
 
 
 def read_simhash_fps(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_table(spark, path)

@@ -7,8 +7,10 @@ before the per-round verify.
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import pathlib
+import re
 
 import numpy as np
 import pandas as pd
@@ -88,3 +90,62 @@ def test_minhash_signature_sql_lives_in_one_place():
         p.name: p.read_text().count(needle) for p in sorted(plans_dir.glob("*.py"))
     }
     assert {name: n for name, n in hits.items() if n} == {"llm_ops.py": 1}
+
+
+_LONG_ZERO = ast.dump(ast.parse('F.lit(0).cast("long")', mode="eval").body)
+
+
+def _int64_sum_folds(src: str) -> list[str]:
+    """Names of the functions holding an ``F.aggregate`` that sums an
+    array from an int64 zero seed (``acc + v`` over its two params)."""
+    found = []
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for call in ast.walk(fn):
+            if not (isinstance(call, ast.Call) and len(call.args) >= 3
+                    and ast.unparse(call.func) == "F.aggregate"):
+                continue
+            seed, merge = call.args[1], call.args[2]
+            if ast.dump(seed) != _LONG_ZERO:
+                continue
+            if (isinstance(merge, ast.Lambda)
+                    and isinstance(merge.body, ast.BinOp)
+                    and isinstance(merge.body.op, ast.Add)
+                    and [ast.unparse(x) for x in (merge.body.left, merge.body.right)]
+                    == [a.arg for a in merge.args.args]):
+                found.append(fn.name)
+    return found
+
+
+def test_vector_kernels_live_in_one_place():
+    """The exact vector and near-dup kernels are each written once in
+    the engine: the int64 sum fold (``_long_sum``: every fixed-point
+    dot, distance, norm and sketch ends in it), the cosine verify
+    (``_pair_cosine``), the packed IVF cell table and its nearest-cell
+    pick, the bucket-cap guard (``_capped_buckets``) and the band
+    pair expansion (``_bucket_pair_rows``), and the admission verdict
+    (``_admission_verdict``). A copy that drifted would break oracle
+    parity for one query only."""
+    pkg = pathlib.Path(plans.__file__).parent.parent
+    srcs = {
+        str(p.relative_to(pkg)): p.read_text()
+        for d in ("plans", "sources") for p in sorted((pkg / d).glob("*.py"))
+    }
+
+    def where(needle: str) -> dict[str, int]:
+        hits = {name: src.count(needle) for name, src in srcs.items()}
+        return {name: n for name, n in hits.items() if n}
+
+    folds = {name: f for name, src in srcs.items() for f in _int64_sum_folds(src)}
+    assert folds == {"plans/llm_ops.py": "_long_sum"}
+    assert sum(len(_int64_sum_folds(src)) for src in srcs.values()) == 1
+    home = {"plans/llm_ops.py": 1}
+    assert where('.nrm") * F.col(') == home
+    assert where('F.collect_list(F.struct("cell", "centroid"))') == home
+    assert where('F.array_min(_cell_dists(') == home
+    assert where('F.coalesce("n_corpus_neighbors"') == home
+    assert where('F.size("ds") <= ') == home
+    guard = re.compile(r'F\.count\(F\.lit\(1\)\)\.alias\("\w+"\)\)\s*\.filter\(')
+    assert {name for name, src in srcs.items() if guard.search(src)} == set(home)
+    assert len(guard.findall(srcs["plans/llm_ops.py"])) == 1

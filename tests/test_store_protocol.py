@@ -108,3 +108,28 @@ def test_store_protocol_lives_in_one_place():
     assert _hits(r"CLUSTERED BY") == {buckets}
     assert _hits(r"\.bucketBy\(") == {buckets}
     assert _hits(r"def \w*_store_complete\b|def mark_\w*_complete\b") == set()
+
+
+def test_warm_store_reads_run_no_job(spark):
+    """Each plain store table is read with the schema its writer
+    recorded next to the files (``bucketing.read_table``): once the
+    store exists, building the read frame runs no Spark job — no
+    schema-inference pass per read."""
+    from conftest import jobs_during
+    from smart_contract_database_builder_spark.plans.llm_ops import (
+        _ngram_jaccard_pairs_stored,
+        minhash_sigs_stored,
+        neardup_components_stored,
+        simhash_fps_stored,
+    )
+
+    for read in (
+        minhash_sigs_stored,
+        _ngram_jaccard_pairs_stored,
+        simhash_fps_stored,
+        neardup_components_stored,
+    ):
+        read(spark, SF_ORACLE)  # builds the store on first use
+        assert jobs_during(spark, lambda: read(spark, SF_ORACLE)) == [], (
+            read.__name__
+        )
