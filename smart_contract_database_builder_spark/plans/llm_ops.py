@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.store_root import ensure_store, source_fingerprint, store_path
+from ..sources.store_root import ensure_store, store_path
 from ..sources.tables import load_table
 from .materialize import fan_out_if_narrow, pin
 from .registry import QUERIES, register
@@ -1039,8 +1039,8 @@ def _ngram_jaccard_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly the rows the old INNER intersection join never produced.
     # Clean-session A/B: 4.93 s -> 1.9 s. SORT-MERGE hints stay: every
     # relation here is corpus-proportional (the r6 scale-probe lesson —
-    # a size-estimated broadcast here is fatal at scale), and the
-    # packed docsets relation is corpus-proportional too ⇒ pin().
+    # a size-estimated broadcast here is fatal at scale); the packed
+    # docsets feed both sides of the pair attach, so they are pinned.
     # Candidates from the S21 band store (round 11): the signature
     # MIN-aggregate never runs at query time.
     docsets = pin(
@@ -1296,15 +1296,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
     Scale design: each round is one shuffle-join (edges × labels on the
     source id) plus one min-aggregate on the destination id — both hash
     partitions on uniformly-distributed doc ids, so rounds reuse the
-    same partitioning with no skew. ``localCheckpoint`` truncates the
-    lineage each round (an iterative plan would otherwise double in
-    depth per round); on a real cluster use ``spark.checkpoint`` with a
-    checkpoint dir for executor-loss resilience. Near-dup graphs from
-    banded LSH are bucket-local cliques, so diameters are tiny and the
-    fixpoint lands in 2-3 rounds; plain min-propagation needs
-    O(diameter) rounds, and an adversarial long-path graph would want
-    the large-star/small-star variant (O(log n) rounds) — the round
-    structure below is the same, only the message set changes.
+    same partitioning with no skew. ``pin`` truncates the lineage each
+    round (an iterative plan would otherwise double in depth per
+    round). Near-dup graphs from banded LSH are bucket-local cliques,
+    so diameters are tiny and the fixpoint lands in 2-3 rounds; plain
+    min-propagation needs O(diameter) rounds, and an adversarial
+    long-path graph would want the large-star/small-star variant
+    (O(log n) rounds) — the round structure below is the same, only
+    the message set changes.
 
     Driver-side work per round is ONE scalar (the has-any-label-changed
     probe), and it rides the round's own checkpoint job as an observed
@@ -1316,9 +1315,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
     edges = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    sym = pin(
+        edges.unionByName(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+    )
 
     def _round(msgs: DataFrame) -> tuple[DataFrame, int]:
         # neighbor messages carry own=false; a doc's current label rides
@@ -1332,7 +1333,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
         # and the next round's first action, paying the "saved" job
         # twice.)
         obs = Observation()
-        new_labels = (
+        new_labels = pin(
             msgs.groupBy("doc")
             .agg(
                 F.min("lbl").alias("lbl"),
@@ -1345,7 +1346,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
                     F.lit(0),
                 ).alias("changed"),
             )
-            .localCheckpoint(eager=True)
         )
         return new_labels.select("doc", "lbl"), int(obs.get["changed"])
 
@@ -1426,19 +1426,17 @@ def connected_components_star(
     oracle) plus the round-count advantage on a long path are pinned in
     tests/test_connected_components.py / test_components_property.py.
     """
-    edges = (
+    edges = pin(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # every node that appears anywhere — singletons of the PAIR graph
     # don't exist by construction, but roots must survive contraction
-    nodes = (
+    nodes = pin(
         edges.select(F.col("u").alias("doc"))
         .unionByName(edges.select(F.col("v").alias("doc")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -1461,10 +1459,9 @@ def connected_components_star(
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        edges = (
+        edges = pin(
             large.filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # small-star: smaller-or-equal neighbors AND the node itself
         sym = _sym(edges)
@@ -1475,10 +1472,9 @@ def connected_components_star(
         ).unionByName(
             grouped.select(F.col("u"), F.col("m").alias("v")).distinct()
         )
-        edges = (
+        edges = pin(
             small.filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # fixpoint = the (distinct) edge relation is literally unchanged
         # — an exact set comparison over the two checkpointed relations,
@@ -2206,9 +2202,7 @@ def ann_cosine_pairs(
     # without the checkpoint each read re-ran the 64 fixed-point casts,
     # the plane dots and the self-norm per row. One pass + three cheap
     # re-reads replaces three encode passes (the store variants already
-    # get this for free by reading the encode from disk). r18 (VERDICT
-    # #1): the encode is CORPUS-PROPORTIONAL (one row per vector) ⇒
-    # reliable pin(), not executor-local blocks.
+    # get this for free by reading the encode from disk).
     n = pin(_emb_encode(fan_out_if_narrow(emb), n_planes))
     return ann_cosine_pairs_from_rows(n, bucket_cap)
 
@@ -2391,7 +2385,7 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 packed row, but its build is a full corpus posexplode+agg and
     # it is embedded in two DIFFERENT broadcast subtrees (the query row
     # and the corpus assignment) — materialize once.
-    cells = _packed_cells(ivf_quantized_cells(emb)).localCheckpoint()
+    cells = pin(_packed_cells(ivf_quantized_cells(emb)))
     q_cell = (
         sv.filter(F.col("vec_id") == _QUERY_VEC_ID)
         .crossJoin(F.broadcast(cells))
@@ -2593,7 +2587,7 @@ def llm_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 packed row, but its build is a full corpus posexplode+agg and
     # it is embedded in two DIFFERENT broadcast subtrees (the query row
     # and the corpus assignment) — materialize once.
-    cells = _packed_cells(ivf_quantized_cells(emb)).localCheckpoint()
+    cells = pin(_packed_cells(ivf_quantized_cells(emb)))
 
     q = (
         sv.filter(F.col("vec_id") == _QUERY_VEC_ID)
@@ -3331,9 +3325,7 @@ def llm_ann_multitable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bucket sizes, both self-join sides) and each recomputed the 64
     # fixed-point casts plus _ANN_TABLES×_N_PLANES plane dots per row.
     # One pass + three re-reads replaces three encode passes; the 3×
-    # exploded relation is the same one the join shuffles anyway. r18
-    # (VERDICT #1): corpus-proportional (_ANN_TABLES rows per vector) ⇒
-    # reliable pin(), not executor-local blocks.
+    # exploded relation is the same one the join shuffles anyway.
     b = pin(b)
     ok = _capped_buckets(b, ["tbl", "bucket"], _ANN_BUCKET_CAP, min_rows=2)
     x = b.join(F.broadcast(ok), ["tbl", "bucket"]).alias("x")
@@ -3616,6 +3608,8 @@ def curate_documents(
                 ),
             ).alias("n_syl"),
         ]
+    # persist, not pin(): a checkpoint would drop the partitioning
+    # that the keyed consumers below reuse (plans/materialize.py).
     cached = (
         docs.select("doc_id", "lang", "source", _tokens().alias("t"), *extra)
         .repartition("doc_id")
@@ -4536,6 +4530,8 @@ def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
+    # persist, not pin(): a checkpoint would drop the partitioning
+    # that the keyed consumers below reuse (plans/materialize.py).
     pairs = (
         docs.select("doc_id", F.explode(_tokens()).alias("term"))
         .groupBy("doc_id", "term")
@@ -4552,12 +4548,15 @@ def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    ln_table = distinct_vals.select(
-        "v",
-        F.floor(ln_udf(F.col("v").cast("double")) * _LN_MICRO)
-        .cast("long")
-        .alias("ln_micro"),
-    ).localCheckpoint()  # O(distinct counts); read by 2 broadcast joins
+    # read by 2 broadcast joins
+    ln_table = pin(
+        distinct_vals.select(
+            "v",
+            F.floor(ln_udf(F.col("v").cast("double")) * _LN_MICRO)
+            .cast("long")
+            .alias("ln_micro"),
+        )
+    )
     scored = (
         pairs.join(F.broadcast(ln_table), pairs.c == ln_table.v)
         .groupBy("doc_id")
@@ -4641,6 +4640,8 @@ def llm_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
+    # persist, not pin(): a checkpoint would drop the partitioning
+    # that the keyed consumers below reuse (plans/materialize.py).
     dt = (
         docs.select("doc_id", F.explode(_tokens()).alias("term"))
         .groupBy("doc_id", "term")
@@ -4944,9 +4945,7 @@ def llm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows per input partition — but it feeds TWO consumers (candidate
     # set, total count), so left lazy the corpus-wide Arrow sketch pass
     # ran twice. Clean-session A/B 3.3 s -> ~2 s.
-    summaries = hashed.mapInPandas(
-        mg_partition, "h long, total long"
-    ).localCheckpoint()
+    summaries = pin(hashed.mapInPandas(mg_partition, "h long, total long"))
     cands = summaries.filter(F.col("h").isNotNull()).select("h").distinct()
     n_total = summaries.agg(F.sum("total").alias("n"))
     counts = (
@@ -5030,11 +5029,7 @@ def llm_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFr
     # The distinct shingle relation feeds THREE subtrees (per-doc sizes
     # and both sides of the intersection join); each recompute was a
     # full tokenize + shingle explode + distinct pass over the corpus.
-    # Materialize once — the relation the joins shuffle anyway. r18
-    # (VERDICT #1): the relation is CORPUS-PROPORTIONAL, so it goes to
-    # the reliable checkpoint dir via pin(), not executor-local blocks —
-    # at 100 TB a lost executor re-reads instead of failing the query,
-    # and the bytes live where capacity is provisioned.
+    # Materialize once — the relation the joins shuffle anyway.
     sh = pin(
         toked.select(
             "doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s")
@@ -5243,6 +5238,8 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("t", F.col("i")).alias("w1"),
         F.element_at("t", F.col("i") + 1).alias("w2"),
     )
+    # persist, not pin(): a checkpoint would drop the partitioning
+    # that the keyed consumers below reuse (plans/materialize.py).
     big = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
@@ -5263,12 +5260,14 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below — without the checkpoint each broadcast build re-ran the
     # 4-way union of aggregates over `big` plus the libm-ln Python
     # stage. One materialization, four cheap re-reads.
-    ln_table = vals.select(
-        "v",
-        F.floor(ln_udf(F.col("v").cast("double")) * _LN_MICRO)
-        .cast("long")
-        .alias("q"),
-    ).localCheckpoint()
+    ln_table = pin(
+        vals.select(
+            "v",
+            F.floor(ln_udf(F.col("v").cast("double")) * _LN_MICRO)
+            .cast("long")
+            .alias("q"),
+        )
+    )
 
     def q_of(col, alias):
         t = ln_table.alias(alias)
@@ -5362,17 +5361,20 @@ def _km_state(spark: SparkSession, sf_dir: str, iters: int = _KM_ITERS):
     """Shared Lloyd driver for the k-means family: returns
     ``(x6, cent, dist, assign)`` after ``iters`` iterations.
 
-    The K×dim centroid relation is ``localCheckpoint``-ed (eager)
-    after every update so the logical plan stays FLAT: without
-    truncation the centroid accretes one left-join per iteration and a
-    10-iteration run plans a 10-deep join tree before the first task
-    launches. Checkpointing a K×dim (≈512-row) relation costs one tiny
-    job per iteration — the standard price of iterative algorithms on
-    Spark (same pattern as the connected-components loop).
+    The K×dim centroid relation is ``pin``-ned after every update so
+    the logical plan stays FLAT: without truncation the centroid
+    accretes one left-join per iteration and a 10-iteration run plans
+    a 10-deep join tree before the first task launches. Checkpointing
+    a K×dim (≈512-row) relation costs one tiny job per iteration — the
+    standard price of iterative algorithms on Spark (same pattern as
+    the connected-components loop).
     """
     from pyspark import StorageLevel
 
     emb = load_table(spark, sf_dir, "embeddings")
+    # persist, not pin(): every Lloyd iteration reads x6, and the lazy
+    # cache fills inside the first centroid pin's job, where pin(x6)
+    # would cost an eager job of its own (plans/materialize.py).
     x6 = (
         emb.select(
             "vec_id",
@@ -5425,7 +5427,7 @@ def _km_state(spark: SparkSession, sf_dir: str, iters: int = _KM_ITERS):
         # left lazy — no registered query consumes it, so an eager
         # checkpoint there would only burn a job.
         if it < iters - 1:
-            cent = cent.localCheckpoint(eager=True)
+            cent = pin(cent)
     return x6, cent, dist, assign
 
 
@@ -5469,9 +5471,9 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the update is a (cluster, dim)-keyed hash agg of the same exploded
     relation — the textbook distributed-k-means cost, with the
     exploded coordinates PERSISTED across iterations so the corpus is
-    scanned once, not per iteration, and the centroid lineage
-    localCheckpoint-truncated between iterations so the plan stays
-    flat at any iteration count (see ``_km_state``).
+    scanned once, not per iteration, and the centroid lineage pinned
+    between iterations so the plan stays flat at any iteration count
+    (see ``_km_state``).
     """
     _, _, _, assign = _km_state(spark, sf_dir)
     return assign.select(
@@ -6192,44 +6194,12 @@ def _sql_bpe_iteration(i: int) -> str:
     )"""
 
 
-#: Session-scoped BPE trainer cache (round 11): four queries (train /
-#: segment / encode / fertility) consume the SAME trained state, and
-#: each used to re-run the full iterative trainer. Every relation the
-#: trainer returns is eager-localCheckpoint-ed, so the cached
-#: DataFrames are materialized blocks owned by the SparkContext —
-#: valid exactly as long as the (applicationId-keyed) session, and the
-#: corpus fingerprint in the key bars a regenerated corpus from
-#: reusing stale merges. The in-session twin of the store_root
-#: cross-session pattern: CHEAP state cached per session, EXPENSIVE
-#: layouts persisted per corpus.
-_BPE_STATE_CACHE: dict[tuple, tuple] = {}
-
-
 def _bpe_state(spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES):
     """Shared BPE trainer driver: returns ``(merge_rows, v)`` — the
     per-iteration 1-row merge relations and the FINAL segmented
     vocabulary (word, cnt, syms) after ``merges`` iterations. See
-    ``llm_bpe_train_merges`` for the algorithm and scale shape.
-    Cached per (session, corpus fingerprint, merges): the trainer runs
-    once per session however many consumers ask."""
-    import os
-
-    app_id = spark.sparkContext.applicationId
-    key = (
-        app_id,
-        source_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-        merges,
-    )
-    hit = _BPE_STATE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # Evict dead-session entries: bench CLEAN mode builds one session
-    # per query, so applicationId-keyed state would otherwise
-    # accumulate for the process lifetime, pinning localCheckpoint-ed
-    # blocks of STOPPED SparkContexts. Entries for the live session
-    # stay (the whole point of the cache).
-    for stale in [k for k in _BPE_STATE_CACHE if k[0] != app_id]:
-        del _BPE_STATE_CACHE[stale]
+    ``llm_bpe_train_merges`` for the algorithm and scale shape. Each
+    call trains afresh, so every query run pays its own trainer."""
     docs = load_table(spark, sf_dir, "documents")
     v = (
         docs.select(F.explode(_tokens()).alias("word"))
@@ -6259,10 +6229,9 @@ def _bpe_state(spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES):
             )
             .agg(F.sum("cnt").alias("pc"))
         )
-        top = (
+        top = pin(
             pairs.orderBy(F.desc("pc"), "p1", "p2")
             .limit(1)
-            .localCheckpoint(eager=True)
         )
         merge_rows.append(
             top.select(
@@ -6329,7 +6298,7 @@ def _bpe_state(spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES):
             .otherwise(F.col("sym"))
             .alias("sym"),
         )
-        v = (
+        v = pin(
             kept.groupBy("word", "cnt")
             .agg(
                 F.array_sort(F.collect_list(F.struct("pos", "sym"))).alias(
@@ -6341,9 +6310,7 @@ def _bpe_state(spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES):
                 "cnt",
                 F.expr("transform(ps, x -> x.sym)").alias("syms"),
             )
-            .localCheckpoint(eager=True)
         )
-    _BPE_STATE_CACHE[key] = (merge_rows, v)
     return merge_rows, v
 
 
@@ -6386,8 +6353,8 @@ def llm_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     where odd-offsets reproduce greedy exactly) — two window passes
     over word-partitioned symbol rows, no sequential state. Per
     iteration: one pair hash-agg + a 1-row broadcast argmax + windows
-    keyed on the word column; the vocabulary relation is
-    localCheckpoint-ed between iterations so the plan stays flat
+    keyed on the word column; the vocabulary relation is pinned
+    between iterations so the plan stays flat
     (the k-means `_km_state` discipline). Oracle iterations are
     GENERATED from the same ``_BPE_MERGES`` constant, so plan and
     oracle cannot desynchronize.
@@ -6565,9 +6532,9 @@ def llm_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to graph iteration). Scale shape: edges come from the SAME
     bucket-capped candidate generator as the dedup family (degree
     bounded by the cap); each iteration is one src-keyed equi-join +
-    one dst-keyed hash agg on the O(nodes) rank relation, which
-    localCheckpoints between iterations so the plan stays flat at any
-    iteration count. Oracle iterations are GENERATED from ``_PR_ITERS``.
+    one dst-keyed hash agg on the O(nodes) rank relation, which is
+    pinned between iterations so the plan stays flat at any iteration
+    count. Oracle iterations are GENERATED from ``_PR_ITERS``.
     """
     # candidate edges from the S21 band store (round 11): the whole
     # query never touches documents.parquet
@@ -6575,7 +6542,7 @@ def llm_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b"
     )
     # Edge reuse across _PR_ITERS+1 consumers rides an eager
-    # localCheckpoint, NOT persist (r9, closing the r8 perf watch): the
+    # checkpoint, NOT persist (r9, closing the r8 perf watch): the
     # r8 leak fix paired persist with a final extra eager checkpoint of
     # the rank relation purely so the cache could be unpersisted safely
     # — one whole extra materialization per invocation (+26% local).
@@ -6583,11 +6550,13 @@ def llm_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reclaims it when the plan is GC'd — the same lifecycle as the
     # in-loop rank checkpoints), so the final iteration can stay lazy
     # and run exactly once, at the caller's action.
-    edges = cand.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(
-        cand.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = pin(
+        cand.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        ).unionAll(
+            cand.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+        )
+    )
     nodes = edges.groupBy(F.col("src").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -6618,7 +6587,7 @@ def llm_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if i < _PR_ITERS - 1:
-            pr = pr.localCheckpoint(eager=True)
+            pr = pin(pr)
     return pr.select(
         "doc_id",
         F.col("deg").alias("degree"),
@@ -6752,7 +6721,7 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 packed row, but its build is a full corpus posexplode+agg and
     # it is embedded in two DIFFERENT broadcast subtrees (the query row
     # and the corpus assignment) — materialize once.
-    cells = _packed_cells(ivf_quantized_cells(emb)).localCheckpoint()
+    cells = pin(_packed_cells(ivf_quantized_cells(emb)))
     q = (
         sv.filter(F.col("vec_id") == _QUERY_VEC_ID)
         .crossJoin(F.broadcast(cells))
@@ -6804,8 +6773,9 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: any of `_iscale` / `ivf_quantized_cells` / `_pq_code_m` semantics
 #: change: the store survives across sessions, so without the bump a
 #: code change would silently serve codes written under the OLD
-#: arithmetic while the query side computes with the new one.
-_PQ_CODEC_VERSION = 1
+#: arithmetic while the query side computes with the new one. v2: both
+#: tables carry a ``_BUCKET_SPEC`` schema file and are read with it.
+_PQ_CODEC_VERSION = 2
 
 
 def _pq_store_path(sf_dir: str, n_vectors: int) -> str:
@@ -6855,14 +6825,13 @@ def llm_ivfpq_encoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     packed = _packed_cells(read_pq_cells(spark, store))
-    q = (
+    q = pin(
         emb.filter(F.col("vec_id") == _QUERY_VEC_ID)
         .select(
             F.transform("embedding", lambda x: _iscale(x)).alias("qv")
         )
         .crossJoin(F.broadcast(packed))
         .select("qv", "cells", _probe_cells(F.col("qv")).alias("probe_cells"))
-        .localCheckpoint(eager=True)
     )
     probe_cells = [
         r["c"] for r in q.select(F.explode("probe_cells").alias("c")).collect()
@@ -7089,7 +7058,7 @@ def neardup_components_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, signature codec, CC codec) from the S21 band store's
     candidate pairs, then a single parquet scan for every consumer
     (cluster membership, best representative, leakage-aware split).
-    The iterative CC solve — driver-looped, localCheckpoint-ed — runs
+    The iterative CC solve — driver-looped, pinned per round — runs
     once per corpus per codec instead of once per query."""
     from ..sources.cluster_store import read_cluster_map, write_cluster_map
 
@@ -7668,8 +7637,8 @@ def llm_bigram_surprisal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(bigram-vocab) relation (libm ln via the Arrow UDF), floored to
     integer micro-nats; per-doc totals are exact int64 sums with ONE
     double division. Scale shape: one corpus scan collapses into a
-    MATERIALIZED (doc, w1, w2) count relation — ``localCheckpoint``
-    rather than ``persist`` (r8 ADVICE): an unmatched persist leaks one
+    MATERIALIZED (doc, w1, w2) count relation — ``pin`` rather than
+    ``persist`` (r8 ADVICE): an unmatched persist leaks one
     cached corpus-sized relation per invocation across a long driver
     session, while checkpoint storage is reclaimed by the
     ContextCleaner when the plan is released (the same lifecycle the
@@ -7681,7 +7650,7 @@ def llm_bigram_surprisal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", _tokens().alias("t")
     ).filter(F.size("t") >= 2)
-    db = (
+    db = pin(
         docs.select(
             "doc_id",
             F.explode(F.sequence(F.lit(1), F.size("t") - 1)).alias("i"),
@@ -7695,11 +7664,6 @@ def llm_bigram_surprisal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # r18 (VERDICT #1): corpus-proportional ⇒ reliable pin() (file
-    # lifecycle still ContextCleaner-reclaimed via the engine's
-    # cleanCheckpoints conf, so the r8 persist-leak concern stays
-    # addressed; executor loss now re-reads instead of failing).
-    db = pin(db)
     big = db.groupBy("w1", "w2").agg(F.sum("c").alias("c12"))
     uni = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = big.agg(F.countDistinct("w2").alias("v"))
@@ -8124,8 +8088,8 @@ def _sql_kcore_round(i: int) -> str:
     ``MATERIALIZED``: ``alive{{i-1}}`` is referenced TWICE per round,
     so letting DuckDB inline it would re-expand the entire upstream
     pipeline 2^rounds times — materialization is what keeps the
-    unrolled oracle linear in rounds (the Spark side's
-    ``localCheckpoint`` plays the same role)."""
+    unrolled oracle linear in rounds (the Spark side's ``pin`` plays
+    the same role)."""
     return f"""
     deg{i} AS MATERIALIZED (
       SELECT e.src AS doc_id, CAST(COUNT(*) AS BIGINT) AS d
@@ -8187,22 +8151,21 @@ def llm_kcore_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the SAME bucket-capped candidate generator as the dedup
     family (degree bounded by the cap — which also bounds peel rounds:
     degrees only shrink); each round is two node-keyed LEFT SEMI joins
-    + one hash agg on the O(edges) relation, localCheckpoint-ed so the
-    plan stays flat.
+    + one hash agg on the O(edges) relation, pinned so the plan stays
+    flat.
     """
     # candidate edges from the S21 band store (round 11): the whole
     # query never touches documents.parquet
     cand = minhash_candidate_pairs_stored(spark, sf_dir).select(
         "doc_a", "doc_b"
     )
-    edges = (
+    edges = pin(
         cand.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(
             cand.select(
                 F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
             )
         )
-        .localCheckpoint(eager=True)
     )
     alive = edges.select(F.col("src").alias("doc_id")).distinct()
     # Convergence is OBSERVED, not assumed (the CC fail-fast
@@ -8240,10 +8203,9 @@ def llm_kcore_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = None
     for _ in range(_KCORE_ROUNDS):
         deg = _degree_pass(alive)
-        alive = (
+        alive = pin(
             deg.filter(F.col("d") >= _KCORE_K)
             .select("doc_id")
-            .localCheckpoint(eager=True)
         )
         n = alive.count()
         if prev_n is not None and n == prev_n:
@@ -8445,14 +8407,11 @@ def gram_moment_relations(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     # where the r17 form aggregated `partials` twice — and every
     # consumer of the returned pair (covariance's join, mahalanobis,
     # top-pc-power's two collects) re-ran the full-corpus Arrow matmul
-    # per subtree. The aggregated relation is BOUNDED — O(D²) = 2,144
-    # rows at D=64 regardless of corpus size — so an executor-local
-    # localCheckpoint is the right materialization class: the corpus
-    # pass runs exactly once, every consumer reads ≤2.2k rows.
-    mom = (
+    # per subtree. Pinned, the corpus pass runs exactly once and every
+    # consumer reads the O(D²) = 2,144 rows at D=64.
+    mom = pin(
         partials.groupBy("i", "j")
         .agg(F.sum("pp").alias("pp"), F.sum("n").alias("n"))
-        .localCheckpoint()
     )
     prod = mom.filter(F.col("j") >= 0).select("i", "j", "pp")
     sums = mom.filter(F.col("j") == -1).select(
@@ -8876,14 +8835,12 @@ def llm_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     toked = tokenized(docs)
-    # r18 (VERDICT #1, guide §2.3/§5): every consumer (bucket census,
-    # per-doc pass) works from (doc, bucket) COUNTS, so aggregate the
-    # hashed-bigram stream ONCE at that grain — the map-side partial
-    # aggregate collapses the stream to ≤{buckets} rows per doc before
-    # the exchange, and what gets materialized is the collapsed count
-    # relation, not the full bigram stream the r17 form
-    # localCheckpoint-ed to executor-local blocks. pin() writes it to
-    # the reliable checkpoint dir (executor loss re-reads, not fails).
+    # Every consumer (bucket census, per-doc pass) works from
+    # (doc, bucket) COUNTS, so aggregate the hashed-bigram stream ONCE
+    # at that grain — the map-side partial aggregate collapses the
+    # stream to ≤{buckets} rows per doc before the exchange, and what
+    # gets materialized is the collapsed count relation, not the full
+    # bigram stream the r17 form materialized.
     g = pin(
         toked.select(
             "doc_id", F.explode(_word_ngrams(F.col("t"), 2)).alias("s")
@@ -8900,13 +8857,12 @@ def llm_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times (tgt, src, their two totals re-deriving each, and the
     # per-doc pass); now it is two passes (census + per-doc) plus
     # O(buckets) arithmetic.
-    bc = (
+    bc = pin(
         g.groupBy("b")
         .agg(
             F.sum(F.when(is_tgt, F.col("c")).otherwise(0)).alias("tc"),
             F.sum(F.when(~is_tgt, F.col("c")).otherwise(0)).alias("sc"),
         )
-        .localCheckpoint()
     )
     tot = bc.agg(
         F.coalesce(F.sum("tc"), F.lit(0)).alias("tt"),
@@ -9409,11 +9365,8 @@ def llm_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # The tokenize + md5-bucket stream feeds FIVE subtrees (bucket
     # domain, lang axis, train counts, train totals, held-out counts);
-    # materialize it once — pin(): corpus-proportional, so at cluster
-    # scale it goes to the reliable checkpoint dir (VERDICT #1), while
-    # locally it stays an executor-local checkpoint. The per-lang total
-    # DERIVES from the O(langs×buckets) count relation instead of a
-    # second train pass.
+    # materialize it once. The per-lang total DERIVES from the
+    # O(langs×buckets) count relation instead of a second train pass.
     #
     # Examined and REVERTED (r18): collapsing the five consumers onto
     # one (doc, lang, bucket) COUNT aggregate measured faster in clean
@@ -9438,10 +9391,10 @@ def llm_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     heldout = tok.filter(is_held)
     dom = tok.select("b").distinct()
     langs = train.select("lang").distinct()
-    cnt = (
+    # feeds the grid + totals
+    cnt = pin(
         train.groupBy("lang", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # O(langs × buckets); feeds the grid + totals
     )
     tot = cnt.groupBy("lang").agg(F.sum("c").alias("t"))
     ln = _ln_libm()
@@ -11173,9 +11126,7 @@ def llm_setsim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost from 6.2 s to ~2 s; the other is the rank-free prefix
     # ordering below). In
     # production the shingle relation is store-paid (S21 discipline);
-    # this materialization is the in-query equivalent. r18 (VERDICT #1):
-    # corpus-proportional ⇒ reliable checkpoint via pin(), not
-    # executor-local blocks.
+    # this materialization is the in-query equivalent.
     sh = pin(
         toked.select("doc_id", F.explode(_word_ngrams(F.col("t"))).alias("s"))
         .distinct()
@@ -11196,11 +11147,8 @@ def llm_setsim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputed per self-join side — TWO copies of the dfs aggregate,
     # the sizes join and the per-doc window in one plan. r18 (VERDICT
     # #9): materialize at the ORDERED grain, one step above r17's
-    # prefix grain — checkpoints preserve physical partitioning, and
-    # the window leaves `ordered` hash-partitioned by doc_id, so the
-    # verify stage's docsets aggregate below consumes it EXCHANGE-FREE
-    # (the r17 form re-shuffled the full shingle stream by doc_id a
-    # second time), while the prefix sides read it as a cheap filter.
+    # prefix grain: both prefix sides read it as a cheap filter, and
+    # the verify stage's docsets aggregate below reads it too.
     ordered = pin(
         sh.join(dfs, "s")
         .join(sizes, "doc_id")
@@ -11277,10 +11225,10 @@ def llm_setsim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the row count and drops both verify sorts. The overlap count o
     # (array_intersect of two duplicate-free arrays) is the same
     # integer, so the gate and the one double divide are unchanged.
-    # The aggregate still shuffles: the checkpoint scan of `ordered`
-    # does not carry its doc_id partitioning into this plan, so the
-    # executed plan runs a partial collect_list, an Exchange on doc_id
-    # and the final collect_list (read off the executed plan at sf0.01).
+    # The aggregate still shuffles: under AQE the checkpoint scan of
+    # `ordered` reports no partitioning, so the executed plan runs a
+    # partial collect_list, an Exchange on doc_id and the final
+    # collect_list (read off the executed plan at sf0.01).
     docsets = ordered.groupBy("doc_id").agg(F.collect_list("s").alias("ss"))
     da = docsets.select(F.col("doc_id").alias("da"), F.col("ss").alias("ssa"))
     db = docsets.select(F.col("doc_id").alias("db"), F.col("ss").alias("ssb"))
@@ -12986,8 +12934,7 @@ def llm_semantic_outlier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three consumers (the median agg, the MAD agg, the final report)
     # read the scored relation; each recompute was a full encode +
     # centroid agg + two decimal(38,0) dot folds per row. Materialize
-    # the 3-column scores once. r18 (VERDICT #1): one row per vector ⇒
-    # corpus-proportional ⇒ reliable pin().
+    # the 3-column scores once.
     cosr = pin(
         sv.join(F.broadcast(cent), "label").select(
             "vec_id",
@@ -13241,7 +13188,7 @@ def llm_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two-level agg over the corpus — and this relation feeds THREE
     # subtrees (the broadcast centroid list, the cell count, the axis
     # join). Materialize once.
-    cell_rows = ivf_quantized_cells(emb).localCheckpoint()
+    cell_rows = pin(ivf_quantized_cells(emb))
     sizes = (
         sv.crossJoin(F.broadcast(_packed_cells(cell_rows)))
         .select(_nearest_cell(F.col("sv")).alias("cell"))
@@ -14859,6 +14806,8 @@ def llm_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("t", F.col("i")).alias("w1"),
         F.element_at("t", F.col("i") + 1).alias("w2"),
     )
+    # persist, not pin(): a checkpoint would drop the partitioning
+    # that the keyed consumers below reuse (plans/materialize.py).
     big = (
         pairs.groupBy("lang", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
@@ -14876,12 +14825,15 @@ def llm_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(sb_pre.select(F.col("n").alias("v")))
         .distinct()
     )
-    ln_table = distinct_vals.select(
-        "v",
-        F.floor(ln_udf(F.col("v").cast("double")) * _LN_MICRO)
-        .cast("long")
-        .alias("ln_micro"),
-    ).localCheckpoint()  # O(distinct counts); read by 3 broadcast joins
+    # read by 3 broadcast joins
+    ln_table = pin(
+        distinct_vals.select(
+            "v",
+            F.floor(ln_udf(F.col("v").cast("double")) * _LN_MICRO)
+            .cast("long")
+            .alias("ln_micro"),
+        )
+    )
     sl_bg = (
         big.join(F.broadcast(ln_table), big.c12 == ln_table.v)
         .groupBy("lang")
@@ -15820,7 +15772,7 @@ def llm_substring_run_histogram(
     # The run relation (tiny: shared positions merged per doc) feeds
     # BOTH the total and the histogram; materialize it once instead of
     # re-running the whole gram pipeline per consumer.
-    runs = pin(  # r18: duplicated-mass-proportional => reliable pin()
+    runs = pin(
         _substr_shared_runs(_substr_gram_positions(spark, sf_dir))
     )
     tot = runs.agg(F.sum("run_len").alias("dup_total"))
@@ -15938,7 +15890,7 @@ def llm_substring_pair_maxrun(
     wnd = Window.partitionBy("gh").orderBy("doc_id")
     wg = Window.partitionBy("gh")
     wocc = Window.partitionBy("gh", "doc_id").orderBy("pos")
-    occ = (
+    occ = pin(
         grams.withColumn("dr", F.dense_rank().over(wnd))
         .withColumn("nd", F.max("dr").over(wg))
         .filter((F.col("nd") >= 2) & (F.col("nd") <= _SUBSTR_DF_CAP))
@@ -15946,9 +15898,6 @@ def llm_substring_pair_maxrun(
         .filter(F.col("rn") <= _SUBSTR_POS_CAP)
         .select("gh", "doc_id", "pos")
     )
-    # r18: bounded per gram but the gram axis is corpus-proportional
-    # => reliable pin(), not executor-local blocks (VERDICT #1).
-    occ = pin(occ)
     a = occ.select(
         "gh", F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa")
     )
@@ -17894,14 +17843,11 @@ def llm_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions are counted from bucket multiplicities, never
     materialized as pairs.
     """
-    ct = (
+    ct = pin(
         load_table(spark, sf_dir, "documents")
         .select(F.md5("text").alias("h"))
         .distinct()
     )
-    # r18: one 128-bit key per distinct content => corpus-proportional
-    # => reliable pin() (VERDICT #1).
-    ct = pin(ct)
     d = ct.agg(F.count(F.lit(1)).cast("long").alias("n_contents"))
     nd = (
         load_table(spark, sf_dir, "documents")
@@ -18293,13 +18239,13 @@ def llm_isotonic_quality_calibration(
     side alternative only when B stops being bounded.
     """
     lab = _quality_dup_labels(spark, sf_dir)
-    b = (
+    # feeds 3 joins below
+    b = pin(
         lab.groupBy(F.col("bin").cast("long").alias("bin"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("is_dup").cast("long").alias("d"),
         )
-        .localCheckpoint()  # bounded axis; feeds 3 joins below
     )
     pr = (
         b.select(F.col("bin").alias("jb"))
@@ -18484,7 +18430,7 @@ def llm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine; skew-immune by construction). Chunk text never moves:
     the frequency join carries only (hash, len).
     """
-    s = (
+    s = pin(
         fan_out_if_narrow(
             load_table(spark, sf_dir, "documents").select(
                 "doc_id", "source", F.substring("text", 1, _CDC_CAP).alias("s")
@@ -18492,10 +18438,6 @@ def llm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("len", F.length("s").cast("long"))
     )
-    # r18: per-doc capped TEXT payload => the heaviest corpus-
-    # proportional materialization in the file => reliable pin()
-    # (VERDICT #1: executor-local disk may simply not fit this one).
-    s = pin(s)
     cut_hash = (
         fan_out_if_narrow(s)
         .select(
@@ -18710,15 +18652,13 @@ def llm_retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe; the pair stage is then pure int64 multiply-adds.
     emb = load_table(spark, sf_dir, "embeddings")
     norm2 = _long_sum(F.transform("x", lambda v: v * v))
-    d2 = (
+    d2 = pin(
         emb.select(
             F.col("vec_id").alias("vid"),
             F.transform("embedding", _iscale).alias("x"),
         )
         .withColumn("dd", norm2)
     )
-    # r18: one row per vector => corpus-proportional => reliable pin().
-    d2 = pin(d2)
     q = d2.filter(F.col("vid").isin(*_RETR_QUERY_IDS)).select(
         F.col("vid").alias("qid"),
         F.col("x").alias("qx"),
@@ -18726,7 +18666,7 @@ def llm_retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idot = _sv_dot("x", "qx")
     ham = _sign_hamming("x", "qx")
-    cand = (
+    cand = pin(
         d2.join(F.broadcast(q), F.col("vid") != F.col("qid"))
         .select(
             "qid",
@@ -18741,8 +18681,6 @@ def llm_retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ham.alias("hamming"),
         )
     )
-    # r18: Q*N rows (Q fixed) => corpus-proportional => reliable pin().
-    cand = pin(cand)
     truth = (
         cand.withColumn(
             "truth_rank",

@@ -1,36 +1,32 @@
 """Materialization and plan-shape helpers shared across plan modules.
 
-Two mechanisms, chosen by the SIZE CLASS of the relation (optimization
-guide §5, r17 VERDICT #1):
+``pin(df)`` is the engine's one checkpoint call: every relation a
+query materializes — a multi-consumer intermediate, an iterative
+loop's state, a result that must outlive its temp inputs — goes
+through it. Under ``local[*]`` it is ``localCheckpoint(eager=True)``;
+on a cluster manager it writes the relation once to the checkpoint
+directory (a replicated filesystem), so a lost executor re-reads
+instead of failing the query (see ``_reliable_wanted``). Call sites
+say only why a relation is materialized: how many consumers read it,
+or that a loop needs its lineage cut.
 
-- ``pin(df)`` — RELIABLE checkpoint for CORPUS-PROPORTIONAL relations
-  (token/shingle/gram streams, per-vector encodes, distinct-value
-  domains that grow with the fact table). ``localCheckpoint`` stores
-  blocks on executors only and truncates lineage, so at 100 TB a single
-  lost executor kills the query and executor-local disk may simply not
-  fit the relation. ``pin`` instead writes the relation ONCE to the
-  checkpoint directory — on a cluster that is a reliable, replicated
-  filesystem (HDFS / object store), locally the engine scratch dir —
-  so executor loss re-reads instead of failing, and the bytes live
-  where capacity is provisioned. The relation is persisted for the
-  duration of the checkpoint write (so the subtree computes ONCE, not
-  twice — ``RDD.doCheckpoint`` otherwise re-runs the lineage to write
-  the files) and unpersisted immediately (no CacheManager entry
-  outlives the call: nothing is memoized across invocations — each
-  call recomputes from the parquet inputs).
+``pin`` never caches across runs: each call materializes afresh
+(RDD-instance keyed, not plan keyed), and the checkpoint data is
+reclaimed by the ContextCleaner (the engine session sets
+``spark.cleaner.referenceTracking.cleanCheckpoints``) when the
+plan is released. No builder keeps state between query runs.
 
-- ``localCheckpoint`` (used directly at the call sites) — for BOUNDED
-  relations (O(dims²) moments, O(days) dailies, O(K) centroids, packed
-  1-row cell tables) and for ITERATIVE loop states, where lineage
-  truncation is the point (plan growth) and a lost block is cheap to
-  re-run from the query restart. Each call site carries its size-class
-  rationale; the r18 disposition table in OPTIMIZATION_r18.md lists
-  every site.
-
-``pin`` never caches across runs: checkpoint files are written fresh
-per invocation (RDD-instance keyed, not plan keyed) and reclaimed by
-the ContextCleaner (``spark.cleaner.referenceTracking.cleanCheckpoints``
-is set by the engine session) when the plan is released.
+Six relations are ``persist``-ed instead (``curate_documents``,
+``llm_token_entropy``, ``llm_unigram_surprisal``,
+``llm_pmi_collocations``, ``llm_bigram_entropy_rate`` and
+``_km_state``). Under AQE a checkpoint reports
+``UnknownPartitioning(0)``, so each keyed consumer of a pinned
+aggregate re-shuffles it: pinning these five kept the rows but raised
+the final-plan Exchanges (``llm_curation_pipeline`` 2 → 13,
+``llm_pmi_collocations`` 1 → 10, ``llm_bigram_entropy_rate`` 2 → 9).
+``_km_state``'s lazy cache fills inside the first iteration's job,
+where a pin would add one. Nothing unpersists them yet; releasing
+them needs a query-run scope that owns a query's cached relations.
 """
 
 from __future__ import annotations
@@ -91,7 +87,7 @@ def _reliable_wanted(df: DataFrame) -> bool:
     in local mode: driver and executor share one process, so "executor
     loss" is job death either way, and the reliable write would buy
     only a serialize-to-disk round trip per call (~0.5-1 s per
-    corpus-proportional relation at bench SF, measured). On yarn/k8s/
+    corpus-sized relation at bench SF, measured). On yarn/k8s/
     standalone the write goes to the configured checkpoint dir
     (replicated FS) and executor loss re-reads instead of failing.
     ``spark.scdb.materialize.reliable`` overrides either way (tests
@@ -104,10 +100,9 @@ def _reliable_wanted(df: DataFrame) -> bool:
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """Materialize a corpus-proportional, multi-consumer relation once,
-    recoverably at cluster scale (see module docstring). Eager: the
-    relation computes here, exactly once, and every consumer reads the
-    materialized blocks/files.
+    """Materialize ``df`` once, recoverably at cluster scale (see module
+    docstring). Eager: the relation computes here, exactly once, and
+    every consumer reads the materialized blocks/files.
     """
     if not _reliable_wanted(df):
         return df.localCheckpoint(eager=True)

@@ -27,6 +27,7 @@ from ..compilestage import stage
 from ..schemas import METADATA_SCHEMA
 from ..sources import contracts as C
 from ..sources.tables import load_table
+from .materialize import pin
 from .registry import register
 
 _FILES = fixtures.contract_files_values_sql()
@@ -485,12 +486,12 @@ def ref_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         first = sink.store_contracts(parsed, db)
         second = sink.store_contracts(parsed, db)  # must be a no-op
         back = sink.read_contracts(spark, db)
-        return (
+        # materialize before the temp dir vanishes
+        return pin(
             back.groupBy("source_type")
             .agg(SF.count(SF.lit(1)).alias("n_contracts"))
             .withColumn("first_load_rows", SF.lit(first).cast("long"))
             .withColumn("second_load_rows", SF.lit(second).cast("long"))
-            .localCheckpoint()  # materialize before the temp dir vanishes
         )
 
 

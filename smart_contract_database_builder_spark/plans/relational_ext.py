@@ -3660,9 +3660,7 @@ def agg_functional_dependencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both — each arm's count-distinct-per-determinant is just a row
     # count per key over the deduped pairs. One lineitem scan and one
     # pair-dedup exchange replace two scans and two countDistinct
-    # shuffles. The pair relation is catalog-proportional (bounded by
-    # |part×supplier| sourcing pairs, not fact rows) but still grows
-    # with the dataset ⇒ reliable pin(), not executor-local blocks.
+    # shuffles.
     ok = (
         li.select("l_orderkey", "l_suppkey")
         .groupBy("l_orderkey")
@@ -4567,8 +4565,7 @@ def agg_brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (order, brand) distinct feeds FOUR subtrees (brand counts, order
     # total, both self-join sides); each recompute was a lineitem⋈part
     # join + distinct. Materialize once.
-    ob = pin(  # r18: one row per order×brand ⇒ fact-proportional ⇒
-        # reliable pin(), not executor-local blocks (VERDICT #1)
+    ob = pin(
         li.join(part, li.l_partkey == part.p_partkey)
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("brand"))
         .distinct()
@@ -5883,7 +5880,7 @@ def _prefix_sums(
     inclusive); ``key`` must be distinct per row (a grouped-by-value
     relation).
 
-    Callers should ``localCheckpoint()`` the input first: it is
+    Callers should ``pin()`` the input first: it is
     consumed by multiple downstream branches (in-bucket scan, bucket
     summary, the caller's totals), and without lineage truncation each
     branch re-derives it from the CORPUS scan — 4 full table reads for
@@ -6025,10 +6022,13 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("g"),
     )
-    dv = v.groupBy("cents").agg(
-        F.sum("g").cast("long").alias("c1"),
-        F.count(F.lit(1)).cast("long").alias("c"),
-    ).localCheckpoint()  # one corpus scan feeds all downstream branches
+    # one corpus scan feeds all downstream branches
+    dv = pin(
+        v.groupBy("cents").agg(
+            F.sum("g").cast("long").alias("c1"),
+            F.count(F.lit(1)).cast("long").alias("c"),
+        )
+    )
     rk = _prefix_sums(dv, "cents", [("c", "cb", False)])
     s = rk.agg(
         F.sum("c1").cast("long").alias("n1"),
@@ -6132,10 +6132,13 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("g"),
         )
     )
-    dv = v.groupBy("cents").agg(
-        F.sum("g").cast("long").alias("c1"),
-        (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("c2"),
-    ).localCheckpoint()  # one corpus scan feeds all downstream branches
+    # one corpus scan feeds all downstream branches
+    dv = pin(
+        v.groupBy("cents").agg(
+            F.sum("g").cast("long").alias("c1"),
+            (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("c2"),
+        )
+    )
     cum = _prefix_sums(dv, "cents", [("c1", "f1", True), ("c2", "f2", True)])
     n = dv.agg(
         F.sum("c1").cast("long").alias("n1"),
@@ -6699,19 +6702,17 @@ def agg_chi_square_independence(
     """
     o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cell = (
+    # The ≤25-row cell relation feeds six consumers (row/col margins,
+    # total, the term join, and the dof counts) — left lazy, each
+    # re-ran the orders⋈customer join + cell aggregate over the corpus.
+    # Clean-session A/B 3.9 s -> ~1 s.
+    cell = pin(
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(
             F.col("o_orderpriority").alias("pri"),
             F.col("c_mktsegment").alias("seg"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("obs"))
-        # r18 (guide §1.2/§5): this ≤25-row BOUNDED relation feeds six
-        # consumers (row/col margins, total, the term join, and the
-        # dof counts) — left lazy, each re-ran the orders⋈customer
-        # join + cell aggregate over the corpus. Clean-session A/B
-        # 3.9 s -> ~1 s.
-        .localCheckpoint()
     )
     rt = cell.groupBy("pri").agg(F.sum("obs").cast("long").alias("rtot"))
     ct = cell.groupBy("seg").agg(F.sum("obs").cast("long").alias("ctot"))
@@ -7184,10 +7185,9 @@ def agg_systematic_sample_estimate(
     )
 
 
-#: Z-order audit geometry: 8-bit normalized dims, 64 buckets per
-#: layout, and the probe windows (day range, quantity range, or both;
-#: -1/10**9 sentinels mean "unconstrained").
-_ZO_BUCKETS = 64
+#: Z-order audit geometry: 8-bit normalized dims and the probe windows
+#: (day range, quantity range, or both; -1/10**9 sentinels mean
+#: "unconstrained").
 _ZO_BITS = 8
 _ZO_PROBES = (
     ("q1_1996_dates", 1461, 1551, -1, 1_000_000_000),
@@ -7400,8 +7400,7 @@ def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d, cents, n) daily-revenue relation — exact integer cents, one
     orders scan, map-side combine; the bounded base every statistic in
     this section works from. Callers that branch it more than once
-    should ``localCheckpoint()`` (the iterative-CC discipline: the
-    100 TB scan happens exactly once, the O(days) result is tiny)."""
+    should ``pin()`` it, so the orders scan happens exactly once."""
     return (
         _t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("d"))
@@ -7461,7 +7460,7 @@ def agg_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop broadcast is over the bounded axis, the reason it sits
     on the plan-hygiene allowlist) → one 1-row reduce.
     """
-    daily = _daily_rev(spark, sf_dir).localCheckpoint()
+    daily = pin(_daily_rev(spark, sf_dir))
     a = daily.select(
         F.col("d").alias("da"), F.col("cents").alias("ca"),
         F.col("n").alias("na"),
@@ -7585,27 +7584,28 @@ def agg_theilsen_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair sort, no full-width prefix window, and nothing grows with
     corpus rows.
     """
-    daily = _daily_rev(spark, sf_dir).localCheckpoint()
+    daily = pin(_daily_rev(spark, sf_dir))
     a = daily.select(F.col("d").alias("da"), F.col("cents").alias("ca"))
     b = daily.select(F.col("d").alias("db"), F.col("cents").alias("cb"))
     p = a.join(b, F.col("da") < F.col("db")).select(
         ((F.col("cb") - F.col("ca")) * _SEN_SCALE).alias("num"),
         F.datediff("db", "da").cast("long").alias("dd"),
     )
-    # The O(days²) slope relation is bounded by the date domain at any
-    # corpus size; materialize it ONCE — both the bucket census and the
+    # Materialize the slope relation ONCE — both the bucket census and the
     # median-bucket drill-down read it. (The previous form hash-agged
     # all ~days²/2 NEARLY-DISTINCT quantized slopes and ran full-width
     # prefix windows over them twice — the rank lookup only ever needs
     # ONE bucket's rows resolved.)
-    sl = p.select(
-        F.expr("(num - pmod(num, dd)) div dd").alias("slope_q")
-    ).localCheckpoint()
+    sl = pin(
+        p.select(
+            F.expr("(num - pmod(num, dd)) div dd").alias("slope_q")
+        )
+    )
     bkt = F.floor(F.col("slope_q") / F.lit(_RANK_BUCKET))
-    bsum = (
+    # the census feeds the slope total and the median-bucket pick
+    bsum = pin(
         sl.groupBy(bkt.alias("b"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()  # O(slope range / bucket width) rows
     )
     m = bsum.agg(F.sum("c").cast("long").alias("m"))
     w_b = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
@@ -7729,7 +7729,7 @@ def agg_changepoint_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the date-domain-bounded relation (~2.4k rows — the global
     window is over the BOUNDED axis, not the corpus) → 1-row result.
     """
-    daily = _daily_rev(spark, sf_dir).localCheckpoint()
+    daily = pin(_daily_rev(spark, sf_dir))
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     idx = daily.select(
         "d",
@@ -7830,7 +7830,7 @@ def agg_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     day axis → 1-row statistic. Nothing corpus-proportional past the
     first aggregate.
     """
-    daily = _daily_rev(spark, sf_dir).localCheckpoint()
+    daily = pin(_daily_rev(spark, sf_dir))
     rk = daily.select(
         "cents",
         F.row_number().over(Window.orderBy("cents", "d")).alias("r"),
@@ -7944,7 +7944,7 @@ def agg_autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     EQUI-join on the shifted date (never a range scan) → O(lags)
     rollup. Bounded by the date domain, constant in corpus rows.
     """
-    daily = _daily_rev(spark, sf_dir).localCheckpoint()
+    daily = pin(_daily_rev(spark, sf_dir))
     lags = spark.createDataFrame(
         [(k,) for k in _ACF_LAGS], "lag int"
     )
@@ -8122,10 +8122,13 @@ def agg_quantile_treatment_effect(
         .otherwise(0)
         .alias("g"),
     )
-    dv = v.groupBy("cents").agg(
-        F.sum("g").cast("long").alias("c1"),
-        (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("c2"),
-    ).localCheckpoint()  # one corpus scan feeds all downstream branches
+    # one corpus scan feeds all downstream branches
+    dv = pin(
+        v.groupBy("cents").agg(
+            F.sum("g").cast("long").alias("c1"),
+            (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("c2"),
+        )
+    )
     cum = _prefix_sums(dv, "cents", [("c1", "f1", True), ("c2", "f2", True)])
     n = dv.agg(
         F.sum("c1").cast("long").alias("n1"),
@@ -8311,18 +8314,21 @@ def join_er_duplicate_listings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm_ops import _ln_libm  # lazy: avoids a module import cycle
 
     ln = _ln_libm()
-    px = _t(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.split("p_name", " ").getItem(0).alias("adj"),
-        F.split("p_name", " ").getItem(1).alias("noun"),
-        "p_brand",
-        F.col("p_type").alias("typ"),
-        F.col("p_size").cast("long").alias("siz"),
-        F.expr(
-            "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-            " div 1000"
-        ).alias("pb"),
-    ).localCheckpoint()  # one scan feeds marginals + window + rollup
+    # one scan feeds marginals + window + rollup
+    px = pin(
+        _t(spark, sf_dir, "part").select(
+            "p_partkey",
+            F.split("p_name", " ").getItem(0).alias("adj"),
+            F.split("p_name", " ").getItem(1).alias("noun"),
+            "p_brand",
+            F.col("p_type").alias("typ"),
+            F.col("p_size").cast("long").alias("siz"),
+            F.expr(
+                "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                " div 1000"
+            ).alias("pb"),
+        )
+    )
 
     def u_of(feat: str) -> DataFrame:
         c = px.groupBy(feat).agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -8958,13 +8964,13 @@ def agg_event_weekday_mutual_info(
     ev = _t(spark, sf_dir, "events").select(
         "event_type", F.col("ts").cast("date").alias("d")
     )
-    cells = (
+    # one corpus scan feeds all four rollups
+    cells = pin(
         ev.groupBy(
             "event_type",
             F.dayofweek("d").cast("long").alias("weekday"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
-        .localCheckpoint()  # one corpus scan feeds all four rollups
     )
     rowt = cells.groupBy("event_type").agg(
         F.sum("n_cell").cast("long").alias("n_type")
@@ -8983,16 +8989,19 @@ def agg_event_weekday_mutual_info(
     lnarg = (
         F.col("n_cell").cast("double") * F.col("nn").cast("double")
     ) / (F.col("n_type").cast("double") * F.col("n_weekday").cast("double"))
-    pm = pm.withColumn("pmi_nats", ln(lnarg)).withColumn(
-        "cq",
-        F.floor(
-            (
-                (F.col("n_cell").cast("double") / F.col("nn").cast("double"))
-                * F.col("pmi_nats")
-            )
-            * F.lit(scale)
-        ).cast("long"),
-    ).localCheckpoint()  # pin the bounded cell axis: 3 consumers below
+    # the cell axis feeds 3 consumers below
+    pm = pin(
+        pm.withColumn("pmi_nats", ln(lnarg)).withColumn(
+            "cq",
+            F.floor(
+                (
+                    (F.col("n_cell").cast("double") / F.col("nn").cast("double"))
+                    * F.col("pmi_nats")
+                )
+                * F.lit(scale)
+            ).cast("long"),
+        )
+    )
     hrow = (
         rowt.crossJoin(F.broadcast(tot))
         .withColumn(
@@ -9200,18 +9209,21 @@ def agg_logrank_reorder_by_segment(
             / (F.col("n1") + F.col("n2") - 1).cast("double")
         )
     )
-    ev = risk.filter(F.col("d1") + F.col("d2") > 0).select(
-        "t",
-        "n1",
-        "n2",
-        "d1",
-        "d2",
-        e1.alias("e1"),
-        F.floor((F.col("d1").cast("double") - e1) * F.lit(scale))
-        .cast("long")
-        .alias("oeq"),
-        F.floor(vterm * F.lit(scale)).cast("long").alias("vq"),
-    ).localCheckpoint()  # bounded axis; feeds the stat and the rows
+    # feeds the stat and the rows
+    ev = pin(
+        risk.filter(F.col("d1") + F.col("d2") > 0).select(
+            "t",
+            "n1",
+            "n2",
+            "d1",
+            "d2",
+            e1.alias("e1"),
+            F.floor((F.col("d1").cast("double") - e1) * F.lit(scale))
+            .cast("long")
+            .alias("oeq"),
+            F.floor(vterm * F.lit(scale)).cast("long").alias("vq"),
+        )
+    )
     st = ev.agg(
         F.sum("oeq").cast("long").alias("oq"),
         F.sum("vq").cast("long").alias("vvq"),

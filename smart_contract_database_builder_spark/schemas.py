@@ -30,9 +30,6 @@ CONTRACT_SCHEMA = T.StructType(
     ]
 )
 
-#: Valid values of the reference's source_type enum (src/db.rs:62).
-SOURCE_TYPES = ("json", "vyper", "single_sol", "multi_sol")
-
 #: Function row — reference src/db.rs:74-84.
 FUNCTION_SCHEMA = T.StructType(
     [
@@ -58,18 +55,6 @@ METADATA_SCHEMA = T.StructType(
         T.StructField("BytecodeHash", T.StringType(), True),
     ]
 )
-
-#: One source file {name, content} (reference src/plain_contract.rs:80-83).
-SOURCE_FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-    ]
-)
-
-#: Processing-shape source: discriminator + uniform file array (single-file
-#: variants are 1-element arrays) — SURVEY.md §1.1 ContractSource mapping.
-FILES_SCHEMA = T.ArrayType(SOURCE_FILE_SCHEMA)
 
 #: Etherscan raw row — all strings (reference src/plain_contract.rs:38-50).
 ETHERSCAN_RAW_SCHEMA = T.StructType(

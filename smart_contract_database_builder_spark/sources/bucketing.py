@@ -33,7 +33,9 @@ read fires no job either.
 This module is the one writer and reader of every store table: the
 bucketed ones (the fact tables, the MinHash bands, the hyperplane
 buckets) and the plain ones (the MinHash signatures, the verified
-pairs, the SimHash prints, the cluster map); the stores' build gate
+pairs, the SimHash prints, the cluster map, the IVF-PQ cell table; the
+cell-partitioned IVF-PQ codes leave the same spec file and are read
+with ``read_table`` too); the stores' build gate
 and publish are ``store_root.ensure_store``'s. Demonstrated and
 plan-asserted (no Exchange in the joined plan) in
 tests/test_bucketing_layout.py.

@@ -15,6 +15,10 @@ partition-prunes natively — the encode pass runs ONCE at ingest:
 - ``cells/`` — the K-row coarse-quantizer table ``(cell, centroid)``,
   read back at query time for the ADC lookup tables (broadcast-sized).
 
+Both tables carry the ``_BUCKET_SPEC`` file of ``sources/bucketing.py``
+(no buckets) and are read with the schema it records, so a warm store
+read runs no schema-inference job.
+
 Everything is the same exact int64 fixed-point arithmetic as the
 query-time form (``ivf_quantized_cells`` / ``_pq_code_m``), so a
 read-path query over this store returns BIT-IDENTICAL results to
@@ -32,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .bucketing import _write_spec, read_table, write_table
 
 
 def write_pq_encoded(emb: DataFrame, path: str) -> None:
@@ -64,22 +70,23 @@ def write_pq_encoded(emb: DataFrame, path: str) -> None:
         "cell",
         *[_pq_code_m(F.col("sv"), m).alias(f"c{m}") for m in range(_PQ_M)],
     )
-    cells.write.mode("overwrite").parquet(f"{path}/cells")
+    write_table(cells, f"{path}/cells")
     (
         codes.repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(f"{path}/codes")
     )
+    _write_spec(codes, f"{path}/codes", 0, ())
 
 
 def read_pq_codes(spark: SparkSession, path: str) -> DataFrame:
     """The partitioned codes table; filters on ``cell`` become
     ``PartitionFilters`` (directory pruning, no file I/O for unprobed
     cells)."""
-    return spark.read.parquet(f"{path}/codes")
+    return read_table(spark, f"{path}/codes")
 
 
 def read_pq_cells(spark: SparkSession, path: str) -> DataFrame:
     """The K-row coarse-quantizer table ``(cell, centroid)``."""
-    return spark.read.parquet(f"{path}/cells")
+    return read_table(spark, f"{path}/cells")

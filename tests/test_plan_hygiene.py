@@ -107,7 +107,7 @@ _NESTED_LOOP_ALLOWED = {
 #: Queries whose fn() triggers side effects/execution rather than just
 #: building a plan worth linting.
 _SKIP = {
-    "ref_sink_roundtrip",               # materialized via localCheckpoint
+    "ref_sink_roundtrip",               # materialized via pin
     "stream_true_tumbling_availablenow",  # executes a streaming query
     "stream_true_point_in_time",        # executes a streaming query
     "stream_stateful_running_totals",   # executes a streaming query

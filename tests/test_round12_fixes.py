@@ -97,19 +97,6 @@ def test_publish_build_raises_without_complete_store(tmp_path, monkeypatch):
         publish_build(t, final)
 
 
-def test_bpe_state_cache_evicts_dead_sessions(spark, monkeypatch):
-    """Entries keyed by a STOPPED session's applicationId must be
-    evicted on the next _bpe_state call (bench CLEAN mode creates one
-    session per query; retained entries pin dead localCheckpoint-ed
-    DataFrames for the process lifetime)."""
-    monkeypatch.setitem(
-        llm_ops._BPE_STATE_CACHE, ("dead-app-id", "fp", 1), ("x", "y")
-    )
-    llm_ops._bpe_state(spark, SF_TINY, merges=1)
-    live = spark.sparkContext.applicationId
-    assert all(k[0] == live for k in llm_ops._BPE_STATE_CACHE)
-
-
 def test_bench_session_sets_local_dir(monkeypatch):
     """bench.py's session must point spark.local.dir away from bare
     /tmp. The bench builds through ``session.get_spark``, so it also

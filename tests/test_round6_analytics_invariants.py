@@ -564,7 +564,7 @@ def test_approx_top_k_sketch_brackets_exact_heavy_hitters(spark):
 def test_kmeans_six_iterations_plan_stays_flat(spark):
     """VERDICT r6 nit #2: the centroid relation used to accrete one
     left-join per iteration, so _KM_ITERS=10 would plan a 10-deep join
-    tree. _km_state now localCheckpoint-truncates the centroid between
+    tree. _km_state now pin-truncates the centroid between
     iterations — a 6-iteration run must (a) still satisfy the Lloyd
     argmin invariant and (b) plan with a bounded join count: the final
     assignment's optimized plan sees only the LAST iteration's joins

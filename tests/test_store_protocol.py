@@ -111,10 +111,10 @@ def test_store_protocol_lives_in_one_place():
 
 
 def test_warm_store_reads_run_no_job(spark):
-    """Each plain store table is read with the schema its writer
-    recorded next to the files (``bucketing.read_table``): once the
-    store exists, building the read frame runs no Spark job — no
-    schema-inference pass per read."""
+    """Each plain store table, the IVF-PQ cells and codes included, is
+    read with the schema its writer recorded next to the files
+    (``bucketing.read_table``): once the store exists, building the
+    read frame runs no Spark job — no schema-inference pass per read."""
     from conftest import jobs_during
     from smart_contract_database_builder_spark.plans.llm_ops import (
         _ngram_jaccard_pairs_stored,
@@ -131,5 +131,24 @@ def test_warm_store_reads_run_no_job(spark):
     ):
         read(spark, SF_ORACLE)  # builds the store on first use
         assert jobs_during(spark, lambda: read(spark, SF_ORACLE)) == [], (
+            read.__name__
+        )
+
+    # the IVF-PQ store: the cell table and the cell-partitioned codes
+    from smart_contract_database_builder_spark.plans.llm_ops import (
+        _pq_store_path,
+        llm_ivfpq_encoded_topk,
+    )
+    from smart_contract_database_builder_spark.sources.pq_store import (
+        read_pq_cells,
+        read_pq_codes,
+    )
+    from smart_contract_database_builder_spark.sources.tables import load_table
+
+    llm_ivfpq_encoded_topk(spark, SF_ORACLE)  # builds the store
+    n = load_table(spark, SF_ORACLE, "embeddings").count()
+    store = _pq_store_path(SF_ORACLE, n)
+    for read in (read_pq_cells, read_pq_codes):
+        assert jobs_during(spark, lambda: read(spark, store)) == [], (
             read.__name__
         )
